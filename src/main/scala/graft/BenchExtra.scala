@@ -13,7 +13,11 @@ import org.apache.spark.sql.SparkSession
   *
   * NOT part of the driver contract — `graft.Bench` stays the frozen
   * measurement harness; numbers from here are cited in OPTIMIZATION_r06.md
-  * as isolation evidence only.
+  * as isolation evidence only. This is the one ad-hoc query profiler; for
+  * per-stage pipeline numbers (extraction, supports, publish, the `graft:`
+  * job breakdown of full, sync and no-op sync) run
+  * `python3 perfbench/run.py --workload build_sync --seed 1 --seconds 10
+  * --trace 1`.
   *
   * Usage:
   *   sbt "runMain graft.BenchExtra time q1 q2 ..."   noop-timed min-of-N

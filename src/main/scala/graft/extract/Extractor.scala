@@ -389,26 +389,4 @@ object Extractor {
     }
     df
   }
-
-  /** A5 normalizeMissing: for every subject missing a defaulted predicate,
-    * emit the default triples (ESNormalizer.java:129-155). Implemented as
-    * subjects x defaults anti-join union in long form — no per-doc map
-    * mutation, fully parallel. */
-  def fillMissing(triples: DataFrame, cfg: PipelineConfig): DataFrame = {
-    if (cfg.normMissing.isEmpty) return triples
-    val spark = triples.sparkSession
-    import spark.implicits._
-    val defaults = cfg.normMissing.toSeq
-      .flatMap { case (p, vs) => vs.map(v => (p, v)) }
-      .toDF("pred", "obj")
-    val subjects = triples.select("subj").distinct()
-    val missing = subjects.crossJoin(broadcast(defaults))
-      .join(triples.select("subj", "pred").distinct(), Seq("subj", "pred"), "left_anti")
-    triples.unionByName(missing.select(triples.columns.map {
-      case "subj" => col("subj")
-      case "pred" => col("pred")
-      case "obj" => col("obj")
-      case other => lit(null).cast("string").as(other)
-    }: _*))
-  }
 }

@@ -506,18 +506,6 @@ final class TableCommitter(rootDir: String) {
     publish(runId, alias)
   }
 
-  /** MERGE ... WHEN NOT MATCHED BY SOURCE THEN DELETE — drop current rows
-    * whose key is absent from `keep` (the sync delete anti-join, J4,
-    * Harvester.java:1045-1162). */
-  def deleteMissing(spark: SparkSession, keep: DataFrame, keyCols: Seq[String],
-                    runId: String, alias: String = "current"): Option[String] =
-    read(spark, alias).map { cur =>
-      val kept = cur.join(keep.select(keyCols.map(col): _*).distinct(),
-        keyCols, "left_semi")
-      stage(kept, runId)
-      publish(runId, alias)
-    }
-
   /** Remove staged (unpublished) data — K5: the pointer never moved, so the
     * live table is untouched. */
   def rollback(runId: String): Unit = {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   *
   * The naive formulation — `A join B on key and B.ts <= A.ts`, then
   * max-per-pair — explodes quadratically on hot keys. This one runs as a
-  * single running-max window over the unioned stream: O(n log n) within each
+  * single running-max window over the event stream: O(n log n) within each
   * key partition, one shuffle, AQE-splittable. Composition of built-ins
   * (SURVEY.md §7.3 preference (a)) — no custom physical operator needed.
   */
@@ -28,31 +28,5 @@ object AsOfJoin {
       .withColumn("__marker", when(markerCond, markerValue))
       .withColumn(as, last(col("__marker"), ignoreNulls = true).over(w))
       .drop("__marker")
-  }
-
-  /** Classic two-table as-of: for each left row, the latest right row with
-    * rightTs <= leftTs on the same key. Implemented by tagging + union +
-    * the running window above, then filtering back to left rows. Both
-    * inputs must share the key column name. */
-  def asOf(left: DataFrame, right: DataFrame, key: String,
-           leftTs: String, rightTs: String, rightVal: String,
-           as: String): DataFrame = {
-    val l = left.select(col(key), col(leftTs).as("__ts"),
-      lit(1).as("__tag"),
-      lit(null).cast(right.schema(rightVal).dataType).as("__val"))
-    val r = right.select(col(key), col(rightTs).as("__ts"),
-      lit(0).as("__tag"), col(rightVal).as("__val"))
-    val u = l.unionByName(r)
-    // right rows sort before left rows at equal ts (tag 0 < 1), so an exact
-    // tie counts as "at or before"; __val is the final order key so several
-    // right rows sharing (key, ts) resolve DETERMINISTICALLY to the max
-    // value rather than to whatever the shuffle happened to order last
-    val joined = lastPriorEvent(u, Seq(key), Seq("__ts", "__tag", "__val"),
-      col("__tag") === 0, col("__val"), as)
-    left.join(
-      joined.filter(col("__tag") === 1)
-        .select(col(key), col("__ts").as(leftTs), col(as))
-        .dropDuplicates(Seq(key, leftTs)),
-      Seq(key, leftTs), "left")
   }
 }

@@ -328,23 +328,15 @@ final class KgPipeline(cfg: PipelineConfig) {
   }
 
   /** Entity -> canonical id over alias-sharing edges (multi-hop
-    * generalization of normalizeObj, ESNormalizer.java:214-222).
+    * generalization of normalizeObj, ESNormalizer.java:214-222), for
+    * catalogs too large to hold on the driver: alias-sharing edges +
+    * large-star/small-star CC (graft.canon.ConnectedComponents).
     *
-    * The catalog is by definition broadcast-sized (it ships to every
-    * extraction task), so its components are computed with driver-side
-    * union-find in O(|catalog|) — running the distributed CC here would add
+    * A broadcast-sized catalog (one that ships to every extraction task)
+    * is better served by driver-side union-find in O(|catalog|)
+    * (`TranscriptGen.components`): running the distributed CC there adds
     * seconds of fixed job-scheduling overhead per run for a graph of a few
-    * thousand nodes and flatten the N->4N scaling curve. The iterative
-    * large-star/small-star CC (graft.canon.ConnectedComponents) is the path
-    * for graph-scale inputs: see `canonicalMapDistributed`. */
-  def canonicalMap(spark: SparkSession, catalog: Seq[CatalogEntry]): DataFrame = {
-    import spark.implicits._
-    graft.sources.TranscriptGen.components(catalog).toSeq
-      .toDF("id", "component")
-  }
-
-  /** Distributed variant for catalogs too large to hold on the driver:
-    * alias-sharing edges + large-star/small-star CC. */
+    * thousand nodes and flattens the N->4N scaling curve. */
   def canonicalMapDistributed(spark: SparkSession, catalog: DataFrame): DataFrame = {
     val perAlias = catalog.select("alias", "entity_id").distinct()
     val aliasMin = perAlias.groupBy("alias").agg(min(col("entity_id")).as("root"))

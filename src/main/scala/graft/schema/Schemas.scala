@@ -29,13 +29,6 @@ final case class Triple(
     objLang: String,
     objType: String)
 
-/** A detected surface-form occurrence in a turn, before linking. */
-final case class Mention(
-    conv_id: String,
-    turn_idx: Int,
-    surface: String,
-    startTok: Int)
-
 /** Broadcast dictionary row for entity linking (mirrors the reference's
   * uriDescriptionList label sources, EEASettings.java:46-50 — first-match
   * priority is `rank`). */
@@ -44,35 +37,3 @@ final case class CatalogEntry(
     alias: String,
     prefLabel: String,
     rank: Int)
-
-/** Extraction rule: a phrase that signals a predicate between two mentions
-  * (the graft analogue of the river's proplist/normProp config,
-  * Indexer.java:350-463). */
-final case class PredicateRule(
-    pattern: String,
-    pred: String,
-    renames: Seq[String],
-    listed: String)
-
-/** Edge of the materialized graph. */
-final case class Edge(
-    src: String,
-    pred: String,
-    dst: String,
-    lang: String,
-    weight: Long)
-
-/** Node of the materialized graph with its canonical representative after
-  * connected-components canonicalization. */
-final case class Node(
-    entityId: String,
-    canonicalId: String,
-    label: String)
-
-/** Per-run, per-partition metrics row (reference analogue: UpdateRecord,
-  * Harvester.java:1894-1904). */
-final case class RunMetrics(
-    runId: String,
-    stage: String,
-    metric: String,
-    value: Long)

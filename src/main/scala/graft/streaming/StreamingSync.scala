@@ -806,12 +806,4 @@ object StreamingSync {
       }
     }
   }
-
-  /** Watermarked tumbling-window aggregate over the turn stream: mentions
-    * per (window, role), tolerating 10 minutes of late data. */
-  def mentionRate(turns: DataFrame): DataFrame =
-    turns
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour"), col("role"))
-      .agg(count(lit(1)).as("n_turns"))
 }

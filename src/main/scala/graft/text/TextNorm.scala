@@ -85,10 +85,6 @@ object TextNorm {
     }
   }
 
-  /** Bug-compatible `removeIllegalXMLChar`: the reference ignores the
-    * replaced string, so the observable behavior is identity. */
-  def removeIllegalXmlCharBugCompatible(text: String): String = text
-
   private val IllegalXml = "[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]"
 
   /** The *intended* behavior of removeIllegalXMLChar (documented divergence —

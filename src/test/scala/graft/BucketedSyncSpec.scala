@@ -19,9 +19,6 @@ import graft.sources.TranscriptGen
   * what a from-scratch full recompute would produce. */
 class BucketedSyncSpec extends AnyFunSuite {
 
-  private def freshDir(): String =
-    Files.createTempDirectory("graft-bucket-").toString
-
   private val fx = TranscriptGen.generate(nConv = 40, nEnt = 30, hotFactor = 5)
 
   private def turnsDs(ts: Seq[Turn]) = {
@@ -60,7 +57,7 @@ class BucketedSyncSpec extends AnyFunSuite {
 
   test("sync rewrites only buckets of touched conversations; the rest are hard links") {
     val spark = SparkTestSession.get
-    val wd = freshDir()
+    val wd = TempDirs("graft-bucket-")
     val B = 8
     val p = new KgPipeline(PipelineConfig(workDir = wd, syncBuckets = B,
       syncOldData = true))
@@ -125,7 +122,7 @@ class BucketedSyncSpec extends AnyFunSuite {
     assert(rewritten.subsetOf(touchedNames), s"rewrote extra buckets: $rewritten")
 
     // published content == from-scratch full recompute (supports AND edges)
-    val scratch = new KgPipeline(PipelineConfig(workDir = freshDir(), syncBuckets = B))
+    val scratch = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = B))
     scratch.runFull(spark, turnsDs(t1), fx.catalog, fx.markers, "scratch")
     assert(supportSet(p) == supportSet(scratch))
     assert(edgeSet(p) == edgeSet(scratch))
@@ -133,14 +130,14 @@ class BucketedSyncSpec extends AnyFunSuite {
 
   test("node refcounts after incremental sync match a full recompute") {
     val spark = SparkTestSession.get
-    val p = new KgPipeline(PipelineConfig(workDir = freshDir(), syncBuckets = 8,
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8,
       syncOldData = true))
     val t0 = fx.turns.filter(_.turn_idx <= 4)
     val t1 = fx.turns.filterNot(_.conv_id == "conv-000002")
     p.runFull(spark, turnsDs(t0), fx.catalog, fx.markers, "t0")
     p.runSync(spark, turnsDs(t1), fx.catalog, fx.markers, "t1")
 
-    val scratch = new KgPipeline(PipelineConfig(workDir = freshDir(), syncBuckets = 8))
+    val scratch = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8))
     scratch.runFull(spark, turnsDs(t1), fx.catalog, fx.markers, "s")
 
     def nodes(q: KgPipeline) = q.nodeTable.read(spark).get
@@ -155,14 +152,14 @@ class BucketedSyncSpec extends AnyFunSuite {
     // rebuilt docs of changed subjects must re-fill the same defaults the
     // scratch build does
     val defaults = Map("urn:p:reviewed" -> Seq("no"))
-    val p = new KgPipeline(PipelineConfig(workDir = freshDir(), syncBuckets = 8,
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8,
       syncOldData = true, publishDocs = true, normMissing = defaults))
     val t0 = fx.turns.filter(_.turn_idx <= 4)
     val t1 = fx.turns.filterNot(_.conv_id == "conv-000002")
     p.runFull(spark, turnsDs(t0), fx.catalog, fx.markers, "t0")
     p.runSync(spark, turnsDs(t1), fx.catalog, fx.markers, "t1")
 
-    val scratch = new KgPipeline(PipelineConfig(workDir = freshDir(),
+    val scratch = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"),
       syncBuckets = 8, publishDocs = true, normMissing = defaults))
     scratch.runFull(spark, turnsDs(t1), fx.catalog, fx.markers, "s")
 
@@ -202,7 +199,7 @@ class BucketedSyncSpec extends AnyFunSuite {
       turn("conv-en", 1, "and the al1 uses al4 with more of the same"),
       turn("conv-cs", 1, "aby se al1 uses al2 je nebo dalsi na tom"))
 
-    def mkCfg() = PipelineConfig(workDir = freshDir(), syncBuckets = 8,
+    def mkCfg() = PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8,
       syncOldData = true, publishDocs = true, detectLanguage = true)
     val p = new KgPipeline(mkCfg())
     p.runFull(spark, t0.toDS(), cat, markers, "t0")
@@ -248,7 +245,7 @@ class BucketedSyncSpec extends AnyFunSuite {
       turn("conv-lbl", 0, "al2 labeledas al6 now", 20000))
 
     def run(refresh: Boolean): (String, KgPipeline) = {
-      val p = new KgPipeline(PipelineConfig(workDir = freshDir(), syncBuckets = 8,
+      val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8,
         publishDocs = true, refreshReferencingDocs = refresh))
       p.runFull(spark, t0.toDS(), cat, markers, "t0")
       p.runSync(spark, t1.toDS(), cat, markers, "t1")
@@ -260,7 +257,7 @@ class BucketedSyncSpec extends AnyFunSuite {
     }
 
     // scratch truth: e1's doc displays e2's NEW label (urn:e:6)
-    val scratch = new KgPipeline(PipelineConfig(workDir = freshDir(),
+    val scratch = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"),
       syncBuckets = 8, publishDocs = true))
     scratch.runFull(spark, t1.toDS(), cat, markers, "s")
     val want = scratch.docTable.read(spark).get
@@ -290,7 +287,7 @@ class BucketedSyncSpec extends AnyFunSuite {
        "(support published / edges published) — the delta replays, never " +
        "recomputes from mutated state") {
     val spark = SparkTestSession.get
-    val p = new KgPipeline(PipelineConfig(workDir = freshDir(), syncBuckets = 8,
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8,
       syncOldData = true, publishDocs = true))
     val t0 = fx.turns.filter(_.turn_idx <= 4)
     val t1 = fx.turns.filterNot(_.conv_id == "conv-000002")
@@ -314,7 +311,7 @@ class BucketedSyncSpec extends AnyFunSuite {
     // final resume completes the run
     p.runSync(spark, turnsDs(t1), fx.catalog, fx.markers, "t1")
 
-    val scratch = new KgPipeline(PipelineConfig(workDir = freshDir(),
+    val scratch = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"),
       syncBuckets = 8, publishDocs = true))
     scratch.runFull(spark, turnsDs(t1), fx.catalog, fx.markers, "s")
     assert(supportSet(p) == supportSet(scratch))
@@ -330,7 +327,7 @@ class BucketedSyncSpec extends AnyFunSuite {
 
   test("publishDocs enabled after a docs-less full run bootstraps the FULL doc table") {
     val spark = SparkTestSession.get
-    val wd = freshDir()
+    val wd = TempDirs("graft-bucket-")
     val noDocs = new KgPipeline(PipelineConfig(workDir = wd, syncBuckets = 8,
       publishDocs = false))
     val t0 = fx.turns.filter(_.turn_idx <= 4)
@@ -342,7 +339,7 @@ class BucketedSyncSpec extends AnyFunSuite {
       publishDocs = true))
     withDocs.runSync(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "t1")
 
-    val scratch = new KgPipeline(PipelineConfig(workDir = freshDir(),
+    val scratch = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"),
       syncBuckets = 8, publishDocs = true))
     scratch.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "s")
     def docIds(q: KgPipeline) = q.docTable.read(spark).get
@@ -375,13 +372,13 @@ class BucketedSyncSpec extends AnyFunSuite {
         if (grow1(t.conv_id)) true else t.turn_idx <= cut0)
       .filterNot(t => t.conv_id == drop1 || t.conv_id == drop2)
 
-    val p = new KgPipeline(PipelineConfig(workDir = freshDir(), syncBuckets = 8,
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8,
       syncOldData = true, publishDocs = true))
     p.runFull(spark, turnsDs(e0), fx.catalog, fx.markers, "e0")
     p.runSync(spark, turnsDs(e1), fx.catalog, fx.markers, "e1")
     p.runSync(spark, turnsDs(e2), fx.catalog, fx.markers, "e2")
 
-    val scratch = new KgPipeline(PipelineConfig(workDir = freshDir(),
+    val scratch = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"),
       syncBuckets = 8, publishDocs = true))
     scratch.runFull(spark, turnsDs(e2), fx.catalog, fx.markers, "s")
 
@@ -399,7 +396,7 @@ class BucketedSyncSpec extends AnyFunSuite {
 
   test("auto sync runIds: an empty sync never swallows the next data-bearing sync") {
     val spark = SparkTestSession.get
-    val p = new KgPipeline(PipelineConfig(workDir = freshDir(), syncBuckets = 8))
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8))
     val t0 = fx.turns.filter(_.turn_idx <= 4)
     p.runFull(spark, turnsDs(t0), fx.catalog, fx.markers, "t0")
 
@@ -414,14 +411,14 @@ class BucketedSyncSpec extends AnyFunSuite {
     assert(id2 != id1, "sync epoch id did not advance after an empty sync")
     p.runSync(spark, turnsDs(fx.turns), fx.catalog, fx.markers, id2)
 
-    val scratch = new KgPipeline(PipelineConfig(workDir = freshDir(), syncBuckets = 8))
+    val scratch = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8))
     scratch.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "s")
     assert(edgeSet(p) == edgeSet(scratch))
   }
 
   test("changing syncBuckets over an existing workDir is refused") {
     val spark = SparkTestSession.get
-    val wd = freshDir()
+    val wd = TempDirs("graft-bucket-")
     val p8 = new KgPipeline(PipelineConfig(workDir = wd, syncBuckets = 8))
     p8.runFull(spark, turnsDs(fx.turns.take(200)), fx.catalog, fx.markers, "t0")
     val p16 = new KgPipeline(PipelineConfig(workDir = wd, syncBuckets = 16))
@@ -434,7 +431,7 @@ class BucketedSyncSpec extends AnyFunSuite {
   test("a conversation changing between a sync crash and its retry is " +
        "deferred to the NEXT sync — never dropped, never half-applied") {
     val spark = SparkTestSession.get
-    val p = new KgPipeline(PipelineConfig(workDir = freshDir(), syncBuckets = 8))
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8))
     val t0 = fx.turns
     val maxTs = t0.map(_.ts.getTime).max
     def extend(conv: String, days: Int) = {
@@ -457,14 +454,14 @@ class BucketedSyncSpec extends AnyFunSuite {
     // retry the SAME logical sync against the grown source: the pinned
     // changed-conv set and watermark replay, so conv-000011 is deferred
     p.runSync(spark, turnsDs(t2), fx.catalog, fx.markers, id1)
-    val afterRetry = new KgPipeline(PipelineConfig(workDir = freshDir(), syncBuckets = 8))
+    val afterRetry = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8))
     afterRetry.runFull(spark, turnsDs(t1), fx.catalog, fx.markers, "s1")
     assert(edgeSet(p) == edgeSet(afterRetry),
       "retried sync must publish exactly the original sync's view")
 
     // the NEXT sync picks up the deferred conversation
     p.runSync(spark, turnsDs(t2), fx.catalog, fx.markers, p.syncRunId(spark))
-    val full2 = new KgPipeline(PipelineConfig(workDir = freshDir(), syncBuckets = 8))
+    val full2 = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8))
     full2.runFull(spark, turnsDs(t2), fx.catalog, fx.markers, "s2")
     assert(edgeSet(p) == edgeSet(full2))
     assert(supportSet(p) == supportSet(full2))
@@ -472,7 +469,7 @@ class BucketedSyncSpec extends AnyFunSuite {
 
   test("syncOldData resume replays the PINNED vanished set; later deletions defer") {
     val spark = SparkTestSession.get
-    val p = new KgPipeline(PipelineConfig(workDir = freshDir(), syncBuckets = 8,
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8,
       syncOldData = true))
     val t0 = fx.turns
     val t1 = t0.filterNot(_.conv_id == "conv-000013") // vanishes before the sync
@@ -491,14 +488,14 @@ class BucketedSyncSpec extends AnyFunSuite {
     // retry against the further-shrunk source: the pinned vanished set
     // replays, so conv-000017's deletion defers to the next sync
     p.runSync(spark, turnsDs(t2), fx.catalog, fx.markers, id1)
-    val s1 = new KgPipeline(PipelineConfig(workDir = freshDir(), syncBuckets = 8))
+    val s1 = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8))
     s1.runFull(spark, turnsDs(t1), fx.catalog, fx.markers, "s1")
     assert(edgeSet(p) == edgeSet(s1))
     assert(supportSet(p) == supportSet(s1))
 
     // the next sync reaps the deferred deletion
     p.runSync(spark, turnsDs(t2), fx.catalog, fx.markers, p.syncRunId(spark))
-    val s2 = new KgPipeline(PipelineConfig(workDir = freshDir(), syncBuckets = 8))
+    val s2 = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8))
     s2.runFull(spark, turnsDs(t2), fx.catalog, fx.markers, "s2")
     assert(edgeSet(p) == edgeSet(s2))
     assert(supportSet(p) == supportSet(s2))
@@ -506,7 +503,7 @@ class BucketedSyncSpec extends AnyFunSuite {
 
   test("a crash between the edge and node publishes self-heals on the next sync") {
     val spark = SparkTestSession.get
-    val wd = freshDir()
+    val wd = TempDirs("graft-bucket-")
     val p = new KgPipeline(PipelineConfig(workDir = wd, syncBuckets = 8))
     val t0 = fx.turns.filter(_.turn_idx <= 4)
     // first-ever derivation crashes with edges published, nodes never
@@ -521,7 +518,7 @@ class BucketedSyncSpec extends AnyFunSuite {
     // a later sync rebuilds node refcounts from the published edges instead
     // of dying on the missing table
     p.runSync(spark, turnsDs(fx.turns), fx.catalog, fx.markers, p.syncRunId(spark))
-    val scratch = new KgPipeline(PipelineConfig(workDir = freshDir(), syncBuckets = 8))
+    val scratch = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8))
     scratch.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "s")
     def nodes(q: KgPipeline) = q.nodeTable.read(spark).get
       .select("entity_id", "refs").collect()
@@ -533,7 +530,7 @@ class BucketedSyncSpec extends AnyFunSuite {
   test("empty sync (no changes) is metadata-only: no table is republished, " +
        "the run is still recorded, and the next data-bearing sync works") {
     val spark = SparkTestSession.get
-    val p = new KgPipeline(PipelineConfig(workDir = freshDir(), syncBuckets = 8))
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8))
     p.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "t0")
     val sGen0 = p.supportTable.currentGeneration()
     val eGen0 = p.edgeTable.currentGeneration()
@@ -553,7 +550,7 @@ class BucketedSyncSpec extends AnyFunSuite {
     val t2 = fx.turns :+ tpl.copy(turn_idx = tpl.turn_idx + 1,
       ts = new Timestamp(maxTs + 3600 * 1000L))
     p.runSync(spark, turnsDs(t2), fx.catalog, fx.markers, "t2")
-    val scratch = new KgPipeline(PipelineConfig(workDir = freshDir(), syncBuckets = 8))
+    val scratch = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8))
     scratch.runFull(spark, turnsDs(t2), fx.catalog, fx.markers, "s")
     assert(supportSet(p) == supportSet(scratch))
     assert(edgeSet(p) == edgeSet(scratch))
@@ -587,7 +584,7 @@ class BucketedSyncSpec extends AnyFunSuite {
         ts = new Timestamp(maxTs + (i + 1) * 3600 * 1000L))
     }
 
-    val cfg = PipelineConfig(workDir = freshDir(), syncBuckets = B,
+    val cfg = PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = B,
       bucketKeyExpr = keyExpr)
     val p = new KgPipeline(cfg)
     p.runFull(spark, turnsDs(t0), fx.catalog, fx.markers, "t0")
@@ -617,7 +614,7 @@ class BucketedSyncSpec extends AnyFunSuite {
     assert(e.getMessage.contains("bucket_key_expr"))
 
     // published content == from-scratch full recompute under the same key
-    val scratch = new KgPipeline(cfg.copy(workDir = freshDir()))
+    val scratch = new KgPipeline(cfg.copy(workDir = TempDirs("graft-bucket-")))
     scratch.runFull(spark, turnsDs(t1), fx.catalog, fx.markers, "s")
     assert(supportSet(p) == supportSet(scratch))
     assert(edgeSet(p) == edgeSet(scratch))
@@ -626,7 +623,7 @@ class BucketedSyncSpec extends AnyFunSuite {
   test("bucket-key ADOPTION guard: a pre-pin table (generations, no pin) " +
        "refuses a non-default key expression; the default may adopt") {
     val spark = SparkTestSession.get
-    val cfg = PipelineConfig(workDir = freshDir(), syncBuckets = 8)
+    val cfg = PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8)
     val p = new KgPipeline(cfg)
     p.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "t0")
     // simulate a workDir built BEFORE the key expression was pinnable:

@@ -18,7 +18,7 @@ class CheckpointStoreSpec extends AnyFunSuite {
   test("epoch cache preserves sub-millisecond watermarks exactly (hit == " +
        "parquet) and repairs, not serves, a pre-upgrade milliseconds cache") {
     val spark = SparkTestSession.get
-    val root = Files.createTempDirectory("ckpt-").toString
+    val root = TempDirs("ckpt-")
     val cs = new CheckpointStore(root)
     // .000500 — microseconds that Timestamp.getTime silently truncates
     val wm = Timestamp.from(Instant.ofEpochSecond(1735689600L, 500000))

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -95,14 +94,14 @@ class ConfigQuarantineSpec extends AnyFunSuite {
     val poisoned = fx.turns ++ Seq(
       Turn(null, 0, "user", "bad", null, new Timestamp(0)),
       Turn("cX", 0, "user", null, null, new Timestamp(0)))
-    val wd = Files.createTempDirectory("quar-").toString
+    val wd = TempDirs("quar-")
     val p = new KgPipeline(PipelineConfig(workDir = wd))
     p.runFull(spark, poisoned.toDS(), fx.catalog, fx.markers, "r")
     val quarantined = spark.read.parquet(s"$wd/quarantine")
     assert(quarantined.count() == 2)
     // clean rows unaffected: same edges as a run without poison
     val clean = new KgPipeline(PipelineConfig(
-      workDir = Files.createTempDirectory("quar2-").toString))
+      workDir = TempDirs("quar2-")))
     clean.runFull(spark, fx.turns.toDS(), fx.catalog, fx.markers, "r")
     assert(p.edgeTable.read(spark).get.collect().toSet
       == clean.edgeTable.read(spark).get.collect().toSet)
@@ -114,7 +113,7 @@ class ConfigQuarantineSpec extends AnyFunSuite {
     val fx = TranscriptGen.generate(nConv = 20, nEnt = 25, hotFactor = 2)
     def run(distributed: Boolean) = {
       val p = new KgPipeline(PipelineConfig(
-        workDir = Files.createTempDirectory("canon-").toString,
+        workDir = TempDirs("canon-"),
         useDistributedCanon = distributed))
       p.runFull(spark, fx.turns.toDS(), fx.catalog, fx.markers, "r")
       p.edgeTable.read(spark).get.collect().toSet

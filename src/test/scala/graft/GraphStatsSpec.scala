@@ -32,7 +32,7 @@ class GraphStatsSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val fx = graft.sources.TranscriptGen.generate(nConv = 12, nEnt = 6, hotFactor = 1)
-    val dir = java.nio.file.Files.createTempDirectory("gdiff-").toString
+    val dir = TempDirs("gdiff-")
     val p = new graft.pipeline.KgPipeline(
       graft.config.PipelineConfig(workDir = dir, numPartitions = 4))
     p.runFull(spark, fx.turns.toDS(), fx.catalog, fx.markers, "r1")
@@ -87,7 +87,7 @@ class GraphStatsSpec extends AnyFunSuite {
     val spark = SparkTestSession.get
     import spark.implicits._
     val fx = graft.sources.TranscriptGen.generate(nConv = 6, nEnt = 4, hotFactor = 1)
-    val dir = java.nio.file.Files.createTempDirectory("rgv-").toString
+    val dir = TempDirs("rgv-")
     val p = new graft.pipeline.KgPipeline(
       graft.config.PipelineConfig(workDir = dir, numPartitions = 2))
     p.runFull(spark, fx.turns.toDS(), fx.catalog, fx.markers, "r1")
@@ -103,7 +103,7 @@ class GraphStatsSpec extends AnyFunSuite {
     val spark = SparkTestSession.get
     import spark.implicits._
     val fx = graft.sources.TranscriptGen.generate(nConv = 20, nEnt = 8, hotFactor = 2)
-    val dir = java.nio.file.Files.createTempDirectory("stats-").toString
+    val dir = TempDirs("stats-")
     val p = new graft.pipeline.KgPipeline(
       graft.config.PipelineConfig(workDir = dir, numPartitions = 4))
     p.runFull(spark, fx.turns.toDS(), fx.catalog, fx.markers, "r1")

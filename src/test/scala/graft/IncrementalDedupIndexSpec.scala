@@ -37,7 +37,7 @@ class IncrementalDedupIndexSpec extends AnyFunSuite {
   private def fullRecompute(rows: Seq[(Long, String)]): Set[(Long, String)] = {
     val spark = SparkTestSession.get
     val idx = new IncrementalDedupIndex(
-      Files.createTempDirectory("graft-dd-full-").toString, buckets = B)
+      TempDirs("graft-dd-full-"), buckets = B)
     idx.fingerprints(docsDf(rows)).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
   }
@@ -50,7 +50,7 @@ class IncrementalDedupIndexSpec extends AnyFunSuite {
 
   test("delta chain (add / edit / remove) converges to the from-scratch index") {
     val spark = SparkTestSession.get
-    val wd = Files.createTempDirectory("graft-dd-").toString
+    val wd = TempDirs("graft-dd-")
     val idx = new IncrementalDedupIndex(wd, buckets = B)
 
     var live: Map[Long, String] = corpusV0.toMap
@@ -78,7 +78,7 @@ class IncrementalDedupIndexSpec extends AnyFunSuite {
 
   test("candidate lookup for a delta equals brute force over the corpus") {
     val spark = SparkTestSession.get
-    val wd = Files.createTempDirectory("graft-dd-").toString
+    val wd = TempDirs("graft-dd-")
     val idx = new IncrementalDedupIndex(wd, buckets = B)
     idx.update(spark, docsDf(corpusV0), "run0")
 
@@ -101,7 +101,7 @@ class IncrementalDedupIndexSpec extends AnyFunSuite {
 
   test("a small delta rewrites only its buckets; the rest carry by hard link") {
     val spark = SparkTestSession.get
-    val wd = Files.createTempDirectory("graft-dd-").toString
+    val wd = TempDirs("graft-dd-")
     val idx = new IncrementalDedupIndex(wd, buckets = B)
     idx.update(spark, docsDf(corpusV0), "run0")
 
@@ -140,7 +140,7 @@ class IncrementalDedupIndexSpec extends AnyFunSuite {
 
   test("empty delta is a metadata-only no-op: no new generation published") {
     val spark = SparkTestSession.get
-    val wd = Files.createTempDirectory("graft-dd-").toString
+    val wd = TempDirs("graft-dd-")
     val idx = new IncrementalDedupIndex(wd, buckets = B)
     idx.update(spark, docsDf(corpusV0), "run0")
     def gens(): Seq[String] = {
@@ -156,7 +156,7 @@ class IncrementalDedupIndexSpec extends AnyFunSuite {
 
   test("crash between the two table publishes heals on same-runId retry") {
     val spark = SparkTestSession.get
-    val wd = Files.createTempDirectory("graft-dd-").toString
+    val wd = TempDirs("graft-dd-")
     val idx = new IncrementalDedupIndex(wd, buckets = B)
     idx.update(spark, docsDf(corpusV0), "run0")
 
@@ -179,7 +179,7 @@ class IncrementalDedupIndexSpec extends AnyFunSuite {
   test("KgMain dedup-update / dedup-candidates app surface: delta parquet " +
        "in, JSON report + candidates parquet out, idempotent retry") {
     val spark = SparkTestSession.get
-    val wd = Files.createTempDirectory("graft-dd-app-").toString
+    val wd = TempDirs("graft-dd-app-")
     def writeDelta(rows: Seq[(Long, String)], name: String): String = {
       val p = s"$wd/$name"
       docsDf(rows).write.mode("overwrite").parquet(p)

@@ -21,7 +21,7 @@ class KgAdminSpec extends AnyFunSuite {
   test("status/generations/set-pointer/expire/drop-staging over a real layout") {
     val spark = SparkTestSession.get
     import spark.implicits._
-    val workDir = Files.createTempDirectory("admin-").toString
+    val workDir = TempDirs("admin-")
     val c = new TableCommitter(s"$workDir/tables/edges")
     // two published generations + one staged-but-unpublished run
     c.stage(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), "r1")

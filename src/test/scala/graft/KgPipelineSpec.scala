@@ -16,9 +16,6 @@ import graft.sources.TranscriptGen
   * determinism under repartitioning (SURVEY.md §5). */
 class KgPipelineSpec extends AnyFunSuite {
 
-  private def freshDir(): String =
-    Files.createTempDirectory("graft-test-").toString
-
   private def edgesOf(p: KgPipeline): Set[(String, String, String, String, Long)] = {
     val spark = SparkTestSession.get
     p.edgeTable.read(spark).get
@@ -39,7 +36,7 @@ class KgPipelineSpec extends AnyFunSuite {
 
   test("full run: P/R vs independently planted golden triples is 1.0 (gate >= 0.95)") {
     val spark = SparkTestSession.get
-    val p = new KgPipeline(PipelineConfig(workDir = freshDir()))
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-")))
     p.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "run1")
     val got = p.edgeTable.read(spark).get
     val pr = PrScorer.score(got, PrScorer.goldenDf(spark, fx.goldenTriples))
@@ -52,7 +49,7 @@ class KgPipelineSpec extends AnyFunSuite {
        "empty table and a later data-bearing sync heals it") {
     val spark = SparkTestSession.get
     import spark.implicits._
-    val p = new KgPipeline(PipelineConfig(workDir = freshDir()))
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-")))
     // turns whose text mentions nothing from the catalog -> zero supports;
     // stamped with a pre-corpus event time so the recorded watermark cannot
     // hide any real turn from the later sync
@@ -66,7 +63,7 @@ class KgPipelineSpec extends AnyFunSuite {
     // (blank turns carry the fixture's own timestamps, so the real turns are
     // not all behind the recorded watermark)
     p.runSync(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "sync-data")
-    val scratch = new KgPipeline(PipelineConfig(workDir = freshDir()))
+    val scratch = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-")))
     scratch.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "full")
     assert(edgesOf(p) == edgesOf(scratch))
   }
@@ -89,7 +86,7 @@ class KgPipelineSpec extends AnyFunSuite {
       turn("conv-planet", 0, "the innermost planet mercury has a short orbit in the solar system"),
       turn("conv-element", 0, "mercury is a chemical element a silvery metal"))
 
-    val p = new KgPipeline(PipelineConfig(workDir = freshDir(), scoredLinking = true))
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-"), scoredLinking = true))
     p.runFull(spark, turns.toDS(), cat, Map.empty, "run-scored")
     def linkedTo(q: KgPipeline, conv: String): Set[String] =
       q.edgeTable.read(spark).get
@@ -101,7 +98,7 @@ class KgPipelineSpec extends AnyFunSuite {
 
     // control: without the flag, alias-sharing canonicalization collapses
     // both entities into one cluster — no contextual distinction possible
-    val ctrl = new KgPipeline(PipelineConfig(workDir = freshDir()))
+    val ctrl = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-")))
     ctrl.runFull(spark, turns.toDS(), cat, Map.empty, "run-rank")
     assert(linkedTo(ctrl, "conv-planet") == Set("urn:e:element"))
     assert(linkedTo(ctrl, "conv-element") == Set("urn:e:element"))
@@ -114,7 +111,7 @@ class KgPipelineSpec extends AnyFunSuite {
         new java.sql.Timestamp(99999L))) // past the recorded watermark
     p.runSync(spark, t1.toDS(), cat, Map.empty, "sync-scored")
     assert(linkedTo(p, "conv-planet2") == Set("urn:e:planet", "urn:e:venus"))
-    val scratch2 = new KgPipeline(PipelineConfig(workDir = freshDir(),
+    val scratch2 = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-"),
       scoredLinking = true))
     scratch2.runFull(spark, t1.toDS(), cat, Map.empty, "full-scored")
     assert(edgesOf(p) == edgesOf(scratch2))
@@ -142,7 +139,7 @@ class KgPipelineSpec extends AnyFunSuite {
       turn("conv-engine", 0,
         "apache spark runs cluster computing jobs across many executors"))
 
-    val p = new KgPipeline(PipelineConfig(workDir = freshDir(), scoredLinking = true))
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-"), scoredLinking = true))
     p.runFull(spark, turns.toDS(), cat, Map.empty, "run-mt")
     def linkedTo(q: KgPipeline, conv: String): Set[String] =
       q.edgeTable.read(spark).get
@@ -159,7 +156,7 @@ class KgPipelineSpec extends AnyFunSuite {
       new java.sql.Timestamp(99999L))
     p.runSync(spark, t1.toDS(), cat, Map.empty, "sync-mt")
     assert(linkedTo(p, "conv-engine2") == Set("urn:e:engine"))
-    val scratch = new KgPipeline(PipelineConfig(workDir = freshDir(),
+    val scratch = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-"),
       scoredLinking = true))
     scratch.runFull(spark, t1.toDS(), cat, Map.empty, "full-mt")
     assert(edgesOf(p) == edgesOf(scratch))
@@ -184,7 +181,7 @@ class KgPipelineSpec extends AnyFunSuite {
       // orphan in the FIRST turn: no antecedent exists -> dropped
       turn("conv-b", 0, "orbits saturn distantly"))
 
-    val p = new KgPipeline(PipelineConfig(workDir = freshDir(),
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-"),
       corefResolution = true))
     p.runFull(spark, turns.toDS(), cat, markers, "run-coref")
     def orbitEdges(q: KgPipeline): Set[(String, String)] =
@@ -194,7 +191,7 @@ class KgPipelineSpec extends AnyFunSuite {
     assert(orbitEdges(p) == Set(("urn:e:titan", "urn:e:saturn")))
 
     // control: without the flag the subject-less marker contributes nothing
-    val ctrl = new KgPipeline(PipelineConfig(workDir = freshDir()))
+    val ctrl = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-")))
     ctrl.runFull(spark, turns.toDS(), cat, markers, "run-nocoref")
     assert(orbitEdges(ctrl).isEmpty)
 
@@ -207,7 +204,7 @@ class KgPipelineSpec extends AnyFunSuite {
         new java.sql.Timestamp(99999L)))
     p.runSync(spark, t1.toDS(), cat, markers, "sync-coref")
     assert(orbitEdges(p) == Set(("urn:e:titan", "urn:e:saturn")))
-    val scratch = new KgPipeline(PipelineConfig(workDir = freshDir(),
+    val scratch = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-"),
       corefResolution = true))
     scratch.runFull(spark, t1.toDS(), cat, markers, "full-coref")
     assert(edgesOf(p) == edgesOf(scratch))
@@ -231,7 +228,7 @@ class KgPipelineSpec extends AnyFunSuite {
       // LINKER resolved to the planet — rank alone would say element
       Turn("conv-p", 1, "user", "orbits venus today", "",
         new java.sql.Timestamp(1001L)))
-    val p = new KgPipeline(PipelineConfig(workDir = freshDir(),
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-"),
       scoredLinking = true, corefResolution = true))
     p.runFull(spark, turns.toDS(), cat, markers, "run-both")
     val orbit = p.edgeTable.read(spark).get
@@ -243,7 +240,7 @@ class KgPipelineSpec extends AnyFunSuite {
   test("semantics pin: a sync under different extraction flags than the " +
        "standing tables is refused; a full rebuild legitimately re-pins") {
     val spark = SparkTestSession.get
-    val wd = freshDir()
+    val wd = TempDirs("graft-test-")
     val small = TranscriptGen.generate(nConv = 6, nEnt = 6, hotFactor = 1)
     val p = new KgPipeline(PipelineConfig(workDir = wd))
     p.runFull(spark, turnsDs(small.turns), small.catalog, small.markers, "f0")
@@ -270,7 +267,7 @@ class KgPipelineSpec extends AnyFunSuite {
   test("distributed CC canonicalization matches union-find golden components") {
     val spark = SparkTestSession.get
     import spark.implicits._
-    val p = new KgPipeline(PipelineConfig(workDir = freshDir()))
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-")))
     val catDf = fx.catalog.toDF("entity_id", "alias", "pref_label", "rank")
     val got = p.canonicalMapDistributed(spark, catDf).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
@@ -280,10 +277,10 @@ class KgPipelineSpec extends AnyFunSuite {
   test("useDistributedCanon e2e: runFull publishes tables identical to the " +
        "driver union-find path") {
     val spark = SparkTestSession.get
-    val dist = new KgPipeline(PipelineConfig(workDir = freshDir(),
+    val dist = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-"),
       useDistributedCanon = true))
     dist.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "dist")
-    val uf = new KgPipeline(PipelineConfig(workDir = freshDir()))
+    val uf = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-")))
     uf.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "uf")
     assert(edgesOf(dist) == edgesOf(uf))
   }
@@ -293,7 +290,7 @@ class KgPipelineSpec extends AnyFunSuite {
     // parity (src/logs/2/CLUSTERS-TEST); here: per-conversation mention-edge
     // counts vs the planted golden counts
     val spark = SparkTestSession.get
-    val p = new KgPipeline(PipelineConfig(workDir = freshDir()))
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-")))
     p.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "rc")
     val got = p.edgeTable.read(spark).get
       .filter(org.apache.spark.sql.functions.col("subj").startsWith("urn:conv:"))
@@ -307,22 +304,22 @@ class KgPipelineSpec extends AnyFunSuite {
 
   test("resume cleans a partial stage write left by a kill mid-write") {
     val spark = SparkTestSession.get
-    val wd = freshDir()
+    val wd = TempDirs("graft-test-")
     val p = new KgPipeline(PipelineConfig(workDir = wd))
     // simulate a crash in the middle of the supports stage write
     val tmp = java.nio.file.Paths.get(s"$wd/stages/killed/.supports.tmp")
     java.nio.file.Files.createDirectories(tmp)
     java.nio.file.Files.writeString(tmp.resolve("part-junk"), "partial garbage")
     p.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "killed")
-    val clean = new KgPipeline(PipelineConfig(workDir = freshDir()))
+    val clean = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-")))
     clean.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "c")
     assert(edgesOf(p) == edgesOf(clean))
   }
 
   test("encoded-shuffle fast path emits exactly the string path's tables") {
     val spark = SparkTestSession.get
-    val fast = new KgPipeline(PipelineConfig(workDir = freshDir()))
-    val slow = new KgPipeline(PipelineConfig(workDir = freshDir(), encodedShuffle = false))
+    val fast = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-")))
+    val slow = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-"), encodedShuffle = false))
     fast.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "f")
     slow.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "s")
     assert(edgesOf(fast) == edgesOf(slow))
@@ -335,7 +332,7 @@ class KgPipelineSpec extends AnyFunSuite {
 
   test("re-run is idempotent: same edge table content") {
     val spark = SparkTestSession.get
-    val p = new KgPipeline(PipelineConfig(workDir = freshDir()))
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-")))
     p.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "runA")
     val first = edgesOf(p)
     p.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "runB")
@@ -345,8 +342,8 @@ class KgPipelineSpec extends AnyFunSuite {
   test("determinism under repartitioning: 3 vs 13 partitions, same output") {
     val spark = SparkTestSession.get
     import spark.implicits._
-    val a = new KgPipeline(PipelineConfig(workDir = freshDir(), numPartitions = 3))
-    val b = new KgPipeline(PipelineConfig(workDir = freshDir(), numPartitions = 13, saltBuckets = 3))
+    val a = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-"), numPartitions = 3))
+    val b = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-"), numPartitions = 13, saltBuckets = 3))
     a.runFull(spark, fx.turns.toDS().repartition(2), fx.catalog, fx.markers, "r")
     b.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "r")
     assert(edgesOf(a) == edgesOf(b))
@@ -354,7 +351,7 @@ class KgPipelineSpec extends AnyFunSuite {
 
   test("resume after injected crash publishes the same tables as a clean run") {
     val spark = SparkTestSession.get
-    val dirty = new KgPipeline(PipelineConfig(workDir = freshDir()))
+    val dirty = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-")))
     dirty.failAfterStage = Some("supports")
     val ex = intercept[RuntimeException] {
       dirty.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "crash1")
@@ -364,7 +361,7 @@ class KgPipelineSpec extends AnyFunSuite {
     dirty.failAfterStage = None
     dirty.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "crash1")
 
-    val clean = new KgPipeline(PipelineConfig(workDir = freshDir()))
+    val clean = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-")))
     clean.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "clean1")
     assert(edgesOf(dirty) == edgesOf(clean))
   }
@@ -378,11 +375,11 @@ class KgPipelineSpec extends AnyFunSuite {
     val t0 = fx.turns.filter(_.turn_idx <= 6)
     val t1 = fx.turns.filterNot(_.conv_id == "conv-000003")
 
-    val p = new KgPipeline(PipelineConfig(workDir = freshDir(), syncOldData = true))
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-"), syncOldData = true))
     p.runFull(spark, turnsDs(t0), fx.catalog, fx.markers, "t0")
     p.runSync(spark, turnsDs(t1), fx.catalog, fx.markers, "t1")
 
-    val scratch = new KgPipeline(PipelineConfig(workDir = freshDir()))
+    val scratch = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-")))
     scratch.runFull(spark, turnsDs(t1), fx.catalog, fx.markers, "scratch")
     assert(edgesOf(p) == edgesOf(scratch))
   }
@@ -401,7 +398,7 @@ class KgPipelineSpec extends AnyFunSuite {
         "je to spark na table se to hodi je to tak", null, ts),
       graft.schema.Turn("cNONE", 0, "user",
         "spark table xyzzy words without function hits", null, ts)).toDS()
-    val p = new KgPipeline(PipelineConfig(workDir = freshDir(),
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-"),
       detectLanguage = true, language = "xx"))
     val langs = p.computeSupports(spark, turns, cat, Map.empty)
       .select("conv_id", "lang").distinct()
@@ -410,13 +407,13 @@ class KgPipelineSpec extends AnyFunSuite {
     assert(langs("cCS") == "cs")
     assert(langs("cNONE") == "xx") // no profile hits -> configured fallback
     // default off: single configured language, encoded fast path untouched
-    val q = new KgPipeline(PipelineConfig(workDir = freshDir(), language = "xx"))
+    val q = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-"), language = "xx"))
     val defaults = q.computeSupports(spark, turns, cat, Map.empty)
       .select("lang").distinct().collect().map(_.getString(0)).toSet
     assert(defaults == Set("xx"))
     // misconfigurations fail loudly, never silently misroute
     intercept[IllegalArgumentException] {
-      new KgPipeline(PipelineConfig(workDir = freshDir(),
+      new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-"),
         detectLanguage = true, langProfiles = Map.empty))
         .computeSupports(spark, turns, cat, Map.empty).count()
     }
@@ -453,7 +450,7 @@ class KgPipelineSpec extends AnyFunSuite {
   test("sync on a pre-pin workDir WITH published tables refuses to adopt " +
        "the current flags (their rows' semantics are unknowable)") {
     val spark = SparkTestSession.get
-    val wd = freshDir()
+    val wd = TempDirs("graft-test-")
     val small = TranscriptGen.generate(nConv = 3, nEnt = 5, hotFactor = 1)
     val p = new KgPipeline(PipelineConfig(workDir = wd))
     p.runFull(spark, turnsDs(small.turns), small.catalog, small.markers, "r1")
@@ -468,17 +465,5 @@ class KgPipelineSpec extends AnyFunSuite {
     p.runFull(spark, turnsDs(small.turns), small.catalog, small.markers, "r2")
     p.runSync(spark, turnsDs(small.turns), small.catalog, small.markers,
       "sync-repinned")
-  }
-
-  test("fillMissing adds defaults only for absent (subject, predicate)") {
-    val spark = SparkTestSession.get
-    import spark.implicits._
-    val triples = Seq(("s1", "p1", "x"), ("s2", "p2", "y"))
-      .toDF("subj", "pred", "obj")
-    val cfg = PipelineConfig(normMissing = Map("p1" -> Seq("default1")))
-    val got = graft.extract.Extractor.fillMissing(triples, cfg)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-    assert(got == Set(
-      ("s1", "p1", "x"), ("s2", "p2", "y"), ("s2", "p1", "default1")))
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.app.MultiRiver
@@ -14,9 +12,6 @@ import graft.sources.TranscriptGen
   * failure isolation (the reference's pool-of-6 semantics, Indexer.java:78 +
   * RunScheduledIndexing.java:19-24). */
 class MultiRiverSpec extends AnyFunSuite {
-
-  private def freshDir(): String =
-    Files.createTempDirectory("graft-multi-").toString
 
   // identity env overlay: specs must not depend on the test JVM's env
   private val overlay: (PipelineConfig, String) => PipelineConfig =
@@ -55,14 +50,14 @@ class MultiRiverSpec extends AnyFunSuite {
     // two DIFFERENT corpora so a cross-river leak cannot cancel out
     val fxA = TranscriptGen.generate(nConv = 30, nEnt = 20, hotFactor = 5)
     val fxB = TranscriptGen.generate(nConv = 45, nEnt = 20, hotFactor = 5)
-    val inA = freshDir() + "/turnsA"
-    val inB = freshDir() + "/turnsB"
+    val inA = TempDirs("graft-multi-") + "/turnsA"
+    val inB = TempDirs("graft-multi-") + "/turnsB"
     fxA.turns.toDS().repartition(3).write.parquet(inA)
     fxB.turns.toDS().repartition(3).write.parquet(inB)
-    val catDir = freshDir() + "/catalog"
+    val catDir = TempDirs("graft-multi-") + "/catalog"
     fxA.catalog.toDS().write.parquet(catDir) // same entity universe (nEnt)
 
-    val base = freshDir()
+    val base = TempDirs("graft-multi-")
     val spec = MultiRiver.parseSpec(
       s"""[{"name":"riverA","mode":"full","input":"$inA","catalog":"$catDir"},
          | {"name":"riverB","mode":"full","input":"$inB","catalog":"$catDir"}]"""
@@ -73,9 +68,9 @@ class MultiRiverSpec extends AnyFunSuite {
     assert(reports.map(_.name) == Seq("riverA", "riverB"), "spec order kept")
 
     // sequential ground truth in fresh dirs
-    val pA = new KgPipeline(PipelineConfig(workDir = freshDir()))
+    val pA = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-multi-")))
     pA.runFull(spark, fxA.turns.toDS(), fxA.catalog, fxA.markers, "seqA")
-    val pB = new KgPipeline(PipelineConfig(workDir = freshDir()))
+    val pB = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-multi-")))
     pB.runFull(spark, fxB.turns.toDS(), fxA.catalog, fxB.markers, "seqB")
 
     val mA = new KgPipeline(PipelineConfig(workDir = s"$base/riverA"))
@@ -89,11 +84,11 @@ class MultiRiverSpec extends AnyFunSuite {
     val spark = SparkTestSession.get
     import spark.implicits._
     val fx = TranscriptGen.generate(nConv = 20, nEnt = 20, hotFactor = 5)
-    val in = freshDir() + "/turns"
+    val in = TempDirs("graft-multi-") + "/turns"
     fx.turns.toDS().write.parquet(in)
-    val catDir = freshDir() + "/catalog"
+    val catDir = TempDirs("graft-multi-") + "/catalog"
     fx.catalog.toDS().write.parquet(catDir)
-    val base = freshDir()
+    val base = TempDirs("graft-multi-")
     val spec = MultiRiver.parseSpec(
       s"""[{"name":"poison","mode":"full","input":"$base/does-not-exist","catalog":"$catDir"},
          | {"name":"healthy","mode":"full","input":"$in","catalog":"$catDir"}]"""
@@ -116,8 +111,8 @@ class MultiRiverSpec extends AnyFunSuite {
     import spark.implicits._
     val fx = TranscriptGen.generate(nConv = 25, nEnt = 20, hotFactor = 5)
     // river 1 gets everything up front; river 2 gets the rest via sync
-    val in1 = freshDir() + "/t1"; val in2a = freshDir() + "/t2a"
-    val in2b = freshDir() + "/t2b"
+    val in1 = TempDirs("graft-multi-") + "/t1"; val in2a = TempDirs("graft-multi-") + "/t2a"
+    val in2b = TempDirs("graft-multi-") + "/t2b"
     fx.turns.toDS().write.parquet(in1)
     // event-time split: sync is watermark-driven, so the second batch must
     // carry the LATER timestamps, not a random half
@@ -127,9 +122,9 @@ class MultiRiverSpec extends AnyFunSuite {
     assume(early.nonEmpty && late.nonEmpty)
     early.toDS().write.parquet(in2a)
     (early ++ late).toDS().write.parquet(in2b)
-    val catDir = freshDir() + "/catalog"
+    val catDir = TempDirs("graft-multi-") + "/catalog"
     fx.catalog.toDS().write.parquet(catDir)
-    val base = freshDir()
+    val base = TempDirs("graft-multi-")
     val full = MultiRiver.parseSpec(
       s"""[{"name":"one","mode":"full","input":"$in1","catalog":"$catDir"},
          | {"name":"two","mode":"full","input":"$in2a","catalog":"$catDir"}]"""
@@ -141,7 +136,7 @@ class MultiRiverSpec extends AnyFunSuite {
         .stripMargin, base)
     assert(MultiRiver.run(spark, sync, 2, overlay).forall(_.ok))
     // river two caught up to a full run over the whole corpus
-    val ground = new KgPipeline(PipelineConfig(workDir = freshDir()))
+    val ground = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-multi-")))
     ground.runFull(spark, fx.turns.toDS(), fx.catalog, fx.markers, "g")
     val two = new KgPipeline(PipelineConfig(workDir = s"$base/two"))
     assert(edgeSet(two) == edgeSet(ground))

@@ -1,40 +1,12 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.io.Bucketing
-import graft.operators.{AsOfJoin, SaltedJoin}
-import graft.streaming.StatefulSessionizer
+import graft.operators.AsOfJoin
 
 class OperatorsSpec extends AnyFunSuite {
-
-  test("asOf matches the brute-force pairwise definition on random data") {
-    val spark = SparkTestSession.get
-    import spark.implicits._
-    val rnd = new scala.util.Random(3)
-    val left = (1 to 200).map(i =>
-      (rnd.nextInt(10).toLong, new Timestamp(rnd.nextInt(100000).toLong), i.toLong))
-    // unique right timestamps per key -> the latest-at-or-before row is
-    // well-defined and the brute force is an exact oracle
-    val right = rnd.shuffle((1 to 150).map(i =>
-      ((i % 10).toLong, new Timestamp(i * 613L), i * 10.0)).toVector)
-    val l = left.toDF("k", "lts", "lid")
-    val r = right.toDF("k", "rts", "rv")
-
-    val got = AsOfJoin.asOf(l, r, "k", "lts", "rts", "rv", "asof_v")
-      .select("k", "lid", "asof_v").collect()
-      .map(x => x.getLong(1) ->
-        (if (x.isNullAt(2)) None else Some(x.getDouble(2)))).toMap
-
-    val brute = left.map { case (k, lts, lid) =>
-      val cands = right.filter(c => c._1 == k && !c._2.after(lts))
-      lid -> (if (cands.isEmpty) None else Some(cands.maxBy(_._2.getTime)._3))
-    }.toMap
-    assert(got == brute)
-  }
 
   test("lastPriorEvent: each purchase sees its latest prior click") {
     val spark = SparkTestSession.get
@@ -55,55 +27,5 @@ class OperatorsSpec extends AnyFunSuite {
     assert(got(2L) == new Timestamp(1000))
     assert(got(4L) == new Timestamp(3000))
     assert(got(5L) == null)
-  }
-
-  test("salted join equals plain join, including a hot key") {
-    val spark = SparkTestSession.get
-    import spark.implicits._
-    val fact = ((1 to 5000).map(i => (1L, s"hot$i")) ++
-      (1 to 100).map(i => ((i % 7 + 2).toLong, s"cold$i"))).toDF("k", "payload")
-    val dim = Seq((1L, "one"), (2L, "two"), (3L, "three"), (9L, "unused"))
-      .toDF("k", "label")
-    val plain = fact.join(dim, Seq("k")).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-    val salted = SaltedJoin.join(fact, dim, "k", buckets = 8).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-    assert(salted == plain)
-  }
-
-  test("bucketed tables join without an exchange on the bucket key") {
-    val spark = SparkTestSession.get
-    import spark.implicits._
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val a = (1 to 1000).map(i => (i.toLong, s"a$i")).toDF("k", "va")
-      val b = (1 to 1000).map(i => (i.toLong, s"b$i")).toDF("k", "vb")
-      Bucketing.writeBucketed(a, "bt_a", Seq("k"), 4)
-      Bucketing.writeBucketed(b, "bt_b", Seq("k"), 4)
-      val joined = Bucketing.read(spark, "bt_a")
-        .join(Bucketing.read(spark, "bt_b"), Seq("k"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"bucketed join still shuffles:\n$plan")
-      assert(joined.count() == 1000)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.sql("DROP TABLE IF EXISTS bt_a")
-      spark.sql("DROP TABLE IF EXISTS bt_b")
-    }
-  }
-
-  test("stateful sessionizer assigns gap-based sessions across micro-batches") {
-    val spark = SparkTestSession.get
-    import spark.implicits._
-    import StatefulSessionizer._
-    val m = 60L * 1000 // minute in millis
-    val evs = Seq(
-      Ev(1, 1, new Timestamp(0)), Ev(1, 2, new Timestamp(10 * m)),
-      Ev(1, 3, new Timestamp(70 * m)), // > 30 min gap -> new session
-      Ev(2, 4, new Timestamp(0)))
-    // batch-mode execution of the same stateful logic
-    val got = sessionize(evs.toDS()).collect()
-      .map(a => a.event_id -> a.session_id).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 2L, 4L -> 1L))
   }
 }

@@ -225,7 +225,7 @@ class PlanRegressionSpec extends AnyFunSuite {
   test("sync support read prunes to the changed buckets only") {
     val spark = SparkTestSession.get
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("prune-").toString
+    val dir = TempDirs("prune-")
     val t = new graft.io.TableCommitter(dir)
     val df = (0 until 64).map(i => (i, s"v$i", i % 8)).toDF("k", "v", "bucket")
     t.stagePartitioned(df, "r1")

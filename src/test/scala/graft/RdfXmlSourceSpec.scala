@@ -48,7 +48,7 @@ class RdfXmlSourceSpec extends AnyFunSuite {
       "urn:ex:prov" -> "b"))        // rdf:nodeID
     // the distributed frame read compiles isIRI/isBlank over the tk column
     val spark = SparkTestSession.get
-    val dir = Files.createTempDirectory("rdf-tk-")
+    val dir = TempDirs.path("rdf-tk-")
     Files.writeString(dir.resolve("g.rdf"), xml)
     val frame = RdfXmlSource.readWithKind(spark, dir.toString)
     assert(frame.columns.toSeq == Seq("s", "p", "o", "ol", "dt", "tk"))
@@ -425,7 +425,7 @@ class RdfXmlSourceSpec extends AnyFunSuite {
 
   test("distributed read: NT parity on a blank-free graph, malformed file dropped") {
     val spark = SparkTestSession.get
-    val dir = Files.createTempDirectory("rdfxml-")
+    val dir = TempDirs.path("rdfxml-")
     Files.writeString(dir.resolve("a.rdf"),
       """<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#"
         |         xmlns:p="urn:p:" xml:lang="en">
@@ -443,7 +443,7 @@ class RdfXmlSourceSpec extends AnyFunSuite {
     Files.writeString(dir.resolve("broken.rdf"), "<rdf:RDF><oops>")
     val viaXml = RdfXmlSource.read(spark, dir.toString).collect().toSet
 
-    val ntDir = Files.createTempDirectory("nt-parity-")
+    val ntDir = TempDirs.path("nt-parity-")
     Files.writeString(ntDir.resolve("g.nt"), viaXml.toSeq.sortBy(_.toString)
       .map(NTriplesSource.render).mkString("", "\n", "\n"))
     val viaNt = NTriplesSource.read(spark, ntDir.toString).collect().toSet
@@ -462,7 +462,7 @@ class RdfXmlSourceSpec extends AnyFunSuite {
        "quarantine contract of KgMain ingest-rdfxml") {
     val spark = SparkTestSession.get
     import spark.implicits._
-    val dir = Files.createTempDirectory("rdfxml-rejects-")
+    val dir = TempDirs.path("rdfxml-rejects-")
     Files.writeString(dir.resolve("good.rdf"),
       """<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#"
         |         xmlns:p="urn:p:">
@@ -491,7 +491,7 @@ class RdfXmlSourceSpec extends AnyFunSuite {
       RdfXmlSource.read(spark, dir.toString).collect().toSet)
 
     // the app's quarantine write shape round-trips through parquet
-    val out = Files.createTempDirectory("rdfxml-rejects-out-").toString
+    val out = TempDirs("rdfxml-rejects-out-")
     RdfXmlSource.readParsed(spark, dir.toString)
       .filter(_.reason.isDefined)
       .map(p => (p.path, p.reason.get)).toDF("path", "reason")

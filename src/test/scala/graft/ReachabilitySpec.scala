@@ -1,0 +1,139 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Guards "no main-code module that only its own spec calls": every
+  * top-level object, class and trait under src/main/scala must be named,
+  * directly or through other main code, by an entry point (an object with
+  * `def main`). Specs do not count as callers, so a module kept alive only
+  * by its spec fails here. Names inside comments do not count either;
+  * names inside string literals do (Spark loads extensions by class name). */
+class ReachabilitySpec extends AnyFunSuite {
+
+  private val mainRoot = Paths.get("src", "main", "scala")
+
+  private val Decl =
+    """^(?:(?:final|sealed|abstract|private(?:\[\w+\])?|case|implicit)\s+)*(?:object|class|trait)\s+(\w+)""".r
+
+  /** Source with comments blanked out; string and char literals kept. */
+  private def stripComments(src: String): String = {
+    val out = new StringBuilder
+    var i = 0
+    def at(s: String) = src.startsWith(s, i)
+    while (i < src.length) {
+      if (at("//")) {
+        while (i < src.length && src(i) != '\n') i += 1
+      } else if (at("/*")) {
+        var depth = 0 // Scala block comments nest
+        do {
+          if (at("/*")) { depth += 1; i += 2 }
+          else if (at("*/")) { depth -= 1; i += 2 }
+          else { if (src(i) == '\n') out += '\n'; i += 1 }
+        } while (depth > 0 && i < src.length)
+      } else if (at("\"\"\"")) {
+        val end = src.indexOf("\"\"\"", i + 3)
+        val stop = if (end < 0) src.length else end + 3
+        out ++= src.substring(i, stop); i = stop
+      } else if (at("\"")) {
+        var j = i + 1
+        while (j < src.length && src(j) != '"' && src(j) != '\n')
+          j += (if (src(j) == '\\') 2 else 1)
+        val stop = math.min(j + 1, src.length)
+        out ++= src.substring(i, stop); i = stop
+      } else if (at("'\\") && src.startsWith("'", i + 3)) {
+        out ++= src.substring(i, i + 4); i += 4
+      } else if (at("'") && src.startsWith("'", i + 2)) {
+        out ++= src.substring(i, i + 3); i += 3
+      } else {
+        out += src(i); i += 1
+      }
+    }
+    out.toString
+  }
+
+  /** Top-level type name -> its code (plus its file's package and imports;
+    * companions share one entry). */
+  private def definitions(sources: Seq[String]): Map[String, String] =
+    sources.flatMap { src =>
+      val header = new StringBuilder
+      val bodies = scala.collection.mutable.LinkedHashMap.empty[String, StringBuilder]
+      var current: Option[String] = None
+      stripComments(src).split("\n").foreach { line =>
+        Decl.findPrefixMatchOf(line) match {
+          case Some(m) =>
+            current = Some(m.group(1))
+            bodies.getOrElseUpdate(m.group(1), new StringBuilder) ++= m.after.toString ++= "\n"
+          case None =>
+            current.fold(header)(bodies) ++= line ++= "\n"
+        }
+      }
+      bodies.map { case (name, body) => name -> (header.toString + body) }
+    }.groupMapReduce(_._1)(_._2)(_ + _)
+
+  /** Names of the definitions no entry point reaches. */
+  private def unreached(sources: Seq[String]): Set[String] = {
+    val defs = definitions(sources)
+    val roots = defs.collect {
+      case (name, code) if """\bdef\s+main\s*\(""".r.findFirstIn(code).isDefined => name
+    }
+    var reached = roots.toSet
+    var frontier = roots.toList
+    while (frontier.nonEmpty) {
+      val code = defs(frontier.head)
+      frontier = frontier.tail
+      val found = defs.keys.filter(n =>
+        !reached(n) && s"\\b$n\\b".r.findFirstIn(code).isDefined)
+      reached ++= found
+      frontier ++= found
+    }
+    defs.keySet -- reached
+  }
+
+  private def mainSources(): Seq[(Path, String)] = {
+    assert(Files.isDirectory(mainRoot),
+      s"run from the project root: no $mainRoot under ${Paths.get("").toAbsolutePath}")
+    val walk = Files.walk(mainRoot)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      .map(p => p -> Files.readString(p))
+    finally walk.close()
+  }
+
+  test("the guard flags a module only its spec would call; comments do not reach") {
+    val sources = Seq(
+      """package x
+        |import x.util.Helper
+        |/** see [[Orphan]] */
+        |object App { def main(a: Array[String]): Unit = Helper.run("/*x") }
+        |""".stripMargin,
+      """package x.util
+        |object Helper { def run(s: String): Unit = Error.check(s) }
+        |final case class Error(msg: String)
+        |object Error { def check(s: String): Unit = () }
+        |""".stripMargin,
+      """package x
+        |// Orphan is used by App
+        |object Orphan { def f = 1 }
+        |""".stripMargin)
+    assert(unreached(sources) == Set("Orphan"))
+  }
+
+  test("every top-level main type is reachable from an entry point") {
+    val sources = mainSources()
+    val byName = sources.flatMap { case (p, src) =>
+      src.split("\n").flatMap(l => Decl.findPrefixMatchOf(l).map(_.group(1) -> p))
+    }.toMap
+    val dead = unreached(sources.map(_._2))
+    assert(dead.isEmpty, "no entry point reaches: " +
+      dead.toSeq.sorted.map(n => s"$n (${byName(n)})").mkString(", "))
+  }
+
+  test("the frozen driver entry points exist") {
+    Seq("Bench.scala", "Verify.scala", "SparkEntry.scala").foreach { f =>
+      assert(Files.isRegularFile(mainRoot.resolve(Paths.get("graft", f))), f)
+    }
+  }
+}

@@ -1190,7 +1190,7 @@ class SparqlSpec extends AnyFunSuite {
     // on a STORED triple table (the 100 TB layout), a pattern's constant
     // positions must reach the reader as PushedFilters — that is what makes
     // `?s <urn:p:label> ?o` read the label slice instead of the whole table
-    val dir = java.nio.file.Files.createTempDirectory("sparql-tr").toString
+    val dir = TempDirs("sparql-tr")
     toDf(refTriples).write.mode("overwrite").parquet(dir)
     val stored = spark.read.parquet(dir)
     val df = SparqlCompiler.compile(
@@ -1207,7 +1207,7 @@ class SparqlSpec extends AnyFunSuite {
     import s.implicits._
     // build a real KG with the pipeline (what `KgMain full` publishes)...
     val fx = graft.sources.TranscriptGen.generate(nConv = 12, nEnt = 6, hotFactor = 1)
-    val dir = java.nio.file.Files.createTempDirectory("sparql-e2e").toString
+    val dir = TempDirs("sparql-e2e")
     val p = new graft.pipeline.KgPipeline(
       graft.config.PipelineConfig(workDir = dir, numPartitions = 4))
     p.runFull(s, fx.turns.toDS(), fx.catalog, fx.markers, "r1")
@@ -1643,7 +1643,7 @@ class SparqlSpec extends AnyFunSuite {
       frame))
     assert(eOr.getMessage.contains("top-level FILTER conjunct"))
     // pushdown plan lock: the tk condition reaches the parquet scan
-    val dir = java.nio.file.Files.createTempDirectory("sparql-tk").toString
+    val dir = TempDirs("sparql-tk")
     frame.write.mode("overwrite").parquet(dir)
     val stored = spark.read.parquet(dir)
     val plan = SparqlCompiler.compile(

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config.PipelineConfig
@@ -89,7 +87,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
     import spark.implicits._
     val fx = TranscriptGen.generate(nConv = 10, nEnt = 10, hotFactor = 2)
     val p = new KgPipeline(PipelineConfig(
-      workDir = Files.createTempDirectory("docs-").toString, publishDocs = true))
+      workDir = TempDirs("docs-"), publishDocs = true))
     p.runFull(spark, fx.turns.toDS(), fx.catalog, fx.markers, "r")
     val docs = p.docTable.read(spark).get
     assert(docs.count() > 0)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,8 +18,6 @@ import graft.text.LangDetect
   * re-keys the conversation's already-published rows inside the bucket
   * rewrite, so one logical support never splits across two lang keys. */
 class StreamingLangSpec extends AnyFunSuite {
-
-  private def tmp(p: String): String = Files.createTempDirectory(p).toString
 
   private def t(conv: String, idx: Int, text: String): Turn =
     Turn(conv, idx, "user", text, null,
@@ -47,13 +44,13 @@ class StreamingLangSpec extends AnyFunSuite {
       "lorA" -> Set("lorem", "ipsum", "dolor"),
       "lorB" -> Set("sed", "do", "tempor"))
     val cfg = PipelineConfig(detectLanguage = true, langProfiles = profiles,
-      workDir = tmp("slang-work-"))
+      workDir = TempDirs("slang-work-"))
     val fx = TranscriptGen.generate(nConv = 10, nEnt = 8, hotFactor = 2)
-    val inDir = tmp("slang-in-")
+    val inDir = TempDirs("slang-in-")
     fx.turns.toDS().repartition(3).write.mode("overwrite").parquet(inDir)
-    val table = new TableCommitter(tmp("slang-tbl-"))
-    val lang = new TableCommitter(tmp("slang-state-"))
-    StreamingSync.ingestAvailableNow(spark, inDir, tmp("slang-ckpt-"),
+    val table = new TableCommitter(TempDirs("slang-tbl-"))
+    val lang = new TableCommitter(TempDirs("slang-state-"))
+    StreamingSync.ingestAvailableNow(spark, inDir, TempDirs("slang-ckpt-"),
       fx.catalog, fx.markers, cfg, table, maxFilesPerBatch = Some(1),
       langStateTable = Some(lang))
     assert(table.currentGeneration("lastBatch").exists(_.toLong >= 1),
@@ -82,13 +79,13 @@ class StreamingLangSpec extends AnyFunSuite {
   test("a language flip re-keys published rows — even from a support-less batch") {
     val spark = SparkTestSession.get
     import spark.implicits._
-    val cfg = PipelineConfig(detectLanguage = true, workDir = tmp("slang-work-"))
+    val cfg = PipelineConfig(detectLanguage = true, workDir = TempDirs("slang-work-"))
     val catalog = TranscriptGen.catalog(3)
     val markers = TranscriptGen.markerPreds
-    val inDir = tmp("slang-in-")
-    val ckpt = tmp("slang-ckpt-")
-    val table = new TableCommitter(tmp("slang-tbl-"))
-    val lang = new TableCommitter(tmp("slang-state-"))
+    val inDir = TempDirs("slang-in-")
+    val ckpt = TempDirs("slang-ckpt-")
+    val table = new TableCommitter(TempDirs("slang-tbl-"))
+    val lang = new TableCommitter(TempDirs("slang-state-"))
     def ingest(): Unit = StreamingSync.ingestAvailableNow(spark, inDir, ckpt,
       catalog, markers, cfg, table, langStateTable = Some(lang))
 
@@ -138,7 +135,7 @@ class StreamingLangSpec extends AnyFunSuite {
       "lorA" -> Set("lorem", "ipsum", "dolor"),
       "lorB" -> Set("sed", "do", "tempor"))
     val cfg = PipelineConfig(detectLanguage = true, langProfiles = profiles,
-      workDir = tmp("slang-work-"))
+      workDir = TempDirs("slang-work-"))
     val catalog = TranscriptGen.catalog(2)
     // batch 1: conversation votes lorA; batch 2: enough lorB tokens that
     // the CUMULATIVE winner flips — proven here, not assumed
@@ -151,7 +148,7 @@ class StreamingLangSpec extends AnyFunSuite {
     assert(winner(Seq(t0)) == "lorA" && winner(Seq(t0, t1)) == "lorB",
       "fixture must flip the cumulative winner in batch 2")
 
-    val inDir = tmp("slang-in-")
+    val inDir = TempDirs("slang-in-")
     def writeFile(turn: Turn, mtime: Long): Unit = {
       Seq(turn).toDS().coalesce(1).write.mode("append").parquet(inDir)
       // pin modification times so the file source feeds batch 1 before
@@ -169,12 +166,12 @@ class StreamingLangSpec extends AnyFunSuite {
     writeFile(t0, 1700000000000L)
     writeFile(t1, 1700000100000L)
 
-    val table = new TableCommitter(tmp("slang-tbl-"))
-    val lang = new TableCommitter(tmp("slang-state-"))
-    val eTbl = new TableCommitter(tmp("slang-e-"))
-    val nTbl = new TableCommitter(tmp("slang-n-"))
-    val dTbl = new TableCommitter(tmp("slang-d-"))
-    StreamingSync.ingestAvailableNow(spark, inDir, tmp("slang-ckpt-"),
+    val table = new TableCommitter(TempDirs("slang-tbl-"))
+    val lang = new TableCommitter(TempDirs("slang-state-"))
+    val eTbl = new TableCommitter(TempDirs("slang-e-"))
+    val nTbl = new TableCommitter(TempDirs("slang-n-"))
+    val dTbl = new TableCommitter(TempDirs("slang-d-"))
+    StreamingSync.ingestAvailableNow(spark, inDir, TempDirs("slang-ckpt-"),
       catalog, TranscriptGen.markerPreds, cfg, table,
       maxFilesPerBatch = Some(1), langStateTable = Some(lang),
       edgeTable = Some(eTbl), nodeTable = Some(nTbl), docTable = Some(dTbl))
@@ -223,23 +220,23 @@ class StreamingLangSpec extends AnyFunSuite {
   test("refusals and pins: missing state table, derived tables, profile edits") {
     val spark = SparkTestSession.get
     import spark.implicits._
-    val cfg = PipelineConfig(detectLanguage = true, workDir = tmp("slang-work-"))
+    val cfg = PipelineConfig(detectLanguage = true, workDir = TempDirs("slang-work-"))
     val catalog = TranscriptGen.catalog(2)
-    val inDir = tmp("slang-in-")
+    val inDir = TempDirs("slang-in-")
     Seq(t("c0", 0, "al0x uses al1x the of")).toDS()
       .coalesce(1).write.mode("overwrite").parquet(inDir)
 
     val e1 = intercept[IllegalArgumentException](
-      StreamingSync.ingestAvailableNow(spark, inDir, tmp("slang-ckpt-"),
+      StreamingSync.ingestAvailableNow(spark, inDir, TempDirs("slang-ckpt-"),
         catalog, TranscriptGen.markerPreds, cfg,
-        new TableCommitter(tmp("slang-tbl-"))))
+        new TableCommitter(TempDirs("slang-tbl-"))))
     assert(e1.getMessage.contains("langStateTable"))
 
     // profile pin: counters are positional over the sorted profile keys, so
     // an edited profile set must refuse to write into the same state lineage
-    val table = new TableCommitter(tmp("slang-tbl-"))
-    val state = new TableCommitter(tmp("slang-state-"))
-    val ckpt = tmp("slang-ckpt-")
+    val table = new TableCommitter(TempDirs("slang-tbl-"))
+    val state = new TableCommitter(TempDirs("slang-state-"))
+    val ckpt = TempDirs("slang-ckpt-")
     StreamingSync.ingestAvailableNow(spark, inDir, ckpt, catalog,
       TranscriptGen.markerPreds, cfg, table, langStateTable = Some(state))
     val edited = cfg.copy(langProfiles = cfg.langProfiles +

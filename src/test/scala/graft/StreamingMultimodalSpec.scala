@@ -6,7 +6,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config.PipelineConfig
 import graft.io.TableCommitter
-import graft.multimodal.Multimodal
 import graft.sources.TranscriptGen
 import graft.streaming.StreamingSync
 
@@ -16,10 +15,10 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val spark = SparkTestSession.get
     import spark.implicits._
     val fx = TranscriptGen.generate(nConv = 10, nEnt = 10, hotFactor = 2)
-    val inDir = Files.createTempDirectory("stream-in-").toString
+    val inDir = TempDirs("stream-in-")
     fx.turns.toDS().repartition(3).write.mode("overwrite").parquet(inDir)
-    val table = new TableCommitter(Files.createTempDirectory("stream-tbl-").toString)
-    val ckpt = Files.createTempDirectory("stream-ckpt-").toString
+    val table = new TableCommitter(TempDirs("stream-tbl-"))
+    val ckpt = TempDirs("stream-ckpt-")
 
     // one file per micro-batch FORCES conversations to split across batches
     // (AvailableNow would otherwise take all files in a single batch and
@@ -62,10 +61,10 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val spark = SparkTestSession.get
     import spark.implicits._
     val fx = TranscriptGen.generate(nConv = 12, nEnt = 10, hotFactor = 2)
-    val inDir = Files.createTempDirectory("stream-ob-in-").toString
+    val inDir = TempDirs("stream-ob-in-")
     fx.turns.toDS().coalesce(1).write.mode("overwrite").parquet(inDir)
-    val table = new TableCommitter(Files.createTempDirectory("stream-ob-tbl-").toString)
-    val ckpt = Files.createTempDirectory("stream-ob-ckpt-").toString
+    val table = new TableCommitter(TempDirs("stream-ob-tbl-"))
+    val ckpt = TempDirs("stream-ob-ckpt-")
     val cfg = PipelineConfig()
     StreamingSync.ingestAvailableNow(spark, inDir, ckpt,
       fx.catalog, fx.markers, cfg, table)
@@ -132,11 +131,11 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val spark = SparkTestSession.get
     import spark.implicits._
     val fx = TranscriptGen.generate(nConv = 8, nEnt = 8, hotFactor = 2)
-    val inDir = Files.createTempDirectory("stream-rp-in-").toString
+    val inDir = TempDirs("stream-rp-in-")
     fx.turns.toDS().coalesce(1).write.mode("overwrite").parquet(inDir)
-    val tblDir = Files.createTempDirectory("stream-rp-tbl-").toString
+    val tblDir = TempDirs("stream-rp-tbl-")
     val table = new TableCommitter(tblDir)
-    val ckpt = Files.createTempDirectory("stream-rp-ckpt-").toString
+    val ckpt = TempDirs("stream-rp-ckpt-")
     StreamingSync.ingestAvailableNow(spark, inDir, ckpt,
       fx.catalog, fx.markers, PipelineConfig(), table)
     def content() = table.read(spark).get.collect()
@@ -170,17 +169,17 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val spark = SparkTestSession.get
     import spark.implicits._
     val fx = TranscriptGen.generate(nConv = 4, nEnt = 5, hotFactor = 1)
-    val inDir = Files.createTempDirectory("stream-ck-in-").toString
+    val inDir = TempDirs("stream-ck-in-")
     fx.turns.toDS().write.mode("overwrite").parquet(inDir)
-    val table = new TableCommitter(Files.createTempDirectory("stream-ck-tbl-").toString)
-    val ckpt1 = Files.createTempDirectory("stream-ck1-").toString
+    val table = new TableCommitter(TempDirs("stream-ck-tbl-"))
+    val ckpt1 = TempDirs("stream-ck1-")
     StreamingSync.ingestAvailableNow(spark, inDir, ckpt1,
       fx.catalog, fx.markers, PipelineConfig(), table)
     assert(table.read(spark).isDefined)
 
     // a FRESH checkpoint restarts batchIds at 0; running it over the same
     // table must fail loudly (skip = data loss, reprocess = double count)
-    val ckpt2 = Files.createTempDirectory("stream-ck2-").toString
+    val ckpt2 = TempDirs("stream-ck2-")
     val ex = intercept[IllegalStateException] {
       StreamingSync.ingestAvailableNow(spark, inDir, ckpt2,
         fx.catalog, fx.markers, PipelineConfig(), table)
@@ -193,7 +192,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val spark = SparkTestSession.get
     import spark.implicits._
     val fx = TranscriptGen.generate(nConv = 2, nEnt = 3, hotFactor = 1)
-    val inDir = Files.createTempDirectory("stream-guard-in-").toString
+    val inDir = TempDirs("stream-guard-in-")
     fx.turns.toDS().write.mode("overwrite").parquet(inDir)
     // scoredLinking is NOT in this list since round 4: per-turn contextual
     // scoring is batch-boundary-safe and streams through AmbiguityResolver.
@@ -204,10 +203,10 @@ class StreamingMultimodalSpec extends AnyFunSuite {
         PipelineConfig(detectLanguage = true),
         PipelineConfig(corefResolution = true))) {
       val table = new TableCommitter(
-        Files.createTempDirectory("stream-guard-tbl-").toString)
+        TempDirs("stream-guard-tbl-"))
       assertThrows[IllegalArgumentException] {
         StreamingSync.ingestAvailableNow(spark, inDir,
-          Files.createTempDirectory("stream-guard-ck-").toString,
+          TempDirs("stream-guard-ck-"),
           fx.catalog, fx.markers, cfg, table)
       }
     }
@@ -233,11 +232,11 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       turn("conv-planet", 1, "mercury is the innermost planet of the solar system"),
       turn("conv-element", 0, "mercury is a chemical element a silvery metal"),
       turn("conv-book", 0, "the definitive guide book covers apache spark"))
-    val inDir = Files.createTempDirectory("stream-scored-in-").toString
+    val inDir = TempDirs("stream-scored-in-")
     // one FLAT file per turn -> one turn per micro-batch (conv-planet's two
     // turns land in different batches, proving batch-boundary safety)
     turns.zipWithIndex.foreach { case (t, i) =>
-      val tmp = Files.createTempDirectory("stream-scored-one-")
+      val tmp = TempDirs.path("stream-scored-one-")
       Seq(t).toDS().coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       import scala.jdk.CollectionConverters._
       val part = Files.list(tmp).iterator().asScala
@@ -246,9 +245,9 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     }
     val cfg = PipelineConfig(scoredLinking = true)
     val table = new TableCommitter(
-      Files.createTempDirectory("stream-scored-tbl-").toString)
+      TempDirs("stream-scored-tbl-"))
     StreamingSync.ingestAvailableNow(spark, inDir,
-      Files.createTempDirectory("stream-scored-ck-").toString,
+      TempDirs("stream-scored-ck-"),
       cat, Map.empty, cfg, table, maxFilesPerBatch = Some(1))
     assert(table.currentGeneration("lastBatch").exists(_.toLong >= 1),
       "expected multiple micro-batches")
@@ -280,7 +279,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val spark = SparkTestSession.get
     import spark.implicits._
     turns.zipWithIndex.foreach { case (t, i) =>
-      val tmp = Files.createTempDirectory("stream-coref-one-")
+      val tmp = TempDirs.path("stream-coref-one-")
       Seq(t).toDS().coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       import scala.jdk.CollectionConverters._
       val part = Files.list(tmp).iterator().asScala
@@ -300,14 +299,14 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val spark = SparkTestSession.get
     import spark.implicits._
     val fx = TranscriptGen.generate(nConv = 10, nEnt = 10, hotFactor = 2)
-    val inDir = Files.createTempDirectory("stream-dt-in-").toString
+    val inDir = TempDirs("stream-dt-in-")
     fx.turns.toDS().repartition(3).write.mode("overwrite").parquet(inDir)
-    val tblDir = Files.createTempDirectory("stream-dt-tbl-").toString
+    val tblDir = TempDirs("stream-dt-tbl-")
     val table = new TableCommitter(tblDir)
-    val eTbl = new TableCommitter(Files.createTempDirectory("stream-dt-e-").toString)
-    val nTbl = new TableCommitter(Files.createTempDirectory("stream-dt-n-").toString)
-    val dTbl = new TableCommitter(Files.createTempDirectory("stream-dt-d-").toString)
-    val ckpt = Files.createTempDirectory("stream-dt-ck-").toString
+    val eTbl = new TableCommitter(TempDirs("stream-dt-e-"))
+    val nTbl = new TableCommitter(TempDirs("stream-dt-n-"))
+    val dTbl = new TableCommitter(TempDirs("stream-dt-d-"))
+    val ckpt = TempDirs("stream-dt-ck-")
     val cfg = PipelineConfig()
     StreamingSync.ingestAvailableNow(spark, inDir, ckpt,
       fx.catalog, fx.markers, cfg, table, maxFilesPerBatch = Some(1),
@@ -380,17 +379,17 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     assert(table.currentGeneration("lastBatch").contains(lastBatch.toString))
 
     // late enabling over a lineage ingested WITHOUT propagation is refused
-    val t2 = new TableCommitter(Files.createTempDirectory("stream-dt-t2-").toString)
-    val ck2 = Files.createTempDirectory("stream-dt-ck2-").toString
+    val t2 = new TableCommitter(TempDirs("stream-dt-t2-"))
+    val ck2 = TempDirs("stream-dt-ck2-")
     StreamingSync.ingestAvailableNow(spark, inDir, ck2,
       fx.catalog, fx.markers, cfg, t2)
     val e2 = intercept[IllegalStateException] {
       StreamingSync.ingestAvailableNow(spark, inDir, ck2,
         fx.catalog, fx.markers, cfg, t2,
         edgeTable = Some(new TableCommitter(
-          Files.createTempDirectory("stream-dt-e2-").toString)),
+          TempDirs("stream-dt-e2-"))),
         nodeTable = Some(new TableCommitter(
-          Files.createTempDirectory("stream-dt-n2-").toString)))
+          TempDirs("stream-dt-n2-"))))
     }
     assert(e2.getMessage.contains("never propagated"))
   }
@@ -415,14 +414,14 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       turn("conv-b", 0, "orbits saturn distantly"),
       // second orphan two batches after the antecedent
       turn("conv-a", 2, "orbits saturn again"))
-    val inDir = Files.createTempDirectory("stream-coref-in-").toString
+    val inDir = TempDirs("stream-coref-in-")
     writeOneFilePerTurn(inDir, turns)
     val cfg = PipelineConfig(corefResolution = true)
     val table = new TableCommitter(
-      Files.createTempDirectory("stream-coref-tbl-").toString)
+      TempDirs("stream-coref-tbl-"))
     val state = new TableCommitter(
-      Files.createTempDirectory("stream-coref-st-").toString)
-    val ckpt = Files.createTempDirectory("stream-coref-ck-").toString
+      TempDirs("stream-coref-st-"))
+    val ckpt = TempDirs("stream-coref-ck-")
     StreamingSync.ingestAvailableNow(spark, inDir, ckpt,
       cat, markers, cfg, table, maxFilesPerBatch = Some(1),
       corefStateTable = Some(state))
@@ -481,15 +480,15 @@ class StreamingMultimodalSpec extends AnyFunSuite {
         "", new java.sql.Timestamp(1000L)),
       Turn("conv-p", 1, "user", "orbits venus today", "",
         new java.sql.Timestamp(1001L)))
-    val inDir = Files.createTempDirectory("stream-cs-in-").toString
+    val inDir = TempDirs("stream-cs-in-")
     writeOneFilePerTurn(inDir, turns)
     val cfg = PipelineConfig(scoredLinking = true, corefResolution = true)
     val table = new TableCommitter(
-      Files.createTempDirectory("stream-cs-tbl-").toString)
+      TempDirs("stream-cs-tbl-"))
     val state = new TableCommitter(
-      Files.createTempDirectory("stream-cs-st-").toString)
+      TempDirs("stream-cs-st-"))
     StreamingSync.ingestAvailableNow(spark, inDir,
-      Files.createTempDirectory("stream-cs-ck-").toString,
+      TempDirs("stream-cs-ck-"),
       cat, markers, cfg, table, maxFilesPerBatch = Some(1),
       corefStateTable = Some(state))
     val orbit = table.read(spark).get
@@ -513,14 +512,14 @@ class StreamingMultimodalSpec extends AnyFunSuite {
         new java.sql.Timestamp(1000L)),
       Turn("conv-a", 1, "user", "orbits saturn closely", "",
         new java.sql.Timestamp(1001L)))
-    val inDir = Files.createTempDirectory("stream-crp-in-").toString
+    val inDir = TempDirs("stream-crp-in-")
     writeOneFilePerTurn(inDir, turns)
     val cfg = PipelineConfig(corefResolution = true)
-    val tblDir = Files.createTempDirectory("stream-crp-tbl-").toString
+    val tblDir = TempDirs("stream-crp-tbl-")
     val table = new TableCommitter(tblDir)
     val state = new TableCommitter(
-      Files.createTempDirectory("stream-crp-st-").toString)
-    val ckpt = Files.createTempDirectory("stream-crp-ck-").toString
+      TempDirs("stream-crp-st-"))
+    val ckpt = TempDirs("stream-crp-ck-")
     StreamingSync.ingestAvailableNow(spark, inDir, ckpt,
       cat, markers, cfg, table, maxFilesPerBatch = Some(1),
       corefStateTable = Some(state))
@@ -555,14 +554,14 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val cat = Seq(CatalogEntry("urn:e:titan", "titan", "titan moon", 1))
     def turn(i: Int, text: String) =
       Turn("conv-x", i, "user", text, "", new java.sql.Timestamp(1000L + i))
-    val inDir = Files.createTempDirectory("stream-ooo-in-").toString
+    val inDir = TempDirs("stream-ooo-in-")
     writeOneFilePerTurn(inDir, Seq(turn(5, "the moon titan shines")))
     val cfg = PipelineConfig(corefResolution = true)
     val table = new TableCommitter(
-      Files.createTempDirectory("stream-ooo-tbl-").toString)
+      TempDirs("stream-ooo-tbl-"))
     val state = new TableCommitter(
-      Files.createTempDirectory("stream-ooo-st-").toString)
-    val ckpt = Files.createTempDirectory("stream-ooo-ck-").toString
+      TempDirs("stream-ooo-st-"))
+    val ckpt = TempDirs("stream-ooo-ck-")
     StreamingSync.ingestAvailableNow(spark, inDir, ckpt,
       cat, Map.empty, cfg, table, corefStateTable = Some(state))
 
@@ -587,9 +586,9 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val fx = TranscriptGen.generate(nConv = 8, nEnt = 10, hotFactor = 2)
     // a structurally-bad row: null text fails the input contract
     val bad = fx.turns.head.copy(turn_idx = 9999, text = null)
-    val inDir = Files.createTempDirectory("stream-n-in-").toString
+    val inDir = TempDirs("stream-n-in-")
     (fx.turns :+ bad).toDS().coalesce(1).write.mode("overwrite").parquet(inDir)
-    val work = Files.createTempDirectory("stream-n-wd-").toString
+    val work = TempDirs("stream-n-wd-")
     // a river config the batch sync honors: blacklist one marker predicate
     val cfg = PipelineConfig(workDir = work,
       listType = "black", proplist = Set("urn:p:collab"))
@@ -598,8 +597,8 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       .extract(fx.turns.toDS(), fx.catalog, fx.markers).toDF()
       .filter(col("pred") === "urn:p:collab").count() > 0)
     val table = new TableCommitter(
-      Files.createTempDirectory("stream-n-tbl-").toString)
-    val ckpt = Files.createTempDirectory("stream-n-ckpt-").toString
+      TempDirs("stream-n-tbl-"))
+    val ckpt = TempDirs("stream-n-ckpt-")
     StreamingSync.ingestAvailableNow(spark, inDir, ckpt,
       fx.catalog, fx.markers, cfg, table)
 
@@ -633,65 +632,5 @@ class StreamingMultimodalSpec extends AnyFunSuite {
         fx.markers, cfg.copy(scoredLinking = true), table)
     }
     assert(e.getMessage.contains("semantics"))
-  }
-
-  test("streaming windowed mention-rate aggregate runs as a real stream") {
-    val spark = SparkTestSession.get
-    import spark.implicits._
-    val fx = TranscriptGen.generate(nConv = 5, nEnt = 5, hotFactor = 1)
-    val inDir = Files.createTempDirectory("stream-mr-").toString
-    fx.turns.toDS().write.mode("overwrite").parquet(inDir)
-    val schema = implicitly[org.apache.spark.sql.Encoder[graft.schema.Turn]].schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val q = StreamingSync.mentionRate(stream)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("mention_rate")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val got = spark.table("mention_rate")
-    assert(got.count() > 0)
-    assert(got.columns.toSet == Set("window", "role", "n_turns"))
-    // streamed totals equal the batch aggregation
-    val batchTotal = fx.turns.size
-    val streamedTotal = got.agg(org.apache.spark.sql.functions.sum("n_turns"))
-      .head().getLong(0)
-    assert(streamedTotal == batchTotal)
-  }
-
-  test("multimodal payload plumbing: schema, determinism, feature shape") {
-    val spark = SparkTestSession.get
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val withPayload = Multimodal.attachPayload(docs)
-    assert(withPayload.schema("payload").dataType.typeName == "binary")
-
-    val feats = Multimodal.extractFeatures(withPayload, dim = 8)
-    val rows = feats.collect()
-    assert(rows.forall(_.features.length == 8))
-    assert(rows.forall(_.n_bytes == 16)) // md5 payload
-    // deterministic: same input -> same features
-    val again = Multimodal.extractFeatures(withPayload, dim = 8).collect()
-    assert(rows.map(_.features.toSeq).toSet == again.map(_.features.toSeq).toSet)
-
-    val frames = Multimodal.frameSample(withPayload, k = 4)
-    val f0 = frames.orderBy("doc_id").head()
-    assert(f0.getSeq[Array[Byte]](1).length == 4) // 16 bytes / every 4th
-
-    // resize: strict downsample to the target, passthrough at-or-under it,
-    // deterministic, and EXACTLY the documented stride positions — length
-    // assertions alone could not tell the resample from plain truncation
-    val srcBytes = withPayload.select("doc_id", "payload").collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
-    val resized = Multimodal.resize(withPayload, targetBytes = 6).collect()
-    assert(resized.forall(_.n_bytes_in == 16)) // all md5 payloads are 16
-    assert(resized.forall { r =>
-      val p = srcBytes(r.doc_id)
-      r.payload.toSeq == (0 until 6).map(i => p((i * p.length) / 6))
-    })
-    val byId = resized.map(r => r.doc_id -> r.payload.toSeq).toMap
-    val pass = Multimodal.resize(withPayload, targetBytes = 16).collect()
-    assert(pass.forall(r => r.payload.toSeq == srcBytes(r.doc_id).toSeq))
-    val rerun = Multimodal.resize(withPayload, targetBytes = 6).collect()
-    assert(rerun.map(r => r.doc_id -> r.payload.toSeq).toMap == byId)
   }
 }

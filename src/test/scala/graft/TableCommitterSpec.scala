@@ -9,7 +9,7 @@ import graft.io.TableCommitter
 class TableCommitterSpec extends AnyFunSuite {
 
   private def fresh() = new TableCommitter(
-    Files.createTempDirectory("committer-").toString)
+    TempDirs("committer-"))
 
   test("staged data is invisible until publish; publish flips atomically") {
     val spark = SparkTestSession.get
@@ -46,15 +46,6 @@ class TableCommitterSpec extends AnyFunSuite {
     assert(content == want)
     t.merge(spark, Seq((2, "B"), (3, "c")).toDF("k", "v"), Seq("k"), "r3")
     assert(content == want)
-  }
-
-  test("deleteMissing drops keys absent from keep-set (J4)") {
-    val spark = SparkTestSession.get
-    import spark.implicits._
-    val t = fresh()
-    t.stage(Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v"), "r1"); t.publish("r1")
-    t.deleteMissing(spark, Seq(Tuple1(1), Tuple1(3)).toDF("k"), Seq("k"), "r2")
-    assert(t.read(spark).get.collect().map(_.getInt(0)).toSet == Set(1, 3))
   }
 
   test("time travel: every published generation stays readable") {
