@@ -27,11 +27,14 @@ import org.apache.spark.storage.StorageLevel
   */
 object ConnectedComponents {
 
+  /** round cap: star contraction converges in O(log n) rounds */
+  private val MaxRounds = 25
+
   /** @param edgesIn DataFrame with columns (src, dst); undirected semantics.
     * @return DataFrame (id, component) covering every node that appears in
     *         any edge; component = min id of the node's component.
     */
-  def run(edgesIn: DataFrame, maxIter: Int = 25): DataFrame = {
+  def run(edgesIn: DataFrame): DataFrame = {
     val spark = edgesIn.sparkSession
 
     // Canonical directed form (hi -> lo), self-loops dropped, deduped.
@@ -60,7 +63,7 @@ object ConnectedComponents {
     var converged = false
     var it = 0
 
-    while (!converged && it < maxIter) {
+    while (!converged && it < MaxRounds) {
       import org.apache.spark.sql.expressions.Window
       // ---- large-star: for every node, connect its larger neighbors to the
       // minimum of its neighborhood (incl. itself). The neighborhood minimum
@@ -129,8 +132,8 @@ object ConnectedComponents {
   }
 
   /** Component assignment including isolated nodes. */
-  def runWithNodes(nodes: DataFrame, edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    val comp = run(edges, maxIter)
+  def runWithNodes(nodes: DataFrame, edges: DataFrame): DataFrame = {
+    val comp = run(edges)
     nodes.select(col("id"))
       .join(comp, Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))

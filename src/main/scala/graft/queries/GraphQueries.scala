@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.TransitiveClosure
 
 /** Iterative graph analytics over the materialized KG beyond PageRank /
   * connected components / triangles (KgQueries): label-propagation
@@ -17,8 +18,10 @@ import graft.Tables
   * Determinism discipline (same as kg_pagerank): every iteration works in
   * integer counts/labels with total tie-breaks (count DESC, label ASC; min
   * label; min hops), so Spark and DuckDB agree bit-for-bit — no float
-  * accumulation, no RNG. Iteration counts are fixed (3) so the oracle is
-  * expressible as unrolled CTEs.
+  * accumulation, no RNG. The round counts of label propagation, peeling,
+  * BFS, Bellman-Ford and the walks are fixed, so their oracles are
+  * expressible as unrolled CTEs; kg_transitive_pred runs to the fixpoint
+  * (oracle: WITH RECURSIVE).
   *
   * Scale shape shared by all three: the edge set is derived once, bounded,
   * and eagerly materialized (localCheckpoint) because every iteration
@@ -116,23 +119,6 @@ object GraphQueries {
     e
   }
 
-  /** Multi-source BFS over a directed edge frame (u, v): hop distance from
-    * `seeds` (id, h=0) up to `hops`. The frontier frame stays node-bounded
-    * because distances merge through min() every round. Returns (id, h). */
-  def bfsHops(ed: DataFrame, seeds: DataFrame, hops: Int): DataFrame = {
-    var dist = seeds
-    for (_ <- 1 to hops) {
-      // candidate rows feed the merge aggregate RAW (one exchange per
-      // round): the former per-destination pre-aggregation keyed the same
-      // column as the merge and was exactly what the merge's map-side
-      // partial aggregation already does — min(min) == min (guide §2.4)
-      val next = ed.join(dist.withColumnRenamed("id", "u"), "u")
-        .select(col("v").as("id"), (col("h") + 1).as("h"))
-      dist = dist.unionAll(next).groupBy("id").agg(min(col("h")).as("h"))
-    }
-    dist
-  }
-
   /** Common-neighbor link prediction over a symmetric edge frame (u, v):
     * for node pairs NOT already connected, the shared-neighbor count `cn`,
     * neighbor-set Jaccard, and a fixed-point resource-allocation index
@@ -169,16 +155,17 @@ object GraphQueries {
 
   /** Fixed-round Bellman-Ford over a directed weighted edge frame
     * (u, v, w: integer): dist(v) <- min(dist(v), dist(u) + w) each round,
-    * from `seeds` (id, dist=0). Same per-round envelope as [[bfsHops]]
-    * (one hash join + one min-combine agg, node-bounded state) — weights
-    * change nothing about the shuffle shape, only the merge value.
-    * Returns (id, dist). */
+    * from `seeds` (id, dist=0). Per round one hash join + one min-combine
+    * agg; the state stays node-bounded because distances merge through
+    * min() every round (no exponential path blowup). Unit weights make it
+    * multi-source BFS (kg_bfs_hops). Returns (id, dist). */
   def bellmanFord(ew: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     var dist = seeds
     for (_ <- 1 to rounds) {
-      // relaxations feed the merge aggregate RAW — see bfsHops: the former
-      // per-destination pre-aggregation duplicated the merge's map-side
-      // combine on the same key, costing one extra exchange per round
+      // relaxations feed the merge aggregate RAW (one exchange per round):
+      // a per-destination pre-aggregation would key the same column as the
+      // merge and repeat what its map-side partial aggregation already
+      // does — min(min) == min (guide §2.4)
       val relax = ew.join(dist.withColumnRenamed("id", "u"), "u")
         .select(col("v").as("id"), (col("dist") + col("w")).as("dist"))
       dist = dist.unionAll(relax).groupBy("id").agg(min(col("dist")).as("dist"))
@@ -225,33 +212,6 @@ object GraphQueries {
         frontier.select(col("walk_id"), lit(st).as("step"), col("cur").as("node")))
     }
     out
-  }
-
-  /** Transitive closure of a directed edge frame (src, dst) by ITERATIVE
-    * DOUBLING: rounds of P <- P ∪ (P ∘ P), reaching every path of length
-    * <= 2^rounds in `rounds` self-joins — O(log depth) shuffle rounds where
-    * the naive frontier walk needs O(depth). This is the distributed-sized
-    * complement to kg_rdfs_closure's broadcast-ontology contract: right for
-    * predicate hierarchies (skos:broader / partOf chains) too large to
-    * close driver-side, where depth is logarithmic-to-tens and the closure
-    * stays O(E * depth). distinct() each round collapses the multiple
-    * derivations of one pair (on DAGs, P∘P re-derives short paths), and
-    * each round is eagerly materialized because the next round consumes it
-    * on BOTH sides of the self-join — unmaterialized, the lineage would
-    * re-execute the whole prefix 2x per round (16x by round 4). */
-  def transitiveClosure(edges: DataFrame, rounds: Int): DataFrame = {
-    var p = edges.select(col("src"), col("dst")).distinct().localCheckpoint(true)
-    for (r <- 1 to rounds) {
-      val ext = p.alias("a").join(p.alias("b"), col("a.dst") === col("b.src"))
-        .select(col("a.src").as("src"), col("b.dst").as("dst"))
-      val nxt = p.unionAll(ext).distinct()
-      // intermediate rounds are consumed TWICE (both sides of the next
-      // self-join) and must materialize; the LAST round flows straight
-      // into the single consumer — its eager checkpoint was one pure
-      // extra materialization job (r6)
-      p = if (r < rounds) nxt.localCheckpoint(true) else nxt
-    }
-    p
   }
 
   val all: Map[String, Q] = Map(
@@ -301,10 +261,9 @@ object GraphQueries {
     },
 
     // ---- multi-source BFS, 3 hops over the DIRECTED edge set: hop
-    // distance from the seed set (doc_id % 53 == 1). Per hop: one hash
-    // join frontier->edges + one min-combine agg; the frontier frame stays
-    // node-bounded because distances merge through min() every round
-    // (no exponential path blowup).
+    // distance from the seed set (doc_id % 53 == 1) = Bellman-Ford over
+    // unit bigint weights. Per hop: one hash join frontier->edges + one
+    // min-combine agg (see bellmanFord).
     "kg_bfs_hops" -> Q(
       s"""WITH $edgesSql,
          |b0 AS (SELECT doc_id AS id, CAST(0 AS BIGINT) AS h FROM documents WHERE doc_id % 53 = 1),
@@ -318,9 +277,9 @@ object GraphQueries {
       val ed = directedEdges(s, d)
       val docs = Tables.documents(s, d).select(col("doc_id"))
       val seeds = docs.filter(col("doc_id") % 53 === 1)
-        .select(col("doc_id").as("id"), lit(0L).as("h"))
-      bfsHops(ed, seeds, hops = 3)
-        .select(col("id"), col("h").as("hops")).orderBy("id")
+        .select(col("doc_id").as("id"), lit(0L).as("dist"))
+      bellmanFord(ed.withColumn("w", lit(1L)), seeds, rounds = 3)
+        .select(col("id"), col("dist").as("hops")).orderBy("id")
     },
 
     // ---- link prediction: common-neighbor count, integer fixed-point
@@ -411,11 +370,12 @@ object GraphQueries {
     },
 
     // ---- predicate transitive closure (skos:broader / partOf semantics)
-    // over the halving forest doc -> doc div 2 (depth log2 n — the shape of
-    // real ontology chains), by iterative doubling: 4 rounds reach every
-    // ancestor pair up to depth 16 in O(log depth) shuffle rounds. See
-    // transitiveClosure for why this is the distributed-sized complement
-    // to kg_rdfs_closure.
+    // over the halving forest doc -> doc div 2 (depth floor(log2 n) + 1 —
+    // the shape of real ontology chains), by iterative doubling to the
+    // fixpoint: O(log depth) shuffle rounds plus one confirming round.
+    // This is the distributed-sized complement to kg_rdfs_closure's
+    // broadcast-ontology contract: right for predicate hierarchies
+    // (skos:broader / partOf chains) too large to close driver-side.
     "kg_transitive_pred" -> Q(
       """WITH RECURSIVE
         |ed AS (SELECT doc_id AS src, doc_id // 2 AS dst FROM documents WHERE doc_id >= 1),
@@ -427,7 +387,7 @@ object GraphQueries {
       val ed = Tables.documents(s, d).select(col("doc_id"))
         .filter(col("doc_id") >= 1)
         .select(col("doc_id").as("src"), expr("doc_id div 2").as("dst"))
-      transitiveClosure(ed, rounds = 4)
+      TransitiveClosure(ed)
         .select(col("src").as("id"), col("dst").as("anc"))
         .orderBy("id", "anc")
     }

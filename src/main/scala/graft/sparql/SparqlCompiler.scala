@@ -3,6 +3,8 @@ package graft.sparql
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.TransitiveClosure
+
 import SparqlAst._
 
 /** Compiles the parsed SPARQL subset into a Catalyst plan over a triple
@@ -660,13 +662,10 @@ object SparqlCompiler {
         case GOptional(og) =>
           compileOptional(og); idx += 1
         case GPath(s, path, o) =>
-          val f = graphVar match {
-            case None => compilePathElem(s, path, o, triples)
-            // inside GRAPH ?g the whole path (closures included) evaluates
-            // PER GRAPH: every step's join carries the g column as an
-            // extra equality key, so a closure never crosses graphs
-            case Some(gv) => compilePathElemG(s, path, o, triples, gv)
-          }
+          // inside GRAPH ?g the whole path (closures included) evaluates
+          // PER GRAPH: every step's join carries the g column as an extra
+          // equality key, so a closure never crosses graphs
+          val f = compilePathElem(s, path, o, triples, graphVar)
           if (f.vars.isEmpty) gates ::= f.df else joinInto(f, "inner")
           idx += 1
         case GGraph(gt, gg) =>
@@ -1284,13 +1283,7 @@ object SparqlCompiler {
   private def compilePattern(tp: TP, triples: DataFrame,
       langConds: Map[String, Column] = Map.empty,
       graphVar: Option[String] = None): Frag = {
-    val pos: Seq[(String, Term)] = Seq("s" -> tp.s, "p" -> tp.p, "o" -> tp.o)
     var df = triples
-    pos.foreach {
-      case (c, I(u)) => df = df.filter(col(c) === u)
-      case (c, L(v)) => df = df.filter(col(c) === v)
-      case _ => ()
-    }
     // a lang condition on the object var filters on the frame's `ol`
     // column HERE — before projection drops it (so it prunes at the scan,
     // right next to the constant-position PushedFilters)
@@ -1299,7 +1292,7 @@ object SparqlCompiler {
       case _ => ()
     }
     // inside GRAPH ?g, every pattern additionally binds ?g from the quad
-    // frame's `g` column — the dup-var machinery below then also covers
+    // frame's `g` column — the dup-var machinery of [[bindTerms]] also covers
     // GRAPH ?g { ?g <p> ?o } (graph node described inside its own graph).
     // SPARQL restricts GRAPH ?g to NAMED graphs: the quad-frame convention
     // is g='' (or null) for the default graph, so those rows are excluded
@@ -1307,11 +1300,30 @@ object SparqlCompiler {
     // OUTSIDE any GRAPH block keep the engine's documented union-default-
     // graph dataset: they match rows of every graph — see GGraph's
     // scaladoc in SparqlAst.)
-    if (graphVar.isDefined)
-      df = df.filter(col("g").isNotNull && col("g") =!= "")
-    val varPos = pos.collect { case (c, V(n)) => (c, n) } ++
-      graphVar.map(gv => ("g", gv))
-    // same var twice in one pattern (?s ?p ?s): in-pattern equality
+    if (graphVar.isDefined) df = named(df)
+    bindTerms(df, Seq("s" -> tp.s, "p" -> tp.p, "o" -> tp.o), graphVar)
+  }
+
+  /** GRAPH ?var ranges over NAMED graphs only: the quad-frame convention
+    * is g='' (or null) for the default graph. */
+  private def named(quads: DataFrame): DataFrame =
+    quads.filter(col("g").isNotNull && col("g") =!= "")
+
+  /** applies the terms at `pos` (column -> term) to `df`: constants
+    * filter, variables project, inside GRAPH ?gv the graph variable binds
+    * from `g`. The same variable twice (?s ?p ?s) adds the in-pattern
+    * equality. With no variable at all (the reference's "redundant
+    * clause") the filtered frame is kept as is — the gate key derives
+    * from its columns. */
+  private def bindTerms(df0: DataFrame, pos: Seq[(String, Term)],
+      graphVar: Option[String]): Frag = {
+    var df = df0
+    pos.foreach {
+      case (c, I(u)) => df = df.filter(col(c) === u)
+      case (c, L(v)) => df = df.filter(col(c) === v)
+      case _ => ()
+    }
+    val varPos = pos.collect { case (c, V(n)) => (c, n) } ++ graphVar.map(gv => ("g", gv))
     varPos.groupBy(_._2).valuesIterator.filter(_.size > 1).foreach { dup =>
       dup.map(_._1).sliding(2).foreach {
         case Seq(a, b) => df = df.filter(col(a) === col(b))
@@ -1319,246 +1331,101 @@ object SparqlCompiler {
       }
     }
     val keep = varPos.distinctBy(_._2)
-    if (keep.isEmpty)
-      // constant-only pattern (the reference's "redundant clause"): keep the
-      // filtered (s, p, o) frame — the gate key derives from its columns
-      Frag(df, Seq.empty, Set.empty)
-    else
-      Frag(df.select(keep.map { case (c, n) => col(c).as(n) }: _*), keep.map(_._2), Set.empty)
+    if (keep.isEmpty) Frag(df, Seq.empty, Set.empty)
+    else Frag(df.select(keep.map { case (c, n) => col(c).as(n) }: _*), keep.map(_._2), Set.empty)
   }
 
   // ---- property paths --------------------------------------------------------
 
-  /** Pairs (pa, pb) related by the path. Every step stays an EQUALITY hash
-    * join over a predicate-FILTERED slice of the triple table (the constant
-    * predicate lands in PushedFilters at the scan):
+  /** Pairs (pa, pb, keys...) related by the path over `frame`. `keys` are
+    * the scope's key columns: none for the default graph, `g` inside
+    * GRAPH ?g (where `frame` holds only named-graph rows). Every step stays
+    * an EQUALITY hash join over a predicate-FILTERED slice of the frame
+    * (the constant predicate lands in PushedFilters at the scan), and every
+    * join also matches the keys, so a path never crosses graphs — the
+    * spec's active-graph evaluation:
     *  - sequence = one hash join per step, alternation = union (both keep
     *    the spec's BAG semantics — each derivation is one solution);
     *  - inverse swaps the endpoints (free);
-    *  - '+' is the transitive closure of the step's OWN edge slice by
-    *    ITERATIVE DOUBLING to the fixpoint: rounds of P <- P ∪ (P ∘ P),
-    *    O(log depth) self-join rounds, each round localCheckpoint'ed
-    *    because the next round consumes it on both join sides (same shape
-    *    as kg_transitive_pred, GraphQueries.transitiveClosure — but run to
-    *    convergence, which the spec requires, with one bounded count()
-    *    action per round as the fixpoint test);
+    *  - '+' is the transitive closure of the step's OWN edge slice, run to
+    *    the fixpoint the spec requires ([[graft.operators.TransitiveClosure]]:
+    *    iterative doubling, O(log depth) self-join rounds, one bounded
+    *    observed count per round as the fixpoint test);
     *  - '*' and '?' add the spec's zero-length solutions, restricted to
-    *    terms OCCURRING in the graph (subjects ∪ objects): identical to
-    *    the spec whenever a constant endpoint occurs in the graph, and a
-    *    set—the closure forms are solution SETS per ArbitraryLengthPath /
+    *    terms OCCURRING in the scope (subjects ∪ objects): identical to
+    *    the spec whenever a constant endpoint occurs there, and a set—the
+    *    closure forms are solution SETS per ArbitraryLengthPath /
     *    ZeroOrOnePath. A TOP-LEVEL '*'/'?' with a constant endpoint
-    *    ABSENT from the graph gets its zero-length solution completed in
+    *    ABSENT from the scope gets its zero-length solution completed in
     *    [[compilePathElem]]; only nested closures keep the restriction.
     * Compiling '+' / '*' runs the fixpoint loop at COMPILE time (bounded
     * driver-side counts, never row collection). */
-  private def pathPairs(path: Path, triples: DataFrame): DataFrame = path match {
-    case PLink(iri) =>
-      triples.filter(col("p") === iri).select(col("s").as("pa"), col("o").as("pb"))
-    case PNeg(iris) =>
-      triples.filter(!col("p").isin(iris: _*)).select(col("s").as("pa"), col("o").as("pb"))
-    case PInv(p0) =>
-      pathPairs(p0, triples).select(col("pb").as("pa"), col("pa").as("pb"))
-    case PSeq(a, b) =>
-      val l = pathPairs(a, triples)
-      val r = pathPairs(b, triples)
-        .withColumnRenamed("pa", "__pm").withColumnRenamed("pb", "__pn")
-      l.join(r, col("pb") === col("__pm"))
-        .select(col("pa"), col("__pn").as("pb"))
-    case PAlt(a, b) =>
-      pathPairs(a, triples).unionAll(pathPairs(b, triples))
-    case PPlus(p0) => pathClosure(pathPairs(p0, triples))
-    case PStar(p0) =>
-      pathClosure(pathPairs(p0, triples)).unionAll(zeroPairs(triples)).distinct()
-    case POpt(p0) =>
-      pathPairs(p0, triples).unionAll(zeroPairs(triples)).distinct()
+  private def pathPairs(path: Path, frame: DataFrame, keys: Seq[String]): DataFrame = {
+    def ends(a: String, b: String): Seq[Column] =
+      Seq(col(a).as("pa"), col(b).as("pb")) ++ keys.map(col)
+    path match {
+      case PLink(iri) => frame.filter(col("p") === iri).select(ends("s", "o"): _*)
+      case PNeg(iris) => frame.filter(!col("p").isin(iris: _*)).select(ends("s", "o"): _*)
+      case PInv(p0) => pathPairs(p0, frame, keys).select(ends("pb", "pa"): _*)
+      case PSeq(a, b) =>
+        val l = pathPairs(a, frame, keys).withColumnRenamed("pb", "__pm")
+        val r = pathPairs(b, frame, keys)
+          .withColumnRenamed("pa", "__pm").withColumnRenamed("pb", "__pn")
+        l.join(r, "__pm" +: keys).select(ends("pa", "__pn"): _*)
+      case PAlt(a, b) =>
+        pathPairs(a, frame, keys).unionAll(pathPairs(b, frame, keys))
+      case PPlus(p0) => TransitiveClosure(pathPairs(p0, frame, keys))
+      case PStar(p0) =>
+        TransitiveClosure(pathPairs(p0, frame, keys))
+          .unionAll(zeroPairs(frame, keys)).distinct()
+      case POpt(p0) =>
+        pathPairs(p0, frame, keys).unionAll(zeroPairs(frame, keys)).distinct()
+    }
   }
 
-  /** transitive closure to the FIXPOINT by iterative doubling (see
-    * [[pathPairs]]); empty input short-circuits without a join round. The
-    * fixpoint count RIDES the checkpoint materialization via
-    * Dataset.observe — one driver action per round, not a checkpoint plus
-    * a separate count job (same idiom as ConnectedComponents' signature). */
-  private def pathClosure(base: DataFrame): DataFrame = {
-    def ckptCounted(df: DataFrame): (DataFrame, Long) = {
-      val obs = new org.apache.spark.sql.Observation(
-        s"path-closure-${System.nanoTime()}")
-      val out = df.observe(obs, count(lit(1)).as("c")).localCheckpoint(true)
-      (out, obs.get("c").asInstanceOf[Long])
-    }
-    var (p, n) = ckptCounted(base.distinct())
-    var converged = n == 0
-    while (!converged) {
-      val ext = p.alias("a").join(p.alias("b"), col("a.pb") === col("b.pa"))
-        .select(col("a.pa").as("pa"), col("b.pb").as("pb"))
-      val (nxt, n2) = ckptCounted(p.unionAll(ext).distinct())
-      if (n2 == n) converged = true else { p = nxt; n = n2 }
-    }
-    p
-  }
-
-  /** zero-length path solutions: every term occurring in the graph,
+  /** zero-length path solutions: every term occurring in the scope,
     * related to itself. NOT deduplicated here — both call sites ('*' and
     * '?') union this with the closure and take ONE distinct over the
     * result, so an inner distinct would just add a shuffle. */
-  private def zeroPairs(triples: DataFrame): DataFrame =
-    triples.select(col("s").as("pa"))
-      .unionAll(triples.select(col("o").as("pa")))
-      .withColumn("pb", col("pa"))
+  private def zeroPairs(frame: DataFrame, keys: Seq[String]): DataFrame =
+    frame.select(col("s").as("pa") +: keys.map(col): _*)
+      .unionAll(frame.select(col("o").as("pa") +: keys.map(col): _*))
+      .select(col("pa") +: col("pa").as("pb") +: keys.map(col): _*)
 
   /** endpoint application for a path pattern — same contract as
     * [[compilePattern]]: constants filter, variables project (a repeated
     * variable adds the in-pattern equality), constant-only paths gate.
+    * Inside GRAPH ?gv the graph variable always binds from g (so even a
+    * constant-constant path binds ?gv to the graphs where it holds).
     *
     * Zero-length completeness: [[zeroPairs]] restricts the '*'/'?'
-    * zero-length solutions to terms OCCURRING in the graph, which loses
-    * the spec's solution for a constant endpoint absent from the graph
+    * zero-length solutions to terms OCCURRING in the scope, which loses
+    * the spec's solution for a constant endpoint absent from it
     * (`<urn:unknown> <p>* ?x` must yield ?x=<urn:unknown>). When the
     * path's TOP level is '*' or '?', each constant endpoint therefore
-    * unions its own literal (term, term) pair in before the endpoint
-    * filters apply — a compile-time-known 1-row frame, free at any scale.
+    * unions its own (term, term) pair in before the endpoint filters
+    * apply — once for the default graph (a compile-time-known literal
+    * frame, free at any scale), once per named graph inside GRAPH ?gv.
     * (Nested closures, e.g. `(p*)/q`, keep the documented occurring-terms
     * restriction.) */
-  private def compilePathElem(s: Term, path: Path, o: Term, triples: DataFrame): Frag = {
-    var df = pathPairs(path, triples)
+  private def compilePathElem(s: Term, path: Path, o: Term, triples: DataFrame,
+      graphVar: Option[String]): Frag = {
+    val keys = graphVar.map(_ => "g").toSeq
+    val frame = if (graphVar.isDefined) named(triples) else triples
+    var df = pathPairs(path, frame, keys)
     val topZeroish = path match { case _: PStar | _: POpt => true; case _ => false }
-    if (topZeroish) {
-      val consts = Seq(s, o).collect { case I(u) => u case L(v) => v }.distinct
-      if (consts.nonEmpty) {
-        import scala.jdk.CollectionConverters._
-        val schema = org.apache.spark.sql.types.StructType(Seq("pa", "pb").map(c =>
-          org.apache.spark.sql.types.StructField(c,
-            org.apache.spark.sql.types.StringType, nullable = false)))
-        val extra = triples.sparkSession.createDataFrame(
-          consts.map(t => org.apache.spark.sql.Row(t, t)).asJava, schema)
-        df = df.unionAll(extra).distinct() // closure forms are solution SETS
-      }
+    val consts = Seq(s, o).collect { case I(u) => u case L(v) => v }.distinct
+    if (topZeroish && consts.nonEmpty) {
+      val scopes =
+        if (keys.isEmpty) triples.sparkSession.createDataFrame(
+          java.util.List.of(org.apache.spark.sql.Row.empty),
+          org.apache.spark.sql.types.StructType(Nil))
+        else frame.select(keys.map(col): _*).distinct()
+      val extra = consts.map(t =>
+        scopes.select(lit(t).as("pa") +: lit(t).as("pb") +: keys.map(col): _*))
+      df = df.unionAll(extra.reduce(_ unionAll _)).distinct() // solution SETS
     }
-    s match {
-      case I(u) => df = df.filter(col("pa") === u)
-      case L(v) => df = df.filter(col("pa") === v)
-      case _ => ()
-    }
-    o match {
-      case I(u) => df = df.filter(col("pb") === u)
-      case L(v) => df = df.filter(col("pb") === v)
-      case _ => ()
-    }
-    (s, o) match {
-      case (V(a), V(b)) if a == b =>
-        Frag(df.filter(col("pa") === col("pb")).select(col("pa").as(a)), Seq(a), Set.empty)
-      case (V(a), V(b)) =>
-        Frag(df.select(col("pa").as(a), col("pb").as(b)), Seq(a, b), Set.empty)
-      case (V(a), _) => Frag(df.select(col("pa").as(a)), Seq(a), Set.empty)
-      case (_, V(b)) => Frag(df.select(col("pb").as(b)), Seq(b), Set.empty)
-      case _ => Frag(df, Seq.empty, Set.empty) // constant-only: existence gate
-    }
-  }
-
-  // ---- per-graph property paths (GRAPH ?var scope) ---------------------------
-
-  /** Per-graph path pairs (pa, pb, g) over a quad frame: every join that
-    * [[pathPairs]] does on pb==pa additionally carries g==g, so sequences
-    * and closures never cross graphs — the spec's active-graph evaluation.
-    * Default-graph rows (g = ''/null) never participate (GRAPH ?var ranges
-    * over named graphs only). */
-  private def pathPairsG(path: Path, quads: DataFrame): DataFrame = {
-    def named = quads.filter(col("g").isNotNull && col("g") =!= "")
-    path match {
-      case PLink(iri) =>
-        named.filter(col("p") === iri)
-          .select(col("s").as("pa"), col("o").as("pb"), col("g"))
-      case PNeg(iris) =>
-        named.filter(!col("p").isin(iris: _*))
-          .select(col("s").as("pa"), col("o").as("pb"), col("g"))
-      case PInv(p0) =>
-        pathPairsG(p0, quads).select(col("pb").as("pa"), col("pa").as("pb"), col("g"))
-      case PSeq(a, b) =>
-        val l = pathPairsG(a, quads)
-        val r = pathPairsG(b, quads).withColumnRenamed("pa", "__pm")
-          .withColumnRenamed("pb", "__pn").withColumnRenamed("g", "__pg")
-        l.join(r, col("pb") === col("__pm") && col("g") === col("__pg"))
-          .select(col("pa"), col("__pn").as("pb"), col("g"))
-      case PAlt(a, b) =>
-        pathPairsG(a, quads).unionAll(pathPairsG(b, quads))
-      case PPlus(p0) => pathClosureG(pathPairsG(p0, quads))
-      case PStar(p0) =>
-        pathClosureG(pathPairsG(p0, quads)).unionAll(zeroPairsG(named)).distinct()
-      case POpt(p0) =>
-        pathPairsG(p0, quads).unionAll(zeroPairsG(named)).distinct()
-    }
-  }
-
-  /** per-graph transitive closure: the doubling join keys on (pb, g);
-    * fixpoint count rides the checkpoint via observe (see [[pathClosure]]) */
-  private def pathClosureG(base: DataFrame): DataFrame = {
-    def ckptCounted(df: DataFrame): (DataFrame, Long) = {
-      val obs = new org.apache.spark.sql.Observation(
-        s"path-closure-g-${System.nanoTime()}")
-      val out = df.observe(obs, count(lit(1)).as("c")).localCheckpoint(true)
-      (out, obs.get("c").asInstanceOf[Long])
-    }
-    var (p, n) = ckptCounted(base.distinct())
-    var converged = n == 0
-    while (!converged) {
-      val ext = p.alias("a").join(p.alias("b"),
-          col("a.pb") === col("b.pa") && col("a.g") === col("b.g"))
-        .select(col("a.pa").as("pa"), col("b.pb").as("pb"), col("a.g").as("g"))
-      val (nxt, n2) = ckptCounted(p.unionAll(ext).distinct())
-      if (n2 == n) converged = true else { p = nxt; n = n2 }
-    }
-    p
-  }
-
-  /** zero-length solutions per named graph: terms occurring in THAT graph */
-  private def zeroPairsG(named: DataFrame): DataFrame =
-    named.select(col("s").as("pa"), col("g"))
-      .unionAll(named.select(col("o").as("pa"), col("g")))
-      .select(col("pa"), col("pa").as("pb"), col("g"))
-
-  /** endpoint application for a path inside GRAPH ?gv — the per-graph twin
-    * of [[compilePathElem]]: constants filter, variables project, the
-    * graph variable always binds from g (so even a constant-constant path
-    * binds ?gv to the graphs where it holds — never a gate). Top-level
-    * '*'/'?' constant endpoints get their zero-length solution completed
-    * PER NAMED GRAPH (one distinct-graphs pass). */
-  private def compilePathElemG(s: Term, path: Path, o: Term,
-      quads: DataFrame, gv: String): Frag = {
-    var df = pathPairsG(path, quads)
-    val topZeroish = path match { case _: PStar | _: POpt => true; case _ => false }
-    if (topZeroish) {
-      val consts = Seq(s, o).collect { case I(u) => u case L(v) => v }.distinct
-      if (consts.nonEmpty) {
-        val graphs = quads.filter(col("g").isNotNull && col("g") =!= "")
-          .select(col("g")).distinct()
-        val extra = consts.map(t =>
-          graphs.select(lit(t).as("pa"), lit(t).as("pb"), col("g")))
-          .reduce(_ unionAll _)
-        df = df.unionAll(extra).distinct()
-      }
-    }
-    s match {
-      case I(u) => df = df.filter(col("pa") === u)
-      case L(v) => df = df.filter(col("pa") === v)
-      case _ => ()
-    }
-    o match {
-      case I(u) => df = df.filter(col("pb") === u)
-      case L(v) => df = df.filter(col("pb") === v)
-      case _ => ()
-    }
-    val varPos: Seq[(String, String)] =
-      (Seq("pa" -> s, "pb" -> o).collect { case (c, V(n)) => (c, n) }) :+ ("g" -> gv)
-    // repeated variables (incl. ?gv reused as an endpoint) add in-pattern
-    // equalities, same contract as compilePattern
-    varPos.groupBy(_._2).valuesIterator.filter(_.size > 1).foreach { dup =>
-      dup.map(_._1).sliding(2).foreach {
-        case Seq(a, b) => df = df.filter(col(a) === col(b))
-        case _ => ()
-      }
-    }
-    val keep = varPos.distinctBy(_._2)
-    Frag(df.select(keep.map { case (c, n) => col(c).as(n) }: _*),
-      keep.map(_._2), Set.empty)
+    bindTerms(df, Seq("pa" -> s, "pb" -> o), graphVar)
   }
 
   // ---- filters -------------------------------------------------------------------

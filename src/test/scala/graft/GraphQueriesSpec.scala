@@ -2,6 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.functions.lit
+
+import graft.operators.TransitiveClosure
 import graft.queries.GraphQueries
 
 /** Differential tests for the iterative graph operators: the Catalyst
@@ -98,8 +101,10 @@ class GraphQueriesSpec extends AnyFunSuite {
     for ((seed, n, m) <- shapes) {
       val es = randomGraph(seed, n, m)
       val seedNodes = (0L until n.toLong).filter(_ % 5 == 1)
-      val seedsDf = seedNodes.map(id => (id, 0L)).toDF("id", "h")
-      val got = GraphQueries.bfsHops(toDf(es), seedsDf, hops = 3)
+      val seedsDf = seedNodes.map(id => (id, 0L)).toDF("id", "dist")
+      // BFS = Bellman-Ford over unit bigint weights (kg_bfs_hops)
+      val got = GraphQueries
+        .bellmanFord(toDf(es).withColumn("w", lit(1L)), seedsDf, rounds = 3)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(got == refBfs(es, seedNodes, hops = 3),
         s"bfs mismatch at seed=$seed n=$n m=$m")
@@ -257,28 +262,29 @@ class GraphQueriesSpec extends AnyFunSuite {
 
   test("iterative-doubling closure == brute-force reachability on random DAGs") {
     for ((seed, n, m) <- shapes) {
-      // orient edges downward (u > v) => acyclic, multi-path DAG; max chain
-      // length < n <= 40 < 2^6, so 6 doubling rounds reach the fixpoint
+      // orient edges downward (u > v) => acyclic, multi-path DAG
       val es = randomGraph(seed, n, m)
         .map { case (u, v) => if (u > v) (u, v) else (v, u) }
         .filter { case (u, v) => u != v }.distinct
       val spark = SparkTestSession.get
       import spark.implicits._
-      val got = GraphQueries
-        .transitiveClosure(es.toDF("src", "dst").repartition(5), rounds = 6)
+      val got = TransitiveClosure(es.toDF("src", "dst").repartition(5))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == refClosure(es), s"closure mismatch at seed=$seed n=$n m=$m")
     }
   }
 
-  test("doubling depth bound: a k-chain closes fully in ceil(log2 k) rounds") {
+  test("doubling depth bound: 16- and 40-chains close fully at the fixpoint") {
     val spark = SparkTestSession.get
     import spark.implicits._
-    val chain = (0L until 16L).map(i => (i, i + 1)).toDF("src", "dst")
-    // 16 edges => paths up to length 16 = 2^4: exactly 4 rounds suffice
-    val got = GraphQueries.transitiveClosure(chain, rounds = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = (for (a <- 0L to 16L; b <- (a + 1) to 16L) yield (a, b)).toSet
-    assert(got == want, "4 doubling rounds must close a 16-chain")
+    // 16 edges = 2^4 closes in exactly 4 doubling rounds; 40 edges needs
+    // 6, so any loop stopping at a fixed 4 rounds loses pairs
+    for (k <- Seq(16L, 40L)) {
+      val chain = (0L until k).map(i => (i, i + 1)).toDF("src", "dst")
+      val got = TransitiveClosure(chain)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val want = (for (a <- 0L to k; b <- (a + 1) to k) yield (a, b)).toSet
+      assert(got == want, s"the doubling closure must close a $k-chain")
+    }
   }
 }

@@ -158,7 +158,8 @@ class PlanRegressionSpec extends AnyFunSuite {
        "reference template's redundant-clause gate included") {
     for (q <- Seq("sparql_select_bgp", "sparql_construct_sync",
                   "sparql_sync_query", "sparql_describe", "sparql_values_bind",
-                  "sparql_not_exists", "sparql_minus")) {
+                  "sparql_not_exists", "sparql_minus", "sparql_path_closure",
+                  "sparql_path_star", "sparql_graph_path")) {
       val p = plan(q)
       assert(!p.contains("CartesianProduct"), s"$q has a cartesian product")
       assert(!p.contains("BroadcastNestedLoopJoin"), s"$q has a nested loop")

@@ -1948,10 +1948,13 @@ class SparqlSpec extends AnyFunSuite {
     assert(rows(SparqlCompiler.compile(
       "SELECT ?g ?y WHERE { GRAPH ?g { ?g <urn:n>+ ?y } }", self))
       .map(_.flatten) == Seq(Seq("urn:g:1", "urn:q")))
-    // differential: per-graph paths against the evaluator
+    // differential: per-graph paths against the evaluator — every path
+    // form, since both scopes share one path compiler
     for (seed <- 11 to 13) {
-      diffSelectQ("SELECT ?g ?a ?b WHERE { GRAPH ?g { ?a <urn:p:knows>+ ?b . } }",
-        randomQuads(seed, 16))
+      for (path <- Seq("<urn:p:knows>+", "<urn:p:knows>*", "<urn:p:knows>?",
+                       "^<urn:p:knows>", "!(<urn:p:name>)"))
+        diffSelectQ(s"SELECT ?g ?a ?b WHERE { GRAPH ?g { ?a $path ?b . } }",
+          randomQuads(seed, 16))
       diffSelectQ(
         """SELECT DISTINCT ?g ?a ?n WHERE {
           |  GRAPH ?g { ?a <urn:p:knows>/<urn:p:name> ?n . } }""".stripMargin,
