@@ -413,8 +413,8 @@ object KgMain {
             s"$workDir/tables/stream_lang_state"))
         else None
       // the app publishes the full product surface like batch full does:
-      // edges + nodes propagate additively per micro-batch (derivedStep) —
-      // EXCEPT under detectLanguage, where a language flip would need
+      // edges + nodes propagate additively per micro-batch
+      // (StreamingSync.propagate) — EXCEPT under detectLanguage, where a language flip would need
       // edge-weight retirement (StreamingSync refuses the combination);
       // the supports table remains the product, batch sync derives the rest
       val eTbl =

@@ -82,7 +82,7 @@ final case class PipelineConfig(
     // per mention by TF-IDF/Jaccard context similarity (EntityLinker)
     // instead of being collapsed by alias-sharing canonicalization or
     // rank-guessed — flips the shared-alias semantics from "identity" to
-    // "ambiguity" (KgPipeline.resolveAmbiguousMentions)
+    // "ambiguity" (AmbiguityResolver.resolve)
     scoredLinking: Boolean = false,
     // cross-turn coreference: a marker with a right-hand mention but no
     // left-hand one takes the most recently mentioned entity from earlier

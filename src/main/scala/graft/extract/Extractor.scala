@@ -50,7 +50,7 @@ object Extractor {
     * distinct entity) when scored linking is on: the kernel defers the
     * entity choice to the contextual linker (EntityLinker), which re-maps
     * the sentinel per (conv, turn, alias) — see
-    * KgPipeline.resolveAmbiguousMentions. */
+    * AmbiguityResolver.resolve. */
   val AmbPrefix = "urn:amb:"
 
   /** Canonical sentinel for an ambiguous alias: whitespace-normalized and

@@ -42,8 +42,15 @@ final class TableCommitter(rootDir: String) {
   def currentPath(alias: String = "current"): Option[String] =
     currentGeneration(alias).map(g => root.resolve(g).toString)
 
+  /** Reads go through the generation's schema sidecar when one exists
+    * (see SparkIo.readParquetWithSidecar): it makes a ZERO-ROW generation
+    * readable — `partitionBy` of an empty DataFrame emits no parquet data
+    * files at all, so schema inference would throw and a legitimate empty
+    * publish (e.g. a first-ever sync over a source with no extractable
+    * triples) would brick every later read of the table — and it skips
+    * footer-based schema inference on non-empty reads. */
   def read(spark: SparkSession, alias: String = "current"): Option[DataFrame] =
-    currentPath(alias).map(readPath(spark, _))
+    currentPath(alias).map(SparkIo.readParquetWithSidecar(spark, _))
 
   /** Time travel: read any retained generation directly (generations are
     * immutable once published — the Iceberg snapshot-read equivalent).
@@ -52,21 +59,7 @@ final class TableCommitter(rootDir: String) {
     * staging dirs, and path-traversal names all return None rather than
     * reaching the parquet reader. */
   def readGeneration(spark: SparkSession, gen: String): Option[DataFrame] =
-    generationPath(gen).map(p => readPath(spark, p.toString))
-
-  /** Read a generation through its schema sidecar when one exists. The
-    * sidecar (written at stage time) makes a ZERO-ROW generation readable:
-    * `partitionBy` of an empty DataFrame emits no parquet data files at all,
-    * so schema inference would throw and a legitimate empty publish (e.g. a
-    * first-ever sync over a source with no extractable triples) would brick
-    * every later read of the table. It also skips footer-based schema
-    * inference on non-empty reads. Pre-sidecar generations fall back to
-    * plain inference. */
-  private def readPath(spark: SparkSession, path: String): DataFrame =
-    SparkIo.readParquetWithSidecar(spark, path)
-
-  private def writeSchemaSidecar(df: DataFrame, stagedAt: String): Unit =
-    SparkIo.writeSchemaSidecar(df.schema, Paths.get(stagedAt))
+    generationPath(gen).map(p => SparkIo.readParquetWithSidecar(spark, p.toString))
 
   /** Every alias pointer and the generation it references (control-plane
     * inspection surface — KgAdmin renders this; keeping the pointer-file
@@ -113,14 +106,6 @@ final class TableCommitter(rootDir: String) {
   private def withJobDesc[T](df: DataFrame, desc: String)(body: => T): T =
     SparkIo.withJobDesc(df.sparkSession, s"$desc:$tableName")(body)
 
-  /** Write a full snapshot into staging (not yet visible). */
-  def stage(df: DataFrame, runId: String): String = {
-    val p = stagingPath(runId)
-    withJobDesc(df, "stage-table")(df.write.mode("overwrite").parquet(p))
-    writeSchemaSidecar(df, p)
-    p
-  }
-
   /** Write a (possibly partial) snapshot into staging, physically partitioned
     * by the `bucket` column — the layout that makes incremental sync
     * overwrite only changed buckets (publishBuckets) and gives readers
@@ -141,7 +126,9 @@ final class TableCommitter(rootDir: String) {
         .option("maxRecordsPerFile", 20000000)
         .partitionBy(TableCommitter.BucketCol).parquet(p)
     }
-    writeSchemaSidecar(df, p)
+    // schema sidecar: the generation this staging becomes stays readable
+    // even with zero rows (no data files to infer a schema from; see read)
+    SparkIo.writeSchemaSidecar(df.schema, Paths.get(p))
     p
   }
 
@@ -260,6 +247,9 @@ final class TableCommitter(rootDir: String) {
     // never recorded or pointer-referenced, but they'd otherwise linger
     // forever, confuse time travel, and occupy retention slots)
     sweepTmpGens()
+    // next generation = max existing gen dir + 1 (NOT the alias pointer:
+    // after a blue/green rollback the pointer lags behind published dirs
+    // and pointer-derived numbering would collide with an existing gen)
     val n = generations().lastOption
       .map(_.stripPrefix("gen-").toLong).getOrElse(-1L) + 1
     val gen = s"gen-$n"
@@ -378,33 +368,6 @@ final class TableCommitter(rootDir: String) {
     gen
   }
 
-  /** Atomically publish a staged snapshot: move staging -> gen-(n+1), then
-    * atomically replace the pointer. A reader either sees gen-n or gen-(n+1),
-    * never a partial directory. Re-publishing an already-published runId is
-    * a no-op returning the original generation (resume idempotence). */
-  def publish(runId: String, alias: String = "current"): String = synchronized {
-    publishedGeneration(runId, alias) match {
-      case Some(gen) => return republish(runId, gen, alias)
-      case None =>
-    }
-    val stagedAt = staging.resolve(runId)
-    require(Files.exists(stagedAt), s"nothing staged for $runId")
-    // next generation = max existing gen dir + 1 (NOT the alias pointer:
-    // after a blue/green rollback the pointer lags behind published dirs
-    // and pointer-derived numbering would collide with an existing gen)
-    val n = generations().lastOption
-      .map(_.stripPrefix("gen-").toLong).getOrElse(-1L) + 1
-    val gen = s"gen-$n"
-    Files.createDirectories(root)
-    // marker before the move — see publishBuckets: heals a crash between
-    // the move and recordRun
-    Files.writeString(stagedAt.resolve(TableCommitter.RunMarker), s"$alias~$runId")
-    Files.move(stagedAt, root.resolve(gen), StandardCopyOption.ATOMIC_MOVE)
-    recordRun(runId, gen, alias)
-    setPointer(alias, gen)
-    gen
-  }
-
   /** Pin an immutable table-layout property (e.g. the bucket count): first
     * caller writes it atomically, every later caller must agree — a writer
     * using a different key-to-bucket mapping than the table was built with
@@ -486,24 +449,6 @@ final class TableCommitter(rootDir: String) {
     Files.write(tmp, gen.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, pointerFile(alias),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Idempotent MERGE-by-key (copy-on-write): rows of `updates` replace
-    * current rows with the same key; everything else carries over. This is
-    * the reference's id-addressed bulk upsert (doc id subj@lang overwrites,
-    * Harvester.java:1849-1856) with snapshot isolation. Re-running the same
-    * merge is a no-op on content. */
-  def merge(spark: SparkSession, updates: DataFrame, keyCols: Seq[String],
-            runId: String, alias: String = "current"): String = {
-    val deduped = updates.dropDuplicates(keyCols)
-    val merged = read(spark, alias) match {
-      case Some(cur) =>
-        cur.join(deduped.select(keyCols.map(col): _*), keyCols, "left_anti")
-          .unionByName(deduped)
-      case None => deduped
-    }
-    stage(merged, runId)
-    publish(runId, alias)
   }
 
   /** Remove staged (unpublished) data — K5: the pointer never moved, so the

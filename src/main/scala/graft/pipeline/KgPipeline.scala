@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.canon.ConnectedComponents
 import graft.config.PipelineConfig
 import graft.extract.Extractor
-import graft.io.{CheckpointStore, Quarantine, TableCommitter}
+import graft.io.{CheckpointStore, Quarantine, SparkIo, TableCommitter}
 import graft.schema.{CatalogEntry, Turn}
 
 /** End-to-end KG construction: read -> stable order + salted partitioning ->
@@ -38,6 +38,8 @@ final class KgPipeline(cfg: PipelineConfig) {
   val nodeTable = new TableCommitter(s"${cfg.workDir}/tables/nodes")
   val docTable = new TableCommitter(s"${cfg.workDir}/tables/docs")
   val checkpoints = new CheckpointStore(s"${cfg.workDir}/checkpoints")
+  private val derived = new DerivedTables(cfg, edgeTable, nodeTable,
+    Some(docTable).filter(_ => cfg.publishDocs))
 
   /** Test hook: simulate a crash immediately after the named stage commits. */
   @volatile var failAfterStage: Option[String] = None
@@ -66,11 +68,11 @@ final class KgPipeline(cfg: PipelineConfig) {
           .forEach(f => Files.delete(f))
       }
       val df = compute
-      withJobDesc(spark, s"stage:$name")(df.write.parquet(tmp.toString))
+      SparkIo.withJobDesc(spark, s"stage:$name")(df.write.parquet(tmp.toString))
       // schema sidecar: the read-back below (and every resume) skips the
       // footer-based schema-inference job — a no-op sync is fixed-overhead
       // bound, and each inference is one extra Spark job
-      graft.io.SparkIo.writeSchemaSidecar(df.schema, tmp)
+      SparkIo.writeSchemaSidecar(df.schema, tmp)
       afterWrite(tmp)
       Files.createDirectories(dir.getParent)
       Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
@@ -78,12 +80,8 @@ final class KgPipeline(cfg: PipelineConfig) {
         throw new RuntimeException(s"injected failure after stage $name")
     }
     // pre-sidecar checkpoints fall back to inference inside the helper
-    graft.io.SparkIo.readParquetWithSidecar(spark, dir.toString)
+    SparkIo.readParquetWithSidecar(spark, dir.toString)
   }
-
-  /** Label the Spark jobs of `body` in the UI / listeners. */
-  private def withJobDesc[T](spark: SparkSession, desc: String)(body: => T): T =
-    graft.io.SparkIo.withJobDesc(spark, desc)(body)
 
   /** Bucket-set sidecar name (leading underscore — not data). */
   private val BucketSidecar = "_graft_buckets"
@@ -117,7 +115,7 @@ final class KgPipeline(cfg: PipelineConfig) {
         val s = Files.readString(f).trim
         if (s.isEmpty) Set.empty else s.split(",").map(_.toInt).toSet
       } else // checkpoint predates the sidecar: one fallback collect job
-        withJobDesc(spark, s"collect:$name-buckets")(
+        SparkIo.withJobDesc(spark, s"collect:$name-buckets")(
           df.select(bucketExpr.as("b")).distinct().collect())
           .map(_.getInt(0)).toSet
     (df, buckets)
@@ -155,8 +153,6 @@ final class KgPipeline(cfg: PipelineConfig) {
       .as[Turn]
   }
 
-  /** Per-conversation triple supports: (conv_id, subj, pred, obj, lang,
-    * weight) — the unit of idempotent incremental replacement. */
   /** K2: structurally-bad rows can never succeed on retry — divert them to
     * the quarantine table with a reason instead of failing the job.
     *
@@ -208,7 +204,7 @@ final class KgPipeline(cfg: PipelineConfig) {
       (good.as[Turn], () => {
         val m = obs.get
         if (m.get("n_bad").map(_.asInstanceOf[Long]).forall(_ > 0))
-          withJobDesc(spark, "quarantine-write")(bad.write.mode("overwrite")
+          SparkIo.withJobDesc(spark, "quarantine-write")(bad.write.mode("overwrite")
             .parquet(s"${cfg.workDir}/quarantine/run_id=$runId"))
         m.get("max_ts") match {
           case Some(v) => wmOf(v)
@@ -218,6 +214,8 @@ final class KgPipeline(cfg: PipelineConfig) {
     }
   }
 
+  /** Per-conversation triple supports: (conv_id, subj, pred, obj, lang,
+    * weight) — the unit of idempotent incremental replacement. */
   def computeSupports(spark: SparkSession, turns: Dataset[Turn],
                               catalog: Seq[CatalogEntry],
                               markers: Map[String, String]): DataFrame = {
@@ -252,8 +250,9 @@ final class KgPipeline(cfg: PipelineConfig) {
     val raw0 = Extractor.extract(turns, catalog, markers,
       emitContext = cfg.corefResolution, canon = canon,
       sentinelAmbiguous = cfg.scoredLinking).toDF()
+    // scored entity linking, shared with the streaming ingest
     val raw1 =
-      if (cfg.scoredLinking) resolveAmbiguousMentions(spark, raw0, turns, catalog)
+      if (cfg.scoredLinking) graft.link.AmbiguityResolver.resolve(raw0, turns, catalog)
       else raw0
     // coref runs AFTER scored linking so the cross-turn antecedent is the
     // contextually-resolved entity, not an ambiguity sentinel
@@ -277,15 +276,6 @@ final class KgPipeline(cfg: PipelineConfig) {
         .withColumn("lang", coalesce(col("lang"), lit(cfg.language)))
     stamped.select("conv_id", "subj", "pred", "obj", "lang", "weight")
   }
-
-  /** Scored entity linking over the extraction output — shared with the
-    * streaming ingest; see [[graft.link.AmbiguityResolver]] (the logic
-    * lived here through round 3 and moved out verbatim for reuse). */
-  private def resolveAmbiguousMentions(spark: SparkSession, raw: DataFrame,
-                                       turns: Dataset[Turn],
-                                       catalog: Seq[CatalogEntry]): DataFrame =
-    graft.link.AmbiguityResolver.resolve(raw, turns, catalog)
-
 
   /** Conversation-level language detection: argmax function-word hit ratio
     * over `cfg.langProfiles` (ties break toward the lexicographically later
@@ -352,7 +342,7 @@ final class KgPipeline(cfg: PipelineConfig) {
                              triples: Long)
 
   // ---- physical bucketing of the published tables: supports bucket on
-  // conv_id (the sync replacement unit), edges on the full edge key, nodes
+  // conv_id (the sync replacement unit), edges and docs on subj, nodes
   // on entity_id — each table's bucket is derived from its own MERGE key, so
   // an incremental change maps to a deterministic, small set of buckets.
   //
@@ -364,48 +354,20 @@ final class KgPipeline(cfg: PipelineConfig) {
   // cluster into few buckets; the overwrite/carryover mechanism below is
   // key-agnostic — only this expression changes.
   private val B = cfg.syncBuckets
-  // supports/nodes bucket on their own keys through the SAME verified
-  // mapping (never a re-derived formula — see subjectBucket's contract)
+  // supports bucket on conv_id through the SAME verified mapping as the
+  // derived tables (never a re-derived formula — see subjectBucket's
+  // contract); edges, nodes and docs bucket in DerivedTables
   private def convBucket(c: org.apache.spark.sql.Column) = subjectBucket(c)
-  // edges (and docs) bucket on hash(subj), not the full edge key: the merge
-  // mechanism works with any stable key-derived bucket, and subject bucketing
-  // additionally makes per-subject slices partition-prunable — the access
-  // pattern of incremental doc rebuild ("give me all edges of these
-  // subjects").
-  // single source of truth: edgeBucket IS subjectBucket applied to subj
-  private lazy val edgeBucket = subjectBucket(col("subj"))
-  private val allBuckets: Set[Int] = (0 until B).toSet
 
-  /** Bucket-count pin: the key-to-bucket mapping is baked into every
-    * published generation, so running a sync with a different syncBuckets
-    * than the tables were built with would replace rows in the wrong buckets
-    * and silently carry stale copies forward. Pinned at first full run;
-    * verified on every run. */
-  private val bucketPin = Paths.get(s"${cfg.workDir}/_meta_pipeline/bucket_count")
-
-  /** Pin or verify this workDir's bucket count. Public because EVERY writer
-    * into the workDir's tables must pass it — KgMain's ingest-nt included,
-    * not just runFull/runSync. */
-  def pinOrVerifyBucketCount(): Unit = {
-    if (Files.exists(bucketPin)) {
-      val pinned = Files.readString(bucketPin).trim.toInt
-      require(pinned == B,
-        s"syncBuckets=$B but the published tables were built with $pinned " +
-          "buckets — changing the bucket count requires a fresh workDir " +
-          "(or a full rebuild into one)")
-    } else {
-      // atomic like every other commit point: a kill mid-write must not
-      // leave a truncated pin that bricks the workDir
-      Files.createDirectories(bucketPin.getParent)
-      val tmp = bucketPin.resolveSibling(".bucket_count.tmp")
-      Files.writeString(tmp, B.toString)
-      Files.move(tmp, bucketPin, StandardCopyOption.ATOMIC_MOVE)
-    }
-    // the authoritative pin lives in each TABLE's own metadata (the mapping
-    // is a property of the table, not of this workDir): a writer reaching a
-    // table through any other path — StreamingSync, a different workDir —
-    // trips the same check. The workDir pin above stays for early, clearer
-    // failure before any table is touched.
+  /** Pin or verify the bucket mapping (count and key expression) of every
+    * table of this workDir before any of them is written: the mapping is
+    * baked into every published generation, so a writer with a different
+    * syncBuckets would replace rows in the wrong buckets and silently carry
+    * stale copies forward. The pins live in each TABLE's own metadata, so a
+    * writer reaching a table through any other path (StreamingSync, another
+    * workDir) trips the same check. Public because EVERY writer into the
+    * workDir's tables must pass it — KgMain's ingest-nt included. */
+  def pinOrVerifyBucketCount(): Unit =
     Seq(supportTable, edgeTable, nodeTable, docTable)
       .foreach { t =>
         t.pinOrVerify("bucket_count", B.toString)
@@ -416,7 +378,6 @@ final class KgPipeline(cfg: PipelineConfig) {
         t.pinKeyExprOrVerify(cfg.bucketKeyExpr,
           graft.config.PipelineConfig.DefaultBucketKeyExpr)
       }
-  }
 
   /** Extraction-semantics pin: the flags that change what a support/edge
     * ROW means (coref resolution, scored linking, language detection, the
@@ -436,19 +397,18 @@ final class KgPipeline(cfg: PipelineConfig) {
     * mix. */
   private val semanticsPin =
     Paths.get(s"${cfg.workDir}/_meta_pipeline/semantics")
-  private def semanticsSig: String = cfg.semanticsSig
   private def pinSemantics(): Unit = {
     Files.createDirectories(semanticsPin.getParent)
     val tmp = semanticsPin.resolveSibling(".semantics.tmp")
-    Files.writeString(tmp, semanticsSig)
+    Files.writeString(tmp, cfg.semanticsSig)
     Files.move(tmp, semanticsPin, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
   private def verifySemantics(): Unit =
     if (Files.exists(semanticsPin)) {
       val pinned = Files.readString(semanticsPin).trim
-      require(pinned == semanticsSig,
-        s"sync flags ($semanticsSig) differ from the flags the standing " +
+      require(pinned == cfg.semanticsSig,
+        s"sync flags (${cfg.semanticsSig}) differ from the flags the standing " +
           s"tables were built with ($pinned) — an incremental sync would " +
           "mix row semantics within one table; run a FULL rebuild to " +
           "change them")
@@ -477,7 +437,7 @@ final class KgPipeline(cfg: PipelineConfig) {
   }
 
   /** Every bucket id of this pipeline's tables (full-publish bucket set). */
-  def allBucketIds: Set[Int] = allBuckets
+  def allBucketIds: Set[Int] = derived.allBuckets
 
   /** Full harvest (reference lifecycle §3.1): compute everything, publish
     * atomically, record watermark + metrics + lineage. */
@@ -504,7 +464,7 @@ final class KgPipeline(cfg: PipelineConfig) {
 
     supportTable.stagePartitioned(
       supports.withColumn("bucket", convBucket(col("conv_id"))), runId)
-    supportTable.publishBuckets(runId, allBuckets)
+    supportTable.publishBuckets(runId, allBucketIds)
 
     publishDerivedFull(spark, runId, supports, wm)
   }
@@ -653,7 +613,7 @@ final class KgPipeline(cfg: PipelineConfig) {
         // first run arrived as a sync: equivalent to a full publish
         supportTable.stagePartitioned(
           newSupports.withColumn("bucket", convBucket(col("conv_id"))), runId)
-        supportTable.publishBuckets(runId, allBuckets)
+        supportTable.publishBuckets(runId, allBucketIds)
         publishDerivedFull(spark, runId,
           supportTable.read(spark).get.drop("bucket"), newWm)
 
@@ -673,13 +633,13 @@ final class KgPipeline(cfg: PipelineConfig) {
         // the publish below flips the pointer (read() resolved the physical
         // gen path eagerly, and generations are immutable, so this plan
         // stays valid afterwards)
-        val keyCols = Seq("subj", "pred", "obj", "lang")
+        val key = DerivedTables.EdgeKey.map(col)
         val oldOfTouched = curChanged.join(touched, Seq("conv_id"), "left_semi")
         val delta = newSupports
-          .select(keyCols.map(col) :+ col("weight").as("dw"): _*)
+          .select(key :+ col("weight").as("dw"): _*)
           .unionByName(oldOfTouched
-            .select(keyCols.map(col) :+ (-col("weight")).as("dw"): _*))
-          .groupBy(keyCols.map(col): _*)
+            .select(key :+ (-col("weight")).as("dw"): _*))
+          .groupBy(key: _*)
           .agg(sum(col("dw")).as("dw"))
           .filter(col("dw") =!= 0)
 
@@ -689,7 +649,7 @@ final class KgPipeline(cfg: PipelineConfig) {
         // yield an empty (or doubled) delta and silently lose the edge/node
         // update. The affected EDGE bucket set rides the same write.
         val (deltaCk, affectedEdgeBuckets) =
-          stageWithBuckets(spark, runId, "edge_delta", edgeBucket)(delta)
+          stageWithBuckets(spark, runId, "edge_delta", derived.edgeBucket)(delta)
 
         // dynamic-partition-overwrite: only the k changed buckets are
         // written; the other B-k carry over by hard link
@@ -704,7 +664,7 @@ final class KgPipeline(cfg: PipelineConfig) {
     }
   }
 
-  /** Derive + publish full edge/node snapshots from the support table
+  /** Derive + publish full edge/node/doc snapshots from the support table
     * (full-harvest path: every bucket is written). */
   private def publishDerivedFull(spark: SparkSession, runId: String,
                                  supports: DataFrame,
@@ -712,214 +672,58 @@ final class KgPipeline(cfg: PipelineConfig) {
     // metrics ride the write itself (Dataset.observe) — no extra count job
     val obs = new org.apache.spark.sql.Observation()
     val edges = supports
-      .groupBy("subj", "pred", "obj", "lang")
+      .groupBy(DerivedTables.EdgeKey.map(col): _*)
       .agg(sum(col("weight")).as("weight"))
       .observe(obs, count(lit(1)).as("n"), sum(col("weight")).as("total_weight"))
-      .withColumn("bucket", edgeBucket)
-    edgeTable.stagePartitioned(edges, runId)
-    val edgesGen = edgeTable.publishBuckets(runId, allBuckets)
+    val edgesGen = derived.publishEdges(edges, allBucketIds, runId)
     publishHook("edges")
 
-    // downstream tables derive from the just-published parquet snapshot —
+    // nodes and docs derive from the just-published parquet snapshot —
     // re-using the logical `edges` plan would re-run the whole supports
     // aggregation once per derived table
-    val publishedEdges = edgeTable.read(spark).get
-    // nodes carry an edge-occurrence refcount so incremental syncs can
-    // retire an entity exactly when its last edge disappears
-    val nodes = publishedEdges
-      .select(explode(array(col("subj"), col("obj"))).as("entity_id"))
-      .groupBy("entity_id").agg(count(lit(1)).as("refs"))
-      .withColumn("bucket", convBucket(col("entity_id")))
-    nodeTable.stagePartitioned(nodes, runId)
-    val nodesGen = nodeTable.publishBuckets(runId, allBuckets)
-
-    // optional document sink: full path writes every doc bucket
-    if (cfg.publishDocs) {
-      val docs = graft.materialize.DocAssembler.assemble(
-        publishedEdges.select("subj", "pred", "obj", "lang"), cfg)
-      docTable.stagePartitioned(docs.withColumn("bucket", edgeBucket), runId)
-      docTable.publishBuckets(runId, allBuckets)
-    }
+    val nodesGen = derived.publishAllNodesAndDocs(spark, runId)
 
     finishRun(spark, runId, newWatermark, edgesGen, nodesGen,
       obs.get("n").asInstanceOf[Long],
       Seq(("edges", "total_weight", obs.get("total_weight").asInstanceOf[Long])))
   }
 
-  /** Propagate a support-level weight delta into the edge and node tables,
-    * rewriting only the buckets that contain affected keys. Edge weights are
-    * additive counts, so `new = old + delta` is exact; a row retires when
-    * its weight reaches 0, an entity when its edge refcount does. */
+  /** Propagate a support-level weight delta `(subj, pred, obj, lang, dw)`
+    * into the edge, node and doc tables through [[DerivedTables]],
+    * rewriting only the buckets that contain affected keys. */
   private def publishDerivedIncremental(spark: SparkSession, runId: String,
                                         delta: DataFrame,
                                         affectedEdgeBuckets: Set[Int],
                                         newWatermark: Option[Timestamp]): RunResult = {
-    val keyCols = Seq("subj", "pred", "obj", "lang")
+    val curE = edgeTable.read(spark).getOrElse(
+      // the previous run crashed between the support publish and the edge
+      // publish (e.g. a first-ever run that arrived as a sync): no edge
+      // snapshot exists to merge a delta into — derive everything fully
+      // from the published supports, which already contain the replayed
+      // update
+      return publishDerivedFull(spark, runId,
+        supportTable.read(spark).get.drop("bucket"), newWatermark))
+    val (edges, refDelta) = derived.mergeEdges(
+      Some(curE.filter(col("bucket").isin(affectedEdgeBuckets.toSeq: _*)) // pruned
+        .drop("bucket")),
+      delta)
 
-    val (edgesGen, nodesGen) = edgeTable.read(spark) match {
-      case None =>
-        // the previous run crashed between the support publish and the edge
-        // publish (e.g. a first-ever run that arrived as a sync): no edge
-        // snapshot exists to merge a delta into — derive everything fully
-        // from the published supports, which already contain the replayed
-        // update
-        return publishDerivedFull(spark, runId,
-          supportTable.read(spark).get.drop("bucket"), newWatermark)
-      case Some(curE) =>
-        val curAffected = curE
-          .filter(col("bucket").isin(affectedEdgeBuckets.toSeq: _*)) // pruned
-          .drop("bucket")
-        val updated = curAffected.join(delta, keyCols, "left")
-          .select(keyCols.map(col) :+
-            (col("weight") + coalesce(col("dw"), lit(0L))).as("weight"): _*)
-          .filter(col("weight") > 0)
-        val created = delta
-          .join(curAffected.select(keyCols.map(col): _*), keyCols, "left_anti")
-          .filter(col("dw") > 0)
-          .select(keyCols.map(col) :+ col("dw").as("weight"): _*)
+    // the node ref delta derives from the PRE-publish edge state, so it is
+    // checkpointed BEFORE the edge publish — a resume after that publish
+    // would otherwise recompute it against the already-updated edges and
+    // lose the node update. The affected NODE bucket set rides the write.
+    val (nodeDelta, affectedNodeBuckets) =
+      stageWithBuckets(spark, runId, "node_delta", derived.nodeBucket)(refDelta)
+    val edgesGen = derived.publishEdges(edges, affectedEdgeBuckets, runId)
+    publishHook("edges")
+    val nodesGen = derived.publishNodes(spark, nodeDelta, affectedNodeBuckets, runId)
+    derived.publishDocs(spark, delta.select("subj").distinct(),
+      affectedEdgeBuckets, runId)
 
-        // node refcount delta: +1 per created edge row, -1 per deleted one,
-        // for both endpoints (consistent with the full-path refs definition).
-        // Derived from the PRE-publish edge state, so it is checkpointed
-        // BEFORE the edge publish — a resume after that publish would
-        // otherwise recompute it against the already-updated edges and lose
-        // the node update.
-        val deleted = curAffected.join(delta, keyCols)
-          .filter(col("weight") + col("dw") <= 0)
-        // the affected NODE bucket set rides the stage write (sidecar)
-        val (nodeDelta, affectedNodeBuckets) =
-          stageWithBuckets(spark, runId, "node_delta",
-            convBucket(col("entity_id"))) {
-          created
-            .select(explode(array(col("subj"), col("obj"))).as("entity_id"),
-              lit(1L).as("dn"))
-            .unionByName(deleted
-              .select(explode(array(col("subj"), col("obj"))).as("entity_id"),
-                lit(-1L).as("dn")))
-            .groupBy("entity_id").agg(sum(col("dn")).as("dn"))
-            .filter(col("dn") =!= 0)
-        }
-
-        edgeTable.stagePartitioned(
-          updated.unionByName(created).withColumn("bucket", edgeBucket), runId)
-        val eg = edgeTable.publishBuckets(runId, affectedEdgeBuckets)
-        publishHook("edges")
-
-        val ng = nodeTable.read(spark) match {
-          case Some(curN) =>
-            val curNA = curN
-              .filter(col("bucket").isin(affectedNodeBuckets.toSeq: _*))
-              .drop("bucket")
-            val updatedN = curNA.join(nodeDelta, Seq("entity_id"), "left")
-              .select(col("entity_id"),
-                (col("refs") + coalesce(col("dn"), lit(0L))).as("refs"))
-              .filter(col("refs") > 0)
-            val createdN = nodeDelta.filter(col("dn") > 0)
-              .join(curNA.select("entity_id"), Seq("entity_id"), "left_anti")
-              .select(col("entity_id"), col("dn").as("refs"))
-            nodeTable.stagePartitioned(
-              updatedN.unionByName(createdN)
-                .withColumn("bucket", convBucket(col("entity_id"))), runId)
-            nodeTable.publishBuckets(runId, affectedNodeBuckets)
-          case None =>
-            // the previous run crashed between the edge and node publishes
-            // (node table never bootstrapped): rebuild refcounts fully from
-            // the just-published (delta-applied) edges — symmetric to the
-            // missing-edge-table fallback above
-            val rebuilt = edgeTable.read(spark).get
-              .select(explode(array(col("subj"), col("obj"))).as("entity_id"))
-              .groupBy("entity_id").agg(count(lit(1)).as("refs"))
-              .withColumn("bucket", convBucket(col("entity_id")))
-            nodeTable.stagePartitioned(rebuilt, runId)
-            nodeTable.publishBuckets(runId, allBuckets)
-        }
-        (eg, ng)
-    }
-
-    val publishedEdges = edgeTable.read(spark).get
     // snapshot-level triple count straight from parquet footers — zero
     // Spark jobs (a metadata-only Spark count still schedules ~2)
-    val nTriples = edgeTable.currentRecordCount(spark).getOrElse(0L)
-
-    // optional document sink, incrementally: docs pivot per (subj, lang)
-    // over all of a subject's edges, and edges are subject-bucketed — so the
-    // delta's subjects map to exactly the affected edge/doc buckets. Rebuild
-    // docs for affected subjects from their (pruned) edge slice, keep every
-    // other doc in those buckets, carry untouched buckets by hard link.
-    // uriDescription labels resolve against the slice's own object URIs
-    // (bucket-pruned + semi-joined below — result-identical to a full-table
-    // lookup because labels of URI u live under subject u); a label change
-    // refreshes only docs of changed subjects — the reference's sync has the
-    // same staleness (unchanged resources are not re-indexed,
-    // Harvester.java:1199-1453) — unless `refreshReferencingDocs` opts into
-    // the obj-side semi-join extension, which widens the affected-subject
-    // set to every subject holding a changed subject as an object value.
-    if (cfg.publishDocs) {
-      docTable.read(spark) match {
-        case Some(curD) =>
-          val changedSubjects = delta.select("subj").distinct()
-          val affectedSubjects =
-            if (!cfg.refreshReferencingDocs) changedSubjects
-            else changedSubjects.unionByName(
-              // obj is not the bucket key, so this scans the edge table —
-              // the documented cost of opting into label freshness
-              publishedEdges
-                .join(changedSubjects.withColumnRenamed("subj", "obj"),
-                  Seq("obj"), "left_semi")
-                .select("subj")).distinct()
-              // materialized ONCE: three consumers below (bucket collect,
-              // slice semi-join, kept anti-join) would otherwise re-run the
-              // full obj-side edge scan each
-              .localCheckpoint(true)
-          // doc buckets follow the (possibly widened) affected-subject set —
-          // a referencing subject can live outside the delta's edge buckets
-          val docBuckets =
-            if (!cfg.refreshReferencingDocs) affectedEdgeBuckets
-            else withJobDesc(spark, "collect:doc-buckets")(
-              affectedSubjects.select(subjectBucket(col("subj")).as("b"))
-                .distinct().collect()).map(_.getInt(0)).toSet
-          val slice = publishedEdges
-            .filter(col("bucket").isin(docBuckets.toSeq: _*)) // pruned
-            .join(affectedSubjects, Seq("subj"), "left_semi")
-            .select("subj", "pred", "obj", "lang")
-          // label lookup restricted to the slice's own object URIs BEFORE
-          // aggregation: resolving against the whole edge table would make
-          // per-sync doc cost O(table), not O(delta) — label subjects are
-          // bucket-prunable (labels of URI u live under subject u, so only
-          // the slice-obj buckets are read)
-          // materialized once: consumed by the driver-side bucket collect
-          // AND the labelSrc semi-join (two evaluations of the slice scan
-          // otherwise)
-          val sliceObjs = slice.select(col("obj").as("subj")).distinct()
-            .localCheckpoint(true)
-          val objBuckets = withJobDesc(spark, "collect:label-buckets")(
-            sliceObjs.select(subjectBucket(col("subj")).as("b")).distinct()
-              .collect()).map(_.getInt(0)).toSet
-          val labelSrc = publishedEdges
-            .filter(col("bucket").isin(objBuckets.toSeq: _*)) // pruned
-            .join(sliceObjs, Seq("subj"), "left_semi")
-            .select("subj", "pred", "obj", "lang")
-          val rebuilt = graft.materialize.DocAssembler.assemble(
-            slice, cfg, labelSource = Some(labelSrc))
-          val kept = curD
-            .filter(col("bucket").isin(docBuckets.toSeq: _*))
-            .drop("bucket")
-            .join(affectedSubjects, Seq("subj"), "left_anti")
-          docTable.stagePartitioned(
-            rebuilt.unionByName(kept).withColumn("bucket", edgeBucket), runId)
-          docTable.publishBuckets(runId, docBuckets)
-        case None =>
-          // publishDocs enabled after a docs-less run: an incremental slice
-          // would present only the changed subjects' docs as the whole
-          // table — bootstrap with a full build instead
-          val docs = graft.materialize.DocAssembler.assemble(
-            publishedEdges.select("subj", "pred", "obj", "lang"), cfg)
-          docTable.stagePartitioned(docs.withColumn("bucket", edgeBucket), runId)
-          docTable.publishBuckets(runId, allBuckets)
-      }
-    }
-
-    finishRun(spark, runId, newWatermark, edgesGen, nodesGen, nTriples)
+    finishRun(spark, runId, newWatermark, edgesGen, nodesGen,
+      edgeTable.currentRecordCount(spark).getOrElse(0L))
   }
 
   private def finishRun(spark: SparkSession, runId: String,

@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.config.PipelineConfig
 import graft.extract.Extractor
 import graft.io.TableCommitter
+import graft.pipeline.DerivedTables
 import graft.schema.{CatalogEntry, Turn}
 
 /** Structured-Streaming front-end for incremental ingestion: the reference's
@@ -14,10 +15,9 @@ import graft.schema.{CatalogEntry, Turn}
   * `readStream` + `Trigger.AvailableNow` — source offsets replace the
   * hand-rolled `last_update` watermark, and each micro-batch MERGEs extracted
   * supports through the same committer as the batch path (exactly-once via
-  * checkpointed offsets + idempotent key merge).
-  *
-  * Also provides the watermarked tumbling-window mention-rate aggregate —
-  * the standard streaming shape (windowed agg + late-data watermark). */
+  * checkpointed offsets + idempotent key merge). Edges, nodes and docs
+  * follow each batch's support delta through the batch sync's own
+  * propagation rule ([[graft.pipeline.DerivedTables]]). */
 object StreamingSync {
 
   /** Ingest every available file once, extracting and merging per batch.
@@ -76,10 +76,10 @@ object StreamingSync {
     // flip re-keys support rows, and edges drop conv_id — so the flip
     // propagates into the edge delta as a RETRACT+EMIT pair derived from
     // the flipped conversations' PRE-batch support rows (read via the same
-    // preBatchRead snapshot discipline as the node-refcount anti-join); an
+    // preBatchRead snapshot discipline as the pre-batch edge read); an
     // edge key whose weight retires to zero drops, and node refcounts
     // decrement for dead keys exactly as they increment for created ones —
-    // see derivedStep.
+    // see propagate.
     // scoredLinking IS streaming-safe (round-4): contextual disambiguation
     // is per-(conv, turn, alias) over the turn's OWN tokens, and a turn is
     // never split across micro-batches — resolving inside foreachBatch is
@@ -233,6 +233,8 @@ object StreamingSync {
     }
     val bucketOf =
       PipelineConfig.bucketCol(cfg.bucketKeyExpr, "conv_id", B)
+    val derived = for (e <- edgeTable; n <- nodeTable)
+      yield new DerivedTables(cfg, e, n, docTable)
 
     // canonicalization parity with the batch path (KgPipeline
     // .computeSupports): under scoredLinking a shared alias is ambiguity to
@@ -371,13 +373,8 @@ object StreamingSync {
           // state: recomputation inputs publish last, so a replay that sees
           // an advanced input always finds every consumer already published
           // (its wrong re-staging is discarded by runId idempotence)
-          (edgeTable, nodeTable) match {
-            case (Some(e), Some(n)) =>
-              derivedStep(s, supports, e, n, docTable, cfg, B,
-                cfg.bucketKeyExpr, s"stream-$ckptId-$batchId",
-                supTbl = table, flips = langState.map(_._3))
-            case _ =>
-          }
+          derived.foreach(d => propagate(s, supports, langState.map(_._3),
+            table, d, bucketOf, s"stream-$ckptId-$batchId"))
           // coref + language state publish AFTER the supports and BEFORE
           // the stamp: then every crash window replays correctly (see
           // corefStep / langStep)
@@ -396,182 +393,84 @@ object StreamingSync {
     merged
   }
 
-  /** Additive derived-table propagation: the streaming analogue of the
-    * batch pipeline's edge/node publish (KgPipeline.publishDerived*), per
-    * micro-batch and O(batch).
+  /** Derived-table propagation per micro-batch, O(batch): the batch's
+    * support delta flows into the edge, node and doc tables through
+    * [[graft.pipeline.DerivedTables]], the batch sync's own rule.
     *
-    * Edge weights are sums of support weights, so the batch's support delta
-    * aggregates straight into the edge table (pruned read of the touched
-    * subj-buckets, bucket-granular publish). Node refcounts count DISTINCT
-    * edge keys per entity, so they advance only on edge keys this batch
-    * CREATES — detected with an anti-join against the PRE-batch edge
-    * generation. On a replay whose edge publish already landed that is the
-    * published generation's PARENT ([[preBatchRead]]); reading the advanced
-    * generation instead would find zero "new" keys and publish a wrong
-    * (empty-delta) node merge in the crash window where the node publish is
-    * still pending.
+    * The delta is the batch's supports, plus under detectLanguage a
+    * RETRACT+EMIT pair per flipped conversation (`flips`): its PRE-batch
+    * support rows retract at the old lang and emit at the new one, so a key
+    * whose merged weight reaches zero retires and its node refs decrement.
+    * Everything else is append-only — vanished-data deletes belong to the
+    * batch sync.
     *
-    * The ONE retirement path here is the detectLanguage flip (`flips`): a
-    * flipped conversation's pre-batch support rows retract at the old lang
-    * and emit at the new one, a key whose merged weight reaches zero drops
-    * from the edge table, and node refcounts decrement for dead keys
-    * symmetric to created ones. Everything else stays append-only —
-    * vanished-data deletes belong to the batch sync.
-    *
-    * Crash safety: edges publish before nodes, both before the coref state
-    * and the lastBatch stamp; publishes are runId-idempotent. Replay
-    * windows: before edge publish — clean recompute; between edge and node
-    * publish — parent-generation read reproduces the original new-key set,
-    * edge re-publish no-ops, node publish completes; after node publish —
-    * both no-op and the re-staging is discarded. */
-  private def derivedStep(s: SparkSession, supports: DataFrame,
-                          eTbl: TableCommitter, nTbl: TableCommitter,
-                          docTbl: Option[TableCommitter], cfg: PipelineConfig,
-                          B: Int, keyExpr: String, runId: String,
-                          supTbl: TableCommitter = null,
-                          flips: Option[DataFrame] = None): Unit = {
-    val edgeBucket = PipelineConfig.bucketCol(keyExpr, "subj", B)
-    val nodeBucket = PipelineConfig.bucketCol(keyExpr, "entity_id", B)
-    val eKeys = Seq("subj", "pred", "obj", "lang")
+    * Crash safety: edges publish before nodes, nodes before docs, all
+    * before the coref state and the lastBatch stamp; publishes are
+    * runId-idempotent. The merge reads the PRE-batch edge generation
+    * ([[preBatchRead]]): on a replay whose edge publish already landed
+    * that is the published generation's PARENT — reading the advanced
+    * generation instead would find zero created keys and publish an empty
+    * node delta in the window where the node publish is still pending.
+    * Docs need no snapshot: they rebuild from the post-merge edges, which
+    * every replay window reads too. */
+  private def propagate(s: SparkSession, supports: DataFrame,
+                        flips: Option[DataFrame], supTbl: TableCommitter,
+                        derived: DerivedTables, bucketOf: Column,
+                        runId: String): Unit = {
+    val eKeys = DerivedTables.EdgeKey.map(col)
     // language-flip propagation (detectLanguage): a flipped conversation's
     // PRE-batch support rows (snapshot read — the supports table already
     // advanced this batch) become a retract at the old lang (-weight) and
     // an emit at the new one (+weight). Edge weights are sums of support
     // weights over conversations, so the retract subtracts exactly this
-    // conversation's contribution — a key retiring to zero drops below.
+    // conversation's contribution.
     val flipDelta: Option[DataFrame] = flips.filter(f => !f.isEmpty).flatMap { f =>
       preBatchRead(s, supTbl, runId).map { priorSup =>
-        val flipBuckets = f
-          .select(PipelineConfig.bucketCol(keyExpr, "conv_id", B).as("b"))
+        val flipBuckets = f.select(bucketOf.as("b"))
           .distinct().collect().map(_.getInt(0)).toSeq
         val rows = priorSup
           .filter(col("bucket").isin(flipBuckets: _*)) // pruned
           .join(f.select(col("conv_id"), col("lang").as("lang_new")),
             Seq("conv_id"), "inner")
-        rows.select(col("subj"), col("pred"), col("obj"), col("lang"),
-            (-col("weight")).as("weight"))
+        rows.select(eKeys :+ (-col("weight")).as("dw"): _*)
           .unionByName(rows.select(col("subj"), col("pred"), col("obj"),
-            col("lang_new").as("lang"), col("weight")))
+            col("lang_new").as("lang"), col("weight").as("dw")))
       }
     }
-    val eDelta = flipDelta.foldLeft(
-        supports.select((eKeys :+ "weight").map(col): _*))(_ unionByName _)
-      .groupBy(eKeys.map(col): _*).agg(sum(col("weight")).as("weight"))
-      .filter(col("weight") =!= 0L) // a flip's retract+emit can cancel
-      .withColumn("bucket", edgeBucket)
-      // batch-edge-sized; feeds the bucket set, the merge AND the new-key
-      // anti-join — materialized once
+    val delta = flipDelta.foldLeft(
+        supports.select(eKeys :+ col("weight").as("dw"): _*))(_ unionByName _)
+      .groupBy(eKeys: _*).agg(sum(col("dw")).as("dw"))
+      .filter(col("dw") =!= 0L) // a flip's retract+emit can cancel
+      .withColumn("bucket", derived.edgeBucket)
+      // batch-edge-sized; feeds the bucket set, the merge AND the doc
+      // rebuild's subjects — materialized once
       .localCheckpoint(true)
-    val eTouched = eDelta.select("bucket").distinct()
+    val eTouched = delta.select("bucket").distinct()
       .collect().map(_.getInt(0)).toSet
     if (eTouched.isEmpty) return
-    val pre = preBatchRead(s, eTbl, runId)
+    val pre = preBatchRead(s, derived.edgeTable, runId)
       .map(_.filter(col("bucket").isin(eTouched.toSeq: _*)) // pruned
-        .select((eKeys :+ "weight").map(col): _*)
-        .localCheckpoint(true)) // consumed by the merge and the anti-joins
-    val combinedE = (pre match {
-      case Some(cur) => cur.unionByName(eDelta.drop("bucket"))
-        .groupBy(eKeys.map(col): _*).agg(sum(col("weight")).as("weight"))
-      case None => eDelta.drop("bucket")
-    }).filter(col("weight") > 0) // retired keys drop out of the table
-      // consumed by the stage AND the created/dead key joins below
-      .localCheckpoint(true)
-    eTbl.stagePartitioned(combinedE.withColumn("bucket", edgeBucket), runId)
-    eTbl.publishBuckets(runId, eTouched)
+        .select(eKeys :+ col("weight"): _*)
+        .localCheckpoint(true)) // consumed by the edge AND the ref delta
+    val (edges, refDelta) = derived.mergeEdges(pre, delta.drop("bucket"))
+    derived.publishEdges(edges, eTouched, runId)
 
-    // node refcounts count DISTINCT edge keys per entity: +1 per key this
-    // batch CREATES (present after the merge, absent before), -1 per key it
-    // RETIRES (present before, absent after — only possible under a flip)
-    val newKeys = pre match {
-      case Some(cur) =>
-        combinedE.join(cur.select(eKeys.map(col): _*), eKeys, "left_anti")
-      case None => combinedE
-    }
-    val deadKeys = pre match {
-      case Some(cur) if flipDelta.isDefined =>
-        cur.join(combinedE.select(eKeys.map(col): _*), eKeys, "left_anti")
-      case _ => null
-    }
-    val refDelta = Option(deadKeys).foldLeft(
-      newKeys.select(explode(array(col("subj"), col("obj"))).as("entity_id"),
-        lit(1L).as("d")))((acc, dead) => acc.unionByName(
-      dead.select(explode(array(col("subj"), col("obj"))).as("entity_id"),
-        lit(-1L).as("d"))))
-    val nDelta = refDelta
-      .groupBy("entity_id").agg(sum(col("d")).as("refs"))
-      .filter(col("refs") =!= 0L)
-      .withColumn("bucket", nodeBucket)
+    val nDelta = refDelta.withColumn("bucket", derived.nodeBucket)
       .localCheckpoint(true)
     val nTouched = nDelta.select("bucket").distinct()
       .collect().map(_.getInt(0)).toSet
-    if (nTouched.nonEmpty) {
-      val combinedN = (nTbl.read(s) match {
-        case Some(cur) => cur
-          .filter(col("bucket").isin(nTouched.toSeq: _*)) // pruned
-          .select(col("entity_id"), col("refs"))
-          .unionByName(nDelta.drop("bucket"))
-          .groupBy("entity_id").agg(sum(col("refs")).as("refs"))
-        case None => nDelta.drop("bucket")
-      }).filter(col("refs") > 0) // an entity with no remaining edges drops
-      nTbl.stagePartitioned(combinedN.withColumn("bucket", nodeBucket), runId)
-      nTbl.publishBuckets(runId, nTouched)
-    }
+    if (nTouched.nonEmpty)
+      derived.publishNodes(s, nDelta.drop("bucket"), nTouched, runId)
 
-    // optional doc sink, per micro-batch (the batch sync's incremental doc
-    // rebuild at batch granularity): docs pivot per (subj, lang) over ALL
-    // of a subject's edges, and edges are subject-bucketed — rebuild docs
-    // for the batch's changed subjects from their pruned POST-merge edge
-    // slice, keep every other doc in those buckets, hard-link the rest.
-    // Label lookups (uriDescription) are slice-obj-restricted and
-    // bucket-pruned exactly like the batch path (labels of URI u live under
-    // subject u); a label arriving in a LATER batch does not refresh docs
-    // already rendered — the same staleness as the batch sync and the
-    // reference (unchanged resources are not re-indexed). Replay-safe with
-    // NO snapshot gymnastics: the doc input is the post-merge edge
-    // generation, which is what every replay window reads too (later
-    // batches have not run), and a published doc runId no-ops.
-    //
-    // Skip condition: with no created keys and no flips, every doc would
-    // re-render byte-identically (weights do not render) — the historical
-    // fast path. Under a flip the per-entity ref deltas can CANCEL
-    // (retire at en + create at cs), so nTouched alone cannot prove docs
-    // unchanged and the rebuild always runs.
-    val docsUnchanged = nTouched.isEmpty && flipDelta.isEmpty
-    docTbl.filter(_ => !docsUnchanged).foreach { dTbl =>
-      val changedSubj = eDelta.select("subj").distinct().localCheckpoint(true)
-      val postEdges = eTbl.read(s).get
-      val slice = postEdges
-        .filter(col("bucket").isin(eTouched.toSeq: _*)) // pruned
-        .join(changedSubj, Seq("subj"), "left_semi")
-        .select("subj", "pred", "obj", "lang")
-      val sliceObjs = slice.select(col("obj").as("subj")).distinct()
-        .localCheckpoint(true)
-      val objBuckets = sliceObjs
-        .select(PipelineConfig.bucketCol(keyExpr, "subj", B).as("b"))
-        .distinct().collect().map(_.getInt(0)).toSet
-      val labelSrc = postEdges
-        .filter(col("bucket").isin(objBuckets.toSeq: _*)) // pruned
-        .join(sliceObjs, Seq("subj"), "left_semi")
-        .select("subj", "pred", "obj", "lang")
-      val rebuilt = graft.materialize.DocAssembler.assemble(
-        slice, cfg, labelSource = Some(labelSrc))
-      val combinedD = dTbl.read(s) match {
-        case Some(curD) => rebuilt.unionByName(curD
-          .filter(col("bucket").isin(eTouched.toSeq: _*)) // pruned
-          .drop("bucket")
-          .join(changedSubj, Seq("subj"), "left_anti"))
-        case None => rebuilt
-      }
-      dTbl.stagePartitioned(combinedD.withColumn("bucket", edgeBucket), runId)
-      dTbl.publishBuckets(runId, eTouched)
-    }
+    // docs skip: with no created or retired keys and no flips, every doc
+    // would re-render byte-identically (weights do not render). Under a
+    // flip the per-entity ref deltas can CANCEL (retire at en + create at
+    // cs), so nTouched alone cannot prove docs unchanged.
+    if (nTouched.nonEmpty || flipDelta.isDefined)
+      derived.publishDocs(s, delta.select("subj").distinct().localCheckpoint(true),
+        eTouched, runId)
   }
 
-  /** The table as it stood BEFORE this runId's publish: the current
-    * generation normally; the published generation's PARENT when this
-    * runId already published (the crash-replay window). Fails loudly if
-    * retention expired the parent mid-replay — treating it as empty would
-    * re-derive deltas the table already absorbed. */
   /** Cross-batch language state for the streaming ingest (detectLanguage).
     *
     * Merges the batch's per-conversation [[graft.text.LangDetect]] counts
@@ -624,7 +523,7 @@ object StreamingSync {
     // winner leaves its bucket untouched (else every chatty conversation
     // would force a byte-identical bucket rewrite per batch). The flip
     // rows (conv_id, lang_prior, lang) also drive the derived tables'
-    // retract+emit propagation (see derivedStep).
+    // retract+emit propagation (see propagate).
     val flips: DataFrame = (prior match {
       case None =>
         langNow.limit(0).withColumn("lang_prior", lit(""))
@@ -646,6 +545,11 @@ object StreamingSync {
     })
   }
 
+  /** The table as it stood BEFORE this runId's publish: the current
+    * generation normally; the published generation's PARENT when this
+    * runId already published (the crash-replay window). Fails loudly if
+    * retention expired the parent mid-replay — treating it as empty would
+    * re-derive deltas the table already absorbed. */
   private def preBatchRead(s: SparkSession, tbl: TableCommitter,
                            runId: String): Option[DataFrame] =
     tbl.publishedGeneration(runId) match {

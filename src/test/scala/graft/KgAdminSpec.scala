@@ -24,11 +24,11 @@ class KgAdminSpec extends AnyFunSuite {
     val workDir = TempDirs("admin-")
     val c = new TableCommitter(s"$workDir/tables/edges")
     // two published generations + one staged-but-unpublished run
-    c.stage(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), "r1")
-    assert(c.publish("r1") == "gen-0")
-    c.stage(Seq(("a", 9L)).toDF("k", "v"), "r2")
-    assert(c.publish("r2") == "gen-1")
-    c.stage(Seq(("z", 0L)).toDF("k", "v"), "r3-staged")
+    c.stagePartitioned(Seq(("a", 1L, 0), ("b", 2L, 0)).toDF("k", "v", "bucket"), "r1")
+    assert(c.publishBuckets("r1", Set(0)) == "gen-0")
+    c.stagePartitioned(Seq(("a", 9L, 0)).toDF("k", "v", "bucket"), "r2")
+    assert(c.publishBuckets("r2", Set(0)) == "gen-1")
+    c.stagePartitioned(Seq(("z", 0L, 0)).toDF("k", "v", "bucket"), "r3-staged")
 
     val status = run("status", workDir)
     assert(status.size == 1)

@@ -378,6 +378,35 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     assert(dTbl.currentGeneration() == gD)
     assert(table.currentGeneration("lastBatch").contains(lastBatch.toString))
 
+    // replay window between the edge and the node publish: the last batch's
+    // edges are published, its nodes and docs are not. The replay must
+    // derive the created keys against the PARENT edge generation — the
+    // current one already holds them
+    val ckptId = Files.readString(
+      java.nio.file.Paths.get(ckpt).resolve("graft-ckpt-id")).trim
+    val runId = s"stream-$ckptId-$lastBatch"
+    assert(nTbl.publishedGeneration(runId) == gN)
+    assert(dTbl.publishedGeneration(runId) == gD)
+    Seq(nTbl, dTbl).foreach { t =>
+      val gen = t.currentGeneration().get
+      val root = java.nio.file.Paths.get(t.currentPath().get).getParent
+      val dead = Files.walk(root.resolve(gen))
+      try dead.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(f => Files.delete(f))
+      finally dead.close()
+      Files.delete(root.resolve("_meta").resolve("runs").resolve(s"current~$runId"))
+      t.setPointer("current", s"gen-${gen.stripPrefix("gen-").toLong - 1}")
+    }
+    deleteCommit(ckpt, lastBatch)
+    Files.writeString(java.nio.file.Paths.get(tblDir)
+      .resolve("_meta").resolve("lastBatch"), (lastBatch - 1).toString)
+    StreamingSync.ingestAvailableNow(spark, inDir, ckpt,
+      fx.catalog, fx.markers, cfg, table, maxFilesPerBatch = Some(1),
+      edgeTable = Some(eTbl), nodeTable = Some(nTbl), docTable = Some(dTbl))
+    assert(nodeContent() == nodesRef, "replay lost the last batch's node refs")
+    assert(docContent() == docsRef, "replay lost the last batch's docs")
+    assert(eTbl.currentGeneration() == gE)
+
     // late enabling over a lineage ingested WITHOUT propagation is refused
     val t2 = new TableCommitter(TempDirs("stream-dt-t2-"))
     val ck2 = TempDirs("stream-dt-ck2-")

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.TableCommitter
@@ -11,13 +12,21 @@ class TableCommitterSpec extends AnyFunSuite {
   private def fresh() = new TableCommitter(
     TempDirs("committer-"))
 
+  /** Stage `df` (which carries a `bucket` column) and publish it as the
+    * replacement of `buckets`. */
+  private def put(t: TableCommitter, df: DataFrame, runId: String,
+                  buckets: Set[Int] = Set(0)): String = {
+    t.stagePartitioned(df, runId)
+    t.publishBuckets(runId, buckets)
+  }
+
   test("staged data is invisible until publish; publish flips atomically") {
     val spark = SparkTestSession.get
     import spark.implicits._
     val t = fresh()
-    t.stage(Seq((1, "a")).toDF("k", "v"), "r1")
+    t.stagePartitioned(Seq((1, "a", 0)).toDF("k", "v", "bucket"), "r1")
     assert(t.read(spark).isEmpty)
-    val gen = t.publish("r1")
+    val gen = t.publishBuckets("r1", Set(0))
     assert(gen == "gen-0")
     assert(t.read(spark).get.collect().map(r => (r.getInt(0), r.getString(1))).toSet
       == Set((1, "a")))
@@ -27,33 +36,19 @@ class TableCommitterSpec extends AnyFunSuite {
     val spark = SparkTestSession.get
     import spark.implicits._
     val t = fresh()
-    t.stage(Seq((1, "a")).toDF("k", "v"), "r1"); t.publish("r1")
-    t.stage(Seq((2, "b")).toDF("k", "v"), "r2")
+    put(t, Seq((1, "a", 0)).toDF("k", "v", "bucket"), "r1")
+    t.stagePartitioned(Seq((2, "b", 0)).toDF("k", "v", "bucket"), "r2")
     t.rollback("r2")
     assert(t.read(spark).get.count() == 1)
-    intercept[IllegalArgumentException](t.publish("r2"))
-  }
-
-  test("merge-by-key: updates win, others carry over; re-merge is idempotent") {
-    val spark = SparkTestSession.get
-    import spark.implicits._
-    val t = fresh()
-    t.stage(Seq((1, "a"), (2, "b")).toDF("k", "v"), "r1"); t.publish("r1")
-    t.merge(spark, Seq((2, "B"), (3, "c")).toDF("k", "v"), Seq("k"), "r2")
-    val want = Set((1, "a"), (2, "B"), (3, "c"))
-    def content = t.read(spark).get.collect()
-      .map(r => (r.getInt(0), r.getString(1))).toSet
-    assert(content == want)
-    t.merge(spark, Seq((2, "B"), (3, "c")).toDF("k", "v"), Seq("k"), "r3")
-    assert(content == want)
+    intercept[IllegalArgumentException](t.publishBuckets("r2", Set(0)))
   }
 
   test("time travel: every published generation stays readable") {
     val spark = SparkTestSession.get
     import spark.implicits._
     val t = fresh()
-    t.stage(Seq((1, "v1")).toDF("k", "v"), "r1"); t.publish("r1")
-    t.merge(spark, Seq((1, "v2")).toDF("k", "v"), Seq("k"), "r2")
+    put(t, Seq((1, "v1", 0)).toDF("k", "v", "bucket"), "r1")
+    put(t, Seq((1, "v2", 0)).toDF("k", "v", "bucket"), "r2")
     assert(t.generations() == Seq("gen-0", "gen-1"))
     assert(t.readGeneration(spark, "gen-0").get.head().getString(1) == "v1")
     assert(t.readGeneration(spark, "gen-1").get.head().getString(1) == "v2")
@@ -64,11 +59,11 @@ class TableCommitterSpec extends AnyFunSuite {
     val spark = SparkTestSession.get
     import spark.implicits._
     val t = fresh()
-    t.stage(Seq(Tuple1("v0")).toDF("v"), "r1"); t.publish("r1") // gen-0
-    t.stage(Seq(Tuple1("v1")).toDF("v"), "r2"); t.publish("r2") // gen-1
+    put(t, Seq(("v0", 0)).toDF("v", "bucket"), "r1") // gen-0
+    put(t, Seq(("v1", 0)).toDF("v", "bucket"), "r2") // gen-1
     t.setPointer("current", "gen-0") // rollback
-    t.stage(Seq(Tuple1("v2")).toDF("v"), "r3")
-    val gen = t.publish("r3") // pointer said gen-0; must NOT collide with gen-1
+    // pointer said gen-0; must NOT collide with gen-1
+    val gen = put(t, Seq(("v2", 0)).toDF("v", "bucket"), "r3")
     assert(gen == "gen-2")
     assert(t.read(spark).get.head().getString(0) == "v2")
     assert(t.readGeneration(spark, "gen-1").get.head().getString(0) == "v1")
@@ -181,8 +176,8 @@ class TableCommitterSpec extends AnyFunSuite {
     val spark = SparkTestSession.get
     import spark.implicits._
     val t = fresh()
-    t.stage(Seq(Tuple1("blue")).toDF("v"), "r1"); t.publish("r1")
-    t.stage(Seq(Tuple1("green")).toDF("v"), "r2"); t.publish("r2")
+    put(t, Seq(("blue", 0)).toDF("v", "bucket"), "r1")
+    put(t, Seq(("green", 0)).toDF("v", "bucket"), "r2")
     // current points at gen-1; serve alias flips back to gen-0
     t.setPointer("serve", "gen-0")
     assert(t.read(spark, "serve").get.head().getString(0) == "blue")
@@ -201,9 +196,8 @@ class TableCommitterSpec extends AnyFunSuite {
     val spark = SparkTestSession.get
     import spark.implicits._
     val t = fresh()
-    t.stage((1 to 7).map(i => (i, s"v$i")).toDF("k", "v")
-      .repartition(3), "r1")
-    t.publish("r1")
+    put(t, (1 to 7).map(i => (i, s"v$i", i % 3)).toDF("k", "v", "bucket"), "r1",
+      Set(0, 1, 2))
     assert(t.currentRecordCount(spark).contains(7L))
     // the count landed in the generation's sidecar...
     val sidecar = java.nio.file.Paths.get(t.currentPath().get)
@@ -214,8 +208,8 @@ class TableCommitterSpec extends AnyFunSuite {
     Files.writeString(sidecar, "99")
     assert(t.currentRecordCount(spark).contains(99L))
     // a new generation has no sidecar: recompute from footers, re-cache
-    t.stage((1 to 4).map(i => (i, s"v$i")).toDF("k", "v"), "r2")
-    t.publish("r2")
+    put(t, (1 to 4).map(i => (i, s"v$i", i % 3)).toDF("k", "v", "bucket"), "r2",
+      Set(0, 1, 2))
     assert(t.currentRecordCount(spark).contains(4L))
     assert(Files.readString(java.nio.file.Paths.get(t.currentPath().get)
       .resolve(TableCommitter.CountSidecar)).trim == "4")
@@ -235,7 +229,7 @@ class TableCommitterSpec extends AnyFunSuite {
     // a table with GENERATIONS but no pin was physically laid out by a
     // pre-pin writer (default mapping): only the default may be adopted
     val old = fresh()
-    old.stage(Seq(Tuple1("x")).toDF("v"), "r1"); old.publish("r1")
+    put(old, Seq(("x", 0)).toDF("v", "bucket"), "r1")
     val e = intercept[IllegalStateException](
       old.pinKeyExprOrVerify("epoch_week({k})", "hash({k})"))
     assert(e.getMessage.contains("built before"))
@@ -260,7 +254,7 @@ class TableCommitterSpec extends AnyFunSuite {
     // generations but no pin: ANY signature is refused — unlike the bucket
     // key there is no knowable default the legacy rows must have had
     val old = fresh()
-    old.stage(Seq(Tuple1("x")).toDF("v"), "r1"); old.publish("r1")
+    put(old, Seq(("x", 0)).toDF("v", "bucket"), "r1")
     val e = intercept[IllegalStateException](
       old.pinSemanticsOrVerify("coref=false,scored=false"))
     assert(e.getMessage.contains("semantics pin"))
