@@ -45,8 +45,7 @@ object ScalingBench {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
-    val cfg = PipelineConfig(numPartitions = cores * 2, saltBuckets = 8)
-    val p = new KgPipeline(cfg)
+    val p = new KgPipeline(PipelineConfig())
     val turns = spark.read.parquet(turnsDir).as[Turn]
     val nTurns = turns.count()
 

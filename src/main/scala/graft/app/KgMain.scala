@@ -54,10 +54,8 @@ import graft.sources.TranscriptGen
   *                              blob shape — proplist/normProp/normObj/
   *                              normMissing/white/blackMap/language/
   *                              uriDescription/..., ConfigParsing.fromJson);
-  *                              env flags below override its scale knobs
-  *   GRAFT_DISTRIBUTED_CANON=1  large-star/small-star CC canonicalization
-  *                              instead of driver union-find (graph-scale
-  *                              catalogs)
+  *                              env flags below override its flags and
+  *                              bucket count
   *   GRAFT_PUBLISH_DOCS=1       also publish the per-(subject, lang) doc table
   *   GRAFT_DETECT_LANGUAGE=1    per-conversation language detection
   *   GRAFT_SCORED_LINKING=1     contextual disambiguation of ambiguous aliases
@@ -130,7 +128,6 @@ object KgMain {
   private[app] def envOverlay(baseCfg: PipelineConfig,
       workDir: String): PipelineConfig =
     baseCfg.copy(workDir = workDir,
-      useDistributedCanon = envFlag("GRAFT_DISTRIBUTED_CANON"),
       publishDocs = envFlag("GRAFT_PUBLISH_DOCS"),
       detectLanguage = envFlag("GRAFT_DETECT_LANGUAGE"),
       scoredLinking = envFlag("GRAFT_SCORED_LINKING"),
@@ -174,7 +171,7 @@ object KgMain {
     import spark.implicits._
 
     // data-shaping keys come from the river-config JSON when given (the
-    // reference's settings blob, S7); scale knobs layer on top via env
+    // reference's settings blob, S7); env flags and the bucket count layer on top
     val baseCfg = sys.env.get("GRAFT_CONFIG_JSON")
       .map(p => graft.config.ConfigParsing.fromJson(
         java.nio.file.Files.readString(java.nio.file.Paths.get(p))))
@@ -399,8 +396,7 @@ object KgMain {
       // mixing the two would double-count on the first overlapping run.
       // corefResolution wires the per-conversation antecedent state table
       // automatically; scoredLinking needs nothing extra; detectLanguage
-      // wires the cumulative language-counter state table (and limits the
-      // published surface to the supports table — see below).
+      // wires the cumulative language-counter state table.
       val tbl = new graft.io.TableCommitter(s"$workDir/tables/stream_supports")
       val state =
         if (cfg.corefResolution)
@@ -413,28 +409,9 @@ object KgMain {
             s"$workDir/tables/stream_lang_state"))
         else None
       // the app publishes the full product surface like batch full does:
-      // edges + nodes propagate additively per micro-batch
-      // (StreamingSync.propagate) — EXCEPT under detectLanguage, where a language flip would need
-      // edge-weight retirement (StreamingSync refuses the combination);
-      // the supports table remains the product, batch sync derives the rest
-      val eTbl =
-        if (cfg.detectLanguage) None
-        else Some(new graft.io.TableCommitter(s"$workDir/tables/stream_edges"))
-      val nTbl =
-        if (cfg.detectLanguage) None
-        else Some(new graft.io.TableCommitter(s"$workDir/tables/stream_nodes"))
-      if (cfg.detectLanguage)
-        // edges/nodes are the mode's implicit default surface: skipping
-        // them must be SAID, not discovered from a missing directory
-        System.err.println("[graft] detectLanguage=1: edge/node propagation " +
-          "skipped on the streaming path (a language flip would need " +
-          "edge-weight retirement); derive them with the batch sync")
-      // publishDocs is an EXPLICIT user request — silently dropping it
-      // would hide the divergence the streaming refusal exists to surface
-      require(!(cfg.publishDocs && cfg.detectLanguage),
-        "publishDocs + detectLanguage is not supported by ingest-stream " +
-          "(docs derive from the edge slice, which detectLanguage cannot " +
-          "propagate); publish docs with the batch sync")
+      // edges + nodes (+ docs) propagate per micro-batch
+      // (StreamingSync.propagate; a language flip retracts and re-emits)
+      val eTbl = new graft.io.TableCommitter(s"$workDir/tables/stream_edges")
       val dTbl =
         if (cfg.publishDocs)
           Some(new graft.io.TableCommitter(s"$workDir/tables/stream_docs"))
@@ -444,13 +421,14 @@ object KgMain {
         catalog, TranscriptGen.markerPreds, cfg, tbl,
         maxFilesPerBatch = sys.env.get("GRAFT_STREAM_MAX_FILES").map(_.toInt),
         corefStateTable = state, langStateTable = langState,
-        edgeTable = eTbl, nodeTable = nTbl, docTable = dTbl)
+        edgeTable = Some(eTbl), docTable = dTbl,
+        nodeTable = Some(new graft.io.TableCommitter(s"$workDir/tables/stream_nodes")))
       val gen = tbl.currentGeneration().getOrElse("<none>")
       // streaming publishes are keyed stream-<ckptId>-<batchId>, not by this
       // app invocation — report the LINEAGE id (what _meta/runs records
       // actually carry), not a minted run_id nothing on disk matches
       val lineage = tbl.currentGeneration("lastBatchCkpt").getOrElse("<none>")
-      val edgesGen = eTbl.flatMap(_.currentGeneration()).getOrElse("<none>")
+      val edgesGen = eTbl.currentGeneration().getOrElse("<none>")
       println(s"""{"lineage":"$lineage","mode":"$mode","supports_gen":"$gen","edges_gen":"$edgesGen","merged_rows":$merged,"last_batch":${tbl.currentGeneration("lastBatch").getOrElse("-1")}}""")
       spark.stop()
       return

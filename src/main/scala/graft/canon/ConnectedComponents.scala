@@ -131,12 +131,4 @@ object ConnectedComponents {
       .distinct()
   }
 
-  /** Component assignment including isolated nodes. */
-  def runWithNodes(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    val comp = run(edges)
-    nodes.select(col("id"))
-      .join(comp, Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-  }
-
 }

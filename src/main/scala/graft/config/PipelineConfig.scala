@@ -2,7 +2,8 @@ package graft.config
 
 /** Pipeline configuration mirroring the reference's river settings surface
   * (every data-shaping key parsed in Indexer.addHarvesterSettings,
-  * Indexer.java:350-463) plus the graft's scale knobs.
+  * Indexer.java:350-463) plus the graft's physical layout (bucket count and
+  * key expression of the published tables) and extraction-semantics flags.
   *
   * Driver-side plain Scala — no Spark types; the reference persists the same
   * shape as a JSON blob via JPA (River.java:14-47).
@@ -52,9 +53,6 @@ final case class PipelineConfig(
     includeResourceURI: Boolean = false,
     // sync (Harvester.java:1199-1453)
     syncOldData: Boolean = false,
-    // graft scale knobs
-    saltBuckets: Int = 8,
-    numPartitions: Int = 32,
     // physical bucket count of the published support/edge/node tables
     // (partitionBy(bucket)); a sync touching k of B buckets rewrites only k
     // bucket directories. At 100 TB size B so one bucket ~ tens of GB.
@@ -74,10 +72,6 @@ final case class PipelineConfig(
     // rows would be replaced in the wrong buckets.
     bucketKeyExpr: String = "hash({k})",
     workDir: String = "/tmp/graft-work",
-    // canonicalization strategy: driver union-find for broadcast-sized
-    // catalogs (default); distributed large-star/small-star CC for
-    // graph-scale catalogs
-    useDistributedCanon: Boolean = false,
     // scored entity linking: an alias naming SEVERAL entities is resolved
     // per mention by TF-IDF/Jaccard context similarity (EntityLinker)
     // instead of being collapsed by alias-sharing canonicalization or
@@ -104,9 +98,6 @@ final case class PipelineConfig(
     // obj-side semi-join scans the edge table along a non-bucketed column —
     // opt in when label freshness is worth one extra edge-table pass per sync
     refreshReferencingDocs: Boolean = false,
-    // integer-coded support shuffle (identity-normalization fast path):
-    // exchanges (conv_id, 3 ints) instead of four URI strings
-    encodedShuffle: Boolean = true,
     // the river config's SPARQL query texts (`query[]` in the settings
     // blob) — run against the published graph by `KgMain query`
     queries: Seq[String] = Seq.empty,

@@ -53,11 +53,8 @@ final class IncrementalDedupIndex(workDir: String, buckets: Int = 64) {
   private def docBucket = PipelineConfig.bucketCol(
     PipelineConfig.DefaultBucketKeyExpr, "doc_id", buckets)
 
-  private def pin(t: TableCommitter): Unit = {
-    t.pinOrVerify("bucket_count", buckets.toString)
-    t.pinKeyExprOrVerify(PipelineConfig.DefaultBucketKeyExpr,
-      PipelineConfig.DefaultBucketKeyExpr)
-  }
+  private def pin(t: TableCommitter): Unit =
+    t.pinBucketMapping(buckets, PipelineConfig.DefaultBucketKeyExpr)
 
   /** (doc_id, fp) for a document frame — THE single fingerprint derivation
     * both tables and all batch queries share. */

@@ -398,31 +398,33 @@ final class TableCommitter(rootDir: String) {
 
   /** Value of a table pin if any writer has pinned it — lets callers
     * distinguish "never pinned" (adoption about to happen) from "pinned to
-    * X" before calling [[pinOrVerify]]; see [[pinKeyExprOrVerify]]. */
+    * X" before calling [[pinOrVerify]]; see [[pinBucketMapping]]. */
   def pinned(key: String): Option[String] = {
     val f = meta.resolve("pins").resolve(key)
     if (Files.exists(f)) Some(Files.readString(f).trim) else None
   }
 
-  /** Pin the bucket-key expression with an ADOPTION guard: a table built
-    * BEFORE the expression was pinnable has generations but no pin — its
-    * physical layout is the default hash mapping, so the only expression a
-    * first pin may adopt onto it is `default`. Blessing any other mapping
-    * onto an existing layout would make the next incremental publish
-    * replace rows in the wrong buckets and hard-link stale duplicates
-    * forward, silently. */
-  def pinKeyExprOrVerify(expr: String, default: String): Unit = {
+  /** Pin the table's key-to-bucket mapping — the bucket count and the
+    * bucket-key expression — or verify it against the pins. The key
+    * expression pin carries an ADOPTION guard: a table built BEFORE the
+    * expression was pinnable has generations but no pin — its physical
+    * layout is the default hash mapping, so the only expression a first pin
+    * may adopt onto it is the default. Blessing any other mapping onto an
+    * existing layout would make the next incremental publish replace rows
+    * in the wrong buckets and hard-link stale duplicates forward, silently. */
+  def pinBucketMapping(buckets: Int, keyExpr: String): Unit = {
+    pinOrVerify("bucket_count", buckets.toString)
     if (currentGeneration().isDefined && pinned("bucket_key_expr").isEmpty &&
-        expr != default)
+        keyExpr != graft.config.PipelineConfig.DefaultBucketKeyExpr)
       throw new IllegalStateException(
-        s"bucketKeyExpr=$expr on a table built before the key expression " +
+        s"bucketKeyExpr=$keyExpr on a table built before the key expression " +
           "was pinned (its layout is the default hash mapping) — changing " +
           "the mapping requires a fresh workDir (or a full rebuild into one)")
-    pinOrVerify("bucket_key_expr", expr)
+    pinOrVerify("bucket_key_expr", keyExpr)
   }
 
   /** Pin the row-semantics signature with the same ADOPTION guard as
-    * [[pinKeyExprOrVerify]]: a table that has generations but no semantics
+    * [[pinBucketMapping]]: a table that has generations but no semantics
     * pin predates the pin, and what its rows MEAN is unknowable from here —
     * blessing the current flags onto it would let later writes additively
     * merge rows of a second semantics into it with no error, the exact

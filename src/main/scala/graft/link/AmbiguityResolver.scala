@@ -19,12 +19,13 @@ import graft.schema.{CatalogEntry, Turn}
   * remains only for mentions whose turn text yields no scoring signal, so
   * no triple is ever dropped.
   *
-  * Shared by the batch pipeline (KgPipeline.computeSupports) and the
-  * streaming ingest (StreamingSync): scoring is strictly per-(conv, turn,
-  * alias) over the turn's OWN tokens, so resolving inside a micro-batch is
-  * content-identical to resolving over the whole corpus — a turn is never
-  * split across batches. (Cross-turn state like coref does NOT have this
-  * property, which is why coref stays batch-only.)
+  * Called by the one supports chain (KgPipeline.supports) that both the
+  * batch pipeline and the streaming ingest run: scoring is strictly
+  * per-(conv, turn, alias) over the turn's OWN tokens, so resolving inside
+  * a micro-batch is content-identical to resolving over the whole corpus —
+  * a turn is never split across batches. (Cross-turn state like coref does
+  * NOT have this property, which is why the stream carries coref state
+  * across batches explicitly — StreamingSync.corefStep.)
   *
   * Plan shape: the linker's decision table is ambiguous-mention-sized; the
   * two re-mapping joins touch only the sentinel-bearing extraction rows

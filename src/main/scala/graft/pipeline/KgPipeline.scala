@@ -6,21 +6,21 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.canon.ConnectedComponents
 import graft.config.PipelineConfig
-import graft.extract.Extractor
+import graft.extract.{CorefResolver, Extractor}
 import graft.io.{CheckpointStore, Quarantine, SparkIo, TableCommitter}
 import graft.schema.{CatalogEntry, Turn}
 
-/** End-to-end KG construction: read -> stable order + salted partitioning ->
-  * extract -> normalize -> canonicalize (CC) -> materialize node/edge tables
+/** End-to-end KG construction: read -> extract at canonical (CC)
+  * granularity -> link/coref -> normalize -> materialize node/edge tables
   * with atomic publish; full and incremental-sync modes; stage-checkpointed
   * for resume-from-failure.
   *
   * Scale design (north rule):
-  *  - turns are repartitioned on (conv_id, salt(turn_idx)) so a hot
-  *    conversation spreads over `saltBuckets` tasks instead of one straggler;
-  *    extraction is per-turn, so no conv-level state needs co-location.
+  *  - extraction is per-turn, so it runs on the input splits with no
+  *    exchange; the support aggregation shuffles by its own group keys with
+  *    map-side partial aggregation, which also absorbs hot-conversation skew
+  *    (a hot conversation's turns are already spread across input splits).
   *  - the support table is keyed per conversation, so incremental sync is
   *    dynamic-partition-overwrite of only the changed conversations —
   *    recomputing a conversation is idempotent and replaces exactly its rows.
@@ -143,16 +143,6 @@ final class KgPipeline(cfg: PipelineConfig) {
     }
   }
 
-  /** Stable ordering + salted repartition (input contract: turn order must be
-    * recovered from (conv_id, turn_idx), never from partition order). */
-  def prepare(turns: Dataset[Turn]): Dataset[Turn] = {
-    import turns.sparkSession.implicits._
-    turns.repartition(cfg.numPartitions,
-      col("conv_id"), pmod(hash(col("turn_idx")), lit(cfg.saltBuckets)))
-      .sortWithinPartitions("conv_id", "turn_idx")
-      .as[Turn]
-  }
-
   /** K2: structurally-bad rows can never succeed on retry — divert them to
     * the quarantine table with a reason instead of failing the job.
     *
@@ -214,128 +204,36 @@ final class KgPipeline(cfg: PipelineConfig) {
     }
   }
 
-  /** Per-conversation triple supports: (conv_id, subj, pred, obj, lang,
-    * weight) — the unit of idempotent incremental replacement. */
+  /** Per-conversation triple supports under this pipeline's config — see
+    * [[KgPipeline.supports]]. */
   def computeSupports(spark: SparkSession, turns: Dataset[Turn],
-                              catalog: Seq[CatalogEntry],
-                              markers: Map[String, String]): DataFrame = {
-    import spark.implicits._
-    val identityCfg = cfg.proplist.isEmpty && cfg.normProp.isEmpty &&
-      cfg.normObj.isEmpty && cfg.whiteMap.isEmpty && cfg.blackMap.isEmpty
-    if (cfg.encodedShuffle && identityCfg && !cfg.useDistributedCanon &&
-        !cfg.detectLanguage && !cfg.scoredLinking && !cfg.corefResolution)
-      return computeSupportsEncoded(spark, turns, catalog, markers)
-    // NOTE deliberately NOT prepare()d: extraction is per-turn, so it runs on
-    // the input splits with no exchange at all — a full-input shuffle before
-    // a narrow map stage is pure cost at 100 TB. The support aggregation
-    // below shuffles by its own group keys with map-side partial aggregation,
-    // which also absorbs hot-conversation skew (a hot conv's turns are
-    // already spread across input splits). prepare() exists for operators
-    // that genuinely need ordered per-conversation windows.
-    // canonicalization composes into the kernel's broadcast dictionary
-    // (code/string resolution at canonical granularity — no joins needed;
-    // the CC result is catalog-sized by definition, so collecting the
-    // distributed variant back to a broadcast map is bounded).
-    // scoredLinking flips the shared-alias semantics: a surface form naming
-    // several entities is AMBIGUITY to resolve per mention by context (the
-    // TF-IDF/Jaccard linker), not identity to collapse — so canon is the
-    // identity map and ambiguous aliases route through the linker below.
-    val canon: Map[String, String] =
-      if (cfg.scoredLinking) Map.empty
-      else if (cfg.useDistributedCanon)
-        canonicalMapDistributed(spark,
-          catalog.toDF("entity_id", "alias", "pref_label", "rank"))
-          .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      else graft.sources.TranscriptGen.components(catalog)
-    val raw0 = Extractor.extract(turns, catalog, markers,
-      emitContext = cfg.corefResolution, canon = canon,
-      sentinelAmbiguous = cfg.scoredLinking).toDF()
-    // scored entity linking, shared with the streaming ingest
-    val raw1 =
-      if (cfg.scoredLinking) graft.link.AmbiguityResolver.resolve(raw0, turns, catalog)
-      else raw0
-    // coref runs AFTER scored linking so the cross-turn antecedent is the
-    // contextually-resolved entity, not an ambiguity sentinel
-    val raw =
-      if (cfg.corefResolution) graft.extract.CorefResolver.resolve(raw1)
-      else raw1
-    val normalized = Extractor.normalize(raw, cfg)
+                      catalog: Seq[CatalogEntry],
+                      markers: Map[String, String]): DataFrame =
+    KgPipeline.supports(cfg, turns, catalog, markers)
 
-    val grouped = normalized
-      .groupBy("conv_id", "subj", "pred", "obj")
-      .agg(count(lit(1)).as("weight"))
-    // detectLanguage cost note: one extra narrow aggregation scan of `turns`
-    // plus a post-aggregation join of the (already conv-grouped, far smaller
-    // than raw turns) supports against the per-conversation langs. Default
-    // off; the zero-extra-scan path is fusing the hit counts into the
-    // extraction kernel — do that before enabling it at the 100 TB point.
-    val stamped =
-      if (!cfg.detectLanguage) grouped.withColumn("lang", lit(cfg.language))
-      else grouped
-        .join(convLanguages(turns), Seq("conv_id"), "left")
-        .withColumn("lang", coalesce(col("lang"), lit(cfg.language)))
-    stamped.select("conv_id", "subj", "pred", "obj", "lang", "weight")
-  }
-
-  /** Conversation-level language detection: argmax function-word hit ratio
-    * over `cfg.langProfiles` (ties break toward the lexicographically later
-    * language — deterministic), falling back to the configured default when
-    * no profile hits. Conversation granularity (not per-turn) because the
-    * doc split is per (subject, lang) and a conversation is the subject
-    * unit; a per-literal tag source (RDF ingestion) bypasses this entirely
-    * via Triple.objLang. */
-  private def convLanguages(turns: Dataset[Turn]): DataFrame = {
-    // shared with the streaming ingest (LangDetect): the counts row is
-    // associative over turns, which is what lets StreamingSync accumulate
-    // the same detection across micro-batches bit-identically
-    val profs = graft.text.LangDetect.sortedProfiles(cfg.langProfiles)
-    require(profs.nonEmpty, "detectLanguage=true requires a non-empty langProfiles")
-    graft.text.LangDetect.pick(
-      graft.text.LangDetect.counts(turns.toDF(), profs), profs, cfg.language)
-  }
-
-  /** Identity-config fast path: dictionary-coded extraction + integer-key
-    * aggregation, decoded after the exchange — same rows as the string path
-    * (asserted by KgPipelineSpec), a fraction of the shuffle bytes. */
-  private def computeSupportsEncoded(spark: SparkSession, turns: Dataset[Turn],
-                                     catalog: Seq[CatalogEntry],
-                                     markers: Map[String, String]): DataFrame = {
-    val canon = graft.sources.TranscriptGen.components(catalog)
-    val (enc, ents, preds) =
-      Extractor.extractEncoded(turns, catalog, markers, canon)
-    val entLit = typedlit(ents.toSeq)
-    val predLit = typedlit(preds.toSeq)
-    enc.groupBy("conv_id", "subjC", "predC", "objC")
-      .agg(count(lit(1)).as("weight"))
-      .select(
-        col("conv_id"),
-        when(col("subjC") === -1, concat(lit("urn:conv:"), col("conv_id")))
-          .otherwise(element_at(entLit, col("subjC") + 1)).as("subj"),
-        element_at(predLit, col("predC") + 1).as("pred"),
-        element_at(entLit, col("objC") + 1).as("obj"),
-        lit(cfg.language).as("lang"),
-        col("weight"))
-  }
-
-  /** Entity -> canonical id over alias-sharing edges (multi-hop
-    * generalization of normalizeObj, ESNormalizer.java:214-222), for
-    * catalogs too large to hold on the driver: alias-sharing edges +
-    * large-star/small-star CC (graft.canon.ConnectedComponents).
-    *
-    * A broadcast-sized catalog (one that ships to every extraction task)
-    * is better served by driver-side union-find in O(|catalog|)
-    * (`TranscriptGen.components`): running the distributed CC there adds
-    * seconds of fixed job-scheduling overhead per run for a graph of a few
-    * thousand nodes and flattens the N->4N scaling curve. */
-  def canonicalMapDistributed(spark: SparkSession, catalog: DataFrame): DataFrame = {
-    val perAlias = catalog.select("alias", "entity_id").distinct()
-    val aliasMin = perAlias.groupBy("alias").agg(min(col("entity_id")).as("root"))
-    val edges = perAlias.join(aliasMin, "alias")
-      .filter(col("entity_id") =!= col("root"))
-      .select(col("entity_id").as("src"), col("root").as("dst"))
-    val nodes = perAlias.select(col("entity_id").as("id")).distinct()
-    ConnectedComponents.runWithNodes(nodes, edges)
-      .select(col("id"), col("component"))
+  /** The supports stage of a full run or a sync: the quarantine split and
+    * the watermark observation ride the stage write (fire() runs in
+    * afterWrite, when the write — and thus the observation — has completed).
+    * A resumed run replays the checkpoint's own watermark: recomputing it
+    * from the current source would advance past turns that arrived between
+    * the crash and the retry without ever extracting them; the live-source
+    * fallback is only for checkpoints that predate the sidecar.
+    * @return (supports, watermark) */
+  private def supportsStage(spark: SparkSession, runId: String, name: String,
+                            turns: Dataset[Turn], catalog: Seq[CatalogEntry],
+                            markers: Map[String, String])
+      : (DataFrame, Option[Timestamp]) = {
+    var fire: () => Option[Timestamp] = () => None
+    val supports = stage(spark, runId, name,
+      afterWrite = tmp => writeWmSidecar(tmp, fire())) {
+      val (good, f) = quarantined(spark, turns, runId)
+      fire = f
+      computeSupports(spark, good, catalog, markers)
+    }
+    val wm = readWmSidecar(runId, name).getOrElse(maxEventTime(turns))
+    checkpoints.writeLineageFromFooters(spark, runId, name,
+      s"$stagesRoot/$runId/$name")
+    (supports, wm)
   }
 
   final case class RunResult(runId: String, edgesGen: String, nodesGen: String,
@@ -369,15 +267,7 @@ final class KgPipeline(cfg: PipelineConfig) {
     * workDir's tables must pass it — KgMain's ingest-nt included. */
   def pinOrVerifyBucketCount(): Unit =
     Seq(supportTable, edgeTable, nodeTable, docTable)
-      .foreach { t =>
-        t.pinOrVerify("bucket_count", B.toString)
-        // the key EXPRESSION is part of the mapping contract exactly like
-        // the count: a writer bucketing the same keys through a different
-        // expression would replace rows in the wrong buckets. Adoption onto
-        // a pre-pin table is guarded (TableCommitter.pinKeyExprOrVerify).
-        t.pinKeyExprOrVerify(cfg.bucketKeyExpr,
-          graft.config.PipelineConfig.DefaultBucketKeyExpr)
-      }
+      .foreach(_.pinBucketMapping(B, cfg.bucketKeyExpr))
 
   /** Extraction-semantics pin: the flags that change what a support/edge
     * ROW means (coref resolution, scored linking, language detection, the
@@ -417,7 +307,7 @@ final class KgPipeline(cfg: PipelineConfig) {
       // unknowable (the flags predate the pin), so adopting the CURRENT
       // flags could bless a different semantics onto them and let this
       // sync merge mixed-meaning slices — the exact failure the pin
-      // exists to prevent. Same adoption guard as pinKeyExprOrVerify.
+      // exists to prevent. Same adoption guard as pinBucketMapping.
       throw new IllegalStateException(
         "workDir has published tables but no semantics pin (built before " +
           "row semantics were pinned) — run a FULL rebuild to establish it")
@@ -446,21 +336,8 @@ final class KgPipeline(cfg: PipelineConfig) {
               runId: String): RunResult = {
     pinOrVerifyBucketCount()
     pinSemantics() // full rebuilds every row: it defines the semantics
-    // the quarantine split + watermark observation ride the stage write;
-    // fire() runs in afterWrite, when the write (and thus the observation)
-    // has completed
-    var fire: () => Option[Timestamp] = () => None
-    val supports = stage(spark, runId, "supports",
-      afterWrite = tmp => writeWmSidecar(tmp, fire())) {
-      val (good, f) = quarantined(spark, turns, runId)
-      fire = f
-      computeSupports(spark, good, catalog, markers)
-    }
-    // resumed run replays the checkpoint's own watermark; the live-source
-    // fallback is only for checkpoints that predate the sidecar
-    val wm = readWmSidecar(runId, "supports").getOrElse(maxEventTime(turns))
-    checkpoints.writeLineageFromFooters(spark, runId, "supports",
-      s"$stagesRoot/$runId/supports")
+    val (supports, wm) =
+      supportsStage(spark, runId, "supports", turns, catalog, markers)
 
     supportTable.stagePartitioned(
       supports.withColumn("bucket", convBucket(col("conv_id"))), runId)
@@ -593,20 +470,8 @@ final class KgPipeline(cfg: PipelineConfig) {
     val changedTurns = stage(spark, runId, "changed_turns") {
       turns.join(changedConvs, Seq("conv_id"), "left_semi").toDF()
     }.as[Turn]
-    var fire: () => Option[Timestamp] = () => None
-    val newSupports = stage(spark, runId, "sync_supports",
-      afterWrite = tmp => writeWmSidecar(tmp, fire())) {
-      val (good, f) = quarantined(spark, changedTurns, runId)
-      fire = f
-      computeSupports(spark, good, catalog, markers)
-    }
-    // resumed run replays the checkpoint's own watermark — recomputing from
-    // the CURRENT source would advance past turns that arrived between the
-    // crash and the retry without ever extracting them
-    val newWm = readWmSidecar(runId, "sync_supports")
-      .getOrElse(maxEventTime(changedTurns))
-    checkpoints.writeLineageFromFooters(spark, runId, "sync_supports",
-      s"$stagesRoot/$runId/sync_supports")
+    val (newSupports, newWm) = supportsStage(spark, runId, "sync_supports",
+      changedTurns, catalog, markers)
 
     curOpt match {
       case None =>
@@ -739,5 +604,103 @@ final class KgPipeline(cfg: PipelineConfig) {
       .getOrElse(new Timestamp(0L))
     checkpoints.writeWatermark(spark, cfg.pipelineId, runId, wm, "success")
     RunResult(runId, edgesGen, nodesGen, nTriples)
+  }
+}
+
+object KgPipeline {
+
+  /** Per-conversation triple supports: (conv_id, subj, pred, obj, lang,
+    * weight) — the unit of idempotent incremental replacement. THE
+    * statement-level chain (Harvester.java:1811-1877): canonicalize ->
+    * extract -> scored linking -> coref -> normalize -> count -> stamp the
+    * language. The batch pipeline and the streaming ingest both call it; the
+    * stream passes its stateful `coref` (cross-batch antecedent state) and
+    * its cumulative `langs` (cross-batch language counters), the batch path
+    * the defaults, which see the whole of `turns`.
+    *
+    * Extraction runs on the input splits with no exchange; the count
+    * shuffles by its own group keys with map-side partial aggregation. */
+  def supports(cfg: PipelineConfig, turns: Dataset[Turn],
+               catalog: Seq[CatalogEntry], markers: Map[String, String],
+               coref: DataFrame => DataFrame = CorefResolver.resolve,
+               langs: Option[DataFrame] = None): DataFrame = {
+    // scoredLinking flips the shared-alias semantics: a surface form naming
+    // several entities is AMBIGUITY to resolve per mention by context (the
+    // TF-IDF/Jaccard linker), not identity to collapse — so canon is the
+    // identity map and ambiguous aliases route through the linker below.
+    // Otherwise mentions emit at canonical-cluster granularity (driver
+    // union-find over the catalog, O(|catalog|) like the kernel's trie), and
+    // canonicalization composes into the kernel's broadcast dictionary.
+    val canon: Map[String, String] =
+      if (cfg.scoredLinking) Map.empty
+      else graft.sources.TranscriptGen.components(catalog)
+    val identityCfg = cfg.proplist.isEmpty && cfg.normProp.isEmpty &&
+      cfg.normObj.isEmpty && cfg.whiteMap.isEmpty && cfg.blackMap.isEmpty
+    if (identityCfg && !cfg.detectLanguage && !cfg.scoredLinking &&
+        !cfg.corefResolution)
+      return supportsEncoded(cfg, turns, catalog, markers, canon)
+    val raw0 = Extractor.extract(turns, catalog, markers,
+      emitContext = cfg.corefResolution, canon = canon,
+      sentinelAmbiguous = cfg.scoredLinking).toDF()
+    val raw1 =
+      if (cfg.scoredLinking) graft.link.AmbiguityResolver.resolve(raw0, turns, catalog)
+      else raw0
+    // coref runs AFTER scored linking so the cross-turn antecedent is the
+    // contextually-resolved entity, not an ambiguity sentinel
+    val raw = if (cfg.corefResolution) coref(raw1) else raw1
+    val grouped = Extractor.normalize(raw, cfg)
+      .groupBy("conv_id", "subj", "pred", "obj")
+      .agg(count(lit(1)).as("weight"))
+    // detectLanguage cost note: one extra narrow aggregation scan of `turns`
+    // plus a post-aggregation join of the (already conv-grouped, far smaller
+    // than raw turns) supports against the per-conversation langs. Default
+    // off; the zero-extra-scan path is fusing the hit counts into the
+    // extraction kernel — do that before enabling it at the 100 TB point.
+    val stamped =
+      if (!cfg.detectLanguage) grouped.withColumn("lang", lit(cfg.language))
+      else grouped
+        .join(langs.getOrElse(convLanguages(cfg, turns)), Seq("conv_id"), "left")
+        .withColumn("lang", coalesce(col("lang"), lit(cfg.language)))
+    stamped.select("conv_id", "subj", "pred", "obj", "lang", "weight")
+  }
+
+  /** Conversation-level language detection: argmax function-word hit ratio
+    * over `cfg.langProfiles` (ties break toward the lexicographically later
+    * language — deterministic), falling back to the configured default when
+    * no profile hits. Conversation granularity (not per-turn) because the
+    * doc split is per (subject, lang) and a conversation is the subject
+    * unit; a per-literal tag source (RDF ingestion) bypasses this entirely
+    * via Triple.objLang. */
+  private def convLanguages(cfg: PipelineConfig, turns: Dataset[Turn]): DataFrame = {
+    // shared with the streaming ingest (LangDetect): the counts row is
+    // associative over turns, which is what lets StreamingSync accumulate
+    // the same detection across micro-batches bit-identically
+    val profs = graft.text.LangDetect.sortedProfiles(cfg.langProfiles)
+    require(profs.nonEmpty, "detectLanguage=true requires a non-empty langProfiles")
+    graft.text.LangDetect.pick(
+      graft.text.LangDetect.counts(turns.toDF(), profs), profs, cfg.language)
+  }
+
+  /** Identity-config fast path: dictionary-coded extraction + integer-key
+    * aggregation, decoded after the exchange — same rows as the string path
+    * (asserted by KgPipelineSpec), a fraction of the shuffle bytes. */
+  private def supportsEncoded(cfg: PipelineConfig, turns: Dataset[Turn],
+                              catalog: Seq[CatalogEntry],
+                              markers: Map[String, String],
+                              canon: Map[String, String]): DataFrame = {
+    val (enc, ents, preds) =
+      Extractor.extractEncoded(turns, catalog, markers, canon)
+    val entLit = typedlit(ents.toSeq)
+    val predLit = typedlit(preds.toSeq)
+    enc.groupBy("conv_id", "subjC", "predC", "objC")
+      .agg(count(lit(1)).as("weight"))
+      .select(
+        col("conv_id"),
+        when(col("subjC") === -1, concat(lit("urn:conv:"), col("conv_id")))
+          .otherwise(element_at(entLit, col("subjC") + 1)).as("subj"),
+        element_at(predLit, col("predC") + 1).as("pred"),
+        element_at(entLit, col("objC") + 1).as("obj"),
+        lit(cfg.language).as("lang"),
+        col("weight"))
   }
 }

@@ -161,7 +161,7 @@ object KgQueries {
     },
 
     // ---- cross-turn coreference through the REAL kernel + resolver
-    // (Extractor.extract(emitContext=true) -> CorefResolver.resolve): a
+    // (Extractor.extract with emitContext=true -> CorefResolver.resolve): a
     // marker with a right-hand mention but nothing to its left takes the
     // most recent mention from EARLIER turns of the conversation (north
     // rule: cross-turn context under stable (conv_id, turn_idx) ordering).

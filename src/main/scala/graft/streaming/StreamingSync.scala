@@ -5,19 +5,20 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.config.PipelineConfig
-import graft.extract.Extractor
+import graft.extract.{CorefResolver, Extractor}
 import graft.io.TableCommitter
-import graft.pipeline.DerivedTables
+import graft.pipeline.{DerivedTables, KgPipeline}
 import graft.schema.{CatalogEntry, Turn}
 
 /** Structured-Streaming front-end for incremental ingestion: the reference's
   * cron-driven timestamp-filtered batch sync (SURVEY.md §2.8) upgraded to
   * `readStream` + `Trigger.AvailableNow` — source offsets replace the
-  * hand-rolled `last_update` watermark, and each micro-batch MERGEs extracted
-  * supports through the same committer as the batch path (exactly-once via
-  * checkpointed offsets + idempotent key merge). Edges, nodes and docs
-  * follow each batch's support delta through the batch sync's own
-  * propagation rule ([[graft.pipeline.DerivedTables]]). */
+  * hand-rolled `last_update` watermark, and each micro-batch MERGEs the
+  * supports of the batch path's own chain
+  * ([[graft.pipeline.KgPipeline.supports]]) through the same committer
+  * (exactly-once via checkpointed offsets + idempotent key merge). Edges,
+  * nodes and docs follow each batch's support delta through the batch
+  * sync's own propagation rule ([[graft.pipeline.DerivedTables]]). */
 object StreamingSync {
 
   /** Ingest every available file once, extracting and merging per batch.
@@ -137,16 +138,12 @@ object StreamingSync {
         "this table was published without the bucketed layout (no 'bucket' " +
           "partition column): rebuild it from a fresh checkpoint with the " +
           "bucketed streaming ingest before resuming")
-    // bucket count pinned in the table's own metadata: the key-to-bucket
-    // mapping is baked into every published generation, and every writer
-    // (including a later run with a different config) must agree on it
+    // bucket mapping (count + key expression) pinned in the table's own
+    // metadata: it is baked into every published generation, and every
+    // writer (including a later run with a different config) must agree on
+    // it; adoption onto a pre-pin table is guarded
     val B = cfg.syncBuckets
-    table.pinOrVerify("bucket_count", B.toString)
-    // key expression pinned too — this writer must bucket with the exact
-    // mapping the table was built with (see PipelineConfig.bucketKeyExpr);
-    // adoption onto a pre-pin table is guarded
-    table.pinKeyExprOrVerify(cfg.bucketKeyExpr,
-      PipelineConfig.DefaultBucketKeyExpr)
+    table.pinBucketMapping(B, cfg.bucketKeyExpr)
     // row SEMANTICS are a LINEAGE property, not a per-run choice: batches
     // merged under different extraction semantics (coref resolution, scored
     // vs rank-collapsed linking, the stamped language) disagree on row
@@ -158,7 +155,7 @@ object StreamingSync {
     // ADOPTION-GUARDED: a pre-pin table with published generations refuses
     // rather than adopting the current flags — its rows' semantics are
     // unknowable, and adoption would bless a possibly-different signature
-    // onto them (the upgrade hole mirror-imaged from pinKeyExprOrVerify)
+    // onto them (the upgrade hole mirror-imaged from pinBucketMapping)
     table.pinSemanticsOrVerify(cfg.semanticsSig)
     // legacy pin, still written for forward compatibility of the metadata
     // layout; NOTE the adoption guard above supersedes it for published
@@ -166,9 +163,7 @@ object StreamingSync {
     // never acts as their compatibility path — a rebuild is required)
     table.pinOrVerify("coref_resolution", cfg.corefResolution.toString)
     corefStateTable.foreach { st =>
-      st.pinOrVerify("bucket_count", B.toString)
-      st.pinKeyExprOrVerify(cfg.bucketKeyExpr,
-        PipelineConfig.DefaultBucketKeyExpr)
+      st.pinBucketMapping(B, cfg.bucketKeyExpr)
       // state lost / wrong table: supports built by committed prior batches
       // of a coref lineage MUST have their antecedent state alongside — an
       // empty state table here would silently drop every cross-batch
@@ -184,9 +179,7 @@ object StreamingSync {
             "checkpoint")
     }
     langStateTable.foreach { st =>
-      st.pinOrVerify("bucket_count", B.toString)
-      st.pinKeyExprOrVerify(cfg.bucketKeyExpr,
-        PipelineConfig.DefaultBucketKeyExpr)
+      st.pinBucketMapping(B, cfg.bucketKeyExpr)
       // counter columns are POSITIONAL over the sorted profile keys: a
       // profile edit mid-lineage would silently re-index every counter
       st.pinOrVerify("lang_profiles",
@@ -217,9 +210,7 @@ object StreamingSync {
         "(it widens every micro-batch to an O(table) edge scan); run the " +
         "batch sync for label-freshness refreshes")
     Seq(edgeTable, nodeTable, docTable).flatten.foreach { t =>
-      t.pinOrVerify("bucket_count", B.toString)
-      t.pinKeyExprOrVerify(cfg.bucketKeyExpr,
-        PipelineConfig.DefaultBucketKeyExpr)
+      t.pinBucketMapping(B, cfg.bucketKeyExpr)
       // a lineage with committed batches whose derived tables are empty was
       // ingested WITHOUT propagation — late enabling would silently miss
       // every earlier batch's edges
@@ -236,20 +227,6 @@ object StreamingSync {
     val derived = for (e <- edgeTable; n <- nodeTable)
       yield new DerivedTables(cfg, e, n, docTable)
 
-    // canonicalization parity with the batch path (KgPipeline
-    // .computeSupports): under scoredLinking a shared alias is ambiguity to
-    // resolve per mention (identity canon); otherwise mentions emit at
-    // canonical-cluster granularity via the alias-connected components of
-    // the catalog. The catalog is already driver-resident here, so the CC
-    // map is computed ONCE up front and rides the extraction kernel's
-    // broadcast dictionary into every micro-batch — a stream ingested
-    // without it would key the same logical mention by raw entity id while
-    // the batch sync keys it canonically: two divergent tables from one
-    // corpus.
-    val canon: Map[String, String] =
-      if (cfg.scoredLinking) Map.empty
-      else graft.sources.TranscriptGen.components(catalog)
-
     var merged = 0L
     val q = turns.writeStream
       .trigger(Trigger.AvailableNow())
@@ -259,6 +236,10 @@ object StreamingSync {
           table.currentGeneration("lastBatch").exists(_.toLong >= batchId)
         if (!replayed) {
           val s = batch.sparkSession
+          // runId scoped by lineage id: publish idempotence records must
+          // never collide across checkpoint lineages (a fresh lineage's
+          // batch 0 is a different logical batch than an old lineage's)
+          val runId = s"stream-$ckptId-$batchId"
           // K2 parity with the batch sync (KgPipeline.quarantined):
           // structurally-bad rows divert to the runId-scoped quarantine
           // table instead of flowing into the additive merge. Overwrite +
@@ -269,55 +250,27 @@ object StreamingSync {
               val (g, bad) = graft.io.Quarantine.split(
                 batch.toDF(), graft.io.Quarantine.turnChecks)
               bad.write.mode("overwrite").parquet(
-                s"${cfg.workDir}/quarantine/run_id=stream-$ckptId-$batchId")
+                s"${cfg.workDir}/quarantine/run_id=$runId")
               g.as[Turn]
             }
-          // the observation rides the batch materialization and counts THIS
-          // batch's extracted support rows (pre-merge), not the table size
-          val obs = new org.apache.spark.sql.Observation(s"ingest-$batchId")
-          // under scoredLinking, extraction emits ambiguity sentinels and
-          // the shared resolver re-maps them from the batch's own turns —
-          // the same code path as the batch pipeline
-          val extracted0 = Extractor.extract(good, catalog, markers,
-            emitContext = cfg.corefResolution, canon = canon,
-            sentinelAmbiguous = cfg.scoredLinking).toDF()
-          val linked =
-            if (cfg.scoredLinking)
-              graft.link.AmbiguityResolver.resolve(extracted0, good, catalog)
-            else extracted0
-          // coref AFTER scored linking, exactly like the batch pipeline:
-          // the cross-turn antecedent is the contextually-resolved entity,
-          // never an ambiguity sentinel
-          val (resolved, publishCorefState) =
+          // cross-batch state: the coref antecedents (see corefStep) and the
+          // cumulative language counters (see langStep)
+          val (coref, publishCorefState) =
             if (cfg.corefResolution)
-              corefStep(good, linked, corefStateTable.get, bucketOf,
-                s"stream-$ckptId-$batchId")
-            else (linked, () => ())
-          // config-driven normalization (P1 proplist / A4 normProp / A3
-          // normObj / P2 value maps) — same stage order as the batch path:
-          // extract -> scored linking -> coref -> normalize. A river config
-          // honored by batch sync but ignored here would let blacklisted
-          // predicates flow into the stream tables.
-          val extracted = Extractor.normalize(resolved, cfg)
-          // cumulative language detection BEFORE stamping (cross-batch
-          // state; see langStep)
+              corefStep(good, corefStateTable.get, bucketOf, runId)
+            else (CorefResolver.resolve _, () => ())
           val langState =
             if (cfg.detectLanguage)
-              Some(langStep(good, langStateTable.get, cfg, bucketOf,
-                s"stream-$ckptId-$batchId"))
+              Some(langStep(good, langStateTable.get, cfg, bucketOf, runId))
             else None
-          val grouped = extracted
-            .groupBy("conv_id", "subj", "pred", "obj")
-            .agg(count(lit(1)).as("weight"))
-          val stampedLang = langState match {
-            case Some((langNow, _, _, _)) =>
-              // batch-conv-sized broadcastable join; pick() defaulted every
-              // conversation, the coalesce only guards join-miss corners
-              grouped.join(langNow, Seq("conv_id"), "left")
-                .withColumn("lang", coalesce(col("lang"), lit(cfg.language)))
-            case None => grouped.withColumn("lang", lit(cfg.language))
-          }
-          val supports = stampedLang
+          // the batch pipeline's own supports chain (canon, extraction,
+          // scored linking, coref, normalization, language stamp) over this
+          // batch, with the stream's stateful coref and cumulative languages.
+          // The observation rides the batch materialization and counts THIS
+          // batch's extracted support rows (pre-merge), not the table size
+          val obs = new org.apache.spark.sql.Observation(s"ingest-$batchId")
+          val supports = KgPipeline.supports(cfg, good, catalog, markers,
+              coref = coref, langs = langState.map(_._1))
             .observe(obs, count(lit(1)).as("n"))
             .select(keyCols.map(col) :+ col("weight") :+
               bucketOf.as("bucket"): _*)
@@ -362,19 +315,15 @@ object StreamingSync {
               case None =>
                 supports.drop("bucket")
             }
-            // runId scoped by lineage id: publish idempotence records must
-            // never collide across checkpoint lineages (a fresh lineage's
-            // batch 0 is a different logical batch than an old lineage's)
-            table.stagePartitioned(
-              combined.withColumn("bucket", bucketOf), s"stream-$ckptId-$batchId")
-            table.publishBuckets(s"stream-$ckptId-$batchId", touched)
+            table.stagePartitioned(combined.withColumn("bucket", bucketOf), runId)
+            table.publishBuckets(runId, touched)
           }
           // derived tables publish AFTER the supports and BEFORE the coref
           // state: recomputation inputs publish last, so a replay that sees
           // an advanced input always finds every consumer already published
           // (its wrong re-staging is discarded by runId idempotence)
           derived.foreach(d => propagate(s, supports, langState.map(_._3),
-            table, d, bucketOf, s"stream-$ckptId-$batchId"))
+            table, d, bucketOf, runId))
           // coref + language state publish AFTER the supports and BEFORE
           // the stamp: then every crash window replays correctly (see
           // corefStep / langStep)
@@ -598,11 +547,12 @@ object StreamingSync {
     * support table's pinned mapping; a batch reads and rewrites only the
     * buckets its conversations map to (hard-link carryover for the rest).
     *
-    * @return (batch extraction with orphans resolved and context rows
-    *         dropped, thunk publishing the advanced state) */
-  private def corefStep(batch: Dataset[Turn], extracted: DataFrame,
-                        st: TableCommitter, bucketOf: Column,
-                        runId: String): (DataFrame, () => Unit) = {
+    * @return (resolver over the batch's extraction — orphans resolved,
+    *         context rows dropped — and a thunk publishing the state the
+    *         resolver advanced) */
+  private def corefStep(batch: Dataset[Turn], st: TableCommitter,
+                        bucketOf: Column, runId: String)
+      : (DataFrame => DataFrame, () => Unit) = {
     val s = batch.sparkSession
     import s.implicits._
     // per-conversation batch bounds: one pass over the (in-memory) batch;
@@ -613,7 +563,7 @@ object StreamingSync {
       .localCheckpoint(true)
     val touched = batchConvs.select("bucket").distinct()
       .collect().map(_.getInt(0)).toSet
-    if (touched.isEmpty) return (extracted, () => ())
+    if (touched.isEmpty) return (identity, () => ())
 
     val prior = st.read(s) match {
       case Some(cur) => cur
@@ -654,34 +604,37 @@ object StreamingSync {
         lit("__ctx__").as("subj"),
         lit(Extractor.LastMentionPred).as("pred"),
         col("last_ent").as("obj"))
-    val resolved =
-      graft.extract.CorefResolver.resolve(extracted.unionByName(seeds))
-
-    // the batch's own latest resolved mention per conversation (from the
-    // PRE-seed rows — seeds must not echo back into the state)
-    val batchLast = extracted
-      .filter(col("pred") === Extractor.LastMentionPred)
-      .groupBy("conv_id")
-      .agg(max(struct(col("turn_idx"), col("obj"))).as("m"))
-      .select(col("conv_id"), col("m.turn_idx").as("n_idx"),
-        col("m.obj").as("n_ent"))
-    val updates = batchConvs.select("conv_id", "b_max")
-      .join(batchLast, Seq("conv_id"), "left")
-      .join(prior, Seq("conv_id"), "left")
-      .select(col("conv_id"),
-        coalesce(col("n_idx"), col("last_idx")).as("last_idx"),
-        coalesce(col("n_ent"), col("last_ent")).as("last_ent"),
-        greatest(col("b_max"), coalesce(col("max_idx"), lit(-1)))
-          .as("max_idx"))
     val carry = prior
       .join(batchConvs.select("conv_id"), Seq("conv_id"), "left_anti")
-    val newState = carry.unionByName(updates).withColumn("bucket", bucketOf)
 
-    (resolved, () => {
-      st.stagePartitioned(newState, runId)
-      st.publishBuckets(runId, touched)
-      ()
-    })
+    // the state update needs the batch's extraction, which exists only once
+    // the supports chain calls the resolver
+    var publish: () => Unit = () => ()
+    val resolve = (extracted: DataFrame) => {
+      // the batch's own latest resolved mention per conversation (from the
+      // PRE-seed rows — seeds must not echo back into the state)
+      val batchLast = extracted
+        .filter(col("pred") === Extractor.LastMentionPred)
+        .groupBy("conv_id")
+        .agg(max(struct(col("turn_idx"), col("obj"))).as("m"))
+        .select(col("conv_id"), col("m.turn_idx").as("n_idx"),
+          col("m.obj").as("n_ent"))
+      val updates = batchConvs.select("conv_id", "b_max")
+        .join(batchLast, Seq("conv_id"), "left")
+        .join(prior, Seq("conv_id"), "left")
+        .select(col("conv_id"),
+          coalesce(col("n_idx"), col("last_idx")).as("last_idx"),
+          coalesce(col("n_ent"), col("last_ent")).as("last_ent"),
+          greatest(col("b_max"), coalesce(col("max_idx"), lit(-1)))
+            .as("max_idx"))
+      val newState = carry.unionByName(updates).withColumn("bucket", bucketOf)
+      publish = () => {
+        st.stagePartitioned(newState, runId)
+        st.publishBuckets(runId, touched)
+      }
+      CorefResolver.resolve(extracted.unionByName(seeds))
+    }
+    (resolve, () => publish())
   }
 
   /** Stable identity of a checkpoint directory (created on first use;

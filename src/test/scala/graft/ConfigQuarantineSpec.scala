@@ -106,18 +106,4 @@ class ConfigQuarantineSpec extends AnyFunSuite {
     assert(p.edgeTable.read(spark).get.collect().toSet
       == clean.edgeTable.read(spark).get.collect().toSet)
   }
-
-  test("distributed-CC canonicalization yields the same pipeline output") {
-    val spark = SparkTestSession.get
-    import spark.implicits._
-    val fx = TranscriptGen.generate(nConv = 20, nEnt = 25, hotFactor = 2)
-    def run(distributed: Boolean) = {
-      val p = new KgPipeline(PipelineConfig(
-        workDir = TempDirs("canon-"),
-        useDistributedCanon = distributed))
-      p.runFull(spark, fx.turns.toDS(), fx.catalog, fx.markers, "r")
-      p.edgeTable.read(spark).get.collect().toSet
-    }
-    assert(run(distributed = true) == run(distributed = false))
-  }
 }

@@ -72,14 +72,4 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       .filter(e => e._1 != e._2)
     check(edges)
   }
-
-  test("runWithNodes keeps isolated nodes as their own component") {
-    val spark = SparkTestSession.get
-    import spark.implicits._
-    val nodes = Seq(1L, 2L, 3L, 99L).toDF("id")
-    val edges = Seq((1L, 2L)).toDF("src", "dst")
-    val got = ConnectedComponents.runWithNodes(nodes, edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 99L -> 99L))
-  }
 }

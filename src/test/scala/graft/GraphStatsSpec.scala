@@ -34,7 +34,7 @@ class GraphStatsSpec extends AnyFunSuite {
     val fx = graft.sources.TranscriptGen.generate(nConv = 12, nEnt = 6, hotFactor = 1)
     val dir = TempDirs("gdiff-")
     val p = new graft.pipeline.KgPipeline(
-      graft.config.PipelineConfig(workDir = dir, numPartitions = 4))
+      graft.config.PipelineConfig(workDir = dir))
     p.runFull(spark, fx.turns.toDS(), fx.catalog, fx.markers, "r1")
     // second full run over a corpus with 2 conversations dropped and their
     // turns re-used under a fresh conv id -> both adds and removes
@@ -89,7 +89,7 @@ class GraphStatsSpec extends AnyFunSuite {
     val fx = graft.sources.TranscriptGen.generate(nConv = 6, nEnt = 4, hotFactor = 1)
     val dir = TempDirs("rgv-")
     val p = new graft.pipeline.KgPipeline(
-      graft.config.PipelineConfig(workDir = dir, numPartitions = 2))
+      graft.config.PipelineConfig(workDir = dir))
     p.runFull(spark, fx.turns.toDS(), fx.catalog, fx.markers, "r1")
     val t = p.edgeTable
     assert(t.readGeneration(spark, t.generations().head).isDefined)
@@ -105,7 +105,7 @@ class GraphStatsSpec extends AnyFunSuite {
     val fx = graft.sources.TranscriptGen.generate(nConv = 20, nEnt = 8, hotFactor = 2)
     val dir = TempDirs("stats-")
     val p = new graft.pipeline.KgPipeline(
-      graft.config.PipelineConfig(workDir = dir, numPartitions = 4))
+      graft.config.PipelineConfig(workDir = dir))
     p.runFull(spark, fx.turns.toDS(), fx.catalog, fx.markers, "r1")
     val edges = p.edgeTable.read(spark).get
     val prof = GraphStats.profile(edges)

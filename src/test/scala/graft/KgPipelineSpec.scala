@@ -264,27 +264,6 @@ class KgPipelineSpec extends AnyFunSuite {
       small.markers, "s2")
   }
 
-  test("distributed CC canonicalization matches union-find golden components") {
-    val spark = SparkTestSession.get
-    import spark.implicits._
-    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-")))
-    val catDf = fx.catalog.toDF("entity_id", "alias", "pref_label", "rank")
-    val got = p.canonicalMapDistributed(spark, catDf).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(got == fx.goldenComponents)
-  }
-
-  test("useDistributedCanon e2e: runFull publishes tables identical to the " +
-       "driver union-find path") {
-    val spark = SparkTestSession.get
-    val dist = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-"),
-      useDistributedCanon = true))
-    dist.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "dist")
-    val uf = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-")))
-    uf.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "uf")
-    assert(edgesOf(dist) == edgesOf(uf))
-  }
-
   test("per-conversation count reconciliation (CLUSTERS-TEST style)") {
     // the reference validated its v1->v2 port by per-cluster doc-count
     // parity (src/logs/2/CLUSTERS-TEST); here: per-conversation mention-edge
@@ -319,7 +298,10 @@ class KgPipelineSpec extends AnyFunSuite {
   test("encoded-shuffle fast path emits exactly the string path's tables") {
     val spark = SparkTestSession.get
     val fast = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-")))
-    val slow = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-"), encodedShuffle = false))
+    // a non-identity config forces the string path; a normObj key that
+    // matches no object leaves every row as it is
+    val slow = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-"),
+      normObj = Map("urn:no-such-object" -> "urn:never")))
     fast.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "f")
     slow.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "s")
     assert(edgesOf(fast) == edgesOf(slow))
@@ -328,6 +310,13 @@ class KgPipelineSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3),
         r.getString(4), r.getLong(5))).toSet
     assert(supports(fast) == supports(slow))
+    // normalization through runFull is load-bearing: a blacklisted
+    // predicate leaves the edges, and nothing else does
+    val black = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-"),
+      listType = "black", proplist = Set("urn:p:collab")))
+    black.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "b")
+    assert(edgesOf(fast).exists(_._2 == "urn:p:collab"))
+    assert(edgesOf(black) == edgesOf(fast).filterNot(_._2 == "urn:p:collab"))
   }
 
   test("re-run is idempotent: same edge table content") {
@@ -342,10 +331,11 @@ class KgPipelineSpec extends AnyFunSuite {
   test("determinism under repartitioning: 3 vs 13 partitions, same output") {
     val spark = SparkTestSession.get
     import spark.implicits._
-    val a = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-"), numPartitions = 3))
-    val b = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-"), numPartitions = 13, saltBuckets = 3))
-    a.runFull(spark, fx.turns.toDS().repartition(2), fx.catalog, fx.markers, "r")
-    b.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "r")
+    val a = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-")))
+    val b = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-")))
+    a.runFull(spark, fx.turns.toDS().repartition(3), fx.catalog, fx.markers, "r")
+    b.runFull(spark, new scala.util.Random(1).shuffle(fx.turns).toDS()
+      .repartition(13), fx.catalog, fx.markers, "r")
     assert(edgesOf(a) == edgesOf(b))
   }
 

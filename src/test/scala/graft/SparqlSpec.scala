@@ -1209,7 +1209,7 @@ class SparqlSpec extends AnyFunSuite {
     val fx = graft.sources.TranscriptGen.generate(nConv = 12, nEnt = 6, hotFactor = 1)
     val dir = TempDirs("sparql-e2e")
     val p = new graft.pipeline.KgPipeline(
-      graft.config.PipelineConfig(workDir = dir, numPartitions = 4))
+      graft.config.PipelineConfig(workDir = dir))
     p.runFull(s, fx.turns.toDS(), fx.catalog, fx.markers, "r1")
     // ...parse the query out of a river-config blob (Indexer's query[])...
     val cfg = graft.config.ConfigParsing.fromJson(

@@ -215,28 +215,28 @@ class TableCommitterSpec extends AnyFunSuite {
       .resolve(TableCommitter.CountSidecar)).trim == "4")
   }
 
-  test("pinned/pinKeyExprOrVerify: adoption of a non-default key expression " +
-       "onto a pre-pin table with generations is refused") {
+  test("pinBucketMapping: non-default key expr refused on a pre-pin table") {
     val spark = SparkTestSession.get
     import spark.implicits._
     val t = fresh()
     assert(t.pinned("bucket_key_expr").isEmpty)
     // empty table: first writer may pin anything (the layout is being built
     // under the pinned mapping right now)
-    t.pinKeyExprOrVerify("epoch_week({k})", "hash({k})")
+    t.pinBucketMapping(8, "epoch_week({k})")
     assert(t.pinned("bucket_key_expr").contains("epoch_week({k})"))
+    assert(t.pinned("bucket_count").contains("8"))
 
     // a table with GENERATIONS but no pin was physically laid out by a
     // pre-pin writer (default mapping): only the default may be adopted
     val old = fresh()
     put(old, Seq(("x", 0)).toDF("v", "bucket"), "r1")
     val e = intercept[IllegalStateException](
-      old.pinKeyExprOrVerify("epoch_week({k})", "hash({k})"))
+      old.pinBucketMapping(8, "epoch_week({k})"))
     assert(e.getMessage.contains("built before"))
-    old.pinKeyExprOrVerify("hash({k})", "hash({k})") // default: legitimate
+    old.pinBucketMapping(8, "hash({k})") // default: legitimate
     // once pinned, a different expression is the ordinary pin mismatch
     intercept[IllegalArgumentException](
-      old.pinKeyExprOrVerify("epoch_week({k})", "hash({k})"))
+      old.pinBucketMapping(8, "epoch_week({k})"))
   }
 
   test("pinSemanticsOrVerify: adoption onto a pre-pin table with " +
