@@ -137,6 +137,35 @@ object KgMain {
       syncBuckets = sys.env.get("GRAFT_SYNC_BUCKETS").map(_.toInt)
         .getOrElse(baseCfg.syncBuckets))
 
+  /** The entity catalog parquet at `dir`, else the built-in demo catalog
+    * (so the app is drivable end-to-end on a bare fixture). */
+  private[app] def loadCatalog(spark: SparkSession,
+      dir: Option[String]): Seq[CatalogEntry] = {
+    import spark.implicits._
+    dir.map(d => spark.read.parquet(d).as[CatalogEntry].collect().toSeq)
+      .getOrElse(TranscriptGen.catalog(50))
+  }
+
+  /** The one full/sync dispatch of single-river and multi-river mode: load
+    * the catalog, mint the run id, run. Sync run ids are watermark-derived,
+    * so a crashed sync RETRIED FROM A NEW PROCESS resumes the original run
+    * (stage checkpoints + idempotent publishes are runId-scoped); a full run
+    * is self-contained and takes a fresh id, `full-<millis><idSuffix>`. */
+  private[app] def harvest(spark: SparkSession, pipeline: KgPipeline,
+      mode: String, turnsDir: String, catalogDir: Option[String],
+      idSuffix: String = ""): KgPipeline#RunResult = {
+    import spark.implicits._
+    val runId =
+      if (mode == "sync") pipeline.syncRunId(spark)
+      else s"full-${System.currentTimeMillis()}$idSuffix"
+    val turns = spark.read.parquet(turnsDir).as[Turn]
+    val catalog = loadCatalog(spark, catalogDir)
+    if (mode == "full")
+      pipeline.runFull(spark, turns, catalog, TranscriptGen.markerPreds, runId)
+    else
+      pipeline.runSync(spark, turns, catalog, TranscriptGen.markerPreds, runId)
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
       "usage: KgMain full|sync|ingest-nt|ingest-rdfxml|ingest-stream " +
@@ -178,13 +207,9 @@ object KgMain {
       .getOrElse(PipelineConfig())
     val cfg = envOverlay(baseCfg, workDir)
     val pipeline = new KgPipeline(cfg)
-    // sync runIds are watermark-derived so a crashed sync RETRIED FROM A NEW
-    // PROCESS resumes the original run (stage checkpoints + idempotent
-    // publishes are runId-scoped); full/ingest runs are self-contained and
-    // take a fresh id
-    val runId =
-      if (mode == "sync") pipeline.syncRunId(spark)
-      else s"$mode-${System.currentTimeMillis()}"
+    // ingest/dedup runs are self-contained and take a fresh id (full/sync
+    // mint theirs in harvest)
+    val runId = s"$mode-${System.currentTimeMillis()}"
 
     if (mode == "ingest-nt" || mode == "ingest-rdfxml") {
       import org.apache.spark.sql.functions.col
@@ -380,11 +405,6 @@ object KgMain {
       return
     }
 
-    val catalog: Seq[CatalogEntry] =
-      if (args.length >= 4)
-        spark.read.parquet(args(3)).as[CatalogEntry].collect().toSeq
-      else TranscriptGen.catalog(50)
-
     if (mode == "ingest-stream") {
       // Structured-Streaming front-end over the same transcript shape:
       // checkpointed source offsets replace the batch sync's watermark, each
@@ -418,7 +438,7 @@ object KgMain {
         else None
       val merged = graft.streaming.StreamingSync.ingestAvailableNow(
         spark, turnsDir, s"$workDir/stream_checkpoint",
-        catalog, TranscriptGen.markerPreds, cfg, tbl,
+        loadCatalog(spark, args.lift(3)), TranscriptGen.markerPreds, cfg, tbl,
         maxFilesPerBatch = sys.env.get("GRAFT_STREAM_MAX_FILES").map(_.toInt),
         corefStateTable = state, langStateTable = langState,
         edgeTable = Some(eTbl), docTable = dTbl,
@@ -434,14 +454,7 @@ object KgMain {
       return
     }
 
-    val turns = spark.read.parquet(turnsDir).as[Turn]
-
-    val result =
-      if (mode == "full")
-        pipeline.runFull(spark, turns, catalog, TranscriptGen.markerPreds, runId)
-      else
-        pipeline.runSync(spark, turns, catalog, TranscriptGen.markerPreds, runId)
-
+    val result = harvest(spark, pipeline, mode, turnsDir, args.lift(3))
     println(s"""{"run_id":"${result.runId}","mode":"$mode","edges_gen":"${result.edgesGen}","nodes_gen":"${result.nodesGen}","published_triples":${result.triples}}""")
     spark.stop()
   }

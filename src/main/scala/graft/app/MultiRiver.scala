@@ -12,8 +12,6 @@ import org.apache.spark.sql.SparkSession
 
 import graft.config.{ConfigParsing, PipelineConfig}
 import graft.pipeline.KgPipeline
-import graft.schema.{CatalogEntry, Turn}
-import graft.sources.TranscriptGen
 
 /** Concurrent multi-river harvests — the reference's cross-river parallelism
   * re-expressed Spark-first.
@@ -99,28 +97,16 @@ object MultiRiver {
     rivers
   }
 
-  /** Run one river's harvest on the shared session (the body of KgMain's
-    * full/sync dispatch, workDir-scoped). Returns the result JSON line. */
+  /** Run one river's harvest on the shared session (KgMain's full/sync
+    * dispatch, workDir-scoped). Returns the result JSON line. */
   private def runOne(spark: SparkSession, spec: RiverSpec,
       overlay: (PipelineConfig, String) => PipelineConfig): String = {
-    import spark.implicits._
     val baseCfg = spec.configJson
       .map(p => ConfigParsing.fromJson(Files.readString(Paths.get(p))))
       .getOrElse(PipelineConfig())
-    val cfg = overlay(baseCfg, spec.workDir)
-    val pipeline = new KgPipeline(cfg)
-    val runId =
-      if (spec.mode == "sync") pipeline.syncRunId(spark)
-      else s"full-${System.currentTimeMillis()}-${spec.name}"
-    val turns = spark.read.parquet(spec.input).as[Turn]
-    val catalog: Seq[CatalogEntry] = spec.catalogDir
-      .map(d => spark.read.parquet(d).as[CatalogEntry].collect().toSeq)
-      .getOrElse(TranscriptGen.catalog(50))
-    val result =
-      if (spec.mode == "full")
-        pipeline.runFull(spark, turns, catalog, TranscriptGen.markerPreds, runId)
-      else
-        pipeline.runSync(spark, turns, catalog, TranscriptGen.markerPreds, runId)
+    val result = KgMain.harvest(spark,
+      new KgPipeline(overlay(baseCfg, spec.workDir)), spec.mode, spec.input,
+      spec.catalogDir, idSuffix = s"-${spec.name}")
     s"""{"river":${KgMain.jsonStr(spec.name)},"mode":"${spec.mode}",""" +
       s""""run_id":"${result.runId}","edges_gen":"${result.edgesGen}",""" +
       s""""nodes_gen":"${result.nodesGen}","published_triples":${result.triples}}"""

@@ -85,9 +85,6 @@ final case class PipelineConfig(
     // default: it adds one conversation-keyed window shuffle of the
     // extraction output
     corefResolution: Boolean = false,
-    // split structurally-bad input rows into the quarantine table instead of
-    // failing the job (K2 failure-granularity shrink)
-    quarantineBadRows: Boolean = true,
     // also publish the per-(subject, language) document table — the
     // reference's actual output shape (one ES doc per resource@lang)
     publishDocs: Boolean = false,
@@ -108,8 +105,9 @@ final case class PipelineConfig(
     serviceGraphs: Map[String, String] = Map.empty) {
 
   /** Signature of the flags that change what a published ROW means (not
-    * how fast it is computed) — pinned per table lineage by both the batch
-    * pipeline (full pins, sync verifies) and the streaming ingest, so two
+    * how fast it is computed). There is one pin, in the support table's
+    * metadata (`TableCommitter.pinSemanticsOrVerify`): a batch full run
+    * re-pins it, a batch sync and the streaming ingest verify it, so two
     * row semantics can never mix inside one table. Catalog/marker/
     * normalization evolution is deliberately NOT part of it: syncing
     * against an updated model is the reference's normal operating mode. */

@@ -369,28 +369,12 @@ final class TableCommitter(rootDir: String) {
   }
 
   /** Pin an immutable table-layout property (e.g. the bucket count): first
-    * caller writes it atomically, every later caller must agree — a writer
-    * using a different key-to-bucket mapping than the table was built with
-    * would replace rows in the wrong buckets and silently carry stale copies
-    * forward.
-    *
-    * First-writer exclusivity uses hard-link creation (CREATE_NEW
-    * semantics): rename(2) would silently REPLACE a concurrent winner's pin,
-    * letting both racers proceed believing their own value won. The
-    * unconditional read-back verifies the loser against the winner. */
+    * caller writes it ([[TableCommitter.createOnce]]), every later caller
+    * must agree — a writer using a different key-to-bucket mapping than the
+    * table was built with would replace rows in the wrong buckets and
+    * silently carry stale copies forward. */
   def pinOrVerify(key: String, value: String): Unit = {
-    val pins = meta.resolve("pins")
-    val f = pins.resolve(key)
-    if (!Files.exists(f)) {
-      Files.createDirectories(pins)
-      val tmp = pins.resolve(s".$key.${java.util.UUID.randomUUID()}.tmp")
-      Files.writeString(tmp, value)
-      try Files.createLink(f, tmp)
-      catch { // lost the first-writer race: fall through to the verify
-        case _: java.nio.file.FileAlreadyExistsException => ()
-      } finally Files.deleteIfExists(tmp)
-    }
-    val pinned = Files.readString(f).trim
+    val pinned = TableCommitter.createOnce(meta.resolve("pins").resolve(key), value)
     require(pinned == value,
       s"table pin '$key' is $pinned but this writer uses $value — " +
         "rebuild into a fresh table to change it")
@@ -423,20 +407,37 @@ final class TableCommitter(rootDir: String) {
     pinOrVerify("bucket_key_expr", keyExpr)
   }
 
-  /** Pin the row-semantics signature with the same ADOPTION guard as
-    * [[pinBucketMapping]]: a table that has generations but no semantics
-    * pin predates the pin, and what its rows MEAN is unknowable from here —
-    * blessing the current flags onto it would let later writes additively
-    * merge rows of a second semantics into it with no error, the exact
-    * failure the pin exists to prevent. Refuse loudly instead. */
+  /** Pin the row-semantics signature ([[graft.config.PipelineConfig.semanticsSig]])
+    * or verify it — the one semantics pin of every writer that MERGES into
+    * a table (batch sync, streaming ingest): rows extracted under different
+    * flags would silently mix two semantics within one table. Same
+    * ADOPTION guard as [[pinBucketMapping]]: a table that has generations
+    * but no semantics pin predates the pin, and what its rows MEAN is
+    * unknowable from here — blessing the current flags onto it would let
+    * later writes merge rows of a second semantics into it with no error,
+    * the exact failure the pin exists to prevent. Refuse loudly instead. */
   def pinSemanticsOrVerify(sig: String): Unit = {
     if (currentGeneration().isDefined && pinned("semantics").isEmpty)
       throw new IllegalStateException(
         "table has published generations but no semantics pin (it was " +
           "built before row semantics were pinned) — rebuild it from a " +
           "fresh checkpoint / full run so the pin records what its rows mean")
-    pinOrVerify("semantics", sig)
+    val standing = TableCommitter.createOnce(semanticsPin, sig)
+    require(standing == sig,
+      s"writer flags ($sig) differ from the row semantics the table was " +
+        s"built with ($standing) — a merge would mix row semantics within " +
+        "one table; run a FULL rebuild (or ingest into a fresh table) to " +
+        "change them")
   }
+
+  /** Re-pin the row-semantics signature unconditionally (atomic replace):
+    * only a writer that rebuilds EVERY row (a full run) may redefine what
+    * the table's rows mean. Pinned before the rebuild publishes, so a
+    * crashed full run leaves the pin ahead of the pointer — later merges
+    * under the old flags then refuse until a full run completes. */
+  def repinSemantics(sig: String): Unit = replaceAtomically(semanticsPin, sig)
+
+  private def semanticsPin: Path = meta.resolve("pins").resolve("semantics")
 
   /** Point an alias at an existing generation (blue/green switch, K6). */
   def setPointer(alias: String, gen: String): Unit = {
@@ -446,11 +447,18 @@ final class TableCommitter(rootDir: String) {
     require(alias.matches("[A-Za-z0-9][A-Za-z0-9_-]*") &&
       alias != "runs" && alias != "pins",
       s"invalid alias name '$alias'")
-    Files.createDirectories(meta)
-    val tmp = meta.resolve(s".$alias.tmp")
-    Files.write(tmp, gen.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, pointerFile(alias),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    replaceAtomically(pointerFile(alias), gen)
+  }
+
+  /** Write `value` to `f` through a dotted sibling tmp file and an atomic
+    * rename over it: readers see the old or the new value, never a torn
+    * write. */
+  private def replaceAtomically(f: Path, value: String): Unit = {
+    Files.createDirectories(f.getParent)
+    val tmp = f.resolveSibling(s".${f.getFileName}.tmp")
+    Files.write(tmp, value.getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Remove staged (unpublished) data — K5: the pointer never moved, so the
@@ -511,6 +519,24 @@ final class TableCommitter(rootDir: String) {
 }
 
 object TableCommitter {
+  /** Create `f` holding `value` unless it exists; return what `f` holds.
+    * First-writer exclusivity uses hard-link creation (CREATE_NEW
+    * semantics): rename(2) would silently REPLACE a concurrent winner's
+    * file, letting both racers proceed believing their own value won. The
+    * unconditional read-back hands every racer the winner's value. */
+  def createOnce(f: Path, value: String): String = {
+    if (!Files.exists(f)) {
+      Files.createDirectories(f.getParent)
+      val tmp = f.resolveSibling(s".${f.getFileName}.${java.util.UUID.randomUUID()}.tmp")
+      Files.writeString(tmp, value)
+      try Files.createLink(f, tmp)
+      catch { // lost the first-writer race: the read-back adopts the winner
+        case _: java.nio.file.FileAlreadyExistsException => ()
+      } finally Files.deleteIfExists(tmp)
+    }
+    Files.readString(f).trim
+  }
+
   /** Physical partition column of bucketed tables. */
   val BucketCol = "bucket"
 

@@ -143,67 +143,6 @@ final class KgPipeline(cfg: PipelineConfig) {
     }
   }
 
-  /** K2: structurally-bad rows can never succeed on retry — divert them to
-    * the quarantine table with a reason instead of failing the job.
-    *
-    * r6 restructure (guide §1.2, remove unnecessary passes): the validity
-    * split, the run's event-time watermark (max ts) AND the bad-row count
-    * all ride the consuming stage's own write via ONE Dataset.observe — the
-    * former shape paid a dedicated full-source pass per run (the quarantine
-    * write when enabled, a max(ts) aggregation otherwise; ~2 s of the 16 s
-    * bench full run, and a per-sync scan). Bad rows are written only when
-    * the observation reports any — a second, rare scan — and stay
-    * runId-scoped + overwrite, so a crash-and-resume never double-appends
-    * (K3 idempotence).
-    * @return (valid rows, fire) — call fire() only AFTER the action that
-    *         consumed the valid rows completed; it writes any quarantined
-    *         rows and returns the watermark observed across ALL rows. */
-  private def quarantined(spark: SparkSession, turns: Dataset[Turn],
-                          runId: String): (Dataset[Turn], () => Option[Timestamp]) = {
-    import spark.implicits._
-    val obs = new org.apache.spark.sql.Observation()
-    def wmOf(v: Any): Option[Timestamp] = v match {
-      case null => None
-      case t: Timestamp => Some(t)
-      case i: java.time.Instant => Some(Timestamp.from(i))
-      case l: java.time.LocalDateTime =>
-        Some(new Timestamp(l.atZone(java.time.ZoneOffset.UTC)
-          .toInstant.toEpochMilli))
-      case other => sys.error(s"unexpected max_ts type: ${other.getClass}")
-    }
-    // EMPTY-RESULT corner: when the consuming stage's result prunes to an
-    // empty relation, AQE's empty-relation propagation removes the whole
-    // subtree INCLUDING the CollectMetrics node — the observation then
-    // reports an empty map even though the action completed. fire() falls
-    // back to explicit (input-sized — delta-sized on the sync path) passes
-    // in that case: re-derive the watermark, and write the quarantine
-    // defensively (an all-bad input is exactly the empty-good-plan case).
-    if (!cfg.quarantineBadRows) {
-      val observed = turns.toDF()
-        .observe(obs, max(col("ts")).as("max_ts")).as[Turn]
-      (observed, () => obs.get.get("max_ts") match {
-        case Some(v) => wmOf(v)
-        case None => maxEventTime(turns)
-      })
-    } else {
-      val reason = Quarantine.reasonCol(Quarantine.turnChecks)
-      val observed = turns.toDF().observe(obs,
-        max(col("ts")).as("max_ts"),
-        count(when(reason.isNotNull, lit(1))).as("n_bad"))
-      val (good, bad) = Quarantine.split(observed, Quarantine.turnChecks)
-      (good.as[Turn], () => {
-        val m = obs.get
-        if (m.get("n_bad").map(_.asInstanceOf[Long]).forall(_ > 0))
-          SparkIo.withJobDesc(spark, "quarantine-write")(bad.write.mode("overwrite")
-            .parquet(s"${cfg.workDir}/quarantine/run_id=$runId"))
-        m.get("max_ts") match {
-          case Some(v) => wmOf(v)
-          case None => maxEventTime(turns)
-        }
-      })
-    }
-  }
-
   /** Per-conversation triple supports under this pipeline's config — see
     * [[KgPipeline.supports]]. */
   def computeSupports(spark: SparkSession, turns: Dataset[Turn],
@@ -226,11 +165,11 @@ final class KgPipeline(cfg: PipelineConfig) {
     var fire: () => Option[Timestamp] = () => None
     val supports = stage(spark, runId, name,
       afterWrite = tmp => writeWmSidecar(tmp, fire())) {
-      val (good, f) = quarantined(spark, turns, runId)
+      val (good, f) = KgPipeline.quarantined(spark, turns, cfg.workDir, runId)
       fire = f
       computeSupports(spark, good, catalog, markers)
     }
-    val wm = readWmSidecar(runId, name).getOrElse(maxEventTime(turns))
+    val wm = readWmSidecar(runId, name).getOrElse(KgPipeline.maxEventTime(turns))
     checkpoints.writeLineageFromFooters(spark, runId, name,
       s"$stagesRoot/$runId/$name")
     (supports, wm)
@@ -269,50 +208,6 @@ final class KgPipeline(cfg: PipelineConfig) {
     Seq(supportTable, edgeTable, nodeTable, docTable)
       .foreach(_.pinBucketMapping(B, cfg.bucketKeyExpr))
 
-  /** Extraction-semantics pin: the flags that change what a support/edge
-    * ROW means (coref resolution, scored linking, language detection, the
-    * stamped language) are a property of the table CONTENTS, not of a
-    * single run — an incremental sync merging rows extracted under
-    * different flags than the standing generations would silently mix two
-    * semantics within one table (the streaming path pins the same class of
-    * flag in table metadata). Full runs rebuild every row, so they
-    * legitimately (re)pin; syncs only replace slices, so they VERIFY.
-    * Catalog/marker/normalization evolution is deliberately NOT pinned:
-    * syncing against an updated model is the reference's normal operating
-    * mode, and changed conversations re-extract whole under the new model.
-    *
-    * A full run pins at start, so a crashed full run can leave the pin
-    * ahead of the published pointers — later syncs under the OLD flags then
-    * refuse loudly until a full run completes. Loud-and-rare beats a silent
-    * mix. */
-  private val semanticsPin =
-    Paths.get(s"${cfg.workDir}/_meta_pipeline/semantics")
-  private def pinSemantics(): Unit = {
-    Files.createDirectories(semanticsPin.getParent)
-    val tmp = semanticsPin.resolveSibling(".semantics.tmp")
-    Files.writeString(tmp, cfg.semanticsSig)
-    Files.move(tmp, semanticsPin, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-  private def verifySemantics(): Unit =
-    if (Files.exists(semanticsPin)) {
-      val pinned = Files.readString(semanticsPin).trim
-      require(pinned == cfg.semanticsSig,
-        s"sync flags (${cfg.semanticsSig}) differ from the flags the standing " +
-          s"tables were built with ($pinned) — an incremental sync would " +
-          "mix row semantics within one table; run a FULL rebuild to " +
-          "change them")
-    } else if (supportTable.currentGeneration().isDefined) {
-      // pre-pin-era workDir WITH published rows: what those rows mean is
-      // unknowable (the flags predate the pin), so adopting the CURRENT
-      // flags could bless a different semantics onto them and let this
-      // sync merge mixed-meaning slices — the exact failure the pin
-      // exists to prevent. Same adoption guard as pinBucketMapping.
-      throw new IllegalStateException(
-        "workDir has published tables but no semantics pin (built before " +
-          "row semantics were pinned) — run a FULL rebuild to establish it")
-    } else pinSemantics() // fresh workDir: adopt the current flags
-
   /** The subject-bucket expression of this pipeline's edge/doc tables —
     * external writers (KgMain ingest-nt) MUST use this, not a re-derived
     * copy: bucket-merge correctness requires every writer to agree
@@ -335,7 +230,9 @@ final class KgPipeline(cfg: PipelineConfig) {
               catalog: Seq[CatalogEntry], markers: Map[String, String],
               runId: String): RunResult = {
     pinOrVerifyBucketCount()
-    pinSemantics() // full rebuilds every row: it defines the semantics
+    // the one semantics pin, in the support table's metadata (shared with
+    // the streaming ingest): a full run rebuilds every row, so it re-pins
+    supportTable.repinSemantics(cfg.semanticsSig)
     val (supports, wm) =
       supportsStage(spark, runId, "supports", turns, catalog, markers)
 
@@ -344,21 +241,6 @@ final class KgPipeline(cfg: PipelineConfig) {
     supportTable.publishBuckets(runId, allBucketIds)
 
     publishDerivedFull(spark, runId, supports, wm)
-  }
-
-  /** Event-time watermark: the max source timestamp processed — the next
-    * sync run re-extracts only conversations with turns after it (the
-    * reference uses harvest start time, Harvester.java:712; event time is
-    * the Spark-idiomatic equivalent and is deterministic under replay).
-    *
-    * LATE-DATA CONTRACT: a turn whose ts is at or below the current
-    * watermark when it ARRIVES is invisible to watermark syncs — same class
-    * of gap as the reference's time-filtered sync (its start-time watermark
-    * just trades it for reprocessing). Out-of-order sources need
-    * `syncOldData` (full-set reconciliation) or a periodic full run. */
-  private def maxEventTime(turns: Dataset[Turn]): Option[Timestamp] = {
-    val r = turns.toDF().agg(max(col("ts"))).head()
-    if (r.isNullAt(0)) None else Some(r.getTimestamp(0))
   }
 
   /** Deterministic sync run id: ONE logical sync per (successful-run count,
@@ -388,7 +270,8 @@ final class KgPipeline(cfg: PipelineConfig) {
               runId: String): RunResult = {
     import spark.implicits._
     pinOrVerifyBucketCount()
-    verifySemantics() // syncs replace slices: they must match the table
+    // syncs replace slices: they must match the rows they merge into
+    supportTable.pinSemanticsOrVerify(cfg.semanticsSig)
     val wm = checkpoints.lastWatermark(spark, cfg.pipelineId)
       .getOrElse(new Timestamp(0L))
 
@@ -608,6 +491,71 @@ final class KgPipeline(cfg: PipelineConfig) {
 }
 
 object KgPipeline {
+
+  /** K2: structurally-bad rows can never succeed on retry — divert them to
+    * the quarantine table with a reason instead of failing the job. The one
+    * quarantine of the batch pipeline and the streaming ingest.
+    *
+    * The validity split, the event-time watermark (max ts) AND the bad-row
+    * count ride the consumer's own action via ONE Dataset.observe — no
+    * dedicated pass over the source. Bad rows are written only when the
+    * observation reports any (a second, rare scan), overwriting
+    * `<workDir>/quarantine/run_id=<runId>`, so a crash-and-resume never
+    * double-appends (K3 idempotence).
+    * @return (valid rows, fire) — call fire() only AFTER an action that
+    *         consumed the valid rows completed; it writes any quarantined
+    *         rows and returns the watermark observed across ALL rows. */
+  def quarantined(spark: SparkSession, turns: Dataset[Turn], workDir: String,
+                  runId: String): (Dataset[Turn], () => Option[Timestamp]) = {
+    import spark.implicits._
+    val obs = new org.apache.spark.sql.Observation()
+    def wmOf(v: Any): Option[Timestamp] = v match {
+      case null => None
+      case t: Timestamp => Some(t)
+      case i: java.time.Instant => Some(Timestamp.from(i))
+      case l: java.time.LocalDateTime =>
+        Some(new Timestamp(l.atZone(java.time.ZoneOffset.UTC)
+          .toInstant.toEpochMilli))
+      case other => sys.error(s"unexpected max_ts type: ${other.getClass}")
+    }
+    val reason = Quarantine.reasonCol(Quarantine.turnChecks)
+    val observed = turns.toDF().observe(obs,
+      max(col("ts")).as("max_ts"),
+      count(when(reason.isNotNull, lit(1))).as("n_bad"))
+    val (good, bad) = Quarantine.split(observed, Quarantine.turnChecks)
+    (good.as[Turn], () => {
+      // EMPTY-RESULT corner: when the consumer's result prunes to an empty
+      // relation, AQE's empty-relation propagation removes the whole
+      // subtree INCLUDING the CollectMetrics node — the observation then
+      // reports an empty map even though the action completed. Fall back
+      // to explicit input-sized passes: write the quarantine defensively
+      // (an all-bad input is exactly the empty-good-plan case) and
+      // re-derive the watermark.
+      val m = obs.get
+      if (m.get("n_bad").map(_.asInstanceOf[Long]).forall(_ > 0))
+        SparkIo.withJobDesc(spark, "quarantine-write")(
+          bad.write.mode("overwrite").parquet(s"$workDir/quarantine/run_id=$runId"))
+      m.get("max_ts") match {
+        case Some(v) => wmOf(v)
+        case None => maxEventTime(turns)
+      }
+    })
+  }
+
+  /** Event-time watermark: the max source timestamp processed — the next
+    * sync run re-extracts only conversations with turns after it (the
+    * reference uses harvest start time, Harvester.java:712; event time is
+    * the Spark-idiomatic equivalent and is deterministic under replay).
+    *
+    * LATE-DATA CONTRACT: a turn whose ts is at or below the current
+    * watermark when it ARRIVES is invisible to watermark syncs — same class
+    * of gap as the reference's time-filtered sync (its start-time watermark
+    * just trades it for reprocessing). Out-of-order sources need
+    * `syncOldData` (full-set reconciliation) or a periodic full run. */
+  private def maxEventTime(turns: Dataset[Turn]): Option[Timestamp] = {
+    val r = turns.toDF().agg(max(col("ts"))).head()
+    if (r.isNullAt(0)) None else Some(r.getTimestamp(0))
+  }
 
   /** Per-conversation triple supports: (conv_id, subj, pred, obj, lang,
     * weight) — the unit of idempotent incremental replacement. THE

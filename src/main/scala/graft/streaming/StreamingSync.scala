@@ -13,8 +13,9 @@ import graft.schema.{CatalogEntry, Turn}
 /** Structured-Streaming front-end for incremental ingestion: the reference's
   * cron-driven timestamp-filtered batch sync (SURVEY.md §2.8) upgraded to
   * `readStream` + `Trigger.AvailableNow` — source offsets replace the
-  * hand-rolled `last_update` watermark, and each micro-batch MERGEs the
-  * supports of the batch path's own chain
+  * hand-rolled `last_update` watermark, and each micro-batch runs the batch
+  * path's own quarantine ([[graft.pipeline.KgPipeline.quarantined]]) and
+  * MERGEs the supports of its own chain
   * ([[graft.pipeline.KgPipeline.supports]]) through the same committer
   * (exactly-once via checkpointed offsets + idempotent key merge). Edges,
   * nodes and docs follow each batch's support delta through the batch
@@ -138,61 +139,6 @@ object StreamingSync {
         "this table was published without the bucketed layout (no 'bucket' " +
           "partition column): rebuild it from a fresh checkpoint with the " +
           "bucketed streaming ingest before resuming")
-    // bucket mapping (count + key expression) pinned in the table's own
-    // metadata: it is baked into every published generation, and every
-    // writer (including a later run with a different config) must agree on
-    // it; adoption onto a pre-pin table is guarded
-    val B = cfg.syncBuckets
-    table.pinBucketMapping(B, cfg.bucketKeyExpr)
-    // row SEMANTICS are a LINEAGE property, not a per-run choice: batches
-    // merged under different extraction semantics (coref resolution, scored
-    // vs rank-collapsed linking, the stamped language) disagree on row
-    // content/keys for the same turns, so flipping any of these mid-table
-    // silently mixes two semantics in one additive merge — pin the full
-    // signature like the bucket mapping (the batch pipeline pins the same
-    // signature per workDir; PipelineConfig.semanticsSig is shared so the
-    // two paths can never drift apart on what counts as "semantics").
-    // ADOPTION-GUARDED: a pre-pin table with published generations refuses
-    // rather than adopting the current flags — its rows' semantics are
-    // unknowable, and adoption would bless a possibly-different signature
-    // onto them (the upgrade hole mirror-imaged from pinBucketMapping)
-    table.pinSemanticsOrVerify(cfg.semanticsSig)
-    // legacy pin, still written for forward compatibility of the metadata
-    // layout; NOTE the adoption guard above supersedes it for published
-    // pre-semantics-pin tables (they are refused outright, so this line
-    // never acts as their compatibility path — a rebuild is required)
-    table.pinOrVerify("coref_resolution", cfg.corefResolution.toString)
-    corefStateTable.foreach { st =>
-      st.pinBucketMapping(B, cfg.bucketKeyExpr)
-      // state lost / wrong table: supports built by committed prior batches
-      // of a coref lineage MUST have their antecedent state alongside — an
-      // empty state table here would silently drop every cross-batch
-      // antecedent. (A mid-crash replay is fine: lastBatch is stamped only
-      // after the state publish, so a committed stamp implies the state
-      // generation exists.)
-      if (cfg.corefResolution && table.currentGeneration("lastBatch").isDefined
-          && table.currentGeneration().isDefined
-          && st.currentGeneration().isEmpty)
-        throw new IllegalStateException(
-          "corefResolution lineage has committed batches but the coref state " +
-            "table is empty — wrong/lost state table; rebuild from a fresh " +
-            "checkpoint")
-    }
-    langStateTable.foreach { st =>
-      st.pinBucketMapping(B, cfg.bucketKeyExpr)
-      // counter columns are POSITIONAL over the sorted profile keys: a
-      // profile edit mid-lineage would silently re-index every counter
-      st.pinOrVerify("lang_profiles",
-        graft.text.LangDetect.signature(cfg.langProfiles))
-      // state lost / wrong table: same guard as the coref state
-      if (cfg.detectLanguage && table.currentGeneration("lastBatch").isDefined
-          && table.currentGeneration().isDefined
-          && st.currentGeneration().isEmpty)
-        throw new IllegalStateException(
-          "detectLanguage lineage has committed batches but the language " +
-            "state table is empty — wrong/lost state table; rebuild from a " +
-            "fresh checkpoint")
-    }
     // derived-table propagation (edges/nodes, like the batch pipeline's
     // publishDerived*): node refcounts derive from edge-key creation, so
     // the two tables are wired together or not at all
@@ -209,19 +155,45 @@ object StreamingSync {
       "refreshReferencingDocs is not supported by the streaming doc sink " +
         "(it widens every micro-batch to an O(table) edge scan); run the " +
         "batch sync for label-freshness refreshes")
-    Seq(edgeTable, nodeTable, docTable).flatten.foreach { t =>
-      t.pinBucketMapping(B, cfg.bucketKeyExpr)
-      // a lineage with committed batches whose derived tables are empty was
-      // ingested WITHOUT propagation — late enabling would silently miss
-      // every earlier batch's edges
-      if (table.currentGeneration("lastBatch").isDefined &&
-          table.currentGeneration().isDefined &&
-          t.currentGeneration().isEmpty)
-        throw new IllegalStateException(
-          "derived-table propagation enabled over a stream lineage with " +
-            "committed batches but an empty edge/node table — earlier " +
-            "batches were never propagated; rebuild from a fresh checkpoint")
-    }
+    // bucket mapping (count + key expression) pinned in each table's own
+    // metadata: it is baked into every published generation, and every
+    // writer (including a later run with a different config) must agree on
+    // it; adoption onto a pre-pin table is guarded
+    val B = cfg.syncBuckets
+    val derivedTables = Seq(edgeTable, nodeTable, docTable).flatten
+    (Seq(table) ++ corefStateTable ++ langStateTable ++ derivedTables)
+      .foreach(_.pinBucketMapping(B, cfg.bucketKeyExpr))
+    // row SEMANTICS are a LINEAGE property, not a per-run choice: batches
+    // merged under different extraction semantics (coref resolution, scored
+    // vs rank-collapsed linking, the stamped language) disagree on row
+    // content/keys for the same turns, so flipping any of these mid-table
+    // silently mixes two semantics in one additive merge. The batch
+    // pipeline's own pin (PipelineConfig.semanticsSig, in the table's
+    // metadata), adoption-guarded: a pre-pin table with published
+    // generations is refused, never blessed with the current flags
+    table.pinSemanticsOrVerify(cfg.semanticsSig)
+    // counter columns are POSITIONAL over the sorted profile keys: a
+    // profile edit mid-lineage would silently re-index every counter
+    langStateTable.foreach(_.pinOrVerify("lang_profiles",
+      graft.text.LangDetect.signature(cfg.langProfiles)))
+    // the lineage guard: once the lineage has committed batches, every table
+    // a batch writes alongside the supports must be non-empty. An empty
+    // state table is a wrong/lost one and would silently drop every
+    // cross-batch antecedent or language counter (lastBatch is stamped only
+    // after the state publishes, so a committed stamp implies the state
+    // generation exists); an empty derived table means earlier batches were
+    // ingested WITHOUT propagation, and late enabling would miss their edges
+    val committed = table.currentGeneration("lastBatch").isDefined &&
+      table.currentGeneration().isDefined
+    val wired =
+      corefStateTable.filter(_ => cfg.corefResolution).map(_ -> "coref state") ++
+        langStateTable.filter(_ => cfg.detectLanguage).map(_ -> "language state") ++
+        derivedTables.map(_ -> "derived")
+    for ((t, what) <- wired if committed && t.currentGeneration().isEmpty)
+      throw new IllegalStateException(
+        s"stream lineage has committed batches but its $what table is " +
+          "empty — a wrong/lost table, or earlier batches were never " +
+          "propagated; rebuild from a fresh checkpoint")
     val bucketOf =
       PipelineConfig.bucketCol(cfg.bucketKeyExpr, "conv_id", B)
     val derived = for (e <- edgeTable; n <- nodeTable)
@@ -240,19 +212,10 @@ object StreamingSync {
           // never collide across checkpoint lineages (a fresh lineage's
           // batch 0 is a different logical batch than an old lineage's)
           val runId = s"stream-$ckptId-$batchId"
-          // K2 parity with the batch sync (KgPipeline.quarantined):
-          // structurally-bad rows divert to the runId-scoped quarantine
-          // table instead of flowing into the additive merge. Overwrite +
-          // runId scoping keeps a crash-replay from double-appending.
-          val good =
-            if (!cfg.quarantineBadRows) batch
-            else {
-              val (g, bad) = graft.io.Quarantine.split(
-                batch.toDF(), graft.io.Quarantine.turnChecks)
-              bad.write.mode("overwrite").parquet(
-                s"${cfg.workDir}/quarantine/run_id=$runId")
-              g.as[Turn]
-            }
+          // the batch pipeline's own quarantine: bad rows divert to the
+          // runId-scoped quarantine table, written only when there are any
+          val (good, fireQuarantine) =
+            KgPipeline.quarantined(s, batch, cfg.workDir, runId)
           // cross-batch state: the coref antecedents (see corefStep) and the
           // cumulative language counters (see langStep)
           val (coref, publishCorefState) =
@@ -279,6 +242,9 @@ object StreamingSync {
             // consumer would double the batch work
             .localCheckpoint(true)
           merged += obs.get("n").asInstanceOf[Long]
+          // the bad-row count rode the actions above: the write runs only
+          // for a batch that has bad rows
+          fireQuarantine()
           // the buckets this batch touches — at most B driver-side ints.
           // Under detectLanguage the batch's CONVERSATION buckets join in:
           // a conversation whose new turns carry no extractable support can
@@ -637,30 +603,12 @@ object StreamingSync {
     (resolve, () => publish())
   }
 
-  /** Stable identity of a checkpoint directory (created on first use;
-    * written atomically — a kill mid-write must never leave a truncated id
-    * that silently becomes the lineage identity). */
-  private def checkpointIdentity(checkpointDir: String): String = {
-    val dir = java.nio.file.Paths.get(checkpointDir)
-    java.nio.file.Files.createDirectories(dir)
-    val f = dir.resolve("graft-ckpt-id")
-    if (java.nio.file.Files.exists(f))
-      java.nio.file.Files.readString(f).trim
-    else {
-      val id = java.util.UUID.randomUUID().toString
-      val tmp = dir.resolve(s".graft-ckpt-id.${java.util.UUID.randomUUID()}.tmp")
-      java.nio.file.Files.writeString(tmp, id)
-      try {
-        java.nio.file.Files.move(tmp, f,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        id
-      } catch {
-        // lost the first-initializer race: adopt the winner's id
-        case _: java.nio.file.FileAlreadyExistsException |
-             _: java.nio.file.FileSystemException =>
-          java.nio.file.Files.deleteIfExists(tmp)
-          java.nio.file.Files.readString(f).trim
-      }
-    }
-  }
+  /** Stable identity of a checkpoint directory, created once on first use:
+    * concurrent first starts all adopt the one id that lands on disk, and
+    * a kill mid-write never leaves a truncated id that silently becomes the
+    * lineage identity ([[TableCommitter.createOnce]]). */
+  private[graft] def checkpointIdentity(checkpointDir: String): String =
+    TableCommitter.createOnce(
+      java.nio.file.Paths.get(checkpointDir).resolve("graft-ckpt-id"),
+      java.util.UUID.randomUUID().toString)
 }

@@ -445,7 +445,7 @@ class KgPipelineSpec extends AnyFunSuite {
     val p = new KgPipeline(PipelineConfig(workDir = wd))
     p.runFull(spark, turnsDs(small.turns), small.catalog, small.markers, "r1")
     // simulate a workDir published by pre-semantics-pin code
-    Files.delete(java.nio.file.Paths.get(s"$wd/_meta_pipeline/semantics"))
+    Files.delete(java.nio.file.Paths.get(s"$wd/tables/support/_meta/pins/semantics"))
     val e = intercept[IllegalStateException](
       p.runSync(spark, turnsDs(small.turns), small.catalog, small.markers,
         "sync-prepin"))

@@ -248,4 +248,26 @@ class StreamingLangSpec extends AnyFunSuite {
         TranscriptGen.markerPreds, edited, table, langStateTable = Some(state)))
     assert(e3.getMessage.contains("lang_profiles"))
   }
+
+  test("lineage guard: a detectLanguage lineage with committed batches " +
+       "refuses an empty language state table") {
+    val spark = SparkTestSession.get
+    import spark.implicits._
+    val cfg = PipelineConfig(detectLanguage = true, workDir = TempDirs("slang-work-"))
+    val catalog = TranscriptGen.catalog(2)
+    val inDir = TempDirs("slang-in-")
+    Seq(t("c0", 0, "al0x uses al1x the of")).toDS()
+      .coalesce(1).write.mode("overwrite").parquet(inDir)
+    val table = new TableCommitter(TempDirs("slang-tbl-"))
+    val ckpt = TempDirs("slang-ckpt-")
+    StreamingSync.ingestAvailableNow(spark, inDir, ckpt, catalog,
+      TranscriptGen.markerPreds, cfg, table,
+      langStateTable = Some(new TableCommitter(TempDirs("slang-state-"))))
+    assert(table.currentGeneration("lastBatch").isDefined)
+    val e = intercept[IllegalStateException](
+      StreamingSync.ingestAvailableNow(spark, inDir, ckpt, catalog,
+        TranscriptGen.markerPreds, cfg, table,
+        langStateTable = Some(new TableCommitter(TempDirs("slang-lost-")))))
+    assert(e.getMessage.contains("language state"))
+  }
 }

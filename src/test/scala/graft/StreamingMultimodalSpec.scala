@@ -662,4 +662,113 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("semantics"))
   }
+
+  test("stream quarantine: a micro-batch with no bad rows writes no " +
+       "quarantine dir") {
+    val spark = SparkTestSession.get
+    import spark.implicits._
+    val fx = TranscriptGen.generate(nConv = 4, nEnt = 5, hotFactor = 1)
+    val inDir = TempDirs("stream-q0-in-")
+    fx.turns.toDS().coalesce(1).write.mode("overwrite").parquet(inDir)
+    val work = TempDirs("stream-q0-wd-")
+    val table = new TableCommitter(TempDirs("stream-q0-tbl-"))
+    StreamingSync.ingestAvailableNow(spark, inDir, TempDirs("stream-q0-ck-"),
+      fx.catalog, fx.markers, PipelineConfig(workDir = work), table)
+    assert(table.currentGeneration("lastBatch").contains("0"))
+    assert(!Files.exists(java.nio.file.Paths.get(work, "quarantine")),
+      "a clean micro-batch must not write a quarantine dir")
+  }
+
+  test("stream quarantine: an all-bad micro-batch quarantines every row, " +
+       "publishes nothing and stamps lastBatch; the next clean batch ingests") {
+    val spark = SparkTestSession.get
+    import spark.implicits._
+    val fx = TranscriptGen.generate(nConv = 6, nEnt = 6, hotFactor = 1)
+    val firstConv = fx.turns.head.conv_id
+    val (early, late) = fx.turns.partition(_.conv_id == firstConv)
+    val bad = fx.turns.take(5).zipWithIndex
+      .map { case (t, i) => t.copy(turn_idx = 1000 + i, text = null) }
+    val inDir = TempDirs("stream-qb-in-")
+    val work = TempDirs("stream-qb-wd-")
+    val cfg = PipelineConfig(workDir = work)
+    val table = new TableCommitter(TempDirs("stream-qb-tbl-"))
+    val eTbl = new TableCommitter(TempDirs("stream-qb-e-"))
+    val nTbl = new TableCommitter(TempDirs("stream-qb-n-"))
+    val ckpt = TempDirs("stream-qb-ck-")
+    def ingest(turns: Seq[graft.schema.Turn]): Unit = {
+      turns.toDS().coalesce(1).write.mode("append").parquet(inDir)
+      StreamingSync.ingestAvailableNow(spark, inDir, ckpt, fx.catalog,
+        fx.markers, cfg, table, edgeTable = Some(eTbl), nodeTable = Some(nTbl))
+    }
+
+    ingest(early)
+    val (gS, gE) = (table.currentGeneration(), eTbl.currentGeneration())
+    assert(gS.isDefined && gE.isDefined)
+
+    ingest(bad)
+    assert(table.currentGeneration("lastBatch").contains("1"))
+    assert(table.currentGeneration() == gS, "an all-bad batch published supports")
+    assert(eTbl.currentGeneration() == gE, "an all-bad batch published edges")
+    val q = spark.read.parquet(s"$work/quarantine")
+    assert(q.count() == bad.size)
+    assert(q.select("quarantine_reason").distinct().collect()
+      .map(_.getString(0)).toSeq == Seq("null_text"))
+    assert(q.select("run_id").distinct().collect().map(_.getString(0))
+      .forall(_.endsWith("-1")), "only the all-bad batch quarantines")
+
+    ingest(late)
+    assert(table.currentGeneration("lastBatch").contains("2"))
+    assert(eTbl.currentGeneration() != gE)
+    val streamed = table.read(spark).get.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)) -> r.getLong(5))
+      .toMap
+    val batch = graft.extract.Extractor
+      .extract(fx.turns.toDS(), fx.catalog, fx.markers,
+        canon = TranscriptGen.components(fx.catalog)).toDF()
+      .groupBy("conv_id", "subj", "pred", "obj").count()
+      .collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)) -> r.getLong(4))
+      .toMap
+    assert(streamed == batch)
+  }
+
+  test("lineage guard: a coref lineage with committed batches refuses an " +
+       "empty coref state table") {
+    val spark = SparkTestSession.get
+    import spark.implicits._
+    val fx = TranscriptGen.generate(nConv = 4, nEnt = 5, hotFactor = 1)
+    val inDir = TempDirs("stream-cg-in-")
+    fx.turns.toDS().coalesce(1).write.mode("overwrite").parquet(inDir)
+    val cfg = PipelineConfig(corefResolution = true)
+    val table = new TableCommitter(TempDirs("stream-cg-tbl-"))
+    val ckpt = TempDirs("stream-cg-ck-")
+    StreamingSync.ingestAvailableNow(spark, inDir, ckpt, fx.catalog,
+      fx.markers, cfg, table,
+      corefStateTable = Some(new TableCommitter(TempDirs("stream-cg-st-"))))
+    assert(table.currentGeneration("lastBatch").isDefined)
+    val e = intercept[IllegalStateException] {
+      StreamingSync.ingestAvailableNow(spark, inDir, ckpt, fx.catalog,
+        fx.markers, cfg, table,
+        corefStateTable = Some(new TableCommitter(TempDirs("stream-cg-lost-"))))
+    }
+    assert(e.getMessage.contains("coref state"))
+  }
+
+  test("checkpointIdentity: concurrent first starts on a fresh checkpoint " +
+       "all return the one lineage id on disk") {
+    val dir = TempDirs("stream-ckid-")
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val ids = (1 to 8).map(_ => pool.submit(
+        new java.util.concurrent.Callable[String] {
+          def call(): String = { go.await(); StreamingSync.checkpointIdentity(dir) }
+        }))
+      go.countDown()
+      val got = ids.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS)).toSet
+      val onDisk = Files.readString(
+        java.nio.file.Paths.get(dir).resolve("graft-ckpt-id")).trim
+      assert(got == Set(onDisk))
+    } finally pool.shutdown()
+  }
 }
