@@ -2,7 +2,8 @@ package graft.io
 
 import java.nio.file.{Files, Path, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.collect_set
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Shared small I/O helpers used by the committer, the checkpoint store and
@@ -17,6 +18,22 @@ object SparkIo {
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(s"graft:$desc")
     try body finally sc.setJobDescription(prev)
+  }
+
+  /** Materialize `df` once (`localCheckpoint(true)`) and learn the distinct
+    * values of `bucket` over it in the SAME Spark job: a `collect_set` rides
+    * the checkpoint through `observe` (at most B driver-side ints), so the
+    * bucket set costs no job of its own. The job is labelled
+    * `graft:collect:<name>`. A missing observation means AQE pruned the plan
+    * to an empty relation: the empty set. */
+  def checkpointBuckets(df: DataFrame, bucket: Column,
+                        name: String): (DataFrame, Set[Int]) = {
+    val obs = new Observation()
+    val ck = withJobDesc(df.sparkSession, s"collect:$name")(
+      df.observe(obs, collect_set(bucket).as("buckets")).localCheckpoint(true))
+    val bs = obs.get.get("buckets").toSeq
+      .flatMap(_.asInstanceOf[scala.collection.Seq[Any]]).map(_.toString.toInt)
+    (ck, bs.toSet)
   }
 
   /** Atomically write the schema sidecar for a parquet directory: makes a

@@ -61,6 +61,24 @@ final class TableCommitter(rootDir: String) {
   def readGeneration(spark: SparkSession, gen: String): Option[DataFrame] =
     generationPath(gen).map(p => SparkIo.readParquetWithSidecar(spark, p.toString))
 
+  /** The table as it stood BEFORE `runId` published into it: the current
+    * generation, or the parent of the one `runId` already published (a
+    * crash replay); `None` = no generation before the run. Throws
+    * [[TableCommitter.ExpiredGeneration]] if retention expired that parent:
+    * reading it as empty would re-derive a change the table absorbed. */
+  def readBefore(spark: SparkSession, runId: String): Option[DataFrame] =
+    publishedGeneration(runId) match {
+      case None => read(spark)
+      case Some(gen) =>
+        val n = gen.stripPrefix("gen-").toLong
+        if (n == 0) None
+        else Some(readGeneration(spark, s"gen-${n - 1}").getOrElse(
+          throw new TableCommitter.ExpiredGeneration(
+            s"replaying $runId needs $root's pre-run snapshot gen-${n - 1}, " +
+              "but retention expired it — raise retention or rebuild the " +
+              "table")))
+    }
+
   /** Every alias pointer and the generation it references (control-plane
     * inspection surface — KgAdmin renders this; keeping the pointer-file
     * layout private to this class). */
@@ -536,6 +554,9 @@ object TableCommitter {
     }
     Files.readString(f).trim
   }
+
+  /** A replay needs a generation that retention already expired. */
+  final class ExpiredGeneration(msg: String) extends IllegalStateException(msg)
 
   /** Physical partition column of bucketed tables. */
   val BucketCol = "bucket"

@@ -1,27 +1,31 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.config.PipelineConfig
 import graft.io.{SparkIo, TableCommitter}
 import graft.materialize.DocAssembler
 
-/** The one propagation rule from a support delta to the derived tables,
-  * shared by the batch sync (KgPipeline) and the streaming ingest
-  * (StreamingSync):
+/** The one propagation from a support delta to the derived tables, shared
+  * by the batch sync (KgPipeline) and the streaming ingest (StreamingSync):
   *  - an edge's weight is the sum of its support weights;
   *  - a node's refs count the distinct edge keys it is an endpoint of;
   *  - a doc is the pivot of one subject's edges.
   *
   * Every write is a bucketed stage + publish of only the touched buckets;
-  * the rest carry into the new generation by hard link. Crash safety stays
-  * with the callers: the batch sync checkpoints the edge and node deltas as
-  * stages, the streaming ingest reads the parent generation as `pre` on a
-  * replay. Both rely on publishes being runId-idempotent. */
+  * the rest carry into the new generation by hard link.
+  *
+  * One crash-safety rule serves both callers: a retry replays the same
+  * delta under the same runId (the batch sync from its `edge_delta` stage,
+  * the stream by re-running the micro-batch), publishes are
+  * runId-idempotent, and the merge reads the edges as they stood BEFORE
+  * the run ([[TableCommitter.readBefore]]). If retention expired that
+  * generation, nodes and docs are rebuilt whole from the published edges. */
 final class DerivedTables(cfg: PipelineConfig, val edgeTable: TableCommitter,
                           nodeTable: TableCommitter,
-                          docTable: Option[TableCommitter]) {
+                          docTable: Option[TableCommitter],
+                          afterPublish: String => Unit = _ => ()) {
   import DerivedTables._
 
   private val B = cfg.syncBuckets
@@ -31,15 +35,54 @@ final class DerivedTables(cfg: PipelineConfig, val edgeTable: TableCommitter,
   val edgeBucket: Column = PipelineConfig.bucketCol(cfg.bucketKeyExpr, "subj", B)
   val nodeBucket: Column = PipelineConfig.bucketCol(cfg.bucketKeyExpr, "entity_id", B)
 
+  /** Propagate a keyed weight delta `(subj, pred, obj, lang, dw)` whose
+    * keys lie in `edgeBuckets` into the edges, then the nodes, then the
+    * docs. A node or doc table with no generation is built whole from the
+    * published edges; otherwise edges move only when `edgeBuckets` is
+    * non-empty, nodes only when the ref delta is, and docs only when an
+    * edge key was created or retired (see publishDocs). */
+  def propagate(spark: SparkSession, delta: DataFrame, edgeBuckets: Set[Int],
+                runId: String): Unit = {
+    // no delta and no edges yet: there is nothing to derive from
+    if (edgeBuckets.isEmpty && edgeTable.currentGeneration().isEmpty) return
+    val (refDelta, nodeBuckets, keysMoved) =
+      // no key moved: the empty delta stands in for the empty ref delta
+      if (edgeBuckets.isEmpty) (delta, Set.empty[Int], false)
+      else {
+        val pre = try edgeTable.readBefore(spark, runId) catch {
+          case _: TableCommitter.ExpiredGeneration =>
+            publishAllNodesAndDocs(spark, runId)
+            return
+        }
+        val keys = new Observation()
+        val (edges, refs) = mergeEdges(
+          pre.map(_.filter(col(TableCommitter.BucketCol)
+            .isin(edgeBuckets.toSeq: _*)) // pruned
+            .drop(TableCommitter.BucketCol)),
+          delta, keys)
+        val (nodeDelta, nodeBuckets) =
+          SparkIo.checkpointBuckets(refs, nodeBucket, "node-delta")
+        publishEdges(edges, edgeBuckets, runId)
+        (nodeDelta, nodeBuckets,
+          keys.get.get("n").exists(_.asInstanceOf[Long] > 0))
+      }
+    publishNodes(spark, refDelta, nodeBuckets, runId)
+    publishDocs(spark, delta.select("subj").distinct(), edgeBuckets,
+      keysMoved, runId)
+  }
+
   /** Merge a keyed weight delta `(subj, pred, obj, lang, dw)` into `pre`,
     * the pre-merge edges of the delta's buckets (`None` when the edge table
-    * has no generation yet). One full outer join on the edge key yields
-    * both results:
+    * had no generation). One full outer join on the edge key yields both
+    * results:
     *  - the merged edges: `weight = prior + dw`, rows with weight > 0 kept;
     *  - the node ref delta `(entity_id, dn)`: +1 per endpoint of a created
     *    key (no prior weight, new weight > 0), -1 per endpoint of a retired
-    *    key (prior weight, new weight <= 0), zero sums dropped. */
-  def mergeEdges(pre: Option[DataFrame], delta: DataFrame): (DataFrame, DataFrame) = {
+    *    key (prior weight, new weight <= 0), zero sums dropped.
+    * `keys` observes the number of created plus retired keys, counted per
+    * key before the per-entity sum can cancel them. */
+  private def mergeEdges(pre: Option[DataFrame], delta: DataFrame,
+                         keys: Observation): (DataFrame, DataFrame) = {
     val joined = pre match {
       case Some(p) =>
         p.select(EdgeKey.map(col) :+ col("weight").as("w0"): _*)
@@ -55,6 +98,7 @@ final class DerivedTables(cfg: PipelineConfig, val edgeTable: TableCommitter,
         when(col("w0").isNull && col("weight") > 0, lit(1L))
           .when(col("w0").isNotNull && col("weight") <= 0, lit(-1L)))
       .filter(col("dn").isNotNull)
+      .observe(keys, count(lit(1)).as("n"))
       .select(explode(array(col("subj"), col("obj"))).as("entity_id"), col("dn"))
       .groupBy("entity_id").agg(sum(col("dn")).as("dn"))
       .filter(col("dn") =!= 0)
@@ -62,20 +106,22 @@ final class DerivedTables(cfg: PipelineConfig, val edgeTable: TableCommitter,
   }
 
   /** Stage + publish edges that replace exactly `buckets`. */
-  def publishEdges(edges: DataFrame, buckets: Set[Int], runId: String): String = {
-    edgeTable.stagePartitioned(edges.withColumn(TableCommitter.BucketCol, edgeBucket), runId)
-    edgeTable.publishBuckets(runId, buckets)
+  def publishEdges(edges: DataFrame, buckets: Set[Int], runId: String): Unit = {
+    publish(edgeTable, edges, edgeBucket, buckets, runId)
+    afterPublish("edges")
   }
 
   /** Additive merge of a node ref delta `(entity_id, dn)` into the node
     * buckets it touches; an entity whose refs reach 0 drops. A node table
     * with no generation (a crash before its first publish) is built whole
     * from the published edges instead. */
-  def publishNodes(spark: SparkSession, refDelta: DataFrame, buckets: Set[Int],
-                   runId: String): String =
+  private def publishNodes(spark: SparkSession, refDelta: DataFrame,
+                           buckets: Set[Int], runId: String): Unit =
     nodeTable.read(spark) match {
       case None =>
-        publishAll(nodeTable, nodesOf(edgeTable.read(spark).get), nodeBucket, runId)
+        publish(nodeTable, nodesOf(edgeTable.read(spark).get), nodeBucket,
+          allBuckets, runId)
+      case Some(_) if buckets.isEmpty => // no entity's refs moved
       case Some(cur) =>
         val merged = cur
           .filter(col(TableCommitter.BucketCol).isin(buckets.toSeq: _*)) // pruned
@@ -83,18 +129,16 @@ final class DerivedTables(cfg: PipelineConfig, val edgeTable: TableCommitter,
           .unionByName(refDelta.select(col("entity_id"), col("dn").as("refs")))
           .groupBy("entity_id").agg(sum(col("refs")).as("refs"))
           .filter(col("refs") > 0)
-        nodeTable.stagePartitioned(
-          merged.withColumn(TableCommitter.BucketCol, nodeBucket), runId)
-        nodeTable.publishBuckets(runId, buckets)
+        publish(nodeTable, merged, nodeBucket, buckets, runId)
     }
 
-  /** Node and doc tables built whole from the published edges (full
-    * harvest): one read of the edge snapshot feeds both. */
-  def publishAllNodesAndDocs(spark: SparkSession, runId: String): String = {
+  /** Node and doc tables built whole from the published edges (a full
+    * harvest, or a retry whose pre-run edges retention expired): one read
+    * of the edge snapshot feeds both. */
+  def publishAllNodesAndDocs(spark: SparkSession, runId: String): Unit = {
     val edges = edgeTable.read(spark).get
-    val gen = publishAll(nodeTable, nodesOf(edges), nodeBucket, runId)
-    docTable.foreach(publishAll(_, docsOf(edges), edgeBucket, runId))
-    gen
+    publish(nodeTable, nodesOf(edges), nodeBucket, allBuckets, runId)
+    docTable.foreach(publish(_, docsOf(edges), edgeBucket, allBuckets, runId))
   }
 
   private def docsOf(edges: DataFrame): DataFrame =
@@ -105,7 +149,10 @@ final class DerivedTables(cfg: PipelineConfig, val edgeTable: TableCommitter,
     * subject-bucketed, so the changed subjects map to exactly the delta's
     * edge buckets (`edgeBuckets`): rebuild their docs from their pruned
     * post-merge edge slice, keep every other doc of those buckets, carry
-    * untouched buckets by hard link.
+    * untouched buckets by hard link. Skipped when no edge key was created
+    * or retired (`keysMoved`): docs render keys, never weights, and the
+    * node delta cannot stand in (retiring (s, p1, o) while creating
+    * (s, p2, o) cancels per entity).
     *
     * uriDescription labels resolve against the slice's own object URIs,
     * read from those objects' buckets only — result-identical to a
@@ -117,43 +164,43 @@ final class DerivedTables(cfg: PipelineConfig, val edgeTable: TableCommitter,
     * value. A doc table with no generation (publishDocs enabled after a
     * docs-less run) is built whole: a slice would present only the changed
     * subjects' docs as the whole table. */
-  def publishDocs(spark: SparkSession, changedSubjects: DataFrame,
-                  edgeBuckets: Set[Int], runId: String): Unit =
+  private def publishDocs(spark: SparkSession, changedSubjects: DataFrame,
+                          edgeBuckets: Set[Int], keysMoved: Boolean,
+                          runId: String): Unit =
     docTable.foreach { dTbl =>
       dTbl.read(spark) match {
         case None =>
-          publishAll(dTbl, docsOf(edgeTable.read(spark).get), edgeBucket, runId)
+          publish(dTbl, docsOf(edgeTable.read(spark).get), edgeBucket,
+            allBuckets, runId)
+        case Some(_) if !keysMoved =>
         case Some(curD) =>
           val postEdges = edgeTable.read(spark).get
-          val affected =
-            if (!cfg.refreshReferencingDocs) changedSubjects
-            else changedSubjects.unionByName(
+          // a referencing subject can live outside the delta's edge buckets
+          val (affected, docBuckets) =
+            if (!cfg.refreshReferencingDocs) (changedSubjects, edgeBuckets)
+            else SparkIo.checkpointBuckets(changedSubjects.unionByName(
               // obj is not the bucket key, so this scans the edge table —
               // the documented cost of opting into label freshness
               postEdges
                 .join(changedSubjects.withColumnRenamed("subj", "obj"),
                   Seq("obj"), "left_semi")
-                .select("subj")).distinct()
-              // materialized ONCE: the bucket collect, the slice semi-join
-              // and the kept anti-join would each re-run the obj-side scan
-              .localCheckpoint(true)
-          // a referencing subject can live outside the delta's edge buckets
-          val docBuckets =
-            if (!cfg.refreshReferencingDocs) edgeBuckets
-            else subjectBuckets(spark, "doc-buckets", affected)
+                .select("subj")).distinct(),
+              // materialized ONCE: the slice semi-join and the kept
+              // anti-join would each re-run the obj-side scan
+              edgeBucket, "doc-buckets")
           val slice = postEdges
             .filter(col(TableCommitter.BucketCol).isin(docBuckets.toSeq: _*)) // pruned
             .join(affected, Seq("subj"), "left_semi")
             .select(EdgeKey.map(col): _*)
           // restricted to the slice's objects BEFORE aggregation: resolving
           // against the whole edge table would make per-sync doc cost
-          // O(table), not O(delta). Materialized once: consumed by the
-          // bucket collect AND the label semi-join
-          val sliceObjs = slice.select(col("obj").as("subj")).distinct()
-            .localCheckpoint(true)
+          // O(table), not O(delta). Materialized once with its bucket set:
+          // the label source reads only those buckets
+          val (sliceObjs, labelBuckets) = SparkIo.checkpointBuckets(
+            slice.select(col("obj").as("subj")).distinct(), edgeBucket,
+            "label-buckets")
           val labelSrc = postEdges
-            .filter(col(TableCommitter.BucketCol)
-              .isin(subjectBuckets(spark, "label-buckets", sliceObjs).toSeq: _*))
+            .filter(col(TableCommitter.BucketCol).isin(labelBuckets.toSeq: _*))
             .join(sliceObjs, Seq("subj"), "left_semi")
             .select(EdgeKey.map(col): _*)
           val rebuilt = DocAssembler.assemble(
@@ -162,22 +209,16 @@ final class DerivedTables(cfg: PipelineConfig, val edgeTable: TableCommitter,
             .filter(col(TableCommitter.BucketCol).isin(docBuckets.toSeq: _*))
             .drop(TableCommitter.BucketCol)
             .join(affected, Seq("subj"), "left_anti")
-          dTbl.stagePartitioned(rebuilt.unionByName(kept)
-            .withColumn(TableCommitter.BucketCol, edgeBucket), runId)
-          dTbl.publishBuckets(runId, docBuckets)
+          publish(dTbl, rebuilt.unionByName(kept), edgeBucket, docBuckets,
+            runId)
       }
     }
 
-  /** The buckets of `df`'s subjects — at most B driver-side ints. */
-  private def subjectBuckets(spark: SparkSession, label: String,
-                             df: DataFrame): Set[Int] =
-    SparkIo.withJobDesc(spark, s"collect:$label")(
-      df.select(edgeBucket.as("b")).distinct().collect()).map(_.getInt(0)).toSet
-
-  private def publishAll(t: TableCommitter, df: DataFrame, bucket: Column,
-                         runId: String): String = {
+  /** Stage `df` bucketed by `bucket` and publish it as exactly `buckets`. */
+  private def publish(t: TableCommitter, df: DataFrame, bucket: Column,
+                          buckets: Set[Int], runId: String): Unit = {
     t.stagePartitioned(df.withColumn(TableCommitter.BucketCol, bucket), runId)
-    t.publishBuckets(runId, allBuckets)
+    t.publishBuckets(runId, buckets)
   }
 }
 

@@ -39,7 +39,7 @@ final class KgPipeline(cfg: PipelineConfig) {
   val docTable = new TableCommitter(s"${cfg.workDir}/tables/docs")
   val checkpoints = new CheckpointStore(s"${cfg.workDir}/checkpoints")
   private val derived = new DerivedTables(cfg, edgeTable, nodeTable,
-    Some(docTable).filter(_ => cfg.publishDocs))
+    Some(docTable).filter(_ => cfg.publishDocs), publishHook)
 
   /** Test hook: simulate a crash immediately after the named stage commits. */
   @volatile var failAfterStage: Option[String] = None
@@ -165,8 +165,9 @@ final class KgPipeline(cfg: PipelineConfig) {
     var fire: () => Option[Timestamp] = () => None
     val supports = stage(spark, runId, name,
       afterWrite = tmp => writeWmSidecar(tmp, fire())) {
-      val (good, f) = KgPipeline.quarantined(spark, turns, cfg.workDir, runId)
-      fire = f
+      val (good, writeBad, watermark) =
+        KgPipeline.quarantined(spark, turns, cfg.workDir, runId)
+      fire = () => { writeBad(); watermark() }
       computeSupports(spark, good, catalog, markers)
     }
     val wm = readWmSidecar(runId, name).getOrElse(KgPipeline.maxEventTime(turns))
@@ -336,7 +337,6 @@ final class KgPipeline(cfg: PipelineConfig) {
         nodeTable.currentGeneration().isDefined &&
         (!cfg.publishDocs || docTable.currentGeneration().isDefined)) {
       return finishRun(spark, runId, None,
-        edgeTable.currentGeneration().get, nodeTable.currentGeneration().get,
         edgeTable.currentRecordCount(spark).getOrElse(0L))
     }
 
@@ -407,8 +407,21 @@ final class KgPipeline(cfg: PipelineConfig) {
         supportTable.publishBuckets(runId, changedBuckets)
         publishHook("support")
 
-        publishDerivedIncremental(spark, runId, deltaCk, affectedEdgeBuckets,
-          newWm)
+        if (edgeTable.currentGeneration().isEmpty)
+          // the previous run crashed between the support publish and the
+          // edge publish (e.g. a first-ever run that arrived as a sync): no
+          // edge snapshot exists to merge a delta into — derive everything
+          // fully from the published supports, which already contain the
+          // replayed update
+          publishDerivedFull(spark, runId,
+            supportTable.read(spark).get.drop("bucket"), newWm)
+        else {
+          derived.propagate(spark, deltaCk, affectedEdgeBuckets, runId)
+          // snapshot-level triple count straight from parquet footers —
+          // zero Spark jobs (a metadata-only Spark count still schedules ~2)
+          finishRun(spark, runId, newWm,
+            edgeTable.currentRecordCount(spark).getOrElse(0L))
+        }
     }
   }
 
@@ -423,61 +436,19 @@ final class KgPipeline(cfg: PipelineConfig) {
       .groupBy(DerivedTables.EdgeKey.map(col): _*)
       .agg(sum(col("weight")).as("weight"))
       .observe(obs, count(lit(1)).as("n"), sum(col("weight")).as("total_weight"))
-    val edgesGen = derived.publishEdges(edges, allBucketIds, runId)
-    publishHook("edges")
+    derived.publishEdges(edges, allBucketIds, runId)
 
     // nodes and docs derive from the just-published parquet snapshot —
     // re-using the logical `edges` plan would re-run the whole supports
     // aggregation once per derived table
-    val nodesGen = derived.publishAllNodesAndDocs(spark, runId)
+    derived.publishAllNodesAndDocs(spark, runId)
 
-    finishRun(spark, runId, newWatermark, edgesGen, nodesGen,
-      obs.get("n").asInstanceOf[Long],
+    finishRun(spark, runId, newWatermark, obs.get("n").asInstanceOf[Long],
       Seq(("edges", "total_weight", obs.get("total_weight").asInstanceOf[Long])))
   }
 
-  /** Propagate a support-level weight delta `(subj, pred, obj, lang, dw)`
-    * into the edge, node and doc tables through [[DerivedTables]],
-    * rewriting only the buckets that contain affected keys. */
-  private def publishDerivedIncremental(spark: SparkSession, runId: String,
-                                        delta: DataFrame,
-                                        affectedEdgeBuckets: Set[Int],
-                                        newWatermark: Option[Timestamp]): RunResult = {
-    val curE = edgeTable.read(spark).getOrElse(
-      // the previous run crashed between the support publish and the edge
-      // publish (e.g. a first-ever run that arrived as a sync): no edge
-      // snapshot exists to merge a delta into — derive everything fully
-      // from the published supports, which already contain the replayed
-      // update
-      return publishDerivedFull(spark, runId,
-        supportTable.read(spark).get.drop("bucket"), newWatermark))
-    val (edges, refDelta) = derived.mergeEdges(
-      Some(curE.filter(col("bucket").isin(affectedEdgeBuckets.toSeq: _*)) // pruned
-        .drop("bucket")),
-      delta)
-
-    // the node ref delta derives from the PRE-publish edge state, so it is
-    // checkpointed BEFORE the edge publish — a resume after that publish
-    // would otherwise recompute it against the already-updated edges and
-    // lose the node update. The affected NODE bucket set rides the write.
-    val (nodeDelta, affectedNodeBuckets) =
-      stageWithBuckets(spark, runId, "node_delta", derived.nodeBucket)(refDelta)
-    val edgesGen = derived.publishEdges(edges, affectedEdgeBuckets, runId)
-    publishHook("edges")
-    val nodesGen = derived.publishNodes(spark, nodeDelta, affectedNodeBuckets, runId)
-    derived.publishDocs(spark, delta.select("subj").distinct(),
-      affectedEdgeBuckets, runId)
-
-    // snapshot-level triple count straight from parquet footers — zero
-    // Spark jobs (a metadata-only Spark count still schedules ~2)
-    finishRun(spark, runId, newWatermark, edgesGen, nodesGen,
-      edgeTable.currentRecordCount(spark).getOrElse(0L))
-  }
-
   private def finishRun(spark: SparkSession, runId: String,
-                        newWatermark: Option[Timestamp],
-                        edgesGen: String, nodesGen: String,
-                        nTriples: Long,
+                        newWatermark: Option[Timestamp], nTriples: Long,
                         extraMetrics: Seq[(String, String, Long)] = Seq.empty)
       : RunResult = {
     checkpoints.writeMetrics(spark, runId,
@@ -486,7 +457,8 @@ final class KgPipeline(cfg: PipelineConfig) {
       .orElse(checkpoints.lastWatermark(spark, cfg.pipelineId))
       .getOrElse(new Timestamp(0L))
     checkpoints.writeWatermark(spark, cfg.pipelineId, runId, wm, "success")
-    RunResult(runId, edgesGen, nodesGen, nTriples)
+    RunResult(runId, edgeTable.currentGeneration().get,
+      nodeTable.currentGeneration().get, nTriples)
   }
 }
 
@@ -502,11 +474,13 @@ object KgPipeline {
     * observation reports any (a second, rare scan), overwriting
     * `<workDir>/quarantine/run_id=<runId>`, so a crash-and-resume never
     * double-appends (K3 idempotence).
-    * @return (valid rows, fire) — call fire() only AFTER an action that
-    *         consumed the valid rows completed; it writes any quarantined
-    *         rows and returns the watermark observed across ALL rows. */
+    * @return (valid rows, writeBad, watermark) — call either thunk only
+    *         AFTER an action that consumed the valid rows completed;
+    *         writeBad writes any quarantined rows, watermark returns the max
+    *         ts observed across ALL rows. */
   def quarantined(spark: SparkSession, turns: Dataset[Turn], workDir: String,
-                  runId: String): (Dataset[Turn], () => Option[Timestamp]) = {
+                  runId: String)
+      : (Dataset[Turn], () => Unit, () => Option[Timestamp]) = {
     import spark.implicits._
     val obs = new org.apache.spark.sql.Observation()
     def wmOf(v: Any): Option[Timestamp] = v match {
@@ -523,23 +497,22 @@ object KgPipeline {
       max(col("ts")).as("max_ts"),
       count(when(reason.isNotNull, lit(1))).as("n_bad"))
     val (good, bad) = Quarantine.split(observed, Quarantine.turnChecks)
-    (good.as[Turn], () => {
-      // EMPTY-RESULT corner: when the consumer's result prunes to an empty
-      // relation, AQE's empty-relation propagation removes the whole
-      // subtree INCLUDING the CollectMetrics node — the observation then
-      // reports an empty map even though the action completed. Fall back
-      // to explicit input-sized passes: write the quarantine defensively
-      // (an all-bad input is exactly the empty-good-plan case) and
-      // re-derive the watermark.
-      val m = obs.get
-      if (m.get("n_bad").map(_.asInstanceOf[Long]).forall(_ > 0))
-        SparkIo.withJobDesc(spark, "quarantine-write")(
-          bad.write.mode("overwrite").parquet(s"$workDir/quarantine/run_id=$runId"))
-      m.get("max_ts") match {
+    // EMPTY-RESULT corner: when the consumer's result prunes to an empty
+    // relation, AQE's empty-relation propagation removes the whole subtree
+    // INCLUDING the CollectMetrics node — the observation then reports an
+    // empty map even though the action completed. Both thunks fall back to
+    // explicit input-sized passes: the quarantine is written defensively (an
+    // all-bad input is exactly the empty-good-plan case), and the watermark
+    // is re-derived only by a caller that reads it (the stream does not)
+    (good.as[Turn],
+      () =>
+        if (obs.get.get("n_bad").map(_.asInstanceOf[Long]).forall(_ > 0))
+          SparkIo.withJobDesc(spark, "quarantine-write")(
+            bad.write.mode("overwrite").parquet(s"$workDir/quarantine/run_id=$runId")),
+      () => obs.get.get("max_ts") match {
         case Some(v) => wmOf(v)
         case None => maxEventTime(turns)
-      }
-    })
+      })
   }
 
   /** Event-time watermark: the max source timestamp processed — the next

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.config.PipelineConfig
 import graft.extract.{CorefResolver, Extractor}
-import graft.io.TableCommitter
+import graft.io.{SparkIo, TableCommitter}
 import graft.pipeline.{DerivedTables, KgPipeline}
 import graft.schema.{CatalogEntry, Turn}
 
@@ -74,14 +74,8 @@ object StreamingSync {
       "detectLanguage=true on the streaming path needs a langStateTable " +
         "(the per-conversation profile counters live in their own bucketed " +
         "table, committed in lockstep with each batch)")
-    // Derived-table propagation under detectLanguage (round-5): a language
-    // flip re-keys support rows, and edges drop conv_id — so the flip
-    // propagates into the edge delta as a RETRACT+EMIT pair derived from
-    // the flipped conversations' PRE-batch support rows (read via the same
-    // preBatchRead snapshot discipline as the pre-batch edge read); an
-    // edge key whose weight retires to zero drops, and node refcounts
-    // decrement for dead keys exactly as they increment for created ones —
-    // see propagate.
+    // Derived tables under detectLanguage (round-5): a flip re-keys support
+    // rows, so it reaches the edges as a RETRACT+EMIT pair — see propagate.
     // scoredLinking IS streaming-safe (round-4): contextual disambiguation
     // is per-(conv, turn, alias) over the turn's OWN tokens, and a turn is
     // never split across micro-batches — resolving inside foreachBatch is
@@ -139,9 +133,9 @@ object StreamingSync {
         "this table was published without the bucketed layout (no 'bucket' " +
           "partition column): rebuild it from a fresh checkpoint with the " +
           "bucketed streaming ingest before resuming")
-    // derived-table propagation (edges/nodes, like the batch pipeline's
-    // publishDerived*): node refcounts derive from edge-key creation, so
-    // the two tables are wired together or not at all
+    // derived-table propagation (edges/nodes, like the batch sync's):
+    // node refcounts derive from edge-key creation, so the two tables are
+    // wired together or not at all
     require(edgeTable.isDefined == nodeTable.isDefined,
       "edgeTable and nodeTable must be wired together (node refcounts are " +
         "derived from edge-key creation events)")
@@ -213,18 +207,21 @@ object StreamingSync {
           // batch 0 is a different logical batch than an old lineage's)
           val runId = s"stream-$ckptId-$batchId"
           // the batch pipeline's own quarantine: bad rows divert to the
-          // runId-scoped quarantine table, written only when there are any
-          val (good, fireQuarantine) =
+          // runId-scoped quarantine table, written only when there are any;
+          // the stream keeps its offsets, so it never reads the watermark
+          val (good, writeBad, _) =
             KgPipeline.quarantined(s, batch, cfg.workDir, runId)
           // cross-batch state: the coref antecedents (see corefStep) and the
           // cumulative language counters (see langStep)
           val (coref, publishCorefState) =
             if (cfg.corefResolution)
-              corefStep(good, corefStateTable.get, bucketOf, runId)
+              SparkIo.withJobDesc(s, "stream-coref")(
+                corefStep(good, corefStateTable.get, bucketOf, runId))
             else (CorefResolver.resolve _, () => ())
           val langState =
             if (cfg.detectLanguage)
-              Some(langStep(good, langStateTable.get, cfg, bucketOf, runId))
+              Some(SparkIo.withJobDesc(s, "stream-lang")(
+                langStep(good, langStateTable.get, cfg, bucketOf, runId)))
             else None
           // the batch pipeline's own supports chain (canon, extraction,
           // scored linking, coref, normalization, language stamp) over this
@@ -232,27 +229,26 @@ object StreamingSync {
           // The observation rides the batch materialization and counts THIS
           // batch's extracted support rows (pre-merge), not the table size
           val obs = new org.apache.spark.sql.Observation(s"ingest-$batchId")
-          val supports = KgPipeline.supports(cfg, good, catalog, markers,
-              coref = coref, langs = langState.map(_._1))
-            .observe(obs, count(lit(1)).as("n"))
-            .select(keyCols.map(col) :+ col("weight") :+
-              bucketOf.as("bucket"): _*)
-            // materialized once (batch-sized): consumed by the bucket-set
-            // collect AND the merge below — recomputing the extraction per
-            // consumer would double the batch work
-            .localCheckpoint(true)
+          // materialized once (batch-sized) with its bucket set: the merge
+          // below and the derived delta consume it — recomputing the
+          // extraction per consumer would double the batch work
+          val (supports, supportBuckets) = SparkIo.checkpointBuckets(
+            KgPipeline.supports(cfg, good, catalog, markers,
+                coref = coref, langs = langState.map(_._1))
+              .observe(obs, count(lit(1)).as("n"))
+              .select(keyCols.map(col) :+ col("weight"): _*),
+            bucketOf, "stream-supports")
           merged += obs.get("n").asInstanceOf[Long]
-          // the bad-row count rode the actions above: the write runs only
+          // the bad-row count rode the checkpoint above: the write runs only
           // for a batch that has bad rows
-          fireQuarantine()
+          writeBad()
           // the buckets this batch touches — at most B driver-side ints.
-          // Under detectLanguage the batch's CONVERSATION buckets join in:
-          // a conversation whose new turns carry no extractable support can
-          // still flip its cumulative language, and its existing rows (in
-          // those buckets) must be re-keyed even with no support delta
-          val touched = supports.select("bucket").distinct()
-            .collect().map(_.getInt(0)).toSet ++
-            langState.map(_._2).getOrElse(Set.empty)
+          // Under detectLanguage the batch's flipped CONVERSATION buckets
+          // join in: a conversation whose new turns carry no extractable
+          // support can still flip its cumulative language, and its existing
+          // rows (in those buckets) must be re-keyed even with no support
+          // delta
+          val touched = supportBuckets ++ langState.map(_._2).getOrElse(Set.empty)
           if (touched.nonEmpty) {
             // additive merge WITHIN the touched buckets only: the current
             // generation's read is partition-pruned to them, and the publish
@@ -275,21 +271,21 @@ object StreamingSync {
                   case None => pruned
                 }
                 rekeyed
-                  .unionByName(supports.drop("bucket"))
+                  .unionByName(supports)
                   .groupBy(keyCols.map(col): _*)
                   .agg(sum(col("weight")).as("weight"))
-              case None =>
-                supports.drop("bucket")
+              case None => supports
             }
             table.stagePartitioned(combined.withColumn("bucket", bucketOf), runId)
             table.publishBuckets(runId, touched)
+            // derived tables publish AFTER the supports and BEFORE the coref
+            // state: recomputation inputs publish last, so a replay that
+            // sees an advanced input always finds every consumer already
+            // published (its wrong re-staging is discarded by runId
+            // idempotence)
+            derived.foreach(d => propagate(s, supports,
+              langState.map(l => (l._3, l._2)), table, d, runId))
           }
-          // derived tables publish AFTER the supports and BEFORE the coref
-          // state: recomputation inputs publish last, so a replay that sees
-          // an advanced input always finds every consumer already published
-          // (its wrong re-staging is discarded by runId idempotence)
-          derived.foreach(d => propagate(s, supports, langState.map(_._3),
-            table, d, bucketOf, runId))
           // coref + language state publish AFTER the supports and BEFORE
           // the stamp: then every crash window replays correctly (see
           // corefStep / langStep)
@@ -310,80 +306,44 @@ object StreamingSync {
 
   /** Derived-table propagation per micro-batch, O(batch): the batch's
     * support delta flows into the edge, node and doc tables through
-    * [[graft.pipeline.DerivedTables]], the batch sync's own rule.
+    * [[graft.pipeline.DerivedTables.propagate]], the batch sync's own
+    * propagation, crash-safety and skip rules included.
     *
     * The delta is the batch's supports, plus under detectLanguage a
-    * RETRACT+EMIT pair per flipped conversation (`flips`): its PRE-batch
-    * support rows retract at the old lang and emit at the new one, so a key
-    * whose merged weight reaches zero retires and its node refs decrement.
-    * Everything else is append-only — vanished-data deletes belong to the
-    * batch sync.
-    *
-    * Crash safety: edges publish before nodes, nodes before docs, all
-    * before the coref state and the lastBatch stamp; publishes are
-    * runId-idempotent. The merge reads the PRE-batch edge generation
-    * ([[preBatchRead]]): on a replay whose edge publish already landed
-    * that is the published generation's PARENT — reading the advanced
-    * generation instead would find zero created keys and publish an empty
-    * node delta in the window where the node publish is still pending.
-    * Docs need no snapshot: they rebuild from the post-merge edges, which
-    * every replay window reads too. */
+    * RETRACT+EMIT pair per flipped conversation (`flips`, with their
+    * support buckets): its PRE-batch support rows retract at the old lang
+    * and emit at the new one, so a key whose merged weight reaches zero
+    * retires and its node refs decrement. Everything else is append-only —
+    * vanished-data deletes belong to the batch sync. */
   private def propagate(s: SparkSession, supports: DataFrame,
-                        flips: Option[DataFrame], supTbl: TableCommitter,
-                        derived: DerivedTables, bucketOf: Column,
+                        flips: Option[(DataFrame, Set[Int])],
+                        supTbl: TableCommitter, derived: DerivedTables,
                         runId: String): Unit = {
     val eKeys = DerivedTables.EdgeKey.map(col)
-    // language-flip propagation (detectLanguage): a flipped conversation's
-    // PRE-batch support rows (snapshot read — the supports table already
-    // advanced this batch) become a retract at the old lang (-weight) and
-    // an emit at the new one (+weight). Edge weights are sums of support
-    // weights over conversations, so the retract subtracts exactly this
-    // conversation's contribution.
-    val flipDelta: Option[DataFrame] = flips.filter(f => !f.isEmpty).flatMap { f =>
-      preBatchRead(s, supTbl, runId).map { priorSup =>
-        val flipBuckets = f.select(bucketOf.as("b"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        val rows = priorSup
-          .filter(col("bucket").isin(flipBuckets: _*)) // pruned
-          .join(f.select(col("conv_id"), col("lang").as("lang_new")),
-            Seq("conv_id"), "inner")
-        rows.select(eKeys :+ (-col("weight")).as("dw"): _*)
-          .unionByName(rows.select(col("subj"), col("pred"), col("obj"),
-            col("lang_new").as("lang"), col("weight").as("dw")))
-      }
+    // read as the supports stood BEFORE this batch (the table already
+    // advanced; an expired parent fails loudly). Edge weights are sums of
+    // support weights, so the retract subtracts exactly this conversation's
+    // contribution
+    val flipDelta: Option[DataFrame] = flips.filter(_._2.nonEmpty).flatMap {
+      case (f, flipBuckets) =>
+        supTbl.readBefore(s, runId).map { priorSup =>
+          val rows = priorSup
+            .filter(col("bucket").isin(flipBuckets.toSeq: _*)) // pruned
+            .join(f.select(col("conv_id"), col("lang").as("lang_new")),
+              Seq("conv_id"), "inner")
+          rows.select(eKeys :+ (-col("weight")).as("dw"): _*)
+            .unionByName(rows.select(col("subj"), col("pred"), col("obj"),
+              col("lang_new").as("lang"), col("weight").as("dw")))
+        }
     }
-    val delta = flipDelta.foldLeft(
-        supports.select(eKeys :+ col("weight").as("dw"): _*))(_ unionByName _)
-      .groupBy(eKeys: _*).agg(sum(col("dw")).as("dw"))
-      .filter(col("dw") =!= 0L) // a flip's retract+emit can cancel
-      .withColumn("bucket", derived.edgeBucket)
-      // batch-edge-sized; feeds the bucket set, the merge AND the doc
-      // rebuild's subjects — materialized once
-      .localCheckpoint(true)
-    val eTouched = delta.select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSet
-    if (eTouched.isEmpty) return
-    val pre = preBatchRead(s, derived.edgeTable, runId)
-      .map(_.filter(col("bucket").isin(eTouched.toSeq: _*)) // pruned
-        .select(eKeys :+ col("weight"): _*)
-        .localCheckpoint(true)) // consumed by the edge AND the ref delta
-    val (edges, refDelta) = derived.mergeEdges(pre, delta.drop("bucket"))
-    derived.publishEdges(edges, eTouched, runId)
-
-    val nDelta = refDelta.withColumn("bucket", derived.nodeBucket)
-      .localCheckpoint(true)
-    val nTouched = nDelta.select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSet
-    if (nTouched.nonEmpty)
-      derived.publishNodes(s, nDelta.drop("bucket"), nTouched, runId)
-
-    // docs skip: with no created or retired keys and no flips, every doc
-    // would re-render byte-identically (weights do not render). Under a
-    // flip the per-entity ref deltas can CANCEL (retire at en + create at
-    // cs), so nTouched alone cannot prove docs unchanged.
-    if (nTouched.nonEmpty || flipDelta.isDefined)
-      derived.publishDocs(s, delta.select("subj").distinct().localCheckpoint(true),
-        eTouched, runId)
+    // batch-edge-sized; feeds the merge AND the doc rebuild's subjects
+    val (delta, edgeBuckets) = SparkIo.checkpointBuckets(
+      flipDelta.foldLeft(supports.select(eKeys :+ col("weight").as("dw"): _*))(
+          _ unionByName _)
+        .groupBy(eKeys: _*).agg(sum(col("dw")).as("dw"))
+        .filter(col("dw") =!= 0L), // a flip's retract+emit can cancel
+      derived.edgeBucket, "edge-delta")
+    derived.propagate(s, delta, edgeBuckets, runId)
   }
 
   /** Cross-batch language state for the streaming ingest (detectLanguage).
@@ -411,11 +371,9 @@ object StreamingSync {
     val s = batch.sparkSession
     val profs = graft.text.LangDetect.sortedProfiles(cfg.langProfiles)
     val k = profs.size
-    val bCounts = graft.text.LangDetect.counts(batch.toDF(), profs)
-      .withColumn("bucket", bucketOf)
-      .localCheckpoint(true) // feeds the bucket set AND the state merge
-    val touched = bCounts.select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSet
+    // feeds the bucket set AND the state merge
+    val (bCounts, touched) = SparkIo.checkpointBuckets(
+      graft.text.LangDetect.counts(batch.toDF(), profs), bucketOf, "lang-counts")
     val stateCols = ("conv_id" +: (0 until k).map(i => s"hits_$i")) :+ "n_toks"
     // pruned to the touched buckets; conversations of those buckets NOT
     // in this batch ride through the merge unchanged (the bucket-level
@@ -425,8 +383,8 @@ object StreamingSync {
         .select(stateCols.map(col): _*)
         .localCheckpoint(true)) // consumed by the merge AND the flip detect
     val cum = prior match {
-      case Some(p) => graft.text.LangDetect.merge(p, bCounts.drop("bucket"), k)
-      case None => bCounts.drop("bucket")
+      case Some(p) => graft.text.LangDetect.merge(p, bCounts, k)
+      case None => bCounts
     }
     // consumed by the winner pick AND the state publish — materialized once
     val cumM = cum.localCheckpoint(true)
@@ -439,7 +397,8 @@ object StreamingSync {
     // would force a byte-identical bucket rewrite per batch). The flip
     // rows (conv_id, lang_prior, lang) also drive the derived tables'
     // retract+emit propagation (see propagate).
-    val flips: DataFrame = (prior match {
+    // batch-conv-bounded; bucket set + derived deltas
+    val (flips, flipped) = SparkIo.checkpointBuckets((prior match {
       case None =>
         langNow.limit(0).withColumn("lang_prior", lit(""))
       case Some(p) =>
@@ -447,10 +406,7 @@ object StreamingSync {
           .withColumnRenamed("lang", "lang_prior")
         langNow.join(priorWin, Seq("conv_id"), "inner")
           .filter(col("lang") =!= col("lang_prior"))
-    }).select("conv_id", "lang_prior", "lang")
-      .localCheckpoint(true) // batch-conv-bounded; bucket set + derived deltas
-    val flipped: Set[Int] = flips.select(bucketOf.as("bucket")).distinct()
-      .collect().map(_.getInt(0)).toSet
+    }).select("conv_id", "lang_prior", "lang"), bucketOf, "lang-flips")
     (langNow, flipped, flips, () => {
       if (touched.nonEmpty) {
         st.stagePartitioned(cumM.withColumn("bucket", bucketOf), runId)
@@ -459,24 +415,6 @@ object StreamingSync {
       ()
     })
   }
-
-  /** The table as it stood BEFORE this runId's publish: the current
-    * generation normally; the published generation's PARENT when this
-    * runId already published (the crash-replay window). Fails loudly if
-    * retention expired the parent mid-replay — treating it as empty would
-    * re-derive deltas the table already absorbed. */
-  private def preBatchRead(s: SparkSession, tbl: TableCommitter,
-                           runId: String): Option[DataFrame] =
-    tbl.publishedGeneration(runId) match {
-      case None => tbl.read(s)
-      case Some(gen) =>
-        val n = gen.stripPrefix("gen-").toLong
-        if (n == 0) None
-        else Some(tbl.readGeneration(s, s"gen-${n - 1}").getOrElse(sys.error(
-          s"replaying $runId needs the pre-batch snapshot gen-${n - 1}, " +
-            "but retention expired it — raise retention or rebuild from a " +
-            "fresh checkpoint")))
-    }
 
   /** Cross-batch coreference for the streaming ingest.
     *
@@ -523,12 +461,10 @@ object StreamingSync {
     import s.implicits._
     // per-conversation batch bounds: one pass over the (in-memory) batch;
     // feeds the order guard, the seed join and the state update
-    val batchConvs = batch.toDF().groupBy("conv_id")
-      .agg(min(col("turn_idx")).as("b_min"), max(col("turn_idx")).as("b_max"))
-      .withColumn("bucket", bucketOf)
-      .localCheckpoint(true)
-    val touched = batchConvs.select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSet
+    val (batchConvs, touched) = SparkIo.checkpointBuckets(
+      batch.toDF().groupBy("conv_id")
+        .agg(min(col("turn_idx")).as("b_min"), max(col("turn_idx")).as("b_max")),
+      bucketOf, "coref-convs")
     if (touched.isEmpty) return (identity, () => ())
 
     val prior = st.read(s) match {

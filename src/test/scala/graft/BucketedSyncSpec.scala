@@ -293,13 +293,12 @@ class BucketedSyncSpec extends AnyFunSuite {
     val t1 = fx.turns.filterNot(_.conv_id == "conv-000002")
     p.runFull(spark, turnsDs(t0), fx.catalog, fx.markers, "t0")
 
-    // crash 1: support table already published, edges not yet (node_delta
-    // stage commits between the two publishes)
-    p.failAfterStage = Some("node_delta")
+    // crash 1: support table already published, edges not yet
+    p.failAfterPublish = Some("support")
     intercept[RuntimeException] {
       p.runSync(spark, turnsDs(t1), fx.catalog, fx.markers, "t1")
     }
-    p.failAfterStage = None
+    p.failAfterPublish = None
 
     // crash 2 (on the resume attempt): edge table published, nodes/docs not
     p.failAfterPublish = Some("edges")
@@ -323,6 +322,118 @@ class BucketedSyncSpec extends AnyFunSuite {
     def docIds(q: KgPipeline) = q.docTable.read(spark).get
       .select("id").collect().map(_.getString(0)).toSet
     assert(docIds(p) == docIds(scratch))
+  }
+
+  private def nodeMap(q: KgPipeline) = q.nodeTable.read(SparkTestSession.get).get
+    .select("entity_id", "refs").collect()
+    .map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  private def docSet(q: KgPipeline) = q.docTable.read(SparkTestSession.get).get
+    .selectExpr("id", "explode(map_entries(doc)) AS e")
+    .selectExpr("id", "e.key AS k", "array_join(e.value, ',') AS v")
+    .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+
+  private def gens(q: KgPipeline) = (q.edgeTable.currentGeneration(),
+    q.nodeTable.currentGeneration(), q.docTable.currentGeneration())
+
+  test("a retry whose edges published and whose pre-run edge generation " +
+       "retention expired rebuilds nodes and docs from the published edges") {
+    val spark = SparkTestSession.get
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8,
+      syncOldData = true, publishDocs = true))
+    val t0 = fx.turns.filter(_.turn_idx <= 4)
+    val t1 = fx.turns.filterNot(_.conv_id == "conv-000002")
+    p.runFull(spark, turnsDs(t0), fx.catalog, fx.markers, "t0")
+    p.failAfterPublish = Some("edges")
+    intercept[RuntimeException] {
+      p.runSync(spark, turnsDs(t1), fx.catalog, fx.markers, "t1")
+    }
+    p.failAfterPublish = None
+    assert(p.edgeTable.expireGenerations(1).nonEmpty)
+    p.runSync(spark, turnsDs(t1), fx.catalog, fx.markers, "t1")
+
+    val scratch = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"),
+      syncBuckets = 8, publishDocs = true))
+    scratch.runFull(spark, turnsDs(t1), fx.catalog, fx.markers, "s")
+    assert(supportSet(p) == supportSet(scratch))
+    assert(edgeSet(p) == edgeSet(scratch))
+    assert(nodeMap(p) == nodeMap(scratch))
+    assert(docSet(p) == docSet(scratch))
+  }
+
+  test("empty delta: a changed conversation that re-extracts identical " +
+       "supports moves no edge, node or doc generation") {
+    val spark = SparkTestSession.get
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8,
+      publishDocs = true))
+    p.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "t0")
+    val before = gens(p)
+    val sGen0 = p.supportTable.currentGeneration()
+    // one existing turn, same text, a later ts: its conversation changes
+    // and re-extracts to exactly the supports it already has
+    val maxTs = fx.turns.map(_.ts.getTime).max
+    val tpl = fx.turns.filter(_.conv_id == "conv-000005").maxBy(_.turn_idx)
+    val t1 = fx.turns.filterNot(_ == tpl) :+
+      tpl.copy(ts = new Timestamp(maxTs + 3600 * 1000L))
+    p.runSync(spark, turnsDs(t1), fx.catalog, fx.markers, "t1")
+    assert(p.supportTable.currentGeneration() != sGen0,
+      "the changed conversation must take the sync path, not the no-op one")
+    assert(gens(p) == before)
+  }
+
+  test("skip rule: a sync that only adds weight to existing edge keys moves " +
+       "no node or doc generation and equals a from-scratch build") {
+    val spark = SparkTestSession.get
+    def cfg() = PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8,
+      publishDocs = true)
+    val p = new KgPipeline(cfg())
+    p.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "t0")
+    val (e0, n0, d0) = gens(p)
+    val maxTs = fx.turns.map(_.ts.getTime).max
+    val tpl = fx.turns.filter(_.conv_id == "conv-000005").maxBy(_.turn_idx)
+    val t1 = fx.turns :+ tpl.copy(turn_idx = tpl.turn_idx + 1,
+      ts = new Timestamp(maxTs + 3600 * 1000L))
+    p.runSync(spark, turnsDs(t1), fx.catalog, fx.markers, "t1")
+    assert(p.edgeTable.currentGeneration() != e0, "the copy must add weight")
+    assert(p.nodeTable.currentGeneration() == n0)
+    assert(p.docTable.currentGeneration() == d0)
+
+    val scratch = new KgPipeline(cfg())
+    scratch.runFull(spark, turnsDs(t1), fx.catalog, fx.markers, "s")
+    assert(supportSet(p) == supportSet(scratch))
+    assert(edgeSet(p) == edgeSet(scratch))
+    assert(nodeMap(p) == nodeMap(scratch))
+    assert(docSet(p) == docSet(scratch))
+  }
+
+  test("skip rule: retiring (s, p1, o) and creating (s, p2, o) rebuilds the " +
+       "docs although the per-entity node deltas cancel") {
+    val spark = SparkTestSession.get
+    import spark.implicits._
+    val cat = (0 until 6).map(i =>
+      graft.schema.CatalogEntry(s"urn:e:$i", s"al$i", s"entity $i", 1))
+    val markers = Map("uses" -> "urn:p:uses", "likes" -> "urn:p:likes")
+    def turn(c: String, text: String, ts: Long) =
+      Turn(c, 0, "user", text, "", new Timestamp(ts))
+    val t0 = Seq(turn("conv-a", "al1 uses al2 today", 10000),
+      turn("conv-b", "al3 uses al4 now", 10000))
+    // conv-a's only turn is replaced: (e1, uses, e2) retires, (e1, likes,
+    // e2) is created — e1 and e2 each get -1 and +1
+    val t1 = Seq(turn("conv-a", "al1 likes al2 today", 20000),
+      turn("conv-b", "al3 uses al4 now", 10000))
+    def cfg() = PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8,
+      publishDocs = true)
+    val p = new KgPipeline(cfg())
+    p.runFull(spark, t0.toDS(), cat, markers, "t0")
+    val (_, n0, d0) = gens(p)
+    p.runSync(spark, t1.toDS(), cat, markers, "t1")
+
+    val scratch = new KgPipeline(cfg())
+    scratch.runFull(spark, t1.toDS(), cat, markers, "s")
+    assert(docSet(p) == docSet(scratch))
+    assert(nodeMap(p) == nodeMap(scratch))
+    assert(p.nodeTable.currentGeneration() == n0, "node refs must not move")
+    assert(p.docTable.currentGeneration() != d0, "docs must rebuild")
   }
 
   test("publishDocs enabled after a docs-less full run bootstraps the FULL doc table") {

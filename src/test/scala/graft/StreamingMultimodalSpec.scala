@@ -732,6 +732,35 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     assert(streamed == batch)
   }
 
+  test("empty delta: a micro-batch whose turns extract no supports moves no " +
+       "supports, edge, node or doc generation and stamps lastBatch") {
+    val spark = SparkTestSession.get
+    import spark.implicits._
+    val fx = TranscriptGen.generate(nConv = 4, nEnt = 5, hotFactor = 1)
+    val inDir = TempDirs("stream-ed-in-")
+    val table = new TableCommitter(TempDirs("stream-ed-tbl-"))
+    val eTbl = new TableCommitter(TempDirs("stream-ed-e-"))
+    val nTbl = new TableCommitter(TempDirs("stream-ed-n-"))
+    val dTbl = new TableCommitter(TempDirs("stream-ed-d-"))
+    val ckpt = TempDirs("stream-ed-ck-")
+    def ingest(turns: Seq[graft.schema.Turn]): Unit = {
+      turns.toDS().coalesce(1).write.mode("append").parquet(inDir)
+      StreamingSync.ingestAvailableNow(spark, inDir, ckpt, fx.catalog,
+        fx.markers, PipelineConfig(), table, edgeTable = Some(eTbl),
+        nodeTable = Some(nTbl), docTable = Some(dTbl))
+    }
+    def gens() = Seq(table, eTbl, nTbl, dTbl).map(_.currentGeneration())
+
+    ingest(fx.turns)
+    val before = gens()
+    assert(before.forall(_.isDefined))
+    val quiet = fx.turns.take(3).zipWithIndex.map { case (t, i) =>
+      t.copy(conv_id = "conv-quiet", turn_idx = i, text = "nothing to see here") }
+    ingest(quiet)
+    assert(table.currentGeneration("lastBatch").contains("1"))
+    assert(gens() == before)
+  }
+
   test("lineage guard: a coref lineage with committed batches refuses an " +
        "empty coref state table") {
     val spark = SparkTestSession.get
