@@ -93,11 +93,10 @@ final class IncrementalDedupIndex(workDir: String, buckets: Int = 64) {
     val docBuckets = touchedIds.withColumn("b", docBucket)
       .select("b").distinct().as[Int].collect().toSet
 
-    // the touched ids' PRIOR fingerprints, read from the pruned doc map
-    val prior = docTable.read(spark) match {
+    // the touched ids' PRIOR fingerprints, read from their doc-map buckets
+    val prior = docTable.readBuckets(spark, docBuckets) match {
       case Some(t) =>
-        t.filter(col("bucket").isin(docBuckets.toSeq: _*)) // partition-pruned
-          .join(touchedIds, "doc_id").select("doc_id", "fp")
+        t.join(touchedIds, "doc_id").select("doc_id", "fp")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       case None => Seq.empty[(Long, String)].toDF("doc_id", "fp")
     }
@@ -109,9 +108,8 @@ final class IncrementalDedupIndex(workDir: String, buckets: Int = 64) {
 
     // rebuild the touched fp-buckets: prior contents minus ALL rows of
     // touched docs, plus the fresh rows
-    val fpPrior = fpTable.read(spark) match {
-      case Some(t) => t.filter(col("bucket").isin(fpBuckets.toSeq: _*))
-        .select("fp", "doc_id")
+    val fpPrior = fpTable.readBuckets(spark, fpBuckets) match {
+      case Some(t) => t.select("fp", "doc_id")
         .join(touchedIds, Seq("doc_id"), "left_anti")
       case None => Seq.empty[(String, Long)].toDF("fp", "doc_id")
     }
@@ -122,9 +120,8 @@ final class IncrementalDedupIndex(workDir: String, buckets: Int = 64) {
     fpTable.publishBuckets(runId, fpBuckets)
 
     // rebuild the touched doc-buckets of the doc map likewise
-    val docPrior = docTable.read(spark) match {
-      case Some(t) => t.filter(col("bucket").isin(docBuckets.toSeq: _*))
-        .select("doc_id", "fp")
+    val docPrior = docTable.readBuckets(spark, docBuckets) match {
+      case Some(t) => t.select("doc_id", "fp")
         .join(touchedIds, Seq("doc_id"), "left_anti")
       case None => Seq.empty[(Long, String)].toDF("doc_id", "fp")
     }
@@ -145,11 +142,10 @@ final class IncrementalDedupIndex(workDir: String, buckets: Int = 64) {
   def candidates(spark: SparkSession, delta: DataFrame): DataFrame = {
     import spark.implicits._
     val d = fingerprints(delta).distinct().withColumn("b", fpBucket)
-    val bs = d.select("b").distinct().as[Int].collect().toSeq
-    fpTable.read(spark) match {
+    val bs = d.select("b").distinct().as[Int].collect().toSet
+    fpTable.readBuckets(spark, bs) match {
       case Some(idx) =>
-        idx.filter(col("bucket").isin(bs: _*)) // partition-pruned
-          .select(col("fp"), col("doc_id").as("dup_id"))
+        idx.select(col("fp"), col("doc_id").as("dup_id"))
           .join(d.select("doc_id", "fp"), "fp")
           .filter(col("dup_id") =!= col("doc_id"))
           .select("doc_id", "dup_id", "fp")

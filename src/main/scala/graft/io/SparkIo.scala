@@ -46,16 +46,16 @@ object SparkIo {
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** The schema sidecar of a parquet directory, if it has one. */
+  def schemaSidecar(dir: Path): Option[StructType] = {
+    val f = dir.resolve(TableCommitter.SchemaSidecar)
+    if (!Files.exists(f)) None
+    else Some(DataType.fromJson(Files.readString(f)).asInstanceOf[StructType])
+  }
+
   /** Read a parquet directory through its schema sidecar when present;
     * pre-sidecar directories fall back to normal inference. */
-  def readParquetWithSidecar(spark: SparkSession, path: String): DataFrame = {
-    val sidecar = java.nio.file.Paths.get(path)
-      .resolve(TableCommitter.SchemaSidecar)
-    if (Files.exists(sidecar))
-      spark.read
-        .schema(DataType.fromJson(Files.readString(sidecar))
-          .asInstanceOf[StructType])
-        .parquet(path)
-    else spark.read.parquet(path)
-  }
+  def readParquetWithSidecar(spark: SparkSession, path: String): DataFrame =
+    schemaSidecar(java.nio.file.Paths.get(path))
+      .fold(spark.read)(spark.read.schema(_)).parquet(path)
 }

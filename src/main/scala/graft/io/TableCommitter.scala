@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Snapshot table with atomic publish — the Iceberg-snapshot-commit pattern
@@ -61,18 +61,58 @@ final class TableCommitter(rootDir: String) {
   def readGeneration(spark: SparkSession, gen: String): Option[DataFrame] =
     generationPath(gen).map(p => SparkIo.readParquetWithSidecar(spark, p.toString))
 
-  /** The table as it stood BEFORE `runId` published into it: the current
-    * generation, or the parent of the one `runId` already published (a
-    * crash replay); `None` = no generation before the run. Throws
-    * [[TableCommitter.ExpiredGeneration]] if retention expired that parent:
-    * reading it as empty would re-derive a change the table absorbed. */
-  def readBefore(spark: SparkSession, runId: String): Option[DataFrame] =
+  /** The rows of `buckets` in the current generation, addressed by their
+    * `bucket=<b>` dirs (see `readGeneration(spark, gen, buckets)`). */
+  def readBuckets(spark: SparkSession, buckets: Set[Int]): Option[DataFrame] =
+    currentGeneration().flatMap(readGeneration(spark, _, buckets))
+
+  /** The rows of `buckets` in generation `gen`. Only the existing
+    * `bucket=<b>` dirs reach the parquet reader (with the generation as
+    * `basePath`, so `bucket` stays a column), never the generation root:
+    * the read lists k dirs, not all B — a root read at B > 32 is one
+    * parallel "Listing leaf files" Spark job per read, whatever the filter.
+    * No dir to read (an empty set, or only empty buckets) gives an empty
+    * frame of the table's schema and runs no Spark job. The generation is
+    * bound now, like [[read]]. A generation without a schema sidecar (an
+    * older writer) falls back to the bucket-filtered root read. */
+  def readGeneration(spark: SparkSession, gen: String,
+                     buckets: Set[Int]): Option[DataFrame] =
+    generationPath(gen).map { dir =>
+      SparkIo.schemaSidecar(dir) match {
+        case None => spark.read.parquet(dir.toString)
+          .filter(col(TableCommitter.BucketCol).isin(buckets.toSeq: _*))
+        case Some(schema) =>
+          // a partitioned read puts the partition column last
+          val (part, data) =
+            schema.fields.partition(_.name == TableCommitter.BucketCol)
+          val reader =
+            spark.read.schema(org.apache.spark.sql.types.StructType(data ++ part))
+          val dirs = buckets.toSeq.sorted
+            .map(b => dir.resolve(s"${TableCommitter.BucketCol}=$b"))
+            .filter(Files.isDirectory(_))
+          // no dir: a local empty frame (optimizers see it is empty) typed
+          // like a read of the dirs — a path-less reader lists nothing
+          if (dirs.isEmpty) spark.createDataFrame(
+            java.util.Collections.emptyList[Row](), reader.parquet().schema)
+          else reader.option("basePath", dir.toString)
+            .parquet(dirs.map(_.toString): _*)
+      }
+    }
+
+  /** The rows of `buckets` as the table stood BEFORE `runId` published into
+    * it: the current generation, or the parent of the one `runId` already
+    * published (a crash replay); `None` = no generation before the run.
+    * Throws [[TableCommitter.ExpiredGeneration]] if retention expired that
+    * parent: reading it as empty would re-derive a change the table
+    * absorbed. */
+  def readBefore(spark: SparkSession, runId: String,
+                 buckets: Set[Int]): Option[DataFrame] =
     publishedGeneration(runId) match {
-      case None => read(spark)
+      case None => readBuckets(spark, buckets)
       case Some(gen) =>
         val n = gen.stripPrefix("gen-").toLong
         if (n == 0) None
-        else Some(readGeneration(spark, s"gen-${n - 1}").getOrElse(
+        else Some(readGeneration(spark, s"gen-${n - 1}", buckets).getOrElse(
           throw new TableCommitter.ExpiredGeneration(
             s"replaying $runId needs $root's pre-run snapshot gen-${n - 1}, " +
               "but retention expired it — raise retention or rebuild the " +
@@ -204,13 +244,8 @@ final class TableCommitter(rootDir: String) {
   def currentIsBucketed(alias: String = "current"): Option[Boolean] =
     currentPath(alias).map { p =>
       val dir = Paths.get(p)
-      bucketDirs(dir).nonEmpty || {
-        val sidecar = dir.resolve(TableCommitter.SchemaSidecar)
-        Files.exists(sidecar) &&
-          org.apache.spark.sql.types.DataType.fromJson(Files.readString(sidecar))
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-            .fieldNames.contains(TableCommitter.BucketCol)
-      }
+      bucketDirs(dir).nonEmpty || SparkIo.schemaSidecar(dir)
+        .exists(_.fieldNames.contains(TableCommitter.BucketCol))
     }
 
   private def bucketDirs(dir: Path): Seq[Path] = {

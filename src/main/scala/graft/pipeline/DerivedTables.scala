@@ -31,7 +31,7 @@ final class DerivedTables(cfg: PipelineConfig, val edgeTable: TableCommitter,
   private val B = cfg.syncBuckets
   val allBuckets: Set[Int] = (0 until B).toSet
   /** Edges and docs bucket on hash(subj), so a subject's edges (the doc
-    * input) are one pruned read. */
+    * input) are one bucket-addressed read. */
   val edgeBucket: Column = PipelineConfig.bucketCol(cfg.bucketKeyExpr, "subj", B)
   val nodeBucket: Column = PipelineConfig.bucketCol(cfg.bucketKeyExpr, "entity_id", B)
 
@@ -49,17 +49,14 @@ final class DerivedTables(cfg: PipelineConfig, val edgeTable: TableCommitter,
       // no key moved: the empty delta stands in for the empty ref delta
       if (edgeBuckets.isEmpty) (delta, Set.empty[Int], false)
       else {
-        val pre = try edgeTable.readBefore(spark, runId) catch {
+        val pre = try edgeTable.readBefore(spark, runId, edgeBuckets) catch {
           case _: TableCommitter.ExpiredGeneration =>
             publishAllNodesAndDocs(spark, runId)
             return
         }
         val keys = new Observation()
         val (edges, refs) = mergeEdges(
-          pre.map(_.filter(col(TableCommitter.BucketCol)
-            .isin(edgeBuckets.toSeq: _*)) // pruned
-            .drop(TableCommitter.BucketCol)),
-          delta, keys)
+          pre.map(_.drop(TableCommitter.BucketCol)), delta, keys)
         val (nodeDelta, nodeBuckets) =
           SparkIo.checkpointBuckets(refs, nodeBucket, "node-delta")
         publishEdges(edges, edgeBuckets, runId)
@@ -117,14 +114,13 @@ final class DerivedTables(cfg: PipelineConfig, val edgeTable: TableCommitter,
     * from the published edges instead. */
   private def publishNodes(spark: SparkSession, refDelta: DataFrame,
                            buckets: Set[Int], runId: String): Unit =
-    nodeTable.read(spark) match {
+    nodeTable.readBuckets(spark, buckets) match {
       case None =>
         publish(nodeTable, nodesOf(edgeTable.read(spark).get), nodeBucket,
           allBuckets, runId)
       case Some(_) if buckets.isEmpty => // no entity's refs moved
       case Some(cur) =>
         val merged = cur
-          .filter(col(TableCommitter.BucketCol).isin(buckets.toSeq: _*)) // pruned
           .select(col("entity_id"), col("refs"))
           .unionByName(refDelta.select(col("entity_id"), col("dn").as("refs")))
           .groupBy("entity_id").agg(sum(col("refs")).as("refs"))
@@ -147,8 +143,8 @@ final class DerivedTables(cfg: PipelineConfig, val edgeTable: TableCommitter,
   /** Incremental doc rebuild after an edge publish. Docs pivot per
     * (subj, lang) over ALL of a subject's edges, and edges are
     * subject-bucketed, so the changed subjects map to exactly the delta's
-    * edge buckets (`edgeBuckets`): rebuild their docs from their pruned
-    * post-merge edge slice, keep every other doc of those buckets, carry
+    * edge buckets (`edgeBuckets`): rebuild their docs from those buckets'
+    * post-merge edges, keep every other doc of those buckets, carry
     * untouched buckets by hard link. Skipped when no edge key was created
     * or retired (`keysMoved`): docs render keys, never weights, and the
     * node delta cannot stand in (retiring (s, p1, o) while creating
@@ -168,28 +164,26 @@ final class DerivedTables(cfg: PipelineConfig, val edgeTable: TableCommitter,
                           edgeBuckets: Set[Int], keysMoved: Boolean,
                           runId: String): Unit =
     docTable.foreach { dTbl =>
-      dTbl.read(spark) match {
+      dTbl.currentGeneration() match {
         case None =>
           publish(dTbl, docsOf(edgeTable.read(spark).get), edgeBucket,
             allBuckets, runId)
         case Some(_) if !keysMoved =>
-        case Some(curD) =>
-          val postEdges = edgeTable.read(spark).get
+        case Some(_) =>
           // a referencing subject can live outside the delta's edge buckets
           val (affected, docBuckets) =
             if (!cfg.refreshReferencingDocs) (changedSubjects, edgeBuckets)
             else SparkIo.checkpointBuckets(changedSubjects.unionByName(
               // obj is not the bucket key, so this scans the edge table —
               // the documented cost of opting into label freshness
-              postEdges
+              edgeTable.read(spark).get
                 .join(changedSubjects.withColumnRenamed("subj", "obj"),
                   Seq("obj"), "left_semi")
                 .select("subj")).distinct(),
               // materialized ONCE: the slice semi-join and the kept
               // anti-join would each re-run the obj-side scan
               edgeBucket, "doc-buckets")
-          val slice = postEdges
-            .filter(col(TableCommitter.BucketCol).isin(docBuckets.toSeq: _*)) // pruned
+          val slice = edgeTable.readBuckets(spark, docBuckets).get
             .join(affected, Seq("subj"), "left_semi")
             .select(EdgeKey.map(col): _*)
           // restricted to the slice's objects BEFORE aggregation: resolving
@@ -199,14 +193,12 @@ final class DerivedTables(cfg: PipelineConfig, val edgeTable: TableCommitter,
           val (sliceObjs, labelBuckets) = SparkIo.checkpointBuckets(
             slice.select(col("obj").as("subj")).distinct(), edgeBucket,
             "label-buckets")
-          val labelSrc = postEdges
-            .filter(col(TableCommitter.BucketCol).isin(labelBuckets.toSeq: _*))
+          val labelSrc = edgeTable.readBuckets(spark, labelBuckets).get
             .join(sliceObjs, Seq("subj"), "left_semi")
             .select(EdgeKey.map(col): _*)
           val rebuilt = DocAssembler.assemble(
             slice, cfg, labelSource = Some(labelSrc))
-          val kept = curD
-            .filter(col(TableCommitter.BucketCol).isin(docBuckets.toSeq: _*))
+          val kept = dTbl.readBuckets(spark, docBuckets).get
             .drop(TableCommitter.BucketCol)
             .join(affected, Seq("subj"), "left_anti")
           publish(dTbl, rebuilt.unionByName(kept), edgeBucket, docBuckets,

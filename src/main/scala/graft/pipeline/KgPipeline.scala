@@ -265,7 +265,11 @@ final class KgPipeline(cfg: PipelineConfig) {
     * conversations are rewritten; the rest carry into the new generation by
     * hard link) -> delta-propagated edge/node updates. Per-sync work is
     * proportional to the CHANGED data, never to the table size — the
-    * 100 TB nightly-sync requirement. */
+    * 100 TB nightly-sync requirement. File listing is too: every table
+    * read is bucket-addressed ([[TableCommitter.readBuckets]]), so a sync
+    * touching k buckets lists O(k) bucket dirs and a no-op sync lists none;
+    * only `syncOldData`'s vanished-set reconciliation reads a whole
+    * generation. */
   def runSync(spark: SparkSession, turns: Dataset[Turn],
               catalog: Seq[CatalogEntry], markers: Map[String, String],
               runId: String): RunResult = {
@@ -294,11 +298,11 @@ final class KgPipeline(cfg: PipelineConfig) {
           .select("conv_id").distinct()
       }
 
-    // the pre-sync snapshot, resolved ONCE (read() binds the physical gen
-    // path eagerly; generations are immutable, so every consumer below —
-    // vanished set, keep/replace, delta — reads the same snapshot even
-    // after the publish flips the pointer)
-    val curOpt = supportTable.read(spark)
+    // the pre-sync snapshot, bound ONCE by name (generations are immutable,
+    // so every consumer below — vanished set, keep/replace, delta — reads
+    // the same snapshot even after the publish flips the pointer). Nothing
+    // is read yet: a no-op sync lists no table dir
+    val curGen = supportTable.currentGeneration()
 
     // J4: conversations that vanished from the source entirely (their
     // buckets must be rewritten too, or the delete would be lost).
@@ -309,11 +313,13 @@ final class KgPipeline(cfg: PipelineConfig) {
     // would diverge the support replacement from the edge/node delta.
     // Computed BEFORE the re-extract stages so a true no-op sync can exit
     // without scheduling any of them.
-    val (vanished, vanishedBuckets) = curOpt match {
-      case Some(cur) if cfg.syncOldData =>
+    val (vanished, vanishedBuckets) = curGen match {
+      case Some(gen) if cfg.syncOldData =>
         stageWithBuckets(spark, runId, "vanished_convs",
           convBucket(col("conv_id"))) {
-          cur.select("conv_id").distinct()
+          // reconciliation against the full set reads every bucket
+          supportTable.readGeneration(spark, gen).get
+            .select("conv_id").distinct()
             .join(turns.select("conv_id").distinct(),
               Seq("conv_id"), "left_anti")
         }
@@ -331,7 +337,7 @@ final class KgPipeline(cfg: PipelineConfig) {
     // changed set replays empty for this runId, so a crash-retry takes the
     // same path; the watermark cannot regress (None falls back to the last
     // recorded one inside finishRun).
-    if (curOpt.isDefined && changedConvBuckets.isEmpty &&
+    if (curGen.isDefined && changedConvBuckets.isEmpty &&
         vanishedBuckets.isEmpty &&
         edgeTable.currentGeneration().isDefined &&
         nodeTable.currentGeneration().isDefined &&
@@ -356,7 +362,7 @@ final class KgPipeline(cfg: PipelineConfig) {
     val (newSupports, newWm) = supportsStage(spark, runId, "sync_supports",
       changedTurns, catalog, markers)
 
-    curOpt match {
+    curGen match {
       case None =>
         // first run arrived as a sync: equivalent to a full publish
         supportTable.stagePartitioned(
@@ -365,22 +371,21 @@ final class KgPipeline(cfg: PipelineConfig) {
         publishDerivedFull(spark, runId,
           supportTable.read(spark).get.drop("bucket"), newWm)
 
-      case Some(cur) =>
+      case Some(gen) =>
         val touched = changedConvs.unionByName(vanished).distinct()
 
         // the set of physical buckets to rewrite — at most B driver-side
-        // ints, already known from the two stage sidecars (zero jobs)
+        // ints, already known from the two stage sidecars (zero jobs); the
+        // read lists only their dirs
         val changedBuckets = changedConvBuckets ++ vanishedBuckets
-        val curChanged = cur
-          .filter(col("bucket").isin(changedBuckets.toSeq: _*)) // partition-pruned
+        val curChanged = supportTable.readGeneration(spark, gen, changedBuckets).get
         val keep = curChanged
           .join(touched, Seq("conv_id"), "left_anti")
           .drop("bucket")
 
-        // the edge/node delta needs the rows being REPLACED — bind it before
-        // the publish below flips the pointer (read() resolved the physical
-        // gen path eagerly, and generations are immutable, so this plan
-        // stays valid afterwards)
+        // the edge/node delta needs the rows being REPLACED — read from the
+        // bound pre-sync generation, so this plan stays valid after the
+        // publish below flips the pointer
         val key = DerivedTables.EdgeKey.map(col)
         val oldOfTouched = curChanged.join(touched, Seq("conv_id"), "left_semi")
         val delta = newSupports

@@ -27,12 +27,12 @@ object StreamingSync {
     * O(batch), not O(table): the support table is physically bucketed on
     * hash(conv_id) with the bucket count pinned in the table's metadata, so a
     * micro-batch touching k conversations re-aggregates and rewrites only
-    * their buckets (pruned read of the current generation + bucket-level
-    * dynamic partition overwrite); every untouched bucket carries into the
-    * new generation by hard link — the same mechanism as the batch sync's
-    * incremental publish (KgPipeline.runSync). A trickle of micro-batches
-    * over a 100 TB table therefore costs per-batch work proportional to the
-    * batch, never a full-table rewrite.
+    * their buckets (a read of only the touched bucket dirs of the current
+    * generation + bucket-level dynamic partition overwrite); every untouched
+    * bucket carries into the new generation by hard link — the same
+    * mechanism as the batch sync's incremental publish (KgPipeline.runSync).
+    * A trickle of micro-batches over a 100 TB table therefore costs
+    * per-batch work proportional to the batch, never a full-table rewrite.
     *
     * Weights merge ADDITIVELY (existing + new per key): weight is an
     * occurrence count, so a conversation whose turns are split across
@@ -126,7 +126,7 @@ object StreamingSync {
 
     // upgrade guard BEFORE pinning: a table published by a pre-bucketing
     // writer has no bucket= partition layout, and pinning bucket_count on
-    // it would turn the pruned read below into an opaque unresolved-column
+    // it would turn the bucket read below into an opaque unresolved-column
     // AnalysisException — fail with an explicit migration message instead
     if (table.currentIsBucketed().contains(false))
       throw new IllegalStateException(
@@ -251,24 +251,22 @@ object StreamingSync {
           val touched = supportBuckets ++ langState.map(_._2).getOrElse(Set.empty)
           if (touched.nonEmpty) {
             // additive merge WITHIN the touched buckets only: the current
-            // generation's read is partition-pruned to them, and the publish
+            // generation's read lists only their dirs, and the publish
             // rewrites exactly them (hard-link carryover for the rest)
-            val combined = table.read(s) match {
+            val combined = table.readBuckets(s, touched) match {
               case Some(cur) =>
-                val pruned = cur
-                  .filter(col("bucket").isin(touched.toSeq: _*)) // pruned
-                  .select(keyCols.map(col) :+ col("weight"): _*)
+                val slice = cur.select(keyCols.map(col) :+ col("weight"): _*)
                 // language re-key: rows of batch conversations move to the
                 // cumulative winner BEFORE the key-merge, so a flip unifies
                 // old and new rows under one lang instead of splitting them
                 val rekeyed = langState match {
                   case Some((langNow, _, _, _)) =>
-                    pruned.join(langNow.withColumnRenamed("lang", "lang_now"),
+                    slice.join(langNow.withColumnRenamed("lang", "lang_now"),
                         Seq("conv_id"), "left")
                       .withColumn("lang",
                         coalesce(col("lang_now"), col("lang")))
                       .drop("lang_now")
-                  case None => pruned
+                  case None => slice
                 }
                 rekeyed
                   .unionByName(supports)
@@ -326,9 +324,8 @@ object StreamingSync {
     // contribution
     val flipDelta: Option[DataFrame] = flips.filter(_._2.nonEmpty).flatMap {
       case (f, flipBuckets) =>
-        supTbl.readBefore(s, runId).map { priorSup =>
+        supTbl.readBefore(s, runId, flipBuckets).map { priorSup =>
           val rows = priorSup
-            .filter(col("bucket").isin(flipBuckets.toSeq: _*)) // pruned
             .join(f.select(col("conv_id"), col("lang").as("lang_new")),
               Seq("conv_id"), "inner")
           rows.select(eKeys :+ (-col("weight")).as("dw"): _*)
@@ -349,7 +346,7 @@ object StreamingSync {
   /** Cross-batch language state for the streaming ingest (detectLanguage).
     *
     * Merges the batch's per-conversation [[graft.text.LangDetect]] counts
-    * into the prior state (pruned to the batch's conversation buckets) and
+    * into the prior state (read from the batch's conversation buckets) and
     * returns the CUMULATIVE winner per conversation, the supports-table
     * buckets needing a re-key (buckets of conversations whose winner
     * CHANGED vs the prior state — the steady-state no-flip batch adds
@@ -375,12 +372,11 @@ object StreamingSync {
     val (bCounts, touched) = SparkIo.checkpointBuckets(
       graft.text.LangDetect.counts(batch.toDF(), profs), bucketOf, "lang-counts")
     val stateCols = ("conv_id" +: (0 until k).map(i => s"hits_$i")) :+ "n_toks"
-    // pruned to the touched buckets; conversations of those buckets NOT
+    // read from the touched buckets; conversations of those buckets NOT
     // in this batch ride through the merge unchanged (the bucket-level
     // publish rewrites whole buckets, so they must stay aboard)
-    val prior = st.read(s).map(
-      _.filter(col("bucket").isin(touched.toSeq: _*))
-        .select(stateCols.map(col): _*)
+    val prior = st.readBuckets(s, touched).map(
+      _.select(stateCols.map(col): _*)
         .localCheckpoint(true)) // consumed by the merge AND the flip detect
     val cum = prior match {
       case Some(p) => graft.text.LangDetect.merge(p, bCounts, k)
@@ -467,9 +463,8 @@ object StreamingSync {
       bucketOf, "coref-convs")
     if (touched.isEmpty) return (identity, () => ())
 
-    val prior = st.read(s) match {
+    val prior = st.readBuckets(s, touched) match {
       case Some(cur) => cur
-        .filter(col("bucket").isin(touched.toSeq: _*)) // partition-pruned
         .select("conv_id", "last_idx", "last_ent", "max_idx")
       case None =>
         Seq.empty[(String, Option[Int], Option[String], Int)]

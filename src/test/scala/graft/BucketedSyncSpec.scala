@@ -667,6 +667,40 @@ class BucketedSyncSpec extends AnyFunSuite {
     assert(edgeSet(p) == edgeSet(scratch))
   }
 
+  test("bucket-addressed reads at 64 buckets: a no-op sync lists no table " +
+       "dir and runs only its 3 bookkeeping jobs; a one-conversation sync " +
+       "runs no listing job") {
+    val spark = SparkTestSession.get
+    // 64 bucket dirs exceed Spark's 32-path parallel-discovery threshold:
+    // a read of a whole generation is one "Listing leaf files" job. 120
+    // conversations fill more than 32 support buckets
+    val big = TranscriptGen.generate(nConv = 120, nEnt = 30, hotFactor = 5)
+    def cfg() = PipelineConfig(workDir = TempDirs("graft-bucket-"),
+      syncBuckets = 64, publishDocs = true)
+    val p = new KgPipeline(cfg())
+    p.runFull(spark, turnsDs(big.turns), big.catalog, big.markers, "t0")
+    assert(Files.list(Paths.get(p.supportTable.currentPath().get)).iterator()
+      .asScala.count(_.getFileName.toString.startsWith("bucket=")) > 32)
+    // the first sync after a full run also repairs the epoch cache
+    p.runSync(spark, turnsDs(big.turns), big.catalog, big.markers, "t1")
+    val (_, noop) = SparkJobs.during(spark)(
+      p.runSync(spark, turnsDs(big.turns), big.catalog, big.markers, "t1b"))
+    assert(noop == Seq("graft:stage:changed_convs", "graft:ckpt:metrics-write",
+      "graft:ckpt:watermark-write"), noop.mkString(" | "))
+
+    val maxTs = big.turns.map(_.ts.getTime).max
+    val tpl = big.turns.filter(_.conv_id == "conv-000011").maxBy(_.turn_idx)
+    val t2 = big.turns :+ tpl.copy(turn_idx = tpl.turn_idx + 1,
+      ts = new Timestamp(maxTs + 3600 * 1000L))
+    val (_, sync) = SparkJobs.during(spark)(
+      p.runSync(spark, turnsDs(t2), big.catalog, big.markers, "t2"))
+    assert(sync.count(SparkJobs.isListing) == 0, sync.mkString(" | "))
+    val scratch = new KgPipeline(cfg())
+    scratch.runFull(spark, turnsDs(t2), big.catalog, big.markers, "s")
+    assert(supportSet(p) == supportSet(scratch))
+    assert(edgeSet(p) == edgeSet(scratch))
+  }
+
   test("temporal bucket key: changes clustered in one epoch-week touch ONE " +
        "support bucket (hash would scatter them), content == scratch") {
     val spark = SparkTestSession.get

@@ -131,6 +131,27 @@ class ReachabilitySpec extends AnyFunSuite {
       dead.toSeq.sorted.map(n => s"$n (${byName(n)})").mkString(", "))
   }
 
+  /** A filter on the bucket column: the idiom of reading a whole bucketed
+    * generation (listing every bucket dir) and pruning it afterwards. */
+  private val BucketIsin =
+    """col\(\s*(?:"bucket"|(?:TableCommitter\.)?BucketCol)\s*\)\s*\.isin\(""".r
+
+  test("bucket slices are read through TableCommitter, never by a bucket " +
+       "isin filter over a whole-generation read") {
+    assert(BucketIsin.findFirstIn(
+      "t.read(spark).get.filter(col(TableCommitter.BucketCol)\n  .isin(bs: _*))").isDefined)
+    assert(BucketIsin.findFirstIn("""cur.filter(col("bucket").isin(1, 2))""").isDefined)
+    // a local column named bucket, and the idiom inside a comment, pass
+    assert(BucketIsin.findFirstIn(
+      stripComments("""bucket.isin(0, 1) // col("bucket").isin(3)""")).isEmpty)
+    val offenders = mainSources()
+      .filterNot(_._1.getFileName.toString == "TableCommitter.scala")
+      .filter { case (_, src) => BucketIsin.findFirstIn(stripComments(src)).isDefined }
+      .map(_._1)
+    assert(offenders.isEmpty, "use TableCommitter.readBuckets / readBefore " +
+      s"instead of a bucket isin filter in: ${offenders.mkString(", ")}")
+  }
+
   test("the frozen driver entry points exist") {
     Seq("Bench.scala", "Verify.scala", "SparkEntry.scala").foreach { f =>
       assert(Files.isRegularFile(mainRoot.resolve(Paths.get("graft", f))), f)

@@ -120,6 +120,87 @@ class TableCommitterSpec extends AnyFunSuite {
     assert(t.readGeneration(spark, "gen-0").get.count() == 0)
   }
 
+  /** gen-0 with rows (k, v) in buckets 0, 1 and 2 (published by "r0"). */
+  private def threeBuckets(t: TableCommitter): Unit = {
+    val spark = SparkTestSession.get
+    import spark.implicits._
+    put(t, Seq((1, "a", 0), (2, "b", 1), (3, "c", 1), (4, "d", 2))
+      .toDF("k", "v", "bucket"), "r0", Set(0, 1, 2))
+  }
+
+  private def kv(df: DataFrame): Set[(Int, String)] =
+    df.select("k", "v").collect().map(r => (r.getInt(0), r.getString(1))).toSet
+
+  test("readBuckets reads only the named buckets; a named bucket with no " +
+       "dir reads as no rows") {
+    val spark = SparkTestSession.get
+    val t = fresh()
+    assert(t.readBuckets(spark, Set(1)).isEmpty) // no generation yet
+    threeBuckets(t)
+    val got = t.readBuckets(spark, Set(1, 7)).get
+    assert(kv(got) == Set((2, "b"), (3, "c")))
+    assert(got.schema == t.read(spark).get.schema)
+    assert(got.select("bucket").distinct().collect().map(_.getInt(0)).toSeq == Seq(1))
+  }
+
+  test("readBuckets of no existing dir is an empty frame of the table's " +
+       "schema and runs no Spark job") {
+    val spark = SparkTestSession.get
+    val t = fresh()
+    threeBuckets(t)
+    val schema = t.read(spark).get.schema
+    Seq(Set.empty[Int], Set(5, 6)).foreach { bs =>
+      val (rows, jobs) = SparkJobs.during(spark) {
+        val df = t.readBuckets(spark, bs).get
+        assert(df.schema == schema)
+        df.collect()
+      }
+      assert(rows.isEmpty, bs)
+      assert(jobs.isEmpty, s"$bs ran ${jobs.mkString(", ")}")
+    }
+  }
+
+  test("readBuckets on a generation without a schema sidecar falls back to " +
+       "the filtered read and gives the same rows") {
+    val spark = SparkTestSession.get
+    val t = fresh()
+    threeBuckets(t)
+    val withSidecar = kv(t.readBuckets(spark, Set(0, 2, 9)).get)
+    Files.delete(java.nio.file.Paths.get(t.currentPath().get)
+      .resolve(TableCommitter.SchemaSidecar))
+    assert(kv(t.readBuckets(spark, Set(0, 2, 9)).get) == withSidecar)
+    assert(withSidecar == Set((1, "a"), (4, "d")))
+    assert(t.readBuckets(spark, Set.empty).get.count() == 0)
+  }
+
+  test("readBefore(runId, buckets): the current slice before the run, the " +
+       "parent generation's slice on a replay after its publish") {
+    val spark = SparkTestSession.get
+    import spark.implicits._
+    val t = fresh()
+    threeBuckets(t)
+    assert(t.readBefore(spark, "r0", Set(1)).isEmpty) // nothing before gen-0
+    put(t, Seq((2, "B", 1)).toDF("k", "v", "bucket"), "r1", Set(1)) // gen-1
+    // replay of r1: gen-0's bucket 1, not gen-1's
+    assert(kv(t.readBefore(spark, "r1", Set(1, 2)).get) ==
+      Set((2, "b"), (3, "c"), (4, "d")))
+    // a run that has not published reads the current generation
+    assert(kv(t.readBefore(spark, "r2", Set(1)).get) == Set((2, "B")))
+  }
+
+  test("readBefore(runId, buckets) throws ExpiredGeneration when retention " +
+       "expired the parent, whatever the bucket set") {
+    val spark = SparkTestSession.get
+    import spark.implicits._
+    val t = fresh()
+    threeBuckets(t)
+    put(t, Seq((2, "B", 1)).toDF("k", "v", "bucket"), "r1", Set(1)) // gen-1
+    put(t, Seq((2, "C", 1)).toDF("k", "v", "bucket"), "r2", Set(1)) // gen-2
+    assert(t.expireGenerations(1) == Seq("gen-0", "gen-1"))
+    Seq(Set(1), Set.empty[Int]).foreach(bs =>
+      intercept[TableCommitter.ExpiredGeneration](t.readBefore(spark, "r2", bs)))
+  }
+
   test("a crash mid-publishBuckets leaves no orphan generation dir") {
     val spark = SparkTestSession.get
     import spark.implicits._
