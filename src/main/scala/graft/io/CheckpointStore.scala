@@ -102,14 +102,19 @@ final class CheckpointStore(root: String) {
   def writeWatermark(spark: SparkSession, pipelineId: String, runId: String,
                      watermark: Timestamp, status: String): Unit = {
     import spark.implicits._
+    val created = listWmFileCount() < 0
     withJobDesc(spark, "watermark-write") {
       Seq((pipelineId, runId, watermark, status))
         .toDF("pipeline_id", "run_id", "watermark", "status")
         .write.mode("append").parquet(wmPath)
     }
+    // an append that created the table wrote its only row: seed the cache
+    // with it, so the next run reads no parquet (one writer per workDir)
+    if (created && status == "success")
+      writeEpochCache(pipelineId, listWmFileCount(), 1L, Some(watermark))
     // opportunistic cache roll-forward: valid old cache + this append ->
     // new cache (no Spark read); invalid -> leave it, a reader repairs
-    if (status == "success") readEpochCache(pipelineId).foreach {
+    else if (status == "success") readEpochCache(pipelineId).foreach {
       case (files, n, wm) =>
         val now = listWmFileCount()
         // only roll forward when this append is the ONLY change since the

@@ -20,6 +20,40 @@ object SparkIo {
     try body finally sc.setJobDescription(prev)
   }
 
+  /** Run two data-independent blocks at the same time: `b` on a fresh
+    * thread, `a` on the caller's, and return when BOTH have finished. If
+    * either fails, the first failure is rethrown once both are done, with
+    * the other one's failure added as suppressed — a caller never moves on
+    * (say, to a commit) while a branch is still writing.
+    *
+    * The thread is fresh, never pooled: Spark's local properties (job
+    * group, `graft:` description, FAIR pool) are inheritable thread-locals
+    * copied when a thread is CREATED, so only a new thread runs `b`'s jobs
+    * under the caller's labels. The one audited place main code starts a
+    * thread (ReachabilitySpec guards it). */
+  def both[A, B](a: => A, b: => B): (A, B) = {
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    def attempt[T](body: => T): T =
+      try body catch {
+        case e: Throwable =>
+          if (!failure.compareAndSet(null, e) && (failure.get ne e))
+            failure.get.addSuppressed(e)
+          null.asInstanceOf[T]
+      }
+    var rb: B = null.asInstanceOf[B] // published to this thread by join
+    val t = new Thread(() => rb = attempt(b), "graft-both")
+    t.setDaemon(true)
+    t.start()
+    val ra = attempt(a)
+    // an interrupt must not let the caller return while `b` still runs
+    var interrupted = false
+    while (t.isAlive)
+      try t.join() catch { case _: InterruptedException => interrupted = true }
+    if (interrupted) Thread.currentThread().interrupt()
+    Option(failure.get).foreach(e => throw e)
+    (ra, rb)
+  }
+
   /** Materialize `df` once (`localCheckpoint(true)`) and learn the distinct
     * values of `bucket` over it in the SAME Spark job: a `collect_set` rides
     * the checkpoint through `observe` (at most B driver-side ints), so the

@@ -99,24 +99,29 @@ final class TableCommitter(rootDir: String) {
       }
     }
 
+  /** The generation `runId` merges into: the current one, or the parent of
+    * the one `runId` already published (a crash replay); `None` = no
+    * generation before the run. */
+  def generationBefore(runId: String): Option[String] =
+    publishedGeneration(runId) match {
+      case None => currentGeneration()
+      case Some(gen) =>
+        val n = gen.stripPrefix("gen-").toLong
+        if (n == 0) None else Some(s"gen-${n - 1}")
+    }
+
   /** The rows of `buckets` as the table stood BEFORE `runId` published into
-    * it: the current generation, or the parent of the one `runId` already
-    * published (a crash replay); `None` = no generation before the run.
+    * it ([[generationBefore]]); `None` = no generation before the run.
     * Throws [[TableCommitter.ExpiredGeneration]] if retention expired that
-    * parent: reading it as empty would re-derive a change the table
+    * generation: reading it as empty would re-derive a change the table
     * absorbed. */
   def readBefore(spark: SparkSession, runId: String,
                  buckets: Set[Int]): Option[DataFrame] =
-    publishedGeneration(runId) match {
-      case None => readBuckets(spark, buckets)
-      case Some(gen) =>
-        val n = gen.stripPrefix("gen-").toLong
-        if (n == 0) None
-        else Some(readGeneration(spark, s"gen-${n - 1}", buckets).getOrElse(
-          throw new TableCommitter.ExpiredGeneration(
-            s"replaying $runId needs $root's pre-run snapshot gen-${n - 1}, " +
-              "but retention expired it — raise retention or rebuild the " +
-              "table")))
+    generationBefore(runId).map { gen =>
+      readGeneration(spark, gen, buckets).getOrElse(
+        throw new TableCommitter.ExpiredGeneration(
+          s"replaying $runId needs $root's pre-run snapshot $gen, but " +
+            "retention expired it — raise retention or rebuild the table"))
     }
 
   /** Every alias pointer and the generation it references (control-plane
@@ -174,12 +179,20 @@ final class TableCommitter(rootDir: String) {
     * into tasks x B tiny files (2000+ at test scale — file-listing and
     * hard-link costs then swamp the incremental win; at cluster scale the
     * same layout produces millions of sub-row-group files). One exchange
-    * keyed by bucket gives one writer per bucket dir; AQE coalesces small
-    * buckets, maxRecordsPerFile splits giant ones. */
+    * keyed by bucket gives one writer per bucket dir; maxRecordsPerFile
+    * splits giant ones. The exchange has a FIXED partition count, which
+    * AQE never coalesces: the bucket dirs are written by up to that many
+    * tasks at once, where a coalesced exchange of a small table ran one
+    * task writing all B dirs while the other cores idled. The count is the
+    * session's shuffle partitions capped at its cores — more writers than
+    * cores would only schedule empty tasks. */
   def stagePartitioned(df: DataFrame, runId: String): String = {
     val p = stagingPath(runId)
+    val spark = df.sparkSession
+    val writers = math.min(spark.sessionState.conf.numShufflePartitions,
+      spark.sparkContext.defaultParallelism)
     withJobDesc(df, "stage-buckets") {
-      df.repartition(col(TableCommitter.BucketCol))
+      df.repartition(writers, col(TableCommitter.BucketCol))
         .write.mode("overwrite")
         .option("maxRecordsPerFile", 20000000)
         .partitionBy(TableCommitter.BucketCol).parquet(p)
@@ -204,11 +217,10 @@ final class TableCommitter(rootDir: String) {
     * not the CPU, is the cost). Sidecar writes are atomic and best-effort —
     * a lost write only means the next caller recomputes. */
   def currentRecordCount(spark: SparkSession): Option[Long] =
-    currentPath().map { p =>
+    currentGeneration().map { gen =>
       import scala.jdk.CollectionConverters._
-      val dir = Paths.get(p)
-      val sidecar = dir.resolve(TableCommitter.CountSidecar)
-      scala.util.Try(Files.readString(sidecar).trim.toLong).getOrElse {
+      recordCount(gen).getOrElse {
+        val dir = root.resolve(gen)
         val conf = spark.sessionState.newHadoopConf()
         val s = Files.walk(dir)
         val files =
@@ -223,14 +235,30 @@ final class TableCommitter(rootDir: String) {
               new org.apache.hadoop.fs.Path(f.toUri), conf))
           try rdr.getRecordCount finally rdr.close()
         }.sum()
-        scala.util.Try {
-          val tmp = dir.resolve(
-            s".${TableCommitter.CountSidecar}.${java.util.UUID.randomUUID()}.tmp")
-          Files.writeString(tmp, n.toString)
-          Files.move(tmp, sidecar, StandardCopyOption.ATOMIC_MOVE,
-            StandardCopyOption.REPLACE_EXISTING)
-        }
+        seedRecordCount(gen, n)
         n
+      }
+    }
+
+  /** The row count cached in generation `gen`'s count sidecar, if any. */
+  def recordCount(gen: String): Option[Long] =
+    generationPath(gen).flatMap(dir => scala.util.Try(
+      Files.readString(dir.resolve(TableCommitter.CountSidecar)).trim.toLong).toOption)
+
+  /** Write generation `gen`'s count sidecar: by [[currentRecordCount]]
+    * after a footer walk, or by a writer that observed its rows while
+    * publishing (a full write's row count; a bucket merge's parent count
+    * minus the replaced rows plus the written ones), which spares every
+    * later reader the walk. Atomic and best-effort — a lost write only
+    * means the next caller recomputes. */
+  def seedRecordCount(gen: String, n: Long): Unit =
+    generationPath(gen).foreach { dir =>
+      scala.util.Try {
+        val tmp = dir.resolve(
+          s".${TableCommitter.CountSidecar}.${java.util.UUID.randomUUID()}.tmp")
+        Files.writeString(tmp, n.toString)
+        Files.move(tmp, dir.resolve(TableCommitter.CountSidecar),
+          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
       }
     }
 
@@ -606,7 +634,8 @@ object TableCommitter {
   val RunMarker = "_graft_run"
 
   /** Per-generation record-count cache (leading underscore: ignored by
-    * parquet readers). Written lazily by [[TableCommitter.currentRecordCount]]
-    * — generations are immutable, so the count can never go stale. */
+    * parquet readers). Written by the publishing writer when it observed
+    * its rows, else lazily by [[TableCommitter.currentRecordCount]] —
+    * generations are immutable, so the count can never go stale. */
   val CountSidecar = "_graft_count"
 }

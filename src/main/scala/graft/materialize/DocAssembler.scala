@@ -1,7 +1,10 @@
 package graft.materialize
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.{immutable, mutable}
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.config.PipelineConfig
 
@@ -9,10 +12,10 @@ import graft.config.PipelineConfig
   * output shape (one ES JSON doc per (resource, language),
   * Harvester.java:1826-1877 + ESNormalizer.process):
   *
-  *  - A2: values of a predicate collect into a deduplicated list
-  *    (collect_set). Reference preserves first-seen order; we standardize on
-  *    array_sort for determinism under parallelism (documented divergence,
-  *    SURVEY.md §7.4.6).
+  *  - A2: values of a predicate collect into a deduplicated list.
+  *    Reference preserves first-seen order; we standardize on sorted
+  *    (Spark's binary UTF-8 order, as array_sort) for determinism under
+  *    parallelism (documented divergence, SURVEY.md §7.4.6).
   *  - P3: empty value lists are never emitted (ESNormalizer.java:226).
   *  - A6: untagged ("") values are shared properties — merged into every
   *    tagged language doc of the subject (value lists unioned per key); a
@@ -35,15 +38,21 @@ import graft.config.PipelineConfig
   *    dedup, exactly like the reference's per-value rewrite.
   *  - A5 `normMissing`: per-predicate default values fill the untagged map
   *    when (and only when) it lacks the predicate (ESNormalizer.java:127-155;
-  *    see the inline note for the bug-compatible tagged-only case).
+  *    see [[DocAssembler.SubjectDocs]] for the bug-compatible tagged-only
+  *    case).
   *  - F7: doc id = subj@lang (Harvester.java:1852-1853) — the MERGE key.
   *  - A7: optional items_count_<pred> entries (dead code in the reference,
   *    call site commented out at Harvester.java:1845-1848 — implemented
   *    behind `addCounting`, default off, matching observable behavior).
   *
-  * Everything is hash aggregation + per-subject joins (label dictionary and
-  * shared-doc joins are dimension-sized; AQE broadcasts them) — no per-doc
-  * driver work, scales with the subject count.
+  * Plan: the label lookup (a dimension-sized join AQE broadcasts), then ONE
+  * exchange — a `groupBy(subj)` collecting the subject's (lang, pred, obj)
+  * rows — and a per-subject kernel ([[DocAssembler.SubjectDocs]]) that
+  * builds all of that subject's docs at once (A7's counts stay a row-local
+  * map edit after it). Every rule above is local to one subject, so one
+  * exchange is all the assembly needs: per-value, per-language and
+  * shared/tagged joins would each shuffle again. No per-doc driver work;
+  * scales with the subject count.
   */
 object DocAssembler {
 
@@ -121,105 +130,92 @@ object DocAssembler {
                addCounting: Boolean = false,
                labelSource: Option[DataFrame] = None): DataFrame = {
     val resolved = resolveUriLabels(triples, cfg, labelSource.getOrElse(triples))
+    val kernel = new SubjectDocs(cfg)
+    val docsOf = udf((subj: String, rows: Seq[(String, String, String)]) =>
+      kernel(subj, rows))
+    // the kernel emits no null value, which a typed UDF cannot declare:
+    // keep the schema the formulation before the kernel typed — value lists
+    // of non-null strings (collect_set's), unless an array of a nullable
+    // column joined them: the stamp's [lang], about's [subj], A7's counts
+    val doc =
+      if (cfg.addLanguage || cfg.includeResourceURI || addCounting) col("d._2")
+      else transform_values(col("d._2"),
+        (_, vs) => transform(vs, v => coalesce(v, lit(""))))
+    val docs = resolved
+      // a null value joins no value list, and a null language no doc
+      .filter(col("obj").isNotNull && col("lang").isNotNull)
+      .groupBy("subj")
+      .agg(collect_list(struct(col("lang").as("_1"), col("pred").as("_2"),
+        col("obj").as("_3"))).as("rows"))
+      .select(col("subj"), explode(docsOf(col("subj"), col("rows"))).as("d"))
+      .select(concat_ws("@", col("subj"), col("d._1")).as("id"), col("subj"),
+        col("d._1").as("lang"), doc.as("doc"))
 
-    val vals = resolved
-      .groupBy("subj", "lang", "pred")
-      .agg(array_sort(collect_set(col("obj"))).as("vals"))
-      .filter(size(col("vals")) > 0) // P3
+    if (!addCounting) docs
+    else docs.withColumn("doc", map_concat(col("doc"),
+      map_from_entries(transform(map_entries(col("doc")),
+        e => struct(
+          concat(lit("items_count_"), e.getField("key")),
+          array(size(e.getField("value")).cast("string")))))))
+  }
 
-    val perLang = vals
-      .groupBy("subj", "lang")
-      .agg(map_from_entries(collect_list(struct(col("pred"), col("vals")))).as("doc"))
+  /** The per-subject kernel of [[assemble]]: every doc of one subject from
+    * its (lang, pred, obj) rows (obj and lang non-null), as (lang, doc)
+    * pairs in language order. Value lists are sorted in Spark's binary
+    * UTF-8 order (`UTF8String.compareTo`, what `array_sort` uses), not
+    * `String.compareTo`, which orders UTF-16 code units.
+    *
+    * The shared doc is the untagged ("") map with the row-local edits in
+    * reference order: `about` merges in first (includeResourceURI), then
+    * normMissing defaults fill each predicate the map lacks — absence is
+    * judged on the untagged map alone, so a subject holding a defaulted
+    * predicate only under a language tag still receives the default, which
+    * unions into its tagged docs (bug-compatible by design,
+    * ESNormalizer.java:127-155). Defaults skip label resolution. */
+  private[graft] final class SubjectDocs(cfg: PipelineConfig) extends Serializable {
+    private val includeUri = cfg.includeResourceURI
+    private val addLanguage = cfg.addLanguage
+    private val language = cfg.language
+    private val defaults: Seq[(String, Seq[String])] =
+      cfg.normMissing.toSeq.sortBy(_._1).map { case (p, vs) => p -> sortedDistinct(vs) }
 
-    // A6 merge kernel: union value lists per key, sorted
-    def mergeMaps(a: Column, b: Column): Column =
-      map_zip_with(a, b,
-        (_, v1, v2) => when(v1.isNull, v2).when(v2.isNull, v1)
-          .otherwise(array_sort(array_union(v1, v2))))
+    private def sortedDistinct(vs: Iterable[String]): Seq[String] =
+      vs.iterator.map(UTF8String.fromString).toSeq.distinct
+        .sortWith((x, y) => x.compareTo(y) < 0).map(_.toString)
 
-    // includeResourceURI (about=[subj] into the shared doc) and A5
-    // normMissing (per-predicate defaults where the untagged map lacks the
-    // predicate) are ROW-LOCAL map edits applied to the aggregated shared
-    // doc — r6 restructure (guide §2.4): the former pre-aggregation row
-    // unions paid a distinct-subjects exchange (about), a distinct
-    // (subj, pred) exchange plus an anti-join (defaults), and re-shuffled
-    // the synthetic rows through the value aggregation; the map edits cost
-    // nothing but per-row work and are value-identical because collect_set
-    // + array_sort over the synthetic rows equals the sorted-distinct
-    // literal (defaults) / the sorted union with [subj] (about, via the
-    // same A6 merge kernel). Reference semantics preserved: about inserts
-    // BEFORE the missing judgment (an 'about' default would see it
-    // present), absence is judged on the UNTAGGED map alone, and a subject
-    // holding a defaulted predicate only under a language tag still
-    // receives the default, which then unions into its tagged docs via the
-    // shared merge (bug-compatible by design, ESNormalizer.java:127-155).
-    // Defaults skip label resolution (applied after resolveUriLabels).
-    val aboutMap = map(lit("about"), array(col("subj")))
-    def withAbout(m: Column): Column =
-      if (!cfg.includeResourceURI) m else mergeMaps(m, aboutMap)
-    val defaultsLit: Option[Column] =
-      if (cfg.normMissing.isEmpty) None
-      else {
-        val entries = cfg.normMissing.toSeq.sortBy(_._1)
-        Some(map_from_arrays(
-          array(entries.map { case (p, _) => lit(p) }: _*),
-          array(entries.map { case (_, vs) =>
-            array_sort(array_distinct(array(vs.map(lit): _*))) }: _*)))
+    def apply(subj: String, rows: Seq[(String, String, String)])
+        : Seq[(String, Map[String, Seq[String]])] = {
+      // lang -> pred -> values (A2: a set, sorted on output)
+      val byLang = mutable.TreeMap.empty[String, mutable.Map[String, mutable.Set[String]]]
+      rows.foreach { case (lang, pred, obj) =>
+        byLang.getOrElseUpdate(lang, mutable.HashMap.empty)
+          .getOrElseUpdate(pred, mutable.HashSet.empty) += obj
       }
-    def fill(m: Column): Column = defaultsLit match {
-      case None => m
-      case Some(dl) =>
-        map_concat(m, map_filter(dl, (k, _) => !map_contains_key(m, k)))
+      val untagged = byLang.remove("")
+      // P3 holds by construction: every list holds at least one value
+      // (an empty normMissing default is emitted as configured)
+      val shared = mutable.HashMap.empty[String, mutable.Set[String]]
+      untagged.foreach(shared ++= _)
+      if (includeUri) shared.getOrElseUpdate("about", mutable.HashSet.empty) += subj
+      defaults.foreach { case (p, vs) =>
+        if (!shared.contains(p)) shared(p) = mutable.LinkedHashSet(vs: _*)
+      }
+      def render(m: collection.Map[String, collection.Set[String]])
+          : Map[String, Seq[String]] =
+        immutable.TreeMap.from(m.view.mapValues(sortedDistinct))
+      if (byLang.isEmpty)
+        // untagged values only: one doc at the default language, unstamped
+        untagged.map(_ => language -> render(shared)).toSeq
+      else byLang.toSeq.map { case (lang, tagged) =>
+        // A6: the shared doc merges into every tagged doc, lists unioned
+        val merged = mutable.HashMap.from[String, collection.Set[String]](shared)
+        tagged.foreach { case (p, vs) =>
+          merged(p) = merged.get(p).fold[collection.Set[String]](vs)(_ ++ vs)
+        }
+        val doc = render(merged)
+        // language stamp: put-overwrite, tagged docs only
+        lang -> (if (addLanguage) doc.updated("language", Seq(lang)) else doc)
+      }
     }
-    // the full shared doc of a subject that HAS untagged rows ...
-    val sharedDocExpr = fill(withAbout(col("shared_doc")))
-    // ... and of one that has none (about/defaults still apply there)
-    val fallbackDoc: Option[Column] =
-      (cfg.includeResourceURI, defaultsLit) match {
-        case (true, Some(_)) => Some(fill(aboutMap))
-        case (true, None) => Some(aboutMap)
-        case (false, Some(dl)) => Some(dl)
-        case (false, None) => None
-      }
-
-    val shared = perLang.filter(col("lang") === "")
-      .select(col("subj"), col("doc").as("shared_doc"))
-    val tagged = perLang.filter(col("lang") =!= "")
-
-    // A6: merge shared props into every tagged doc; union value lists per key
-    val mergedTagged = tagged.join(shared, Seq("subj"), "left")
-      .select(col("subj"), col("lang"),
-        when(col("shared_doc").isNull, fallbackDoc match {
-          case None => col("doc")
-          case Some(fb) => mergeMaps(col("doc"), fb)
-        }).otherwise(mergeMaps(col("doc"), sharedDocExpr)).as("doc"))
-
-    // language stamp (tagged docs only; put-overwrite semantics)
-    val stampedTagged =
-      if (!cfg.addLanguage) mergedTagged
-      else mergedTagged.withColumn("doc",
-        map_concat(
-          map_filter(col("doc"), (k, _) => k =!= "language"),
-          map(lit("language"), array(col("lang")))))
-
-    // subjects with only untagged values: one doc at the default language
-    // (about/defaults applied with the same row-local edits)
-    val untaggedOnly = shared
-      .join(tagged.select("subj").distinct(), Seq("subj"), "left_anti")
-      .select(col("subj"), lit(cfg.language).as("lang"),
-        sharedDocExpr.as("doc"))
-
-    val docs = stampedTagged.unionByName(untaggedOnly)
-      .withColumn("id", concat_ws("@", col("subj"), col("lang")))
-
-    val withCounts = if (addCounting) {
-      docs.withColumn("doc", map_concat(col("doc"),
-        map_from_entries(transform(map_entries(col("doc")),
-          e => struct(
-            concat(lit("items_count_"), e.getField("key")),
-            array(size(e.getField("value")).cast("string")))))))
-    } else docs
-
-    withCounts.select("id", "subj", "lang", "doc")
   }
 }

@@ -226,7 +226,16 @@ final class KgPipeline(cfg: PipelineConfig) {
   def allBucketIds: Set[Int] = derived.allBuckets
 
   /** Full harvest (reference lifecycle §3.1): compute everything, publish
-    * atomically, record watermark + metrics + lineage. */
+    * atomically, record watermark + metrics + lineage.
+    *
+    * The support publish and the derived tables both read the supports
+    * checkpoint, not each other, so they run at the same time
+    * ([[SparkIo.both]]): the supports on one side; on the other the edges,
+    * then the nodes and docs together ([[DerivedTables.publishAllNodesAndDocs]]).
+    * Both sides join before `finishRun` appends the metrics and the
+    * watermark — the run's commit — so a crash in either leaves the
+    * watermark where it was, and the retry under the same runId replays the
+    * checkpoint into runId-idempotent publishes. */
   def runFull(spark: SparkSession, turns: Dataset[Turn],
               catalog: Seq[CatalogEntry], markers: Map[String, String],
               runId: String): RunResult = {
@@ -236,12 +245,19 @@ final class KgPipeline(cfg: PipelineConfig) {
     supportTable.repinSemantics(cfg.semanticsSig)
     val (supports, wm) =
       supportsStage(spark, runId, "supports", turns, catalog, markers)
+    val (_, (n, totalWeight)) = SparkIo.both(
+      publishSupports(supports, allBucketIds, runId),
+      publishDerivedFull(spark, runId, supports))
+    finishRun(spark, runId, wm, n, Seq(("edges", "total_weight", totalWeight)))
+  }
 
+  /** Stage `supports` bucketed by conversation and publish them as exactly
+    * `buckets`. */
+  private def publishSupports(supports: DataFrame, buckets: Set[Int],
+                              runId: String): Unit = {
     supportTable.stagePartitioned(
       supports.withColumn("bucket", convBucket(col("conv_id"))), runId)
-    supportTable.publishBuckets(runId, allBucketIds)
-
-    publishDerivedFull(spark, runId, supports, wm)
+    supportTable.publishBuckets(runId, buckets)
   }
 
   /** Deterministic sync run id: ONE logical sync per (successful-run count,
@@ -269,7 +285,13 @@ final class KgPipeline(cfg: PipelineConfig) {
     * read is bucket-addressed ([[TableCommitter.readBuckets]]), so a sync
     * touching k buckets lists O(k) bucket dirs and a no-op sync lists none;
     * only `syncOldData`'s vanished-set reconciliation reads a whole
-    * generation. */
+    * generation.
+    *
+    * Once the edge delta is checkpointed, the support publish and
+    * [[DerivedTables.propagate]] (edges, then nodes and docs together) run
+    * at the same time ([[SparkIo.both]]) and join before `finishRun`
+    * records the run; the self-heal path (no edge generation) derives from
+    * the published supports, so it stays sequential. */
   def runSync(spark: SparkSession, turns: Dataset[Turn],
               catalog: Seq[CatalogEntry], markers: Map[String, String],
               runId: String): RunResult = {
@@ -365,11 +387,8 @@ final class KgPipeline(cfg: PipelineConfig) {
     curGen match {
       case None =>
         // first run arrived as a sync: equivalent to a full publish
-        supportTable.stagePartitioned(
-          newSupports.withColumn("bucket", convBucket(col("conv_id"))), runId)
-        supportTable.publishBuckets(runId, allBucketIds)
-        publishDerivedFull(spark, runId,
-          supportTable.read(spark).get.drop("bucket"), newWm)
+        publishSupports(newSupports, allBucketIds, runId)
+        finishDerivedFull(spark, runId, newWm)
 
       case Some(gen) =>
         val touched = changedConvs.unionByName(vanished).distinct()
@@ -406,35 +425,43 @@ final class KgPipeline(cfg: PipelineConfig) {
 
         // dynamic-partition-overwrite: only the k changed buckets are
         // written; the other B-k carry over by hard link
-        supportTable.stagePartitioned(
-          keep.unionByName(newSupports)
-            .withColumn("bucket", convBucket(col("conv_id"))), runId)
-        supportTable.publishBuckets(runId, changedBuckets)
-        publishHook("support")
+        def publishChangedSupports(): Unit = {
+          publishSupports(keep.unionByName(newSupports), changedBuckets, runId)
+          publishHook("support")
+        }
 
-        if (edgeTable.currentGeneration().isEmpty)
+        if (edgeTable.currentGeneration().isEmpty) {
           // the previous run crashed between the support publish and the
           // edge publish (e.g. a first-ever run that arrived as a sync): no
           // edge snapshot exists to merge a delta into — derive everything
           // fully from the published supports, which already contain the
           // replayed update
-          publishDerivedFull(spark, runId,
-            supportTable.read(spark).get.drop("bucket"), newWm)
-        else {
-          derived.propagate(spark, deltaCk, affectedEdgeBuckets, runId)
-          // snapshot-level triple count straight from parquet footers —
-          // zero Spark jobs (a metadata-only Spark count still schedules ~2)
+          publishChangedSupports()
+          finishDerivedFull(spark, runId, newWm)
+        } else {
+          // the support publish and the propagation both read only the
+          // checkpoints above (the delta is already staged): they run at
+          // the same time, and both join before the run commits. Every
+          // publish is runId-idempotent and the edge merge reads the edges
+          // as they stood before the run, so a crash in any interleaving
+          // replays to the same tables
+          SparkIo.both(publishChangedSupports(),
+            derived.propagate(spark, deltaCk, affectedEdgeBuckets, runId))
+          // snapshot-level triple count from the count sidecar propagate
+          // derived (else from parquet footers) — zero Spark jobs
           finishRun(spark, runId, newWm,
             edgeTable.currentRecordCount(spark).getOrElse(0L))
         }
     }
   }
 
-  /** Derive + publish full edge/node/doc snapshots from the support table
-    * (full-harvest path: every bucket is written). */
+  /** Derive + publish full edge/node/doc snapshots from `supports`
+    * (full-harvest path: every bucket is written): the edges, then the
+    * nodes and docs at the same time. The edge generation's count sidecar
+    * is the observed edge count.
+    * @return (edge rows, total edge weight) */
   private def publishDerivedFull(spark: SparkSession, runId: String,
-                                 supports: DataFrame,
-                                 newWatermark: Option[Timestamp]): RunResult = {
+                                 supports: DataFrame): (Long, Long) = {
     // metrics ride the write itself (Dataset.observe) — no extra count job
     val obs = new org.apache.spark.sql.Observation()
     val edges = supports
@@ -442,14 +469,24 @@ final class KgPipeline(cfg: PipelineConfig) {
       .agg(sum(col("weight")).as("weight"))
       .observe(obs, count(lit(1)).as("n"), sum(col("weight")).as("total_weight"))
     derived.publishEdges(edges, allBucketIds, runId)
+    val n = obs.get("n").asInstanceOf[Long]
+    edgeTable.publishedGeneration(runId).foreach(edgeTable.seedRecordCount(_, n))
 
     // nodes and docs derive from the just-published parquet snapshot —
     // re-using the logical `edges` plan would re-run the whole supports
     // aggregation once per derived table
     derived.publishAllNodesAndDocs(spark, runId)
+    (n, obs.get("total_weight").asInstanceOf[Long])
+  }
 
-    finishRun(spark, runId, newWatermark, obs.get("n").asInstanceOf[Long],
-      Seq(("edges", "total_weight", obs.get("total_weight").asInstanceOf[Long])))
+  /** The sync's self-heal: every derived table rebuilt from the published
+    * supports, then the run's commit. */
+  private def finishDerivedFull(spark: SparkSession, runId: String,
+                                newWatermark: Option[Timestamp]): RunResult = {
+    val (n, totalWeight) = publishDerivedFull(spark, runId,
+      supportTable.read(spark).get.drop("bucket"))
+    finishRun(spark, runId, newWatermark, n,
+      Seq(("edges", "total_weight", totalWeight)))
   }
 
   private def finishRun(spark: SparkSession, runId: String,

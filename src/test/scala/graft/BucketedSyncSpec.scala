@@ -336,6 +336,54 @@ class BucketedSyncSpec extends AnyFunSuite {
   private def gens(q: KgPipeline) = (q.edgeTable.currentGeneration(),
     q.nodeTable.currentGeneration(), q.docTable.currentGeneration())
 
+  test("a crash in the support publish that overlaps the propagation: " +
+       "runSync throws only after both joined (no Spark job left running or " +
+       "started later, watermark unmoved), and the resume equals a scratch " +
+       "build") {
+    val spark = SparkTestSession.get
+    val sc = spark.sparkContext
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8,
+      syncOldData = true, publishDocs = true))
+    val t0 = fx.turns.filter(_.turn_idx <= 4)
+    val t1 = fx.turns.filterNot(_.conv_id == "conv-000002")
+    p.runFull(spark, turnsDs(t0), fx.catalog, fx.markers, "t0")
+    val epoch0 = p.checkpoints.syncEpoch(spark, "kg")
+
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        starts.add(e.time)
+    }
+    sc.addSparkListener(listener)
+    val thrownAt = try {
+      p.failAfterPublish = Some("support")
+      intercept[RuntimeException] {
+        p.runSync(spark, turnsDs(t1), fx.catalog, fx.markers, "t1")
+      }
+      System.currentTimeMillis()
+    } finally p.failAfterPublish = None
+    // the status store trails the scheduler by listener-bus lag; a branch
+    // still running would keep submitting jobs
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    Thread.sleep(500)
+    sc.removeSparkListener(listener)
+    assert(!starts.asScala.exists(_ > thrownAt), "a job started after runSync threw")
+    assert(p.checkpoints.syncEpoch(spark, "kg") == epoch0)
+
+    p.runSync(spark, turnsDs(t1), fx.catalog, fx.markers, "t1")
+    val scratch = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"),
+      syncBuckets = 8, publishDocs = true))
+    scratch.runFull(spark, turnsDs(t1), fx.catalog, fx.markers, "s")
+    assert(supportSet(p) == supportSet(scratch))
+    assert(edgeSet(p) == edgeSet(scratch))
+    assert(nodeMap(p) == nodeMap(scratch))
+    assert(docSet(p) == docSet(scratch))
+    assert(p.checkpoints.syncEpoch(spark, "kg")._1 == epoch0._1 + 1)
+  }
+
   test("a retry whose edges published and whose pre-run edge generation " +
        "retention expired rebuilds nodes and docs from the published edges") {
     val spark = SparkTestSession.get
@@ -485,9 +533,15 @@ class BucketedSyncSpec extends AnyFunSuite {
 
     val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8,
       syncOldData = true, publishDocs = true))
-    p.runFull(spark, turnsDs(e0), fx.catalog, fx.markers, "e0")
-    p.runSync(spark, turnsDs(e1), fx.catalog, fx.markers, "e1")
-    p.runSync(spark, turnsDs(e2), fx.catalog, fx.markers, "e2")
+    // each run's triple count comes from the count sidecar its edge write
+    // derived (full: observed; sync: parent - replaced + written), never
+    // from a footer walk: it must equal the published rows
+    Seq(p.runFull(spark, turnsDs(e0), fx.catalog, fx.markers, "e0"),
+      p.runSync(spark, turnsDs(e1), fx.catalog, fx.markers, "e1"),
+      p.runSync(spark, turnsDs(e2), fx.catalog, fx.markers, "e2")).foreach { r =>
+      assert(p.edgeTable.recordCount(r.edgesGen).contains(r.triples))
+      assert(r.triples == p.edgeTable.readGeneration(spark, r.edgesGen).get.count())
+    }
 
     val scratch = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"),
       syncBuckets = 8, publishDocs = true))

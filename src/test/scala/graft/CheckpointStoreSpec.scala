@@ -24,9 +24,11 @@ class CheckpointStoreSpec extends AnyFunSuite {
     val wm = Timestamp.from(Instant.ofEpochSecond(1735689600L, 500000))
     cs.writeWatermark(spark, "p", "r1", wm, "success")
 
-    // first read repairs the cache from parquet; second is served FROM the
-    // cache (same file count) — both must carry the exact microseconds
-    assert(cs.syncEpoch(spark, "p") == ((1L, Some(wm))))
+    // the creating append seeded the cache: both reads are served FROM it
+    // (same file count), with no Spark job, and carry the exact microseconds
+    val (first, jobs) = SparkJobs.during(spark)(cs.syncEpoch(spark, "p"))
+    assert(first == ((1L, Some(wm))))
+    assert(jobs.isEmpty, jobs.mkString(" | "))
     assert(cs.syncEpoch(spark, "p")._2.get.toInstant == wm.toInstant)
 
     // roll-forward on append (no Spark read) must keep full precision too

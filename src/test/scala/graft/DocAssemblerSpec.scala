@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config.PipelineConfig
@@ -185,5 +188,128 @@ class DocAssemblerSpec extends AnyFunSuite {
     assert(!cfg.addLanguage)
     assert(cfg.includeResourceURI)
     assert(cfg.uriDescription == Seq("skos:prefLabel", "dc:title"))
+  }
+
+  /** The DataFrame formulation `assemble` had before its per-subject
+    * kernel: per-(subj, lang, pred) value sets, per-(subj, lang) maps, and
+    * the shared/tagged/untagged-only joins — the reference the kernel must
+    * equal. */
+  private def referenceAssemble(triples: DataFrame, cfg: PipelineConfig,
+                                addCounting: Boolean): DataFrame = {
+    val resolved = DocAssembler.resolveUriLabels(triples, cfg)
+    val vals = resolved
+      .groupBy("subj", "lang", "pred")
+      .agg(array_sort(collect_set(col("obj"))).as("vals"))
+      .filter(size(col("vals")) > 0)
+    val perLang = vals
+      .groupBy("subj", "lang")
+      .agg(map_from_entries(collect_list(struct(col("pred"), col("vals")))).as("doc"))
+    def mergeMaps(a: Column, b: Column): Column =
+      map_zip_with(a, b,
+        (_, v1, v2) => when(v1.isNull, v2).when(v2.isNull, v1)
+          .otherwise(array_sort(array_union(v1, v2))))
+    val aboutMap = map(lit("about"), array(col("subj")))
+    def withAbout(m: Column): Column =
+      if (!cfg.includeResourceURI) m else mergeMaps(m, aboutMap)
+    val defaultsLit: Option[Column] =
+      if (cfg.normMissing.isEmpty) None
+      else {
+        val entries = cfg.normMissing.toSeq.sortBy(_._1)
+        Some(map_from_arrays(
+          array(entries.map { case (p, _) => lit(p) }: _*),
+          array(entries.map { case (_, vs) =>
+            array_sort(array_distinct(array(vs.map(lit): _*))) }: _*)))
+      }
+    def fill(m: Column): Column = defaultsLit match {
+      case None => m
+      case Some(dl) =>
+        map_concat(m, map_filter(dl, (k, _) => !map_contains_key(m, k)))
+    }
+    val sharedDocExpr = fill(withAbout(col("shared_doc")))
+    val fallbackDoc: Option[Column] =
+      (cfg.includeResourceURI, defaultsLit) match {
+        case (true, Some(_)) => Some(fill(aboutMap))
+        case (true, None) => Some(aboutMap)
+        case (false, Some(dl)) => Some(dl)
+        case (false, None) => None
+      }
+    val shared = perLang.filter(col("lang") === "")
+      .select(col("subj"), col("doc").as("shared_doc"))
+    val tagged = perLang.filter(col("lang") =!= "")
+    val mergedTagged = tagged.join(shared, Seq("subj"), "left")
+      .select(col("subj"), col("lang"),
+        when(col("shared_doc").isNull, fallbackDoc match {
+          case None => col("doc")
+          case Some(fb) => mergeMaps(col("doc"), fb)
+        }).otherwise(mergeMaps(col("doc"), sharedDocExpr)).as("doc"))
+    val stampedTagged =
+      if (!cfg.addLanguage) mergedTagged
+      else mergedTagged.withColumn("doc",
+        map_concat(
+          map_filter(col("doc"), (k, _) => k =!= "language"),
+          map(lit("language"), array(col("lang")))))
+    val untaggedOnly = shared
+      .join(tagged.select("subj").distinct(), Seq("subj"), "left_anti")
+      .select(col("subj"), lit(cfg.language).as("lang"),
+        sharedDocExpr.as("doc"))
+    val docs = stampedTagged.unionByName(untaggedOnly)
+      .withColumn("id", concat_ws("@", col("subj"), col("lang")))
+    val withCounts = if (addCounting) {
+      docs.withColumn("doc", map_concat(col("doc"),
+        map_from_entries(transform(map_entries(col("doc")),
+          e => struct(
+            concat(lit("items_count_"), e.getField("key")),
+            array(size(e.getField("value")).cast("string")))))))
+    } else docs
+    withCounts.select("id", "subj", "lang", "doc")
+  }
+
+  private def docRows(df: DataFrame) = df.collect().map { r =>
+    (r.getString(0), r.getString(1), r.getString(2),
+      r.getMap[String, scala.collection.Seq[String]](3).toMap
+        .map { case (k, v) => k -> v.toList })
+  }.toSet
+
+  // values whose UTF-16 and UTF-8 orders disagree ("ｚ" U+FF5A sorts after
+  // the surrogate pair of "𝄞" U+1D11E in String.compareTo, before it in
+  // Spark's binary order), plus a null, labels equal to subjects (about)
+  // and empty strings
+  private val genTriple: Gen[(String, String, String, String)] = for {
+    s <- Gen.oneOf("s1", "s2", "s3", "sé", "s𝄞")
+    p <- Gen.oneOf("p_a", "p_b", "language", "about", "p_ü")
+    o <- Gen.oneOf[String](null, "x", "y", "", "s1", "sé", "ｚ", "𝄞", "Ω", "é", "e")
+    l <- Gen.oneOf("", "", "en", "cs", "de")
+  } yield (s, p, o, l)
+
+  private val genDefaults: Gen[Map[String, Seq[String]]] =
+    Gen.nonEmptyMap(for {
+      p <- Gen.oneOf("p_a", "p_c", "about", "p_ü")
+      vs <- Gen.nonEmptyListOf(Gen.oneOf("d", "x", "ｚ", "𝄞", "d"))
+    } yield p -> vs)
+
+  test("the per-subject kernel equals the DataFrame formulation over random " +
+       "triples, for all 16 combinations of includeResourceURI, addLanguage, " +
+       "normMissing and addCounting") {
+    val spark = SparkTestSession.get
+    import spark.implicits._
+    val flags = Seq(false, true)
+    for (about <- flags; stamp <- flags; defaults <- flags; counting <- flags) {
+      val combo =
+        s"about=$about addLanguage=$stamp defaults=$defaults counting=$counting"
+      val prop = Prop.forAllNoShrink(Gen.listOfN(60, genTriple), genDefaults,
+          Gen.oneOf("en", "fr")) { (triples, dflt, language) =>
+        val cfg = PipelineConfig(language = language, addLanguage = stamp,
+          includeResourceURI = about,
+          normMissing = if (defaults) dflt else Map.empty)
+        val df = triples.toDF("subj", "pred", "obj", "lang")
+        val got = DocAssembler.assemble(df, cfg, counting)
+        val want = referenceAssemble(df, cfg, counting)
+        Prop(got.schema == want.schema) :| s"schema ${got.schema} != ${want.schema}" &&
+          Prop(docRows(got) == docRows(want)) :| s"docs differ on $triples"
+      }
+      val res = Test.check(
+        Test.Parameters.default.withMinSuccessfulTests(3).withWorkers(1), prop)
+      assert(res.passed, s"$combo: ${org.scalacheck.util.Pretty.pretty(res)}")
+    }
   }
 }

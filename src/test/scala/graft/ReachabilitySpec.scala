@@ -152,6 +152,44 @@ class ReachabilitySpec extends AnyFunSuite {
       s"instead of a bucket isin filter in: ${offenders.mkString(", ")}")
   }
 
+  /** Starting a thread or a pool: the ways main code could run Spark jobs
+    * concurrently outside the audited helper. */
+  private val Concurrency = """new\s+Thread\b|Future\s*\{|Executors\.""".r
+
+  /** `src` without the body of `SparkIo.both` (from its `def` to the next
+    * member), the one place main code may start a thread. */
+  private def withoutBoth(src: String): String = {
+    val start = src.indexOf("def both[")
+    if (start < 0) src
+    else {
+      val next = src.indexOf("\n  def ", start + 1)
+      src.substring(0, start) + (if (next < 0) "" else src.substring(next))
+    }
+  }
+
+  test("concurrency stays in SparkIo.both (and MultiRiver's river pool): no " +
+       "other main code starts a thread, a Future or an executor") {
+    assert(Concurrency.findFirstIn("val t = new Thread(() => run())").isDefined)
+    assert(Concurrency.findFirstIn("Future { work() }").isDefined)
+    assert(Concurrency.findFirstIn("Executors.newFixedThreadPool(4)").isDefined)
+    assert(Concurrency.findFirstIn(
+      stripComments("x // new Thread(...) in a comment")).isEmpty)
+    val both = "object SparkIo {\n  def both[A](a: => A) = new Thread(() => a)\n  def f = 1\n}"
+    assert(Concurrency.findFirstIn(withoutBoth(both)).isEmpty)
+    assert(Concurrency.findFirstIn(withoutBoth(both + "\n  def g = new Thread(r)")).isDefined)
+    val offenders = mainSources()
+      .filterNot(_._1.getFileName.toString == "MultiRiver.scala")
+      .filter { case (p, src) =>
+        val code = stripComments(src)
+        Concurrency.findFirstIn(
+          if (p.getFileName.toString == "SparkIo.scala") withoutBoth(code) else code
+        ).isDefined
+      }
+      .map(_._1)
+    assert(offenders.isEmpty, "run concurrent Spark work through " +
+      s"SparkIo.both, not a thread or pool of its own: ${offenders.mkString(", ")}")
+  }
+
   test("the frozen driver entry points exist") {
     Seq("Bench.scala", "Verify.scala", "SparkEntry.scala").foreach { f =>
       assert(Files.isRegularFile(mainRoot.resolve(Paths.get("graft", f))), f)
