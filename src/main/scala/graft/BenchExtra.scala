@@ -3,7 +3,6 @@ package graft
 import java.util.Locale
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round side bench (guide §1.4): times selected queries with
   * the noop sink (computes every column, discards output) so the measured
@@ -28,38 +27,6 @@ object BenchExtra {
 
   private def fmt(d: Double): String = "%.4f".formatLocal(Locale.ROOT, d)
 
-  /** Same session shape as the frozen Bench (configs must match or the
-    * isolation numbers are not comparable). */
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-benchextra-$cores")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.local.dir", {
-        val d = java.nio.file.Paths.get("/dev/shm/spark-local")
-        java.nio.file.Files.createDirectories(d)
-        d.toString
-      })
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // A/B experiment knob: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" applied on top —
-    // for measuring config hypotheses in isolation before deciding whether a
-    // query-code change is warranted
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { kvs =>
-      kvs.split(";").filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        s.conf.set(k, v)
-      }
-    }
-    s
-  }
-
   /** Counts jobs/stages/tasks between reset() calls. */
   private final class Counter extends SparkListener {
     @volatile var jobs = 0
@@ -77,7 +44,7 @@ object BenchExtra {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val samples = sys.env.getOrElse("SPARK_GRAFT_SAMPLES", "3").toInt
     val mode = args.headOption.getOrElse("time")
-    val spark = session(cpus)
+    val spark = ScalingBench.session(cpus, s"graft-benchextra-$cpus")
 
     mode match {
       case "plan" =>

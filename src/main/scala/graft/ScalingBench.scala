@@ -15,14 +15,13 @@ import graft.sources.TranscriptGen
   * Prints: {"cores":N,"sec":...,"turns":...,"triples":...}  (best of passes)
   */
 object ScalingBench {
-  def main(args: Array[String]): Unit = {
-    val cores = args(0).toInt
-    val turnsDir = args(1)
-    val passes = if (args.length > 2) args(2).toInt else 2
 
+  /** The frozen Bench's session shape at `local[cores]` — BenchExtra's
+    * isolation numbers use it too, so both stay comparable with Bench. */
+  def session(cores: Int, appName: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
-      .appName(s"graft-scaling-$cores")
+      .appName(appName)
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -43,6 +42,15 @@ object ScalingBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val cores = args(0).toInt
+    val turnsDir = args(1)
+    val passes = if (args.length > 2) args(2).toInt else 2
+
+    val spark = session(cores, s"graft-scaling-$cores")
     import spark.implicits._
 
     val p = new KgPipeline(PipelineConfig())

@@ -2,9 +2,7 @@ package graft.app
 
 import java.nio.file.{Files, Path, Paths}
 
-import scala.jdk.CollectionConverters._
-
-import graft.io.TableCommitter
+import graft.io.{SparkIo, TableCommitter}
 
 /** Operations CLI over a pipeline workDir — the Spark-engine equivalent of
   * the reference's REST control plane (SURVEY.md §2.10,
@@ -72,40 +70,17 @@ object KgAdmin {
   private def committer(workDir: String, table: String): TableCommitter =
     new TableCommitter(tableDir(workDir, table).toString)
 
-  private def tableNames(workDir: String): Seq[String] = {
-    val d = Paths.get(workDir, "tables")
-    if (!Files.isDirectory(d)) Seq.empty
-    else {
-      val s = Files.list(d)
-      try s.iterator().asScala.filter(Files.isDirectory(_))
-        .map(_.getFileName.toString).toSeq.sorted
-      finally s.close()
-    }
-  }
+  private def tableNames(workDir: String): Seq[String] =
+    SparkIo.list(Paths.get(workDir, "tables")).filter(Files.isDirectory(_))
+      .map(_.getFileName.toString).sorted
 
   /** PHYSICAL bytes: hard-link-shared files (bucket carryover) are counted
     * once via inode identity, so the number reflects reclaimable space, not
     * the sum of per-generation logical sizes. */
-  private def tableBytes(workDir: String, table: String): Long = {
-    val d = tableDir(workDir, table)
-    if (!Files.isDirectory(d)) return 0L
-    val seen = scala.collection.mutable.Set[AnyRef]()
-    var total = 0L
-    val s = Files.walk(d)
-    try s.iterator().asScala.filter(Files.isRegularFile(_)).foreach { f =>
-      val key = Files.getAttribute(f, "unix:fileKey")
-      if (seen.add(key)) total += Files.size(f)
-    } finally s.close()
-    total
-  }
+  private def tableBytes(workDir: String, table: String): Long =
+    SparkIo.files(tableDir(workDir, table))
+      .distinctBy(Files.getAttribute(_, "unix:fileKey")).map(Files.size).sum
 
   /** Logical bytes of one generation directory (what a reader scans). */
-  private def dirBytes(d: Path): Long =
-    if (!Files.isDirectory(d)) 0L
-    else {
-      val s = Files.walk(d)
-      try s.iterator().asScala.filter(Files.isRegularFile(_))
-        .map(Files.size).sum
-      finally s.close()
-    }
+  private def dirBytes(d: Path): Long = SparkIo.files(d).map(Files.size).sum
 }

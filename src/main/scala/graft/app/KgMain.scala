@@ -246,9 +246,10 @@ object KgMain {
         triples.toDF().select(col("subj"), col("pred"), col("obj"),
           col("objLang").as("lang")), cfg)
         .persist()
-      // an all-malformed (or empty) dump yields zero docs: publishing an
-      // empty generation would leave an unreadable table (no parquet files
-      // to infer a schema from) — fail before the pointer moves
+      // an all-malformed (or empty) dump yields zero docs: refuse to
+      // publish nothing over a good table (a zero-row generation would stay
+      // readable through its schema sidecar, but it would replace every
+      // doc) — fail before the pointer moves
       val n = docs.count()
       require(n > 0,
         s"no valid triples parsed from $turnsDir — nothing published")

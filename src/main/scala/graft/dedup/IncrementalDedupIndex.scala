@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.config.PipelineConfig
-import graft.io.TableCommitter
+import graft.io.{SparkIo, TableCommitter}
 import graft.text.TextNorm
 
 /** Incrementally-maintained duplicate index: the batch dedup queries
@@ -74,37 +74,42 @@ final class IncrementalDedupIndex(workDir: String, buckets: Int = 64) {
     * — two texts for one id would both enter the index; an id in BOTH
     * `changed` and `removed` is treated as changed (the fresh row wins).
     * An empty delta is a metadata-only no-op: no generation is published.
+    *
+    * Every Spark job it starts is labelled `graft:dedup-update:<runId>` or
+    * finer. The fresh rows and the touched ids are each materialized once,
+    * their bucket set observed in the same job (`SparkIo.checkpointBuckets`):
+    * both feed several later reads.
     */
   def update(spark: SparkSession, changed: DataFrame, runId: String,
-             removed: Seq[Long] = Nil): (Set[Int], Set[Int]) = {
+             removed: Seq[Long] = Nil): (Set[Int], Set[Int]) =
+    SparkIo.withJobDesc(spark, s"dedup-update:$runId")(
+      applyDelta(spark, changed, runId, removed))
+
+  private def applyDelta(spark: SparkSession, changed: DataFrame, runId: String,
+                         removed: Seq[Long]): (Set[Int], Set[Int]) = {
     import spark.implicits._
     pin(fpTable); pin(docTable)
 
-    val fresh = fingerprints(changed).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (removed.isEmpty && fresh.isEmpty) {
-      fresh.unpersist()
-      return (Set.empty, Set.empty)
-    }
-    val touchedIds = fresh.select("doc_id")
-      .union(removed.toDF("doc_id")).distinct()
-
-    // doc-buckets holding the touched ids (bounded by `buckets`)
-    val docBuckets = touchedIds.withColumn("b", docBucket)
-      .select("b").distinct().as[Int].collect().toSet
+    // the fresh rows and the fp-buckets they land in
+    val (fresh, freshFpBuckets) = SparkIo.checkpointBuckets(
+      fingerprints(changed).distinct().withColumn("b", fpBucket), col("b"),
+      "dedup-fresh")
+    if (removed.isEmpty && freshFpBuckets.isEmpty) return (Set.empty, Set.empty)
+    // the touched ids and the doc-buckets holding them (bounded by `buckets`)
+    val (touched, docBuckets) = SparkIo.checkpointBuckets(
+      fresh.select("doc_id").union(removed.toDF("doc_id")).distinct()
+        .withColumn("b", docBucket), col("b"), "dedup-touched")
+    val touchedIds = touched.select("doc_id")
 
     // the touched ids' PRIOR fingerprints, read from their doc-map buckets
     val prior = docTable.readBuckets(spark, docBuckets) match {
-      case Some(t) =>
-        t.join(touchedIds, "doc_id").select("doc_id", "fp")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      case Some(t) => t.join(touchedIds, "doc_id").select("doc_id", "fp")
       case None => Seq.empty[(Long, String)].toDF("doc_id", "fp")
     }
 
     // fp-buckets to rewrite: where fresh rows land + where stale rows live
-    val fpBuckets = (fresh.withColumn("b", fpBucket) union
-      prior.select("doc_id", "fp").withColumn("b", fpBucket))
-      .select("b").distinct().as[Int].collect().toSet
+    val fpBuckets = freshFpBuckets ++ SparkIo.withJobDesc(spark,
+      "collect:dedup-prior")(prior.select(fpBucket).distinct().as[Int].collect())
 
     // rebuild the touched fp-buckets: prior contents minus ALL rows of
     // touched docs, plus the fresh rows
@@ -130,26 +135,28 @@ final class IncrementalDedupIndex(workDir: String, buckets: Int = 64) {
       .withColumn("bucket", docBucket)
     docTable.stagePartitioned(docRows, runId)
     docTable.publishBuckets(runId, docBuckets)
-
-    fresh.unpersist(); prior.unpersist()
     (fpBuckets, docBuckets)
   }
 
   /** Duplicate candidates for a delta frame (doc_id, text) against the
     * CURRENT index: existing docs sharing a fingerprint with a delta doc.
-    * Reads only the fp-buckets the delta's fingerprints hash to.
+    * Reads only the fp-buckets the delta's fingerprints hash to; the
+    * delta's fingerprints are materialized once, with their bucket set.
+    * Every Spark job it starts is labelled `graft:dedup-candidates` or finer.
     */
-  def candidates(spark: SparkSession, delta: DataFrame): DataFrame = {
-    import spark.implicits._
-    val d = fingerprints(delta).distinct().withColumn("b", fpBucket)
-    val bs = d.select("b").distinct().as[Int].collect().toSet
-    fpTable.readBuckets(spark, bs) match {
-      case Some(idx) =>
-        idx.select(col("fp"), col("doc_id").as("dup_id"))
-          .join(d.select("doc_id", "fp"), "fp")
-          .filter(col("dup_id") =!= col("doc_id"))
-          .select("doc_id", "dup_id", "fp")
-      case None => Seq.empty[(Long, Long, String)].toDF("doc_id", "dup_id", "fp")
+  def candidates(spark: SparkSession, delta: DataFrame): DataFrame =
+    SparkIo.withJobDesc(spark, "dedup-candidates") {
+      import spark.implicits._
+      val (d, bs) = SparkIo.checkpointBuckets(
+        fingerprints(delta).distinct().withColumn("b", fpBucket), col("b"),
+        "dedup-candidates")
+      fpTable.readBuckets(spark, bs) match {
+        case Some(idx) =>
+          idx.select(col("fp"), col("doc_id").as("dup_id"))
+            .join(d.select("doc_id", "fp"), "fp")
+            .filter(col("dup_id") =!= col("doc_id"))
+            .select("doc_id", "dup_id", "fp")
+        case None => Seq.empty[(Long, Long, String)].toDF("doc_id", "dup_id", "fp")
+      }
     }
-  }
 }

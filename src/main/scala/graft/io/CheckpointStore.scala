@@ -61,10 +61,8 @@ final class CheckpointStore(root: String) {
 
   private def listWmFileCount(): Int = {
     val p = java.nio.file.Paths.get(wmPath)
-    if (!java.nio.file.Files.exists(p)) return -1
-    val s = java.nio.file.Files.list(p)
-    try s.filter(f => f.getFileName.toString.endsWith(".parquet")).count().toInt
-    finally s.close()
+    if (!java.nio.file.Files.exists(p)) -1
+    else SparkIo.list(p).count(_.getFileName.toString.endsWith(".parquet"))
   }
 
   // Watermarks serialize FULL-precision (epoch seconds + nanos, two
@@ -74,47 +72,43 @@ final class CheckpointStore(root: String) {
   // changes" night would rewrite its buckets forever, and the changed set
   // would depend on whether the cache hit. A pre-upgrade cache (single
   // milliseconds field) fails this parse and repairs from parquet.
-  private def readEpochCache(pipelineId: String): Option[(Int, Long, Option[Timestamp])] = {
-    val f = epochCachePath(pipelineId)
-    if (!java.nio.file.Files.exists(f)) None
-    else scala.util.Try {
-      val parts = java.nio.file.Files.readString(f).trim.split(",", -1)
-      (parts(0).toInt, parts(1).toLong,
-        if (parts(2).isEmpty) None
-        else Some(Timestamp.from(java.time.Instant.ofEpochSecond(
-          parts(2).toLong, parts(3).toLong))))
-    }.toOption
-  }
+  private def readEpochCache(pipelineId: String): Option[(Int, Long, Option[Timestamp])] =
+    SparkIo.readString(epochCachePath(pipelineId)).flatMap { body =>
+      scala.util.Try {
+        val parts = body.split(",", -1)
+        (parts(0).toInt, parts(1).toLong,
+          if (parts(2).isEmpty) None
+          else Some(Timestamp.from(java.time.Instant.ofEpochSecond(
+            parts(2).toLong, parts(3).toLong))))
+      }.toOption
+    }
 
   private def writeEpochCache(pipelineId: String, files: Int, n: Long,
                               wm: Option[Timestamp]): Unit = {
-    val f = epochCachePath(pipelineId)
-    val tmp = f.resolveSibling(s"${f.getFileName}.${java.util.UUID.randomUUID()}.tmp")
     val wmStr = wm.map { w =>
       val i = w.toInstant; s"${i.getEpochSecond},${i.getNano}"
     }.getOrElse(",")
-    java.nio.file.Files.writeString(tmp, s"$files,$n,$wmStr")
-    java.nio.file.Files.move(tmp, f,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    SparkIo.writeAtomically(epochCachePath(pipelineId), s"$files,$n,$wmStr")
   }
 
+  /** Append a successful run's watermark (the `status` column is always
+    * `success`; the readers' filter on it stays for logs written before). */
   def writeWatermark(spark: SparkSession, pipelineId: String, runId: String,
-                     watermark: Timestamp, status: String): Unit = {
+                     watermark: Timestamp): Unit = {
     import spark.implicits._
     val created = listWmFileCount() < 0
     withJobDesc(spark, "watermark-write") {
-      Seq((pipelineId, runId, watermark, status))
+      Seq((pipelineId, runId, watermark, "success"))
         .toDF("pipeline_id", "run_id", "watermark", "status")
         .write.mode("append").parquet(wmPath)
     }
     // an append that created the table wrote its only row: seed the cache
     // with it, so the next run reads no parquet (one writer per workDir)
-    if (created && status == "success")
+    if (created)
       writeEpochCache(pipelineId, listWmFileCount(), 1L, Some(watermark))
     // opportunistic cache roll-forward: valid old cache + this append ->
     // new cache (no Spark read); invalid -> leave it, a reader repairs
-    else if (status == "success") readEpochCache(pipelineId).foreach {
+    else readEpochCache(pipelineId).foreach {
       case (files, n, wm) =>
         val now = listWmFileCount()
         // only roll forward when this append is the ONLY change since the
@@ -185,35 +179,22 @@ final class CheckpointStore(root: String) {
   def writeLineageFromFooters(spark: SparkSession, runId: String, stage: String,
                               checkpointDir: String): Unit = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sessionState.newHadoopConf()
-    val s = java.nio.file.Files.list(java.nio.file.Paths.get(checkpointDir))
-    val parts =
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-      finally s.close()
-    val rows = parts.map { f =>
+    val parts = SparkIo.list(java.nio.file.Paths.get(checkpointDir))
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+    val pids = parts.map { f =>
       val name = f.getFileName.toString // part-00007-<uuid>... -> 7
       // Lineage is a metric, never a gate: a file not named part-NNNNN…
       // (alternative committer, compaction rename) records partition_id -1
       // instead of throwing NumberFormatException and killing the sync run.
-      val pid = scala.util.Try(
+      scala.util.Try(
         name.stripPrefix("part-").takeWhile(_.isDigit).toInt).getOrElse(-1)
-      val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.toUri), conf))
-      try pid -> rdr.getRecordCount finally rdr.close()
     }
+    val rows = pids.zip(
+      SparkIo.footerRowCounts(parts, spark.sessionState.newHadoopConf()))
     withJobDesc(spark, s"lineage-write:$stage") {
       rows.map { case (pid, n) => (pid, n, runId, stage) }
         .toDF("partition_id", "rows", "run_id", "stage")
         .write.mode("append").parquet(lineagePath)
     }
   }
-
-  def metrics(spark: SparkSession): Option[DataFrame] =
-    try Some(spark.read.parquet(metricsPath)) catch { case _: Exception => None }
-
-  def lineage(spark: SparkSession): Option[DataFrame] =
-    try Some(spark.read.parquet(lineagePath)) catch { case _: Exception => None }
 }

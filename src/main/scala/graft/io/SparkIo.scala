@@ -1,14 +1,23 @@
 package graft.io
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, NoSuchFileException, Path, StandardCopyOption}
+import java.util.Comparator
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.collect_set
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Shared small I/O helpers used by the committer, the checkpoint store and
-  * the pipeline — single definitions so semantics (job-description restore,
-  * sidecar atomicity, schema-JSON format) cannot drift between call sites. */
+/** Shared small I/O helpers used by the committer, the checkpoint store, the
+  * pipeline and the admin CLI — single definitions so semantics
+  * (job-description restore, small-file atomicity, closed directory streams,
+  * schema-JSON format) cannot drift between call sites. Main code lists,
+  * walks, atomically writes and footer-reads files only through here
+  * (ReachabilitySpec guards the listings). */
 object SparkIo {
 
   /** Label the Spark jobs of `body` in the UI / listeners, restoring the
@@ -70,22 +79,64 @@ object SparkIo {
     (ck, bs.toSet)
   }
 
-  /** Atomically write the schema sidecar for a parquet directory: makes a
-    * zero-data-file directory readable and spares readers the footer-based
-    * schema-inference job. */
-  def writeSchemaSidecar(schema: StructType, dir: Path): Unit = {
-    val tmp = dir.resolve(s".${TableCommitter.SchemaSidecar}.tmp")
-    Files.writeString(tmp, schema.json)
-    Files.move(tmp, dir.resolve(TableCommitter.SchemaSidecar),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  /** Write `value` (UTF-8) to `f`, creating its parent dirs, through a
+    * dotted, uniquely named sibling tmp file and an atomic rename over `f`:
+    * a reader sees the old or the new value, never a torn or empty file,
+    * and a crash leaves at most a dotted tmp file that readers skip. */
+  def writeAtomically(f: Path, value: String): Unit = {
+    Files.createDirectories(f.getParent)
+    val tmp = f.resolveSibling(s".${f.getFileName}.${java.util.UUID.randomUUID()}.tmp")
+    Files.writeString(tmp, value)
+    Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** The trimmed content of `f`, or `None` when `f` does not exist. */
+  def readString(f: Path): Option[String] =
+    try Some(Files.readString(f).trim)
+    catch { case _: NoSuchFileException => None }
+
+  /** The children of `dir`; empty when `dir` is not a directory. */
+  def list(dir: Path): Seq[Path] =
+    if (!Files.isDirectory(dir)) Seq.empty
+    else {
+      val s = Files.list(dir)
+      try s.iterator().asScala.toList finally s.close()
+    }
+
+  /** The regular files under `dir`, at any depth; empty when `dir` is not a
+    * directory. */
+  def files(dir: Path): Seq[Path] =
+    if (!Files.isDirectory(dir)) Seq.empty
+    else {
+      val s = Files.walk(dir)
+      try s.iterator().asScala.filter(Files.isRegularFile(_)).toList
+      finally s.close()
+    }
+
+  /** Delete `p` and everything under it; nothing when `p` does not exist. */
+  def deleteRecursively(p: Path): Unit =
+    if (Files.exists(p)) {
+      val s = Files.walk(p)
+      try s.sorted(Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+      finally s.close()
+    }
+
+  /** The row count in each parquet file's footer, in `files`' order — driver
+    * side metadata reads, no Spark job. The opens fan out over the driver's
+    * cores: footers are independent (remote, at scale) reads whose latency,
+    * not CPU, is the cost. */
+  def footerRowCounts(files: Seq[Path], conf: Configuration): Seq[Long] =
+    files.asJava.parallelStream().map[java.lang.Long] { f =>
+      val rdr = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf))
+      try rdr.getRecordCount finally rdr.close()
+    }.toList.asScala.map(_.longValue).toSeq
+
   /** The schema sidecar of a parquet directory, if it has one. */
-  def schemaSidecar(dir: Path): Option[StructType] = {
-    val f = dir.resolve(TableCommitter.SchemaSidecar)
-    if (!Files.exists(f)) None
-    else Some(DataType.fromJson(Files.readString(f)).asInstanceOf[StructType])
-  }
+  def schemaSidecar(dir: Path): Option[StructType] =
+    readString(dir.resolve(TableCommitter.SchemaSidecar))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
 
   /** Read a parquet directory through its schema sidecar when present;
     * pre-sidecar directories fall back to normal inference. */

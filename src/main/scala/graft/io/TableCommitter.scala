@@ -1,8 +1,6 @@
 package graft.io
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -32,12 +30,8 @@ final class TableCommitter(rootDir: String) {
 
   private def pointerFile(alias: String): Path = meta.resolve(alias)
 
-  def currentGeneration(alias: String = "current"): Option[String] = {
-    val p = pointerFile(alias)
-    if (Files.exists(p))
-      Some(new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim)
-    else None
-  }
+  def currentGeneration(alias: String = "current"): Option[String] =
+    SparkIo.readString(pointerFile(alias))
 
   def currentPath(alias: String = "current"): Option[String] =
     currentGeneration(alias).map(g => root.resolve(g).toString)
@@ -128,19 +122,14 @@ final class TableCommitter(rootDir: String) {
     * inspection surface — KgAdmin renders this; keeping the pointer-file
     * layout private to this class). */
   def aliases(): Seq[(String, String)] =
-    if (!Files.exists(meta)) Seq.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      val s = Files.list(meta)
-      try s.iterator().asScala
-        .filter(Files.isRegularFile(_))
-        .filterNot(_.getFileName.toString.startsWith("."))
-        .map(f => f.getFileName.toString ->
-          new String(Files.readAllBytes(f), StandardCharsets.UTF_8).trim)
-        .filter(_._2.startsWith("gen-"))
-        .toSeq.sortBy(_._1)
-      finally s.close()
-    }
+    pointers().flatMap(f => SparkIo.readString(f).map(f.getFileName.toString -> _))
+      .filter(_._2.startsWith("gen-")).sortBy(_._1)
+
+  /** The alias pointer files: `_meta`'s regular files, minus dotted tmp
+    * files (the run records and pins are directories). */
+  private def pointers(): Seq[Path] =
+    SparkIo.list(meta).filter(Files.isRegularFile(_))
+      .filterNot(_.getFileName.toString.startsWith("."))
 
   /** Physical directory of a generation, if it exists. */
   def generationPath(gen: String): Option[Path] = {
@@ -150,16 +139,8 @@ final class TableCommitter(rootDir: String) {
 
   /** All published generations, oldest first. */
   def generations(): Seq[String] =
-    if (!Files.exists(root)) Seq.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      val s = Files.list(root)
-      try s.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(_.startsWith("gen-"))
-        .toSeq.sortBy(_.stripPrefix("gen-").toLong)
-      finally s.close()
-    }
+    SparkIo.list(root).map(_.getFileName.toString)
+      .filter(_.startsWith("gen-")).sortBy(_.stripPrefix("gen-").toLong)
 
   def stagingPath(runId: String): String = staging.resolve(runId).toString
 
@@ -199,7 +180,8 @@ final class TableCommitter(rootDir: String) {
     }
     // schema sidecar: the generation this staging becomes stays readable
     // even with zero rows (no data files to infer a schema from; see read)
-    SparkIo.writeSchemaSidecar(df.schema, Paths.get(p))
+    SparkIo.writeAtomically(Paths.get(p).resolve(TableCommitter.SchemaSidecar),
+      df.schema.json)
     p
   }
 
@@ -218,23 +200,10 @@ final class TableCommitter(rootDir: String) {
     * a lost write only means the next caller recomputes. */
   def currentRecordCount(spark: SparkSession): Option[Long] =
     currentGeneration().map { gen =>
-      import scala.jdk.CollectionConverters._
       recordCount(gen).getOrElse {
-        val dir = root.resolve(gen)
-        val conf = spark.sessionState.newHadoopConf()
-        val s = Files.walk(dir)
-        val files =
-          try s.iterator().asScala
-            .filter(f => Files.isRegularFile(f) &&
-              f.getFileName.toString.endsWith(".parquet"))
-            .toSeq
-          finally s.close()
-        val n = files.asJava.parallelStream().mapToLong { f =>
-          val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new org.apache.hadoop.fs.Path(f.toUri), conf))
-          try rdr.getRecordCount finally rdr.close()
-        }.sum()
+        val n = SparkIo.footerRowCounts(
+          SparkIo.files(root.resolve(gen)).filter(_.getFileName.toString.endsWith(".parquet")),
+          spark.sessionState.newHadoopConf()).sum
         seedRecordCount(gen, n)
         n
       }
@@ -242,8 +211,8 @@ final class TableCommitter(rootDir: String) {
 
   /** The row count cached in generation `gen`'s count sidecar, if any. */
   def recordCount(gen: String): Option[Long] =
-    generationPath(gen).flatMap(dir => scala.util.Try(
-      Files.readString(dir.resolve(TableCommitter.CountSidecar)).trim.toLong).toOption)
+    generationPath(gen).flatMap(dir => SparkIo.readString(
+      dir.resolve(TableCommitter.CountSidecar)).flatMap(_.toLongOption))
 
   /** Write generation `gen`'s count sidecar: by [[currentRecordCount]]
     * after a footer walk, or by a writer that observed its rows while
@@ -253,13 +222,8 @@ final class TableCommitter(rootDir: String) {
     * means the next caller recomputes. */
   def seedRecordCount(gen: String, n: Long): Unit =
     generationPath(gen).foreach { dir =>
-      scala.util.Try {
-        val tmp = dir.resolve(
-          s".${TableCommitter.CountSidecar}.${java.util.UUID.randomUUID()}.tmp")
-        Files.writeString(tmp, n.toString)
-        Files.move(tmp, dir.resolve(TableCommitter.CountSidecar),
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      }
+      scala.util.Try(
+        SparkIo.writeAtomically(dir.resolve(TableCommitter.CountSidecar), n.toString))
     }
 
   /** Whether the current generation was published with the bucketed layout
@@ -276,17 +240,9 @@ final class TableCommitter(rootDir: String) {
         .exists(_.fieldNames.contains(TableCommitter.BucketCol))
     }
 
-  private def bucketDirs(dir: Path): Seq[Path] = {
-    import scala.jdk.CollectionConverters._
-    if (!Files.exists(dir)) Seq.empty
-    else {
-      val s = Files.list(dir)
-      try s.iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith(s"${TableCommitter.BucketCol}="))
-        .toSeq
-      finally s.close()
-    }
-  }
+  private def bucketDirs(dir: Path): Seq[Path] =
+    SparkIo.list(dir)
+      .filter(_.getFileName.toString.startsWith(s"${TableCommitter.BucketCol}="))
 
   /** Hard-link every file of `src` into `dst` (same inodes — zero copy;
     * generations are immutable once published, so sharing is safe; this is
@@ -294,13 +250,11 @@ final class TableCommitter(rootDir: String) {
     * file-system-literal). */
   private def linkDir(src: Path, dst: Path): Unit = {
     Files.createDirectories(dst)
-    val s = Files.walk(src)
-    try s.filter(Files.isRegularFile(_)).forEach { f =>
-      val rel = src.relativize(f)
-      val out = dst.resolve(rel)
+    SparkIo.files(src).foreach { f =>
+      val out = dst.resolve(src.relativize(f))
       Files.createDirectories(out.getParent)
       Files.createLink(out, f)
-    } finally s.close()
+    }
   }
 
   /** Incremental bucket publish: gen-(n+1) = staged `bucket=` dirs (the
@@ -375,7 +329,7 @@ final class TableCommitter(rootDir: String) {
     // occupying a retention slot (publishedGeneration heals from the marker)
     Files.writeString(tmpDir.resolve(TableCommitter.RunMarker), s"$alias~$runId")
     Files.move(tmpDir, root.resolve(gen), StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(stagedAt)
+    SparkIo.deleteRecursively(stagedAt)
     recordRun(runId, gen, alias)
     setPointer(alias, gen)
     gen
@@ -387,19 +341,11 @@ final class TableCommitter(rootDir: String) {
     * retry, never concurrent publishers — the same contract the gen
     * numbering and pointer flips already assume; runId idempotence serializes
     * retries). Under that contract any surviving tmp dir is a dead run's. */
-  private def sweepTmpGens(): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (Files.exists(root)) {
-      val s = Files.list(root)
-      val orphans =
-        try s.iterator().asScala.filter { p =>
-          val n = p.getFileName.toString
-          n.startsWith(".gen-") && n.endsWith(".tmp")
-        }.toSeq
-        finally s.close()
-      orphans.foreach(deleteRecursively)
-    }
-  }
+  private def sweepTmpGens(): Unit =
+    SparkIo.list(root).filter { p =>
+      val n = p.getFileName.toString
+      n.startsWith(".gen-") && n.endsWith(".tmp")
+    }.foreach(SparkIo.deleteRecursively)
 
   /** Generation already published for this runId, if any — publishes are
     * runId-idempotent so a crash-and-resume never applies the same logical
@@ -409,31 +355,24 @@ final class TableCommitter(rootDir: String) {
     * early-return path, which re-points the alias forward; the reverse order
     * would leave a window where a resume re-applies the delta. */
   def publishedGeneration(runId: String,
-                          alias: String = "current"): Option[String] = {
-    val p = meta.resolve("runs").resolve(s"$alias~$runId")
-    if (Files.exists(p))
-      Some(new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim)
-    else {
+                          alias: String = "current"): Option[String] =
+    SparkIo.readString(meta.resolve("runs").resolve(s"$alias~$runId")).orElse {
       // crash window: generation moved into place but recordRun never ran —
       // the in-dir run marker identifies it; heal the record so the retry
       // takes the republish path instead of double-publishing
-      val healed = generations().reverse.find { g =>
-        val m = root.resolve(g).resolve(TableCommitter.RunMarker)
-        Files.exists(m) && Files.readString(m).trim == s"$alias~$runId"
-      }
+      val healed = generations().reverse.find(g => SparkIo.readString(
+        root.resolve(g).resolve(TableCommitter.RunMarker)).contains(s"$alias~$runId"))
       healed.foreach(g => recordRun(runId, g, alias))
       healed
     }
-  }
 
   // run records are ALIAS-scoped: publishing the same runId under another
   // alias is an independent logical publish, and a record must never move a
-  // pointer the runId was not published under
-  private def recordRun(runId: String, gen: String, alias: String): Unit = {
-    Files.createDirectories(meta.resolve("runs"))
-    Files.write(meta.resolve("runs").resolve(s"$alias~$runId"),
-      gen.getBytes(StandardCharsets.UTF_8))
-  }
+  // pointer the runId was not published under. Written atomically: a crash
+  // mid-write must not leave an empty record, which every retry of the
+  // runId would read as a generation named ""
+  private def recordRun(runId: String, gen: String, alias: String): Unit =
+    SparkIo.writeAtomically(meta.resolve("runs").resolve(s"$alias~$runId"), gen)
 
   /** Idempotent re-publish: discard stale staging, and heal a pointer that a
     * crash left behind the recorded generation (never regress a pointer that
@@ -464,10 +403,8 @@ final class TableCommitter(rootDir: String) {
   /** Value of a table pin if any writer has pinned it — lets callers
     * distinguish "never pinned" (adoption about to happen) from "pinned to
     * X" before calling [[pinOrVerify]]; see [[pinBucketMapping]]. */
-  def pinned(key: String): Option[String] = {
-    val f = meta.resolve("pins").resolve(key)
-    if (Files.exists(f)) Some(Files.readString(f).trim) else None
-  }
+  def pinned(key: String): Option[String] =
+    SparkIo.readString(meta.resolve("pins").resolve(key))
 
   /** Pin the table's key-to-bucket mapping — the bucket count and the
     * bucket-key expression — or verify it against the pins. The key
@@ -516,38 +453,24 @@ final class TableCommitter(rootDir: String) {
     * the table's rows mean. Pinned before the rebuild publishes, so a
     * crashed full run leaves the pin ahead of the pointer — later merges
     * under the old flags then refuse until a full run completes. */
-  def repinSemantics(sig: String): Unit = replaceAtomically(semanticsPin, sig)
+  def repinSemantics(sig: String): Unit = SparkIo.writeAtomically(semanticsPin, sig)
 
   private def semanticsPin: Path = meta.resolve("pins").resolve("semantics")
 
   /** Point an alias at an existing generation (blue/green switch, K6). */
   def setPointer(alias: String, gen: String): Unit = {
-    // the meta dir also holds the run-record DIRECTORY and dot-prefixed
-    // temp files: an alias colliding with either would clobber run records
-    // (Files.move onto _meta/runs) or fight the .alias.tmp convention
+    // the meta dir also holds the run-record and pin DIRECTORIES and
+    // dot-prefixed tmp files: an alias colliding with either would clobber
+    // them (a move onto _meta/runs) or hide as a tmp file
     require(alias.matches("[A-Za-z0-9][A-Za-z0-9_-]*") &&
       alias != "runs" && alias != "pins",
       s"invalid alias name '$alias'")
-    replaceAtomically(pointerFile(alias), gen)
-  }
-
-  /** Write `value` to `f` through a dotted sibling tmp file and an atomic
-    * rename over it: readers see the old or the new value, never a torn
-    * write. */
-  private def replaceAtomically(f: Path, value: String): Unit = {
-    Files.createDirectories(f.getParent)
-    val tmp = f.resolveSibling(s".${f.getFileName}.tmp")
-    Files.write(tmp, value.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    SparkIo.writeAtomically(pointerFile(alias), gen)
   }
 
   /** Remove staged (unpublished) data — K5: the pointer never moved, so the
     * live table is untouched. */
-  def rollback(runId: String): Unit = {
-    val p = staging.resolve(runId)
-    if (Files.exists(p)) deleteRecursively(p)
-  }
+  def rollback(runId: String): Unit = SparkIo.deleteRecursively(staging.resolve(runId))
 
   /** Snapshot retention (the Iceberg expire_snapshots analogue; reference:
     * stale `@temp-` cleanup, Harvester.deleteTempIndexIfExists,
@@ -560,42 +483,17 @@ final class TableCommitter(rootDir: String) {
     * @return the generations deleted. */
   def expireGenerations(keepLast: Int): Seq[String] = synchronized {
     require(keepLast >= 1, "must retain at least one generation")
-    import scala.jdk.CollectionConverters._
-    val referenced: Set[String] =
-      if (!Files.exists(meta)) Set.empty
-      else {
-        val s = Files.list(meta)
-        try s.iterator().asScala
-          .filter(Files.isRegularFile(_))
-          .filterNot(_.getFileName.toString.startsWith("."))
-          .map(f => new String(Files.readAllBytes(f), StandardCharsets.UTF_8).trim)
-          .toSet
-        finally s.close()
-      }
-    val gens = generations()
-    val expire = gens.dropRight(keepLast).filterNot(referenced)
-    expire.foreach(g => deleteRecursively(root.resolve(g)))
+    val referenced = pointers().flatMap(SparkIo.readString).toSet
+    val expire = generations().dropRight(keepLast).filterNot(referenced)
+    expire.foreach(g => SparkIo.deleteRecursively(root.resolve(g)))
     // retire run records pointing at expired generations: a replayed runId
     // must re-publish (or fail staging requirements) rather than "succeed"
     // returning a generation that no longer exists
-    val runsDir = meta.resolve("runs")
-    if (Files.exists(runsDir)) {
-      val expired = expire.toSet
-      val s = Files.list(runsDir)
-      try s.iterator().asScala
-        .filter(f => expired.contains(
-          new String(Files.readAllBytes(f), StandardCharsets.UTF_8).trim))
-        .toSeq // materialize before deleting (stream over a mutating dir)
-        .foreach(Files.delete(_))
-      finally s.close()
-    }
+    val expired = expire.toSet
+    SparkIo.list(meta.resolve("runs"))
+      .filter(f => SparkIo.readString(f).exists(expired))
+      .foreach(Files.delete(_))
     expire
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    val s = Files.walk(p)
-    try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-    finally s.close()
   }
 }
 
@@ -615,7 +513,7 @@ object TableCommitter {
         case _: java.nio.file.FileAlreadyExistsException => ()
       } finally Files.deleteIfExists(tmp)
     }
-    Files.readString(f).trim
+    SparkIo.readString(f).get
   }
 
   /** A replay needs a generation that retention already expired. */

@@ -63,16 +63,13 @@ final class KgPipeline(cfg: PipelineConfig) {
     val dir = Paths.get(s"$stagesRoot/$runKey/$name")
     if (!Files.exists(dir)) {
       val tmp = Paths.get(s"$stagesRoot/$runKey/.$name.tmp")
-      if (Files.exists(tmp)) { // stale partial write from a killed run
-        Files.walk(tmp).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => Files.delete(f))
-      }
+      SparkIo.deleteRecursively(tmp) // stale partial write from a killed run
       val df = compute
       SparkIo.withJobDesc(spark, s"stage:$name")(df.write.parquet(tmp.toString))
       // schema sidecar: the read-back below (and every resume) skips the
       // footer-based schema-inference job — a no-op sync is fixed-overhead
       // bound, and each inference is one extra Spark job
-      SparkIo.writeSchemaSidecar(df.schema, tmp)
+      SparkIo.writeAtomically(tmp.resolve(TableCommitter.SchemaSidecar), df.schema.json)
       afterWrite(tmp)
       Files.createDirectories(dir.getParent)
       Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
@@ -109,15 +106,15 @@ final class KgPipeline(cfg: PipelineConfig) {
       obs = Some(o)
       compute.observe(o, collect_set(bucketExpr).as("buckets"))
     }
-    val f = Paths.get(s"$stagesRoot/$runKey/$name").resolve(BucketSidecar)
-    val buckets: Set[Int] =
-      if (Files.exists(f)) {
-        val s = Files.readString(f).trim
-        if (s.isEmpty) Set.empty else s.split(",").map(_.toInt).toSet
-      } else // checkpoint predates the sidecar: one fallback collect job
+    val sidecar = SparkIo.readString(
+      Paths.get(s"$stagesRoot/$runKey/$name").resolve(BucketSidecar))
+    val buckets: Set[Int] = sidecar match {
+      case Some(s) => if (s.isEmpty) Set.empty else s.split(",").map(_.toInt).toSet
+      case None => // checkpoint predates the sidecar: one fallback collect job
         SparkIo.withJobDesc(spark, s"collect:$name-buckets")(
           df.select(bucketExpr.as("b")).distinct().collect())
           .map(_.getInt(0)).toSet
+    }
     (df, buckets)
   }
 
@@ -134,14 +131,11 @@ final class KgPipeline(cfg: PipelineConfig) {
     * run must replay it — recomputing from the post-crash source would
     * advance past data the stale checkpoint never extracted. Outer None =
     * no sidecar (checkpoint predates it). */
-  private def readWmSidecar(runKey: String, name: String): Option[Option[Timestamp]] = {
-    val f = Paths.get(s"$stagesRoot/$runKey/$name").resolve(WmSidecar)
-    if (!Files.exists(f)) None
-    else Files.readString(f).trim match {
-      case "none" => Some(None)
-      case ms => Some(Some(new Timestamp(ms.toLong)))
+  private def readWmSidecar(runKey: String, name: String): Option[Option[Timestamp]] =
+    SparkIo.readString(Paths.get(s"$stagesRoot/$runKey/$name").resolve(WmSidecar)).map {
+      case "none" => None
+      case ms => Some(new Timestamp(ms.toLong))
     }
-  }
 
   /** Per-conversation triple supports under this pipeline's config — see
     * [[KgPipeline.supports]]. */
@@ -498,7 +492,7 @@ final class KgPipeline(cfg: PipelineConfig) {
     val wm = newWatermark
       .orElse(checkpoints.lastWatermark(spark, cfg.pipelineId))
       .getOrElse(new Timestamp(0L))
-    checkpoints.writeWatermark(spark, cfg.pipelineId, runId, wm, "success")
+    checkpoints.writeWatermark(spark, cfg.pipelineId, runId, wm)
     RunResult(runId, edgeTable.currentGeneration().get,
       nodeTable.currentGeneration().get, nTriples)
   }

@@ -22,7 +22,7 @@ class CheckpointStoreSpec extends AnyFunSuite {
     val cs = new CheckpointStore(root)
     // .000500 — microseconds that Timestamp.getTime silently truncates
     val wm = Timestamp.from(Instant.ofEpochSecond(1735689600L, 500000))
-    cs.writeWatermark(spark, "p", "r1", wm, "success")
+    cs.writeWatermark(spark, "p", "r1", wm)
 
     // the creating append seeded the cache: both reads are served FROM it
     // (same file count), with no Spark job, and carry the exact microseconds
@@ -33,7 +33,7 @@ class CheckpointStoreSpec extends AnyFunSuite {
 
     // roll-forward on append (no Spark read) must keep full precision too
     val wm2 = Timestamp.from(Instant.ofEpochSecond(1735689700L, 250000))
-    cs.writeWatermark(spark, "p", "r2", wm2, "success")
+    cs.writeWatermark(spark, "p", "r2", wm2)
     assert(cs.syncEpoch(spark, "p") == ((2L, Some(wm2))))
 
     // a pre-upgrade cache body (single milliseconds field) must fail the

@@ -154,6 +154,19 @@ class IncrementalDedupIndexSpec extends AnyFunSuite {
     assert(gens() === before, "no-op update published a generation")
   }
 
+  test("every Spark job of an update and a candidates call is graft:-labelled") {
+    val spark = SparkTestSession.get
+    val idx = new IncrementalDedupIndex(TempDirs("graft-dd-"), buckets = B)
+    idx.update(spark, docsDf(corpusV0), "run0")
+    val (_, jobs) = SparkJobs.during(spark) {
+      idx.update(spark, docsDf(Seq((4L, "one changed document"))), "run1")
+      idx.candidates(spark, docsDf(Seq((200L, "beta delta1 alpha gamma1"))))
+    }
+    info(s"${jobs.size} jobs: ${jobs.mkString(" | ")}")
+    assert(jobs.nonEmpty)
+    assert(jobs.forall(_.startsWith("graft:")), jobs.mkString(" | "))
+  }
+
   test("crash between the two table publishes heals on same-runId retry") {
     val spark = SparkTestSession.get
     val wd = TempDirs("graft-dd-")

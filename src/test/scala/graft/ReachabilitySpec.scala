@@ -190,6 +190,24 @@ class ReachabilitySpec extends AnyFunSuite {
       s"SparkIo.both, not a thread or pool of its own: ${offenders.mkString(", ")}")
   }
 
+  /** A directory listing or walk: one stream to close per call site. */
+  private val Listing = """\bFiles\s*\.\s*(?:list|walk)\s*\(""".r
+
+  test("directory listings and walks stay in SparkIo: no other main code " +
+       "calls Files.list or Files.walk") {
+    assert(Listing.findFirstIn("val s = Files.list(dir)").isDefined)
+    assert(Listing.findFirstIn("java.nio.file.Files.walk(tmp).sorted(c)").isDefined)
+    assert(Listing.findFirstIn(
+      stripComments("x /* Files.walk(p) */ // java.nio.file.Files.list(d)")).isEmpty)
+    assert(Listing.findFirstIn("SparkIo.list(dir) ++ SparkIo.files(dir)").isEmpty)
+    val offenders = mainSources()
+      .filterNot(p => Set("SparkIo.scala", "Bench.scala")(p._1.getFileName.toString))
+      .filter { case (_, src) => Listing.findFirstIn(stripComments(src)).isDefined }
+      .map(_._1)
+    assert(offenders.isEmpty, "list, walk and delete directories through " +
+      s"SparkIo.list / files / deleteRecursively in: ${offenders.mkString(", ")}")
+  }
+
   test("the frozen driver entry points exist") {
     Seq("Bench.scala", "Verify.scala", "SparkEntry.scala").foreach { f =>
       assert(Files.isRegularFile(mainRoot.resolve(Paths.get("graft", f))), f)

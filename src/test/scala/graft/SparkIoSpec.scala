@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
 
@@ -10,7 +11,8 @@ import graft.io.SparkIo
 /** `SparkIo.both`, the one place main code runs two blocks at once: it
   * returns only when both have finished, rethrows a failure only once the
   * other branch is done, and runs the second branch's Spark jobs under the
-  * caller's job group and `graft:` description. */
+  * caller's job group and `graft:` description. And the driver-side file
+  * helpers every pointer, pin, run record and sidecar goes through. */
 class SparkIoSpec extends AnyFunSuite {
 
   /** A block that finishes `ms` after it starts and records that it did. */
@@ -75,5 +77,49 @@ class SparkIoSpec extends AnyFunSuite {
       assert(prop("spark.job.description").toSet ==
         Set("graft:both-inner", "graft:both-outer"))
     } finally sc.clearJobGroup()
+  }
+
+  test("writeAtomically creates the parent dirs, replaces an existing value " +
+       "and leaves no dotted tmp file; readString trims, None when absent") {
+    val dir = Paths.get(TempDirs("sparkio-"))
+    val f = dir.resolve("a").resolve("b").resolve("pointer")
+    assert(SparkIo.readString(f).isEmpty)
+    SparkIo.writeAtomically(f, "gen-1")
+    assert(SparkIo.readString(f).contains("gen-1"))
+    SparkIo.writeAtomically(f, "gen-2")
+    assert(Files.readString(f) == "gen-2")
+    assert(SparkIo.list(f.getParent) == Seq(f), "a tmp file was left behind")
+    Files.writeString(f, "  gen-3 \n")
+    assert(SparkIo.readString(f).contains("gen-3"))
+  }
+
+  test("list and files see nothing under an absent dir; files finds nested " +
+       "files and no dirs; deleteRecursively removes a nested tree") {
+    val dir = Paths.get(TempDirs("sparkio-"))
+    val absent = dir.resolve("absent")
+    assert(SparkIo.list(absent).isEmpty && SparkIo.files(absent).isEmpty)
+    val nested = dir.resolve("t").resolve("x").resolve("y")
+    Files.createDirectories(nested)
+    Seq(dir.resolve("t").resolve("top"), nested.resolve("deep"))
+      .foreach(Files.writeString(_, "1"))
+    assert(SparkIo.list(dir.resolve("t")).map(_.getFileName.toString).toSet ==
+      Set("top", "x"))
+    assert(SparkIo.files(dir.resolve("t")).map(_.getFileName.toString).toSet ==
+      Set("top", "deep"))
+    SparkIo.deleteRecursively(dir.resolve("t"))
+    assert(!Files.exists(dir.resolve("t")))
+    SparkIo.deleteRecursively(absent) // absent: nothing to do, no error
+  }
+
+  test("footerRowCounts of a multi-file parquet dir sum to its count()") {
+    val spark = SparkTestSession.get
+    val out = TempDirs("sparkio-") + "/t"
+    spark.range(0, 1000, 1, 4).write.parquet(out)
+    val parts = SparkIo.files(Paths.get(out))
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+    assert(parts.size == 4)
+    val counts = SparkIo.footerRowCounts(parts, spark.sessionState.newHadoopConf())
+    assert(counts.size == parts.size && counts.forall(_ > 0))
+    assert(counts.sum == spark.read.parquet(out).count())
   }
 }
