@@ -2,7 +2,7 @@ package graft.app
 
 import java.nio.file.{Files, Path, Paths}
 
-import graft.io.{SparkIo, TableCommitter}
+import graft.io.{CheckpointStore, SparkIo, TableCommitter}
 
 /** Operations CLI over a pipeline workDir — the Spark-engine equivalent of
   * the reference's REST control plane (SURVEY.md §2.10,
@@ -15,7 +15,7 @@ import graft.io.{SparkIo, TableCommitter}
   * `GET /api/running` answers without touching ES data.
   *
   * Usage:
-  *   KgAdmin status <workDir>
+  *   KgAdmin status <workDir>      (tables, then each pipeline's sync epoch)
   *   KgAdmin generations <workDir> <table>
   *   KgAdmin set-pointer <workDir> <table> <gen> [alias]     (blue/green, K6)
   *   KgAdmin expire <workDir> <table> <keepLast>             (retention)
@@ -34,6 +34,10 @@ object KgAdmin {
         val cur = c.currentGeneration().getOrElse("-")
         println(s"""{"table":"$t","current":"$cur","generations":${gens.size},""" +
           s""""latest":"${gens.lastOption.getOrElse("-")}","bytes":${tableBytes(workDir, t)}}""")
+      }
+      new CheckpointStore(s"$workDir/checkpoints").statuses().foreach { case (id, s) =>
+        println(s"""{"pipeline":"$id","epoch":${s.runs},""" +
+          s""""watermark":"${s.watermark.toInstant}","run_id":"${s.runId}"}""")
       }
     case "generations" :: workDir :: table :: Nil =>
       val c = committer(workDir, table)

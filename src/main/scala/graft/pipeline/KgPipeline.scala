@@ -45,7 +45,8 @@ final class KgPipeline(cfg: PipelineConfig) {
   @volatile var failAfterStage: Option[String] = None
 
   /** Test hook: simulate a crash immediately after the named table publish
-    * (pointer already flipped — the hardest resume point). */
+    * (pointer already flipped — the hardest resume point), or after the run
+    * record (`run-record`), before the status write that commits the run. */
   @volatile var failAfterPublish: Option[String] = None
 
   private def publishHook(name: String): Unit =
@@ -122,19 +123,27 @@ final class KgPipeline(cfg: PipelineConfig) {
     * treating it as data (like _SUCCESS). */
   private val WmSidecar = "_graft_watermark"
 
+  // `<epoch seconds>,<nanos>` or `none`: full precision, since the sync
+  // filter is `ts > wm` over microsecond timestamps — a millisecond
+  // watermark would re-select the max-ts conversation on every later sync
   private def writeWmSidecar(tmp: java.nio.file.Path,
                              wm: Option[Timestamp]): Unit =
-    Files.writeString(tmp.resolve(WmSidecar),
-      wm.map(_.getTime.toString).getOrElse("none"))
+    Files.writeString(tmp.resolve(WmSidecar), wm.map(_.toInstant)
+      .map(i => s"${i.getEpochSecond},${i.getNano}").getOrElse("none"))
 
   /** The watermark the ORIGINAL attempt of this stage observed; a resumed
     * run must replay it — recomputing from the post-crash source would
     * advance past data the stale checkpoint never extracted. Outer None =
-    * no sidecar (checkpoint predates it). */
+    * no sidecar (checkpoint predates it); a single field is the
+    * milliseconds an older checkpoint recorded. */
   private def readWmSidecar(runKey: String, name: String): Option[Option[Timestamp]] =
     SparkIo.readString(Paths.get(s"$stagesRoot/$runKey/$name").resolve(WmSidecar)).map {
       case "none" => None
-      case ms => Some(new Timestamp(ms.toLong))
+      case s => Some(s.split(",") match {
+        case Array(sec, nanos) =>
+          Timestamp.from(java.time.Instant.ofEpochSecond(sec.toLong, nanos.toLong))
+        case Array(ms) => new Timestamp(ms.toLong)
+      })
     }
 
   /** Per-conversation triple supports under this pipeline's config — see
@@ -150,12 +159,16 @@ final class KgPipeline(cfg: PipelineConfig) {
     * A resumed run replays the checkpoint's own watermark: recomputing it
     * from the current source would advance past turns that arrived between
     * the crash and the retry without ever extracting them; the live-source
-    * fallback is only for checkpoints that predate the sidecar.
-    * @return (supports, watermark) */
+    * fallback is only for checkpoints that predate the sidecar. The lineage
+    * rows, (stage, partition id, rows), come from the checkpoint's parquet
+    * footers — no data read, no Spark job; the partition id is the writer
+    * task's number in the file name (`part-00007-…` is 7), or -1 for another
+    * name, as lineage is a metric, never a gate.
+    * @return (supports, watermark, lineage) */
   private def supportsStage(spark: SparkSession, runId: String, name: String,
                             turns: Dataset[Turn], catalog: Seq[CatalogEntry],
                             markers: Map[String, String])
-      : (DataFrame, Option[Timestamp]) = {
+      : (DataFrame, Option[Timestamp], Seq[(String, Int, Long)]) = {
     var fire: () => Option[Timestamp] = () => None
     val supports = stage(spark, runId, name,
       afterWrite = tmp => writeWmSidecar(tmp, fire())) {
@@ -165,9 +178,13 @@ final class KgPipeline(cfg: PipelineConfig) {
       computeSupports(spark, good, catalog, markers)
     }
     val wm = readWmSidecar(runId, name).getOrElse(KgPipeline.maxEventTime(turns))
-    checkpoints.writeLineageFromFooters(spark, runId, name,
-      s"$stagesRoot/$runId/$name")
-    (supports, wm)
+    val parts = SparkIo.list(Paths.get(s"$stagesRoot/$runId/$name"))
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+    val lineage = parts.map(f => scala.util.Try(f.getFileName.toString
+        .stripPrefix("part-").takeWhile(_.isDigit).toInt).getOrElse(-1))
+      .zip(SparkIo.footerRowCounts(parts, spark.sessionState.newHadoopConf()))
+      .map { case (pid, n) => (name, pid, n) }
+    (supports, wm, lineage)
   }
 
   final case class RunResult(runId: String, edgesGen: String, nodesGen: String,
@@ -220,16 +237,16 @@ final class KgPipeline(cfg: PipelineConfig) {
   def allBucketIds: Set[Int] = derived.allBuckets
 
   /** Full harvest (reference lifecycle §3.1): compute everything, publish
-    * atomically, record watermark + metrics + lineage.
+    * atomically, record the run (metrics, lineage, watermark).
     *
     * The support publish and the derived tables both read the supports
     * checkpoint, not each other, so they run at the same time
     * ([[SparkIo.both]]): the supports on one side; on the other the edges,
     * then the nodes and docs together ([[DerivedTables.publishAllNodesAndDocs]]).
-    * Both sides join before `finishRun` appends the metrics and the
-    * watermark — the run's commit — so a crash in either leaves the
-    * watermark where it was, and the retry under the same runId replays the
-    * checkpoint into runId-idempotent publishes. */
+    * Both sides join before `finishRun` records the run and commits it, so
+    * a crash in either leaves the sync epoch where it was, and the retry
+    * under the same runId replays the checkpoint into runId-idempotent
+    * publishes. */
   def runFull(spark: SparkSession, turns: Dataset[Turn],
               catalog: Seq[CatalogEntry], markers: Map[String, String],
               runId: String): RunResult = {
@@ -237,12 +254,12 @@ final class KgPipeline(cfg: PipelineConfig) {
     // the one semantics pin, in the support table's metadata (shared with
     // the streaming ingest): a full run rebuilds every row, so it re-pins
     supportTable.repinSemantics(cfg.semanticsSig)
-    val (supports, wm) =
+    val (supports, wm, lineage) =
       supportsStage(spark, runId, "supports", turns, catalog, markers)
     val (_, (n, totalWeight)) = SparkIo.both(
       publishSupports(supports, allBucketIds, runId),
       publishDerivedFull(spark, runId, supports))
-    finishRun(spark, runId, wm, n, Seq(("edges", "total_weight", totalWeight)))
+    finishRun(spark, runId, wm, n, lineage, Seq(("edges", "total_weight", totalWeight)))
   }
 
   /** Stage `supports` bucketed by conversation and publish them as exactly
@@ -359,7 +376,7 @@ final class KgPipeline(cfg: PipelineConfig) {
         nodeTable.currentGeneration().isDefined &&
         (!cfg.publishDocs || docTable.currentGeneration().isDefined)) {
       return finishRun(spark, runId, None,
-        edgeTable.currentRecordCount(spark).getOrElse(0L))
+        edgeTable.currentRecordCount(spark).getOrElse(0L), Seq.empty)
     }
 
     // J3: re-extract only changed conversations (semi-join restriction)
@@ -375,14 +392,14 @@ final class KgPipeline(cfg: PipelineConfig) {
     val changedTurns = stage(spark, runId, "changed_turns") {
       turns.join(changedConvs, Seq("conv_id"), "left_semi").toDF()
     }.as[Turn]
-    val (newSupports, newWm) = supportsStage(spark, runId, "sync_supports",
+    val (newSupports, newWm, lineage) = supportsStage(spark, runId, "sync_supports",
       changedTurns, catalog, markers)
 
     curGen match {
       case None =>
         // first run arrived as a sync: equivalent to a full publish
         publishSupports(newSupports, allBucketIds, runId)
-        finishDerivedFull(spark, runId, newWm)
+        finishDerivedFull(spark, runId, newWm, lineage)
 
       case Some(gen) =>
         val touched = changedConvs.unionByName(vanished).distinct()
@@ -431,7 +448,7 @@ final class KgPipeline(cfg: PipelineConfig) {
           // fully from the published supports, which already contain the
           // replayed update
           publishChangedSupports()
-          finishDerivedFull(spark, runId, newWm)
+          finishDerivedFull(spark, runId, newWm, lineage)
         } else {
           // the support publish and the propagation both read only the
           // checkpoints above (the delta is already staged): they run at
@@ -444,7 +461,7 @@ final class KgPipeline(cfg: PipelineConfig) {
           // snapshot-level triple count from the count sidecar propagate
           // derived (else from parquet footers) — zero Spark jobs
           finishRun(spark, runId, newWm,
-            edgeTable.currentRecordCount(spark).getOrElse(0L))
+            edgeTable.currentRecordCount(spark).getOrElse(0L), lineage)
         }
     }
   }
@@ -476,23 +493,28 @@ final class KgPipeline(cfg: PipelineConfig) {
   /** The sync's self-heal: every derived table rebuilt from the published
     * supports, then the run's commit. */
   private def finishDerivedFull(spark: SparkSession, runId: String,
-                                newWatermark: Option[Timestamp]): RunResult = {
+                                newWatermark: Option[Timestamp],
+                                lineage: Seq[(String, Int, Long)]): RunResult = {
     val (n, totalWeight) = publishDerivedFull(spark, runId,
       supportTable.read(spark).get.drop("bucket"))
-    finishRun(spark, runId, newWatermark, n,
+    finishRun(spark, runId, newWatermark, n, lineage,
       Seq(("edges", "total_weight", totalWeight)))
   }
 
+  /** Record the run, then commit it ([[CheckpointStore]]): driver-side file
+    * writes, no Spark job. A run without a new watermark keeps the last one. */
   private def finishRun(spark: SparkSession, runId: String,
                         newWatermark: Option[Timestamp], nTriples: Long,
+                        lineage: Seq[(String, Int, Long)],
                         extraMetrics: Seq[(String, String, Long)] = Seq.empty)
       : RunResult = {
-    checkpoints.writeMetrics(spark, runId,
-      ("edges", "published_triples", nTriples) +: extraMetrics)
     val wm = newWatermark
       .orElse(checkpoints.lastWatermark(spark, cfg.pipelineId))
       .getOrElse(new Timestamp(0L))
-    checkpoints.writeWatermark(spark, cfg.pipelineId, runId, wm)
+    checkpoints.writeRunRecord(cfg.pipelineId, runId, wm,
+      ("edges", "published_triples", nTriples) +: extraMetrics, lineage)
+    publishHook("run-record")
+    checkpoints.commit(spark, cfg.pipelineId, runId, wm)
     RunResult(runId, edgeTable.currentGeneration().get,
       nodeTable.currentGeneration().get, nTriples)
   }

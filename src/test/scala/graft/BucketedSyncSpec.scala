@@ -384,6 +384,45 @@ class BucketedSyncSpec extends AnyFunSuite {
     assert(p.checkpoints.syncEpoch(spark, "kg")._1 == epoch0._1 + 1)
   }
 
+  test("a crash after the run record and before the status write leaves " +
+       "the epoch unmoved; the same-runId retry keeps one record, advances " +
+       "the epoch by one and equals a scratch build") {
+    val spark = SparkTestSession.get
+    import org.apache.spark.sql.functions.col
+    val wd = TempDirs("graft-bucket-")
+    val p = new KgPipeline(PipelineConfig(workDir = wd, syncBuckets = 8,
+      syncOldData = true, publishDocs = true))
+    val t0 = fx.turns.filter(_.turn_idx <= 4)
+    val t1 = fx.turns.filterNot(_.conv_id == "conv-000002")
+    p.runFull(spark, turnsDs(t0), fx.catalog, fx.markers, "t0")
+    val epoch0 = p.checkpoints.syncEpoch(spark, "kg")
+    val runId = p.syncRunId(spark)
+    try {
+      p.failAfterPublish = Some("run-record")
+      intercept[RuntimeException] {
+        p.runSync(spark, turnsDs(t1), fx.catalog, fx.markers, runId)
+      }
+    } finally p.failAfterPublish = None
+    assert(Files.exists(Paths.get(s"$wd/checkpoints/runs/$runId.json")))
+    assert(p.checkpoints.syncEpoch(spark, "kg") == epoch0)
+    // the retry derives the same auto run id, and replays under it
+    assert(p.syncRunId(spark) == runId)
+    p.runSync(spark, turnsDs(t1), fx.catalog, fx.markers, runId)
+    assert(p.checkpoints.syncEpoch(spark, "kg")._1 == epoch0._1 + 1)
+    val mine = spark.read.json(s"$wd/checkpoints/runs")
+      .filter(col("run_id") === runId)
+    assert(mine.filter(col("kind") === "watermark").count() == 1)
+    assert(mine.filter(col("metric") === "published_triples").count() == 1)
+
+    val scratch = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"),
+      syncBuckets = 8, publishDocs = true))
+    scratch.runFull(spark, turnsDs(t1), fx.catalog, fx.markers, "s")
+    assert(supportSet(p) == supportSet(scratch))
+    assert(edgeSet(p) == edgeSet(scratch))
+    assert(nodeMap(p) == nodeMap(scratch))
+    assert(docSet(p) == docSet(scratch))
+  }
+
   test("a retry whose edges published and whose pre-run edge generation " +
        "retention expired rebuilds nodes and docs from the published edges") {
     val spark = SparkTestSession.get
@@ -722,8 +761,8 @@ class BucketedSyncSpec extends AnyFunSuite {
   }
 
   test("bucket-addressed reads at 64 buckets: a no-op sync lists no table " +
-       "dir and runs only its 3 bookkeeping jobs; a one-conversation sync " +
-       "runs no listing job") {
+       "dir and runs only its changed-set scan; the full build and a " +
+       "one-conversation sync run no bookkeeping job, the sync no listing job") {
     val spark = SparkTestSession.get
     // 64 bucket dirs exceed Spark's 32-path parallel-discovery threshold:
     // a read of a whole generation is one "Listing leaf files" job. 120
@@ -731,16 +770,19 @@ class BucketedSyncSpec extends AnyFunSuite {
     val big = TranscriptGen.generate(nConv = 120, nEnt = 30, hotFactor = 5)
     def cfg() = PipelineConfig(workDir = TempDirs("graft-bucket-"),
       syncBuckets = 64, publishDocs = true)
+    def bookkeeping(jobs: Seq[String]) = jobs.filter(_.startsWith("graft:ckpt:"))
     val p = new KgPipeline(cfg())
-    p.runFull(spark, turnsDs(big.turns), big.catalog, big.markers, "t0")
+    val (_, full) = SparkJobs.during(spark)(
+      p.runFull(spark, turnsDs(big.turns), big.catalog, big.markers, "t0"))
+    assert(bookkeeping(full).isEmpty, full.mkString(" | "))
     assert(Files.list(Paths.get(p.supportTable.currentPath().get)).iterator()
       .asScala.count(_.getFileName.toString.startsWith("bucket=")) > 32)
-    // the first sync after a full run also repairs the epoch cache
-    p.runSync(spark, turnsDs(big.turns), big.catalog, big.markers, "t1")
-    val (_, noop) = SparkJobs.during(spark)(
-      p.runSync(spark, turnsDs(big.turns), big.catalog, big.markers, "t1b"))
-    assert(noop == Seq("graft:stage:changed_convs", "graft:ckpt:metrics-write",
-      "graft:ckpt:watermark-write"), noop.mkString(" | "))
+    // the first no-op after a full run and a later one cost the same
+    for (runId <- Seq("t1", "t1b")) {
+      val (_, noop) = SparkJobs.during(spark)(
+        p.runSync(spark, turnsDs(big.turns), big.catalog, big.markers, runId))
+      assert(noop == Seq("graft:stage:changed_convs"), noop.mkString(" | "))
+    }
 
     val maxTs = big.turns.map(_.ts.getTime).max
     val tpl = big.turns.filter(_.conv_id == "conv-000011").maxBy(_.turn_idx)
@@ -749,10 +791,36 @@ class BucketedSyncSpec extends AnyFunSuite {
     val (_, sync) = SparkJobs.during(spark)(
       p.runSync(spark, turnsDs(t2), big.catalog, big.markers, "t2"))
     assert(sync.count(SparkJobs.isListing) == 0, sync.mkString(" | "))
+    assert(bookkeeping(sync).isEmpty, sync.mkString(" | "))
     val scratch = new KgPipeline(cfg())
     scratch.runFull(spark, turnsDs(t2), big.catalog, big.markers, "s")
     assert(supportSet(p) == supportSet(scratch))
     assert(edgeSet(p) == edgeSet(scratch))
+  }
+
+  test("sub-millisecond event times: the recorded watermark keeps them, so " +
+       "unchanged re-syncs move no pointer and run only the changed-set scan") {
+    val spark = SparkTestSession.get
+    // +500 µs on every event time — the part Timestamp.getTime drops
+    val sub = fx.turns.map { t =>
+      val ts = new Timestamp(t.ts.getTime)
+      ts.setNanos(ts.getNanos + 500000)
+      t.copy(ts = ts)
+    }
+    val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"),
+      syncBuckets = 8, publishDocs = true))
+    p.runFull(spark, turnsDs(sub), fx.catalog, fx.markers, "t0")
+    val maxTs = sub.map(_.ts).maxBy(_.toInstant)
+    assert(p.checkpoints.lastWatermark(spark, "kg").map(_.toInstant)
+      .contains(maxTs.toInstant))
+    val before = (p.supportTable.currentGeneration(), gens(p))
+    for (runId <- Seq("t1", "t2")) {
+      val (_, jobs) = SparkJobs.during(spark)(
+        p.runSync(spark, turnsDs(sub), fx.catalog, fx.markers, runId))
+      assert(jobs.nonEmpty && jobs.forall(_ == "graft:stage:changed_convs"),
+        jobs.mkString(" | "))
+      assert((p.supportTable.currentGeneration(), gens(p)) == before)
+    }
   }
 
   test("temporal bucket key: changes clustered in one epoch-week touch ONE " +

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.app.KgAdmin
-import graft.io.TableCommitter
+import graft.io.{CheckpointStore, TableCommitter}
 
 /** §2.10 control-plane surface: the admin CLI's subcommands over a real
   * committer layout (pointer flips, retention, staged-run rollback) —
@@ -76,5 +76,23 @@ class KgAdminSpec extends AnyFunSuite {
     run("drop-staging", workDir, "edges", "r3-staged")
     assert(!Files.exists(Paths.get(c.stagingPath("r3-staged"))))
     assert(c.read(spark).get.count() == 1)
+  }
+
+  test("status prints each pipeline's sync epoch, watermark to the nanosecond " +
+       "and last run id from its status file, with no Spark job") {
+    val spark = SparkTestSession.get
+    val workDir = TempDirs("admin-")
+    val cs = new CheckpointStore(s"$workDir/checkpoints")
+    val wm = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(1735689600L, 500000))
+    for (runId <- Seq("r1", "r2")) {
+      cs.writeRunRecord("kg", runId, wm, Seq.empty, Seq.empty)
+      cs.commit(spark, "kg", runId, wm)
+    }
+    // a crashed status write's tmp file is not a pipeline
+    Files.writeString(Paths.get(s"$workDir/checkpoints/status/.kg.tmp"), "{")
+    val (status, jobs) = SparkJobs.during(spark)(run("status", workDir))
+    assert(jobs.isEmpty, jobs.mkString(" | "))
+    assert(status == Seq("""{"pipeline":"kg","epoch":2,""" +
+      """"watermark":"2025-01-01T00:00:00.000500Z","run_id":"r2"}"""))
   }
 }
