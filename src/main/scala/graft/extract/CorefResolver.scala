@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * scalable shape as AsOfJoin (no per-conversation stateful scan, so hot
   * conversations stay parallel and salting remains unnecessary).
   *
-  * Inputs come from `Extractor.extract` with `emitContext = true`, which
-  * additionally emits per turn:
+  * Inputs come from `Extractor.decode` of `Extractor.extractEncoded` with
+  * `emitContext = true`, which additionally emits per turn:
   *   - orphan triples: subj = [[Extractor.OrphanSubj]] (marker with right
   *     mention only)
   *   - context rows: pred = [[Extractor.LastMentionPred]], obj = last

@@ -29,14 +29,6 @@ import graft.schema.{CatalogEntry, Triple, Turn}
   */
 object Extractor {
 
-  /** A raw extracted statement with provenance (conv, turn) for lineage. */
-  final case class Extracted(
-      conv_id: String,
-      turn_idx: Int,
-      subj: String,
-      pred: String,
-      obj: String)
-
   val MentionsPred = "urn:p:mentions"
 
   /** Sentinel subject for a marker with a right-hand mention but no
@@ -103,9 +95,9 @@ object Extractor {
     * arrays. One scan = clean -> tokenize -> single sweep doing greedy
     * longest-match [[FlatTrie]] descent (mentions) with [[CharScan.TokenMap]]
     * lookup on non-mention tokens (markers) — zero allocation per turn
-    * beyond the emitted rows. Mention entities and marker predicates are
-    * recorded as ints (payload / marker indices); the caller maps them to
-    * its output vocabulary. */
+    * beyond the emitted rows. Mention entities are recorded as trie
+    * payload indices (their entity codes), marker predicates as marker
+    * indices. */
   private final class ScanState(trie: FlatTrie, markers: graft.text.CharScan.TokenMap) {
     import graft.text.CharScan
     val scratch = new CharScan.Scratch
@@ -190,89 +182,30 @@ object Extractor {
     }
   }
 
-  def extract(
-      turns: Dataset[Turn],
-      catalog: Seq[CatalogEntry],
-      markers: Map[String, String],
-      emitContext: Boolean = false,
-      canon: Map[String, String] = Map.empty,
-      sentinelAmbiguous: Boolean = false): Dataset[Extracted] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-
-    val (flat, entities) =
-      FlatTrie.fromTrie(buildTrie(catalog, canon, sentinelAmbiguous))
-    val markerKeys = markers.keys.toArray.sorted
-    val markerPreds = markerKeys.map(markers)
-    val markerMap =
-      graft.text.CharScan.TokenMap.build(markerKeys, markerKeys.indices.toArray)
-    val bc = spark.sparkContext.broadcast((flat, entities, markerMap, markerPreds))
-
-    // project before the kernel: only 3 of the 6 turn columns are consumed,
-    // and the narrow select pushes column pruning into the parquet scan
-    // (ReadSchema carries conv_id, turn_idx, text only)
-    turns
-      .select(col("conv_id"), col("turn_idx"), col("text"))
-      .as[(String, Int, String)]
-      .mapPartitions { it =>
-        val (trie, entities, markerMap, markerPreds) = bc.value
-        val st = new ScanState(trie, markerMap)
-        it.flatMap { case (convId, turnIdx, rawText) =>
-          st.scan(rawText)
-          val nM = st.nM
-          val nK = st.nK
-          val mEnt = st.mEnt
-          val out = new scala.collection.mutable.ArrayBuffer[Extracted](nK + nM)
-          // marker-adjacency triples (mention positions are sorted: walk)
-          var k = 0
-          while (k < nK) {
-            val lr = st.adjacent(st.kPos(k))
-            val li = (lr >> 32).toInt
-            val ri = lr.toInt
-            if (li >= 0 && ri >= 0)
-              out += Extracted(convId, turnIdx,
-                entities(mEnt(li)), markerPreds(st.kPred(k)), entities(mEnt(ri)))
-            else if (emitContext && li < 0 && ri >= 0)
-              out += Extracted(convId, turnIdx,
-                OrphanSubj, markerPreds(st.kPred(k)), entities(mEnt(ri)))
-            k += 1
-          }
-          if (emitContext && nM > 0)
-            out += Extracted(convId, turnIdx,
-              "__ctx__", LastMentionPred, entities(mEnt(nM - 1)))
-          // distinct mention edges per turn (nM is tiny: linear distinct)
-          if (nM > 0) {
-            val convUri = s"urn:conv:$convId"
-            var m = 0
-            while (m < nM) {
-              if (st.firstOccurrence(m))
-                out += Extracted(convId, turnIdx, convUri, MentionsPred, entities(mEnt(m)))
-              m += 1
-            }
-          }
-          out
-        }
-      }
-  }
-
   /** Dictionary-encoded extraction row: subjC == -1 encodes the
     * conversation subject (urn:conv:<conv_id> is derivable from conv_id);
     * entity and predicate codes index the dictionaries returned by
-    * [[extractEncoded]]. */
+    * [[extractEncoded]], and [[decode]] maps them back to strings. */
   final case class EncodedExtracted(
       conv_id: String,
+      turn_idx: Int,
       subjC: Int,
       predC: Int,
       objC: Int)
 
-  /** Shuffle-lean extraction: the kernel emits canonical integer codes
-    * instead of URI strings, so the downstream aggregation exchanges
-    * (conv_id, 3 ints) instead of four ~20-60 byte strings — at 10^12-turn
-    * scale the support shuffle is the dominant wire cost. Canonicalization
-    * composes into the dictionary (code of entity = code of its canonical
-    * representative), which also removes the two broadcast joins of the
-    * string path. Only valid for identity normalization configs (no
-    * proplist/normProp/normObj/white/black rewrites).
+  /** THE extraction kernel: one `mapPartitions` scan per turn emitting
+    * integer codes instead of URI strings, so a downstream count exchanges
+    * (conv_id, 3 ints) instead of four ~20-60 byte strings. The entity
+    * dictionary is the trie's deduplicated terminal values (a trie payload
+    * IS its code), so canonicalization and the [[ambSentinel]] of
+    * `sentinelAmbiguous` compose into it and any `canon` map, total or not,
+    * is valid. Every config runs this kernel; only where its codes are
+    * decoded depends on the config (see `KgPipeline.supports`).
+    *
+    * With `emitContext` it also emits, per turn, the [[CorefResolver]]
+    * inputs: orphan rows (subject [[OrphanSubj]], a marker with a right-hand
+    * mention only) and one context row (`__ctx__`, [[LastMentionPred]], the
+    * turn's last mention by token position).
     *
     * @return (rows, entity dictionary by code, predicate dictionary by code)
     */
@@ -280,58 +213,90 @@ object Extractor {
       turns: Dataset[Turn],
       catalog: Seq[CatalogEntry],
       markers: Map[String, String],
-      canon: Map[String, String]): (Dataset[EncodedExtracted], Array[String], Array[String]) = {
+      canon: Map[String, String],
+      emitContext: Boolean = false,
+      sentinelAmbiguous: Boolean = false)
+      : (Dataset[EncodedExtracted], Array[String], Array[String]) = {
     val spark = turns.sparkSession
     import spark.implicits._
 
-    val entities = canon.values.toSeq.distinct.sorted.toArray
-    val entCode = entities.zipWithIndex.toMap
-    val preds = (markers.values.toSeq :+ MentionsPred).distinct.sorted.toArray
+    val (flat, values) =
+      FlatTrie.fromTrie(buildTrie(catalog, canon, sentinelAmbiguous))
+    val orphanCode = values.length
+    val ctxCode = values.length + 1
+    val entities = values ++ Array(OrphanSubj, "__ctx__")
+    val preds =
+      (markers.values.toSeq ++ Seq(MentionsPred, LastMentionPred)).distinct.sorted.toArray
     val predCode = preds.zipWithIndex.toMap
-
-    // trie payloads resolve straight to canonical entity CODES via the
-    // deduplicated value array (payload index -> URI -> code)
-    val (flat, values) = FlatTrie.fromTrie(buildTrie(catalog, canon))
-    val payloadCode = values.map(entCode)
     val markerKeys = markers.keys.toArray.sorted
     val markerCodes = markerKeys.map(k => predCode(markers(k)))
     val markerMap =
       graft.text.CharScan.TokenMap.build(markerKeys, markerKeys.indices.toArray)
     val mentionsCode = predCode(MentionsPred)
-    val bc = spark.sparkContext.broadcast((flat, payloadCode, markerMap, markerCodes))
+    val lastMentionCode = predCode(LastMentionPred)
+    val bc = spark.sparkContext.broadcast((flat, markerMap, markerCodes))
 
+    // project before the kernel: only 3 of the 6 turn columns are consumed,
+    // and the narrow select pushes column pruning into the parquet scan
+    // (ReadSchema carries conv_id, turn_idx, text only)
     val rows = turns
       .select(col("conv_id"), col("turn_idx"), col("text"))
       .as[(String, Int, String)]
       .mapPartitions { it =>
-        val (trie, payloadCode, markerMap, markerCodes) = bc.value
+        val (trie, markerMap, markerCodes) = bc.value
         val st = new ScanState(trie, markerMap)
-        it.flatMap { case (convId, _, rawText) =>
+        it.flatMap { case (convId, turnIdx, rawText) =>
           st.scan(rawText)
           val nM = st.nM
           val nK = st.nK
           val mEnt = st.mEnt
-          val out = new scala.collection.mutable.ArrayBuffer[EncodedExtracted](nK + nM)
+          val out = new scala.collection.mutable.ArrayBuffer[EncodedExtracted](nK + nM + 1)
+          // marker-adjacency triples (mention positions are sorted: walk)
           var k = 0
           while (k < nK) {
             val lr = st.adjacent(st.kPos(k))
             val li = (lr >> 32).toInt
             val ri = lr.toInt
             if (li >= 0 && ri >= 0)
-              out += EncodedExtracted(convId,
-                payloadCode(mEnt(li)), markerCodes(st.kPred(k)), payloadCode(mEnt(ri)))
+              out += EncodedExtracted(convId, turnIdx,
+                mEnt(li), markerCodes(st.kPred(k)), mEnt(ri))
+            else if (emitContext && li < 0 && ri >= 0)
+              out += EncodedExtracted(convId, turnIdx,
+                orphanCode, markerCodes(st.kPred(k)), mEnt(ri))
             k += 1
           }
+          if (emitContext && nM > 0)
+            out += EncodedExtracted(convId, turnIdx,
+              ctxCode, lastMentionCode, mEnt(nM - 1))
+          // distinct mention edges per turn (nM is tiny: linear distinct)
           var m = 0
           while (m < nM) {
             if (st.firstOccurrence(m))
-              out += EncodedExtracted(convId, -1, mentionsCode, payloadCode(mEnt(m)))
+              out += EncodedExtracted(convId, turnIdx, -1, mentionsCode, mEnt(m))
             m += 1
           }
           out
         }
       }
     (rows, entities, preds)
+  }
+
+  /** The one decoder: `subjC`/`predC`/`objC` become `subj`/`pred`/`obj`
+    * strings in place (subjC -1 is `urn:conv:<conv_id>`), every other column
+    * is kept. Takes [[extractEncoded]]'s triple, or any frame over its codes
+    * (e.g. their count) with the same dictionaries. */
+  def decode(encoded: (Dataset[_], Array[String], Array[String])): DataFrame = {
+    val (rows, entities, preds) = encoded
+    val ents = typedlit(entities.toSeq)
+    val ps = typedlit(preds.toSeq)
+    rows.toDF().select(rows.columns.toSeq.map {
+      case "subjC" =>
+        when(col("subjC") === -1, concat(lit("urn:conv:"), col("conv_id")))
+          .otherwise(element_at(ents, col("subjC") + 1)).as("subj")
+      case "predC" => element_at(ps, col("predC") + 1).as("pred")
+      case "objC" => element_at(ents, col("objC") + 1).as("obj")
+      case c => col(c)
+    }: _*)
   }
 
   /** Config-driven normalization of raw statements — the ESNormalizer stage

@@ -15,8 +15,8 @@ import graft.text.CharScan
   * differential spec (FusedKernelSpec) locks against the Map-walk model.
   *
   * Terminal payloads are indices into the `values` array returned by
-  * [[FlatTrie.fromTrie]] — entity URIs for the string kernel, mapped to
-  * dictionary codes by the encoded kernel. `values` is deduplicated, so
+  * [[FlatTrie.fromTrie]], which the extraction kernel uses as its entity
+  * dictionary: a payload is its entity code. `values` is deduplicated, so
   * payload equality is value equality (the kernel's per-turn mention
   * dedup compares payload ints).
   */

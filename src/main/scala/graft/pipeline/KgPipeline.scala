@@ -613,23 +613,30 @@ object KgPipeline {
     val canon: Map[String, String] =
       if (cfg.scoredLinking) Map.empty
       else graft.sources.TranscriptGen.components(catalog)
-    val identityCfg = cfg.proplist.isEmpty && cfg.normProp.isEmpty &&
-      cfg.normObj.isEmpty && cfg.whiteMap.isEmpty && cfg.blackMap.isEmpty
-    if (identityCfg && !cfg.detectLanguage && !cfg.scoredLinking &&
-        !cfg.corefResolution)
-      return supportsEncoded(cfg, turns, catalog, markers, canon)
-    val raw0 = Extractor.extract(turns, catalog, markers,
-      emitContext = cfg.corefResolution, canon = canon,
-      sentinelAmbiguous = cfg.scoredLinking).toDF()
-    val raw1 =
-      if (cfg.scoredLinking) graft.link.AmbiguityResolver.resolve(raw0, turns, catalog)
-      else raw0
-    // coref runs AFTER scored linking so the cross-turn antecedent is the
-    // contextually-resolved entity, not an ambiguity sentinel
-    val raw = if (cfg.corefResolution) coref(raw1) else raw1
-    val grouped = Extractor.normalize(raw, cfg)
-      .groupBy("conv_id", "subj", "pred", "obj")
-      .agg(count(lit(1)).as("weight"))
+    val enc = Extractor.extractEncoded(turns, catalog, markers, canon,
+      emitContext = cfg.corefResolution, sentinelAmbiguous = cfg.scoredLinking)
+    def counted(df: Dataset[_], s: String, p: String, o: String) =
+      df.groupBy("conv_id", s, p, o).agg(count(lit(1)).as("weight"))
+    // the decode point: scored linking, coref and normalization rewrite
+    // per-row strings, so they decode before the count; otherwise the count
+    // shuffles codes and only its output is decoded
+    val perRowStrings = cfg.scoredLinking || cfg.corefResolution ||
+      cfg.proplist.nonEmpty || cfg.normProp.nonEmpty || cfg.normObj.nonEmpty ||
+      cfg.whiteMap.nonEmpty || cfg.blackMap.nonEmpty
+    val grouped =
+      if (perRowStrings) {
+        val raw0 = Extractor.decode(enc)
+        val raw1 =
+          if (cfg.scoredLinking) graft.link.AmbiguityResolver.resolve(raw0, turns, catalog)
+          else raw0
+        // coref runs AFTER scored linking so the cross-turn antecedent is the
+        // contextually-resolved entity, not an ambiguity sentinel
+        val raw = if (cfg.corefResolution) coref(raw1) else raw1
+        counted(Extractor.normalize(raw, cfg), "subj", "pred", "obj")
+      } else {
+        val (rows, ents, preds) = enc
+        Extractor.decode((counted(rows, "subjC", "predC", "objC"), ents, preds))
+      }
     // detectLanguage cost note: one extra narrow aggregation scan of `turns`
     // plus a post-aggregation join of the (already conv-grouped, far smaller
     // than raw turns) supports against the per-conversation langs. Default
@@ -658,28 +665,5 @@ object KgPipeline {
     require(profs.nonEmpty, "detectLanguage=true requires a non-empty langProfiles")
     graft.text.LangDetect.pick(
       graft.text.LangDetect.counts(turns.toDF(), profs), profs, cfg.language)
-  }
-
-  /** Identity-config fast path: dictionary-coded extraction + integer-key
-    * aggregation, decoded after the exchange — same rows as the string path
-    * (asserted by KgPipelineSpec), a fraction of the shuffle bytes. */
-  private def supportsEncoded(cfg: PipelineConfig, turns: Dataset[Turn],
-                              catalog: Seq[CatalogEntry],
-                              markers: Map[String, String],
-                              canon: Map[String, String]): DataFrame = {
-    val (enc, ents, preds) =
-      Extractor.extractEncoded(turns, catalog, markers, canon)
-    val entLit = typedlit(ents.toSeq)
-    val predLit = typedlit(preds.toSeq)
-    enc.groupBy("conv_id", "subjC", "predC", "objC")
-      .agg(count(lit(1)).as("weight"))
-      .select(
-        col("conv_id"),
-        when(col("subjC") === -1, concat(lit("urn:conv:"), col("conv_id")))
-          .otherwise(element_at(entLit, col("subjC") + 1)).as("subj"),
-        element_at(predLit, col("predC") + 1).as("pred"),
-        element_at(entLit, col("objC") + 1).as("obj"),
-        lit(cfg.language).as("lang"),
-        col("weight"))
   }
 }

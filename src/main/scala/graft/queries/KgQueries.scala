@@ -161,10 +161,11 @@ object KgQueries {
     },
 
     // ---- cross-turn coreference through the REAL kernel + resolver
-    // (Extractor.extract with emitContext=true -> CorefResolver.resolve): a
-    // marker with a right-hand mention but nothing to its left takes the
-    // most recent mention from EARLIER turns of the conversation (north
-    // rule: cross-turn context under stable (conv_id, turn_idx) ordering).
+    // (Extractor.extractEncoded with emitContext=true, decoded ->
+    // CorefResolver.resolve): a marker with a right-hand mention but nothing
+    // to its left takes the most recent mention from EARLIER turns of the
+    // conversation (north rule: cross-turn context under stable
+    // (conv_id, turn_idx) ordering).
     // The oracle replays the kernel's marker-adjacency scan with positional
     // windows; parseForJson is the identity on this corpus (plain
     // space-separated words), which the trip-wire queries (p5) cover
@@ -234,8 +235,8 @@ object KgQueries {
       val catalog = aliasEntities.map { case (a, e, r) => CatalogEntry(e, a, "", r) }
       val markers = Map("join" -> "urn:p:op", "merge" -> "urn:p:op",
         "scan" -> "urn:p:op")
-      val raw = graft.extract.Extractor
-        .extract(t, catalog, markers, emitContext = true).toDF()
+      val raw = graft.extract.Extractor.decode(graft.extract.Extractor
+        .extractEncoded(t, catalog, markers, Map.empty, emitContext = true))
       graft.extract.CorefResolver.resolve(raw)
         .select(col("conv_id"), col("turn_idx").cast("bigint").as("turn_idx"),
           col("subj"), col("pred"), col("obj"))

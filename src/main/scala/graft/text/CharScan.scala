@@ -2,7 +2,7 @@ package graft.text
 
 /** Allocation-free text scanning for the extraction hot loop.
   *
-  * The extraction kernel (Extractor.extract / extractEncoded) runs once per
+  * The extraction kernel (Extractor.extractEncoded) runs once per
   * turn at 10^12-turn scale; with `parseForJson` + `fastTokens` it allocates
   * a cleaned String, an ArrayBuffer and one String per token — hundreds of
   * millions of short-lived objects per pass, which turns the stage

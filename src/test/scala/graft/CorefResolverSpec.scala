@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ExtractModel.kernel
 import graft.extract.{CorefResolver, Extractor}
 import graft.schema.{CatalogEntry, Turn}
 
@@ -27,7 +28,7 @@ class CorefResolverSpec extends AnyFunSuite {
       turn("c1", 2, "uses alc"),           // orphan -> subject = urn:ent:b
       turn("c2", 0, "uses alc"))           // orphan, nothing prior -> dropped
       .toDS()
-    val extracted = Extractor.extract(turns, catalog, markers, emitContext = true).toDF()
+    val extracted = kernel(turns, catalog, markers, emitContext = true).toDF()
     val got = CorefResolver.resolve(extracted)
       .filter("pred = 'urn:p:uses'")
       .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getString(4)))
@@ -42,7 +43,7 @@ class CorefResolverSpec extends AnyFunSuite {
     import spark.implicits._
     // the only mention in the orphan's turn is its right-hand object
     val turns = Seq(turn("c1", 0, "uses alc")).toDS()
-    val extracted = Extractor.extract(turns, catalog, markers, emitContext = true).toDF()
+    val extracted = kernel(turns, catalog, markers, emitContext = true).toDF()
     assert(CorefResolver.resolve(extracted).filter("pred = 'urn:p:uses'").count() == 0)
   }
 
@@ -50,8 +51,8 @@ class CorefResolverSpec extends AnyFunSuite {
     val spark = SparkTestSession.get
     import spark.implicits._
     val fx = graft.sources.TranscriptGen.generate(nConv = 10, nEnt = 10, hotFactor = 1)
-    val a = Extractor.extract(fx.turns.toDS(), fx.catalog, fx.markers).collect().toSet
-    val b = Extractor.extract(fx.turns.toDS(), fx.catalog, fx.markers,
+    val a = kernel(fx.turns.toDS(), fx.catalog, fx.markers).collect().toSet
+    val b = kernel(fx.turns.toDS(), fx.catalog, fx.markers,
       emitContext = false).collect().toSet
     assert(a == b)
     assert(!a.exists(e => e.subj == Extractor.OrphanSubj ||

@@ -1,9 +1,13 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.config.PipelineConfig
 import graft.extract.{Extractor, FlatTrie}
-import graft.schema.CatalogEntry
+import graft.pipeline.KgPipeline
+import graft.schema.{CatalogEntry, Turn}
 import graft.text.{CharScan, TextNorm}
 
 /** Differential lock for the fused allocation-free extraction kernel
@@ -50,64 +54,6 @@ class FusedKernelSpec extends AnyFunSuite {
     }
   }
 
-  /** The pre-fusion kernel logic, kept verbatim as the differential model:
-    * parseForJson + fastTokens + greedy longest-match walk over the
-    * Map-based [[Extractor.TrieNode]], then marker adjacency, optional
-    * context rows, and per-turn distinct mention edges. */
-  private def modelExtract(
-      convId: String, turnIdx: Int, rawText: String,
-      trie: Extractor.TrieNode, markers: Map[String, String],
-      emitContext: Boolean): Seq[Extractor.Extracted] = {
-    val text = if (rawText == null) "" else TextNorm.parseForJson(rawText)
-    val toks = TextNorm.fastTokens(text)
-    val mentions = scala.collection.mutable.ArrayBuffer[(Int, String)]()
-    val marks = scala.collection.mutable.ArrayBuffer[(Int, String)]()
-    var i = 0
-    while (i < toks.length) {
-      var node = trie
-      var j = i
-      var bestEnd = -1
-      var bestEnt: String = null
-      var continue = true
-      while (continue && j < toks.length) {
-        node.children.getOrElse(toks(j), null) match {
-          case null => continue = false
-          case child =>
-            if (child.entity != null) { bestEnd = j; bestEnt = child.entity }
-            node = child
-            j += 1
-        }
-      }
-      if (bestEnd >= 0) { mentions += ((i, bestEnt)); i = bestEnd + 1 }
-      else {
-        markers.get(toks(i)).foreach(p => marks += ((i, p)))
-        i += 1
-      }
-    }
-    val out = scala.collection.mutable.ArrayBuffer[Extractor.Extracted]()
-    marks.foreach { case (pos, pred) =>
-      val left = mentions.filter(_._1 < pos).lastOption
-      val right = mentions.find(_._1 > pos)
-      (left, right) match {
-        case (Some((_, l)), Some((_, r))) =>
-          out += Extractor.Extracted(convId, turnIdx, l, pred, r)
-        case (None, Some((_, r))) if emitContext =>
-          out += Extractor.Extracted(convId, turnIdx, Extractor.OrphanSubj, pred, r)
-        case _ =>
-      }
-    }
-    if (emitContext && mentions.nonEmpty)
-      out += Extractor.Extracted(convId, turnIdx,
-        "__ctx__", Extractor.LastMentionPred, mentions.last._2)
-    val seen = scala.collection.mutable.LinkedHashSet[String]()
-    mentions.foreach { case (_, e) => seen += e }
-    seen.foreach { e =>
-      out += Extractor.Extracted(convId, turnIdx, s"urn:conv:$convId",
-        Extractor.MentionsPred, e)
-    }
-    out.toSeq
-  }
-
   private def randomCatalogAndMarkers(rnd: scala.util.Random)
       : (Seq[CatalogEntry], Map[String, String], Map[String, String]) = {
     val vocab = Vector("aa", "bb", "cc", "dd", "ee", "ff", "aa'", "a_b", "\\\\", "''")
@@ -118,8 +64,14 @@ class FusedKernelSpec extends AnyFunSuite {
     }
     val markers = (1 to (1 + rnd.nextInt(3)))
       .map(_ => vocab(rnd.nextInt(vocab.size)) -> s"urn:p:${rnd.nextInt(3)}").toMap
-    val canon = if (rnd.nextBoolean()) Map.empty[String, String]
-      else (0 to 5).map(i => s"urn:e:$i" -> s"urn:e:${i / 2}").toMap
+    // canon drawn empty, partial (some catalog entities map to themselves
+    // implicitly) or total over the catalog's entities
+    val total = (0 to 5).map(i => s"urn:e:$i" -> s"urn:e:${i / 2}").toMap
+    val canon = rnd.nextInt(3) match {
+      case 0 => Map.empty[String, String]
+      case 1 => total.filter(_ => rnd.nextBoolean())
+      case _ => total
+    }
     (catalog, markers, canon)
   }
 
@@ -145,15 +97,16 @@ class FusedKernelSpec extends AnyFunSuite {
         graft.schema.Turn(s"c${i % 7}", i, "user", mentionText(rnd, catalog, markers),
           null, java.sql.Timestamp.valueOf("2026-01-01 00:00:00"))
       }
-      val got = Extractor.extract(turns.toDS(), catalog, markers,
+      val got = ExtractModel.kernel(turns.toDS(), catalog, markers,
         emitContext = emitCtx, canon = canon, sentinelAmbiguous = sentinel)
         .collect().toSeq
         .sortBy(e => (e.conv_id, e.turn_idx, e.subj, e.pred, e.obj))
       val trie = Extractor.buildTrie(catalog, canon, sentinel)
-      val want = turns.flatMap(t =>
-        modelExtract(t.conv_id, t.turn_idx, t.text, trie, markers, emitCtx))
+      val want = turns.flatMap(t => ExtractModel.modelExtract(
+          t.conv_id, t.turn_idx, t.text, trie, markers, emitCtx))
         .sortBy(e => (e.conv_id, e.turn_idx, e.subj, e.pred, e.obj))
-      assert(got == want, s"round=$round sentinel=$sentinel emitCtx=$emitCtx")
+      assert(got == want,
+        s"round=$round sentinel=$sentinel emitCtx=$emitCtx canon=$canon")
     }
   }
 
@@ -187,12 +140,12 @@ class FusedKernelSpec extends AnyFunSuite {
       graft.schema.Turn(s"c${i % 3}", i, "user", text,
         null, java.sql.Timestamp.valueOf("2026-01-01 00:00:00"))
     }
-    val got = Extractor.extract(turns.toDS().coalesce(1), catalog, markers,
+    val got = ExtractModel.kernel(turns.toDS().coalesce(1), catalog, markers,
       emitContext = true, canon = canon)
       .collect().toSeq.sortBy(e => (e.conv_id, e.turn_idx, e.subj, e.pred, e.obj))
     val trie = Extractor.buildTrie(catalog, canon)
-    val want = turns.flatMap(t =>
-      modelExtract(t.conv_id, t.turn_idx, t.text, trie, markers, emitContext = true))
+    val want = turns.flatMap(t => ExtractModel.modelExtract(
+        t.conv_id, t.turn_idx, t.text, trie, markers, emitContext = true))
       .sortBy(e => (e.conv_id, e.turn_idx, e.subj, e.pred, e.obj))
     assert(got == want)
     assert(got.nonEmpty)
@@ -236,29 +189,90 @@ class FusedKernelSpec extends AnyFunSuite {
     assert(got == Seq(1, 2, -1))
   }
 
-  test("encoded kernel equals string kernel under dictionary decode (randomized)") {
+  // ---- the one supports chain against the string-per-row reference
+
+  private val aliasWords = Vector("aa", "bb", "cc", "dd", "ee")
+
+  private val genCatalog: Gen[Seq[CatalogEntry]] =
+    Gen.choose(3, 8).flatMap(n => Gen.listOfN(n, for {
+      e <- Gen.choose(0, 5)
+      k <- Gen.choose(1, 2)
+      a <- Gen.listOfN(k, Gen.oneOf(aliasWords))
+      r <- Gen.choose(0, 2)
+    } yield CatalogEntry(s"urn:e:$e", a.mkString(" "), s"label $e", r)))
+
+  private val genMarkers: Gen[Map[String, String]] =
+    Gen.nonEmptyMap(Gen.zip(Gen.oneOf("uses", "runs", "ee"),
+      Gen.choose(0, 2).map(i => s"urn:p:$i")))
+
+  /** 24 turns over 4 conversations, words from the aliases, the markers,
+    * both language profiles' function words and filler. */
+  private def genTurns(catalog: Seq[CatalogEntry],
+                       markers: Map[String, String]): Gen[Seq[Turn]] = {
+    val vocab = catalog.flatMap(_.alias.split(" ")) ++ markers.keys ++
+      Seq("the", "with", "je", "nebo", "zz")
+    val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+    Gen.listOfN(24, Gen.zip(Gen.choose(0, 3),
+        Gen.choose(0, 8).flatMap(n => Gen.listOfN(n, Gen.oneOf(vocab)))))
+      .map(_.zipWithIndex.map { case ((c, toks), i) =>
+        Turn(s"c$c", i, "user", toks.mkString(" "), null, ts)
+      })
+  }
+
+  /** A config carrying at least one normalization rule over `preds` and the
+    * catalog's entities. */
+  private def genRules(preds: Seq[String]): Gen[PipelineConfig] = {
+    val objs = (0 to 5).map(i => s"urn:e:$i")
+    def maybe[T](g: Gen[T], none: T): Gen[T] = Gen.oneOf(Gen.const(none), g)
+    def objSets = Gen.nonEmptyMap(Gen.zip(Gen.oneOf(preds),
+      Gen.nonEmptyContainerOf[Set, String](Gen.oneOf(objs))))
+    for {
+      listType <- Gen.oneOf("white", "black")
+      proplist <- maybe(Gen.nonEmptyContainerOf[Set, String](Gen.oneOf(preds)), Set.empty[String])
+      normProp <- maybe(Gen.nonEmptyMap(Gen.zip(Gen.oneOf(preds),
+        Gen.nonEmptyListOf(Gen.oneOf("urn:p:x", "urn:p:y")))), Map.empty[String, Seq[String]])
+      normObj <- maybe(Gen.nonEmptyMap(Gen.zip(Gen.oneOf(objs),
+        Gen.oneOf(objs :+ "urn:e:z"))), Map.empty[String, String])
+      whiteMap <- maybe(objSets, Map.empty[String, Set[String]])
+      blackMap <- maybe(objSets, Map.empty[String, Set[String]])
+    } yield {
+      val cfg = PipelineConfig(listType = listType, proplist = proplist,
+        normProp = normProp, normObj = normObj, whiteMap = whiteMap, blackMap = blackMap)
+      if (cfg.copy(listType = "white") != PipelineConfig()) cfg
+      else cfg.copy(listType = "black", proplist = Set(preds.head))
+    }
+  }
+
+  private def supportRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("\u0001")).toSeq.sorted
+
+  test("KgPipeline.supports equals the string-per-row reference chain " +
+       "(model rows, scored linking, coref, normalize, count, language stamp) " +
+       "for all 16 combinations of a normalization rule, scoredLinking, " +
+       "corefResolution and detectLanguage") {
     val spark = SparkTestSession.get
     import spark.implicits._
-    val rnd = new scala.util.Random(4)
-    (1 to 8).foreach { round =>
-      val (catalog, markers, canon0) = randomCatalogAndMarkers(rnd)
-      // extractEncoded requires a total canon map over catalog entities
-      val canon = catalog.map(_.entityId).distinct
-        .map(e => e -> canon0.getOrElse(e, e)).toMap
-      val turns = (1 to 30).map { i =>
-        graft.schema.Turn(s"c${i % 5}", i, "user", mentionText(rnd, catalog, markers),
-          null, java.sql.Timestamp.valueOf("2026-01-01 00:00:00"))
+    val gen = for {
+      catalog <- genCatalog
+      markers <- genMarkers
+      turns <- genTurns(catalog, markers)
+      rules <- genRules(markers.values.toSeq.distinct.sorted :+ Extractor.MentionsPred)
+    } yield (catalog, markers, turns, rules)
+    val flags = Seq(false, true)
+    for (norm <- flags; scored <- flags; coref <- flags; detect <- flags) {
+      val combo = s"norm=$norm scoredLinking=$scored coref=$coref detectLanguage=$detect"
+      val prop = Prop.forAllNoShrink(gen) { case (catalog, markers, turns, rules) =>
+        val cfg = (if (norm) rules else PipelineConfig()).copy(
+          scoredLinking = scored, corefResolution = coref, detectLanguage = detect)
+        val got = KgPipeline.supports(cfg, turns.toDS(), catalog, markers)
+        val want = ExtractModel.referenceSupports(cfg, turns, catalog, markers)
+        Prop(got.schema == want.schema) :| s"schema ${got.schema} != ${want.schema}" &&
+          Prop(supportRows(got) == supportRows(want)) :|
+            s"supports differ: cfg=$cfg catalog=$catalog markers=$markers turns=$turns"
       }
-      val (rows, ents, preds) =
-        Extractor.extractEncoded(turns.toDS(), catalog, markers, canon)
-      val got = rows.collect().toSeq.map { r =>
-        (r.conv_id,
-         if (r.subjC == -1) s"urn:conv:${r.conv_id}" else ents(r.subjC),
-         preds(r.predC), ents(r.objC))
-      }.sorted
-      val want = Extractor.extract(turns.toDS(), catalog, markers, canon = canon)
-        .collect().toSeq.map(e => (e.conv_id, e.subj, e.pred, e.obj)).sorted
-      assert(got == want, s"round=$round")
+      val res = Test.check(
+        Test.Parameters.default.withMinSuccessfulTests(3).withWorkers(1), prop)
+      assert(res.passed, s"$combo: ${org.scalacheck.util.Pretty.pretty(res)}")
     }
   }
 }

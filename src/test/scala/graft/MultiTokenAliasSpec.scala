@@ -4,7 +4,6 @@ import java.sql.Timestamp
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.extract.Extractor
 import graft.schema.{CatalogEntry, Turn}
 
 class MultiTokenAliasSpec extends AnyFunSuite {
@@ -21,7 +20,7 @@ class MultiTokenAliasSpec extends AnyFunSuite {
   private def triples(text: String) = {
     val spark = SparkTestSession.get
     import spark.implicits._
-    Extractor.extract(Seq(turn(text)).toDS(), catalog, markers)
+    ExtractModel.kernel(Seq(turn(text)).toDS(), catalog, markers)
       .collect().map(e => (e.subj, e.pred, e.obj)).toSet
   }
 

@@ -337,11 +337,27 @@ class PlanRegressionSpec extends AnyFunSuite {
     val spark = SparkTestSession.get
     import spark.implicits._
     val fx = TranscriptGen.generate(nConv = 3, nEnt = 5, hotFactor = 1)
-    val p = Extractor.extract(fx.turns.toDS(), fx.catalog, fx.markers)
-      .queryExecution.executedPlan.toString
+    val p = Extractor.extractEncoded(fx.turns.toDS(), fx.catalog, fx.markers, Map.empty)
+      ._1.queryExecution.executedPlan.toString
     assert(!p.contains("Exchange"), s"extraction plan has a shuffle:\n$p")
     // only the 3 needed columns are deserialized into the kernel
     assert(p.contains("conv_id") && p.contains("text"))
     assert(!p.contains("tool#"), "kernel deserializes unused columns")
+  }
+
+  test("supports decode late: the count exchange hash-partitions on codes, " +
+       "with and without detectLanguage") {
+    val spark = SparkTestSession.get
+    import spark.implicits._
+    val fx = TranscriptGen.generate(nConv = 3, nEnt = 5, hotFactor = 1)
+    val onCodes = """hashpartitioning\(conv_id#\d+, subjC#\d+, predC#\d+, objC#\d+""".r
+    val onStrings = """hashpartitioning\(conv_id#\d+, subj#\d+, pred#\d+, obj#\d+""".r
+    for (cfg <- Seq(graft.config.PipelineConfig(),
+                    graft.config.PipelineConfig(detectLanguage = true))) {
+      val p = graft.pipeline.KgPipeline.supports(cfg, fx.turns.toDS(), fx.catalog,
+        fx.markers).queryExecution.executedPlan.toString
+      assert(onCodes.findFirstIn(p).isDefined, s"$cfg: count not on codes:\n$p")
+      assert(onStrings.findFirstIn(p).isEmpty, s"$cfg: strings shuffled:\n$p")
+    }
   }
 }

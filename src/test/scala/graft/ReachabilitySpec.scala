@@ -208,6 +208,21 @@ class ReachabilitySpec extends AnyFunSuite {
       s"SparkIo.list / files / deleteRecursively in: ${offenders.mkString(", ")}")
   }
 
+  /** Instantiating the extraction scan loop: one per kernel. */
+  private val ScanLoop = """\bnew\s+ScanState\s*\(""".r
+
+  test("one extraction kernel: new ScanState( occurs exactly once in main code") {
+    val two = """val a = new ScanState(t, m)
+      |// new ScanState(t, m) in a comment
+      |val b = new  ScanState (t, m)""".stripMargin
+    assert(ScanLoop.findAllIn(stripComments(two)).size == 2)
+    val sites = mainSources().flatMap { case (p, src) =>
+      ScanLoop.findAllIn(stripComments(src)).map(_ => p)
+    }
+    assert(sites.size == 1, "extraction runs one scan loop, " +
+      s"Extractor.extractEncoded; found ${sites.size} in: ${sites.mkString(", ")}")
+  }
+
   test("the frozen driver entry points exist") {
     Seq("Bench.scala", "Verify.scala", "SparkEntry.scala").foreach { f =>
       assert(Files.isRegularFile(mainRoot.resolve(Paths.get("graft", f))), f)

@@ -60,8 +60,7 @@ class StreamingLangSpec extends AnyFunSuite {
     val expectLang = LangDetect
       .pick(LangDetect.counts(fx.turns.toDF(), profs), profs, cfg.language)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val expect = graft.extract.Extractor
-      .extract(fx.turns.toDS(), fx.catalog, fx.markers,
+    val expect = ExtractModel.kernel(fx.turns.toDS(), fx.catalog, fx.markers,
         canon = TranscriptGen.components(fx.catalog)).toDF()
       .groupBy("conv_id", "subj", "pred", "obj").count()
       .collect()
@@ -180,8 +179,7 @@ class StreamingLangSpec extends AnyFunSuite {
 
     // expectation: the batch pipeline's whole-input result
     val allTurns = Seq(t0, t1)
-    val expectSupports = graft.extract.Extractor
-      .extract(allTurns.toDS(), catalog, TranscriptGen.markerPreds,
+    val expectSupports = ExtractModel.kernel(allTurns.toDS(), catalog, TranscriptGen.markerPreds,
         canon = TranscriptGen.components(catalog)).toDF()
       .groupBy("subj", "pred", "obj").count()
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),

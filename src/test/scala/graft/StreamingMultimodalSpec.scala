@@ -33,8 +33,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     // Canon parity: the stream extracts at canonical-cluster granularity
     // exactly like the batch pipeline, so the reference must too (the
     // fixture's shared aliases make an un-canonicalized reference diverge).
-    val batch = graft.extract.Extractor
-      .extract(fx.turns.toDS(), fx.catalog, fx.markers,
+    val batch = ExtractModel.kernel(fx.turns.toDS(), fx.catalog, fx.markers,
         canon = TranscriptGen.components(fx.catalog)).toDF()
       .groupBy("conv_id", "subj", "pred", "obj").count()
       .collect()
@@ -104,8 +103,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       "a 1-conversation micro-batch must rewrite exactly that conversation's bucket")
 
     // content parity: streamed == batch extraction over (original + extra)
-    val batch = graft.extract.Extractor
-      .extract((fx.turns ++ extra).toDS(), fx.catalog, fx.markers,
+    val batch = ExtractModel.kernel((fx.turns ++ extra).toDS(), fx.catalog, fx.markers,
         canon = TranscriptGen.components(fx.catalog)).toDF()
       .groupBy("conv_id", "subj", "pred", "obj").count()
       .collect()
@@ -257,7 +255,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       .toMap
     // batch reference: same extraction + resolution over the whole corpus
     val batch = graft.link.AmbiguityResolver.resolve(
-        graft.extract.Extractor.extract(turns.toDS(), cat, Map.empty,
+        ExtractModel.kernel(turns.toDS(), cat, Map.empty,
           sentinelAmbiguous = true).toDF(), turns.toDS(), cat)
       .groupBy("conv_id", "subj", "pred", "obj").count()
       .collect()
@@ -317,8 +315,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     // batch reference: conv-level support weights sum across conversations
     // to a plain per-key count, exactly what the batch pipeline's edge
     // aggregation computes over its supports
-    val extractedAll = graft.extract.Extractor
-      .extract(fx.turns.toDS(), fx.catalog, fx.markers,
+    val extractedAll = ExtractModel.kernel(fx.turns.toDS(), fx.catalog, fx.markers,
         canon = TranscriptGen.components(fx.catalog)).toDF()
     val edgesRef = extractedAll
       .groupBy("subj", "pred", "obj").count()
@@ -462,7 +459,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       .toMap
     // batch reference: extraction + window resolution over the whole corpus
     val batch = graft.extract.CorefResolver.resolve(
-        graft.extract.Extractor.extract(turns.toDS(), cat, markers,
+        ExtractModel.kernel(turns.toDS(), cat, markers,
           emitContext = true).toDF())
       .groupBy("conv_id", "subj", "pred", "obj").count()
       .collect()
@@ -622,8 +619,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val cfg = PipelineConfig(workDir = work,
       listType = "black", proplist = Set("urn:p:collab"))
     // the blacklist must be load-bearing: the raw extraction emits the pred
-    assert(graft.extract.Extractor
-      .extract(fx.turns.toDS(), fx.catalog, fx.markers).toDF()
+    assert(ExtractModel.kernel(fx.turns.toDS(), fx.catalog, fx.markers).toDF()
       .filter(col("pred") === "urn:p:collab").count() > 0)
     val table = new TableCommitter(
       TempDirs("stream-n-tbl-"))
@@ -634,7 +630,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     // parity reference: the batch stage order over the good rows — extract
     // at canonical granularity, then normalize under the same config
     val ref = graft.extract.Extractor.normalize(
-        graft.extract.Extractor.extract(fx.turns.toDS(), fx.catalog,
+        ExtractModel.kernel(fx.turns.toDS(), fx.catalog,
           fx.markers, canon = TranscriptGen.components(fx.catalog)).toDF(),
         cfg)
       .groupBy("conv_id", "subj", "pred", "obj").count()
@@ -722,8 +718,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val streamed = table.read(spark).get.collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)) -> r.getLong(5))
       .toMap
-    val batch = graft.extract.Extractor
-      .extract(fx.turns.toDS(), fx.catalog, fx.markers,
+    val batch = ExtractModel.kernel(fx.turns.toDS(), fx.catalog, fx.markers,
         canon = TranscriptGen.components(fx.catalog)).toDF()
       .groupBy("conv_id", "subj", "pred", "obj").count()
       .collect()
@@ -743,22 +738,28 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val nTbl = new TableCommitter(TempDirs("stream-ed-n-"))
     val dTbl = new TableCommitter(TempDirs("stream-ed-d-"))
     val ckpt = TempDirs("stream-ed-ck-")
-    def ingest(turns: Seq[graft.schema.Turn]): Unit = {
-      turns.toDS().coalesce(1).write.mode("append").parquet(inDir)
+    def ingest(): Unit =
       StreamingSync.ingestAvailableNow(spark, inDir, ckpt, fx.catalog,
         fx.markers, PipelineConfig(), table, edgeTable = Some(eTbl),
         nodeTable = Some(nTbl), docTable = Some(dTbl))
-    }
+    def append(turns: Seq[graft.schema.Turn]): Unit =
+      turns.toDS().coalesce(1).write.mode("append").parquet(inDir)
     def gens() = Seq(table, eTbl, nTbl, dTbl).map(_.currentGeneration())
 
-    ingest(fx.turns)
+    append(fx.turns)
+    ingest()
     val before = gens()
     assert(before.forall(_.isDefined))
-    val quiet = fx.turns.take(3).zipWithIndex.map { case (t, i) =>
-      t.copy(conv_id = "conv-quiet", turn_idx = i, text = "nothing to see here") }
-    ingest(quiet)
+    append(fx.turns.take(3).zipWithIndex.map { case (t, i) =>
+      t.copy(conv_id = "conv-quiet", turn_idx = i, text = "nothing to see here") })
+    val (_, jobs) = SparkJobs.during(spark)(ingest())
     assert(table.currentGeneration("lastBatch").contains("1"))
     assert(gens() == before)
+    // the batch's supports checkpoint, then the quarantine write: with no
+    // support row, AQE prunes the observation away, so the bad-row count is
+    // unknown and the quarantine is written defensively
+    assert(jobs == Seq("graft:collect:stream-supports", "graft:quarantine-write"),
+      jobs.mkString(" | "))
   }
 
   test("lineage guard: a coref lineage with committed batches refuses an " +
