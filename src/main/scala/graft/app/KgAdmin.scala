@@ -9,8 +9,8 @@ import graft.io.{CheckpointStore, SparkIo, TableCommitter}
   * IndexerController.java:32-103): inspect state, flip blue/green aliases,
   * expire old snapshots, drop staged-but-unpublished runs.
   *
-  * All subcommands are metadata-only (pointer files, directory listings,
-  * hard-link-aware sizes) — no SparkSession, so the CLI answers in
+  * All subcommands are metadata-only (pointer files, manifests, directory
+  * listings, hard-link-aware sizes) — no SparkSession, so the CLI answers in
   * milliseconds against a 100 TB workDir exactly like the reference's
   * `GET /api/running` answers without touching ES data.
   *
@@ -44,7 +44,8 @@ object KgAdmin {
       val byAlias = c.aliases()
       c.generations().foreach { g =>
         val aliases = byAlias.collect { case (a, t) if t == g => a }
-        println(s"""{"gen":"$g","bytes":${c.generationPath(g).fold(0L)(dirBytes)},""" +
+        val m = c.manifest(g)
+        println(s"""{"gen":"$g","rows":${m.fold(0L)(_.rows)},"bytes":${m.fold(0L)(_.bytes)},""" +
           s""""aliases":[${aliases.map("\"" + _ + "\"").mkString(",")}]}""")
       }
     case "set-pointer" :: workDir :: table :: gen :: rest if rest.size <= 1 =>
@@ -84,7 +85,4 @@ object KgAdmin {
   private def tableBytes(workDir: String, table: String): Long =
     SparkIo.files(tableDir(workDir, table))
       .distinctBy(Files.getAttribute(_, "unix:fileKey")).map(Files.size).sum
-
-  /** Logical bytes of one generation directory (what a reader scans). */
-  private def dirBytes(d: Path): Long = SparkIo.files(d).map(Files.size).sum
 }

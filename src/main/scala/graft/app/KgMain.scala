@@ -248,7 +248,7 @@ object KgMain {
         .persist()
       // an all-malformed (or empty) dump yields zero docs: refuse to
       // publish nothing over a good table (a zero-row generation would stay
-      // readable through its schema sidecar, but it would replace every
+      // readable through its manifest, but it would replace every
       // doc) — fail before the pointer moves
       val n = docs.count()
       require(n > 0,

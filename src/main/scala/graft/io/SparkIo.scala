@@ -6,9 +6,11 @@ import java.util.Comparator
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.functions.collect_set
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -127,20 +129,23 @@ object SparkIo {
     * cores: footers are independent (remote, at scale) reads whose latency,
     * not CPU, is the cost. */
   def footerRowCounts(files: Seq[Path], conf: Configuration): Seq[Long] =
-    files.asJava.parallelStream().map[java.lang.Long] { f =>
-      val rdr = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf))
-      try rdr.getRecordCount finally rdr.close()
-    }.toList.asScala.map(_.longValue).toSeq
+    files.asJava.parallelStream().map[java.lang.Long](f => footer(f, conf).getBlocks
+      .asScala.map(_.getRowCount).sum).toList.asScala.map(_.longValue).toSeq
+
+  /** The Spark schema a Spark writer left in parquet file `f`'s footer. */
+  def footerSchema(f: Path, conf: Configuration): Option[StructType] =
+    Option(footer(f, conf).getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata"))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+
+  /** The footer alone, read the way Spark's scan reads it: opening a whole
+    * `ParquetFileReader` per file costs an order of magnitude more. */
+  private def footer(f: Path, conf: Configuration): ParquetMetadata =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(f.toUri), conf), ParquetMetadataConverter.NO_FILTER)
 
   /** The schema sidecar of a parquet directory, if it has one. */
   def schemaSidecar(dir: Path): Option[StructType] =
     readString(dir.resolve(TableCommitter.SchemaSidecar))
       .map(DataType.fromJson(_).asInstanceOf[StructType])
-
-  /** Read a parquet directory through its schema sidecar when present;
-    * pre-sidecar directories fall back to normal inference. */
-  def readParquetWithSidecar(spark: SparkSession, path: String): DataFrame =
-    schemaSidecar(java.nio.file.Paths.get(path))
-      .fold(spark.read)(spark.read.schema(_)).parquet(path)
 }

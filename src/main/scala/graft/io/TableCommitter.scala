@@ -2,8 +2,17 @@ package graft.io
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
+  BoundReference, Cast, Expression, Literal, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation,
+  PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 
 /** Snapshot table with atomic publish — the Iceberg-snapshot-commit pattern
   * emulated over parquet + a manifest pointer (no Iceberg runtime in
@@ -12,7 +21,9 @@ import org.apache.spark.sql.functions._
   * made file-based:
   *
   *   root/_meta/current         <- one-line pointer file, atomically replaced
-  *   root/gen-<n>/              <- immutable published snapshots
+  *   root/gen-<n>/              <- immutable published snapshots: the
+  *                                 `bucket=<b>` data dirs, `_graft_manifest`
+  *                                 and `_graft_run`
   *   root/_staging/<runId>/     <- in-flight writes; never visible to readers
   *
   * Readers resolve the pointer first, so a crashed run leaves only dead
@@ -20,10 +31,16 @@ import org.apache.spark.sql.functions._
   * Blue/green aliases (K6, Indexer.switchAliases) are additional named
   * pointer files over the same generations.
   *
+  * A generation's [[TableCommitter.Manifest]] is its Iceberg snapshot
+  * manifest: every read, count and carryover goes through it, so no read
+  * lists a directory and no count opens a footer.
+  *
   * At cluster scale the pointer flip maps to an Iceberg snapshot commit /
   * metastore pointer swap; the rest of the layout is unchanged.
   */
 final class TableCommitter(rootDir: String) {
+  import TableCommitter._
+
   private val root = Paths.get(rootDir)
   private val meta = root.resolve("_meta")
   private val staging = root.resolve("_staging")
@@ -36,61 +53,31 @@ final class TableCommitter(rootDir: String) {
   def currentPath(alias: String = "current"): Option[String] =
     currentGeneration(alias).map(g => root.resolve(g).toString)
 
-  /** Reads go through the generation's schema sidecar when one exists
-    * (see SparkIo.readParquetWithSidecar): it makes a ZERO-ROW generation
-    * readable — `partitionBy` of an empty DataFrame emits no parquet data
-    * files at all, so schema inference would throw and a legitimate empty
-    * publish (e.g. a first-ever sync over a source with no extractable
-    * triples) would brick every later read of the table — and it skips
-    * footer-based schema inference on non-empty reads. */
+  /** The generation an alias points at (see [[readGeneration]]). */
   def read(spark: SparkSession, alias: String = "current"): Option[DataFrame] =
-    currentPath(alias).map(SparkIo.readParquetWithSidecar(spark, _))
+    currentGeneration(alias).flatMap(readGeneration(spark, _))
 
-  /** Time travel: read any retained generation directly (generations are
-    * immutable once published — the Iceberg snapshot-read equivalent).
-    * Routed through `generationPath`, so only a validated `gen-<n>`
-    * DIRECTORY qualifies: the `current` pointer file, `_meta`, dotted
-    * staging dirs, and path-traversal names all return None rather than
-    * reaching the parquet reader. */
-  def readGeneration(spark: SparkSession, gen: String): Option[DataFrame] =
-    generationPath(gen).map(p => SparkIo.readParquetWithSidecar(spark, p.toString))
-
-  /** The rows of `buckets` in the current generation, addressed by their
-    * `bucket=<b>` dirs (see `readGeneration(spark, gen, buckets)`). */
+  /** The rows of `buckets` in the current generation. */
   def readBuckets(spark: SparkSession, buckets: Set[Int]): Option[DataFrame] =
-    currentGeneration().flatMap(readGeneration(spark, _, buckets))
+    currentGeneration().flatMap(readGeneration(spark, _, Some(buckets)))
 
-  /** The rows of `buckets` in generation `gen`. Only the existing
-    * `bucket=<b>` dirs reach the parquet reader (with the generation as
-    * `basePath`, so `bucket` stays a column), never the generation root:
-    * the read lists k dirs, not all B — a root read at B > 32 is one
-    * parallel "Listing leaf files" Spark job per read, whatever the filter.
-    * No dir to read (an empty set, or only empty buckets) gives an empty
-    * frame of the table's schema and runs no Spark job. The generation is
-    * bound now, like [[read]]. A generation without a schema sidecar (an
-    * older writer) falls back to the bucket-filtered root read. */
+  /** The rows of generation `gen` — of only `buckets` when given; None when
+    * `gen` is not a `gen-<n>` directory (time travel: generations are
+    * immutable). The relation serves the manifest's files for those
+    * buckets: nothing is listed and no schema inferred. No file to read
+    * gives a local empty frame of the table's schema: no Spark job. */
   def readGeneration(spark: SparkSession, gen: String,
-                     buckets: Set[Int]): Option[DataFrame] =
-    generationPath(gen).map { dir =>
-      SparkIo.schemaSidecar(dir) match {
-        case None => spark.read.parquet(dir.toString)
-          .filter(col(TableCommitter.BucketCol).isin(buckets.toSeq: _*))
-        case Some(schema) =>
-          // a partitioned read puts the partition column last
-          val (part, data) =
-            schema.fields.partition(_.name == TableCommitter.BucketCol)
-          val reader =
-            spark.read.schema(org.apache.spark.sql.types.StructType(data ++ part))
-          val dirs = buckets.toSeq.sorted
-            .map(b => dir.resolve(s"${TableCommitter.BucketCol}=$b"))
-            .filter(Files.isDirectory(_))
-          // no dir: a local empty frame (optimizers see it is empty) typed
-          // like a read of the dirs — a path-less reader lists nothing
-          if (dirs.isEmpty) spark.createDataFrame(
-            java.util.Collections.emptyList[Row](), reader.parquet().schema)
-          else reader.option("basePath", dir.toString)
-            .parquet(dirs.map(_.toString): _*)
-      }
+                     buckets: Option[Set[Int]] = None): Option[DataFrame] =
+    manifest(gen).map { m =>
+      // a partitioned relation puts the partition column last
+      val (part, data) = m.schema.fields.partition(_.name == BucketCol)
+      val files = m.files.filter(f => buckets.forall(bs => f.bucket.exists(bs)))
+      if (files.isEmpty) spark.createDataFrame(
+        java.util.Collections.emptyList[Row](), StructType(data ++ part))
+      else spark.baseRelationToDataFrame(HadoopFsRelation(
+        ManifestIndex(root.resolve(gen), files, StructType(part)),
+        StructType(part), StructType(data), None, new ParquetFileFormat,
+        Map.empty)(spark))
     }
 
   /** The generation `runId` merges into: the current one, or the parent of
@@ -112,8 +99,8 @@ final class TableCommitter(rootDir: String) {
   def readBefore(spark: SparkSession, runId: String,
                  buckets: Set[Int]): Option[DataFrame] =
     generationBefore(runId).map { gen =>
-      readGeneration(spark, gen, buckets).getOrElse(
-        throw new TableCommitter.ExpiredGeneration(
+      readGeneration(spark, gen, Some(buckets)).getOrElse(
+        throw new ExpiredGeneration(
           s"replaying $runId needs $root's pre-run snapshot $gen, but " +
             "retention expired it — raise retention or rebuild the table"))
     }
@@ -173,97 +160,51 @@ final class TableCommitter(rootDir: String) {
     val writers = math.min(spark.sessionState.conf.numShufflePartitions,
       spark.sparkContext.defaultParallelism)
     withJobDesc(df, "stage-buckets") {
-      df.repartition(writers, col(TableCommitter.BucketCol))
+      df.repartition(writers, col(BucketCol))
         .write.mode("overwrite")
         .option("maxRecordsPerFile", 20000000)
-        .partitionBy(TableCommitter.BucketCol).parquet(p)
+        .partitionBy(BucketCol).parquet(p)
     }
-    // schema sidecar: the generation this staging becomes stays readable
-    // even with zero rows (no data files to infer a schema from; see read)
-    SparkIo.writeAtomically(Paths.get(p).resolve(TableCommitter.SchemaSidecar),
-      df.schema.json)
+    // the manifest's schema: a zero-row staging has no footer to read it from
+    SparkIo.writeAtomically(Paths.get(p).resolve(SchemaSidecar), df.schema.json)
     p
   }
 
-  /** Row count of the current generation from parquet FOOTERS — driver-side
-    * metadata only, zero Spark jobs (a Spark metadata-only count still
-    * schedules ~2 jobs, pure overhead for a per-sync metric).
-    *
-    * Generations are immutable, so the first computation is cached in a
-    * count sidecar inside the generation dir: every later sync against the
-    * same generation (the nightly no-op case) reads ONE tiny file instead
-    * of re-walking the table — at the 100 TB design point a per-run serial
-    * footer walk over ~10^5-10^6 part files would dominate the "metadata
-    * only" no-op. The cold computation itself fans the footer opens across
-    * the driver's cores (footers are independent remote reads; the latency,
-    * not the CPU, is the cost). Sidecar writes are atomic and best-effort —
-    * a lost write only means the next caller recomputes. */
-  def currentRecordCount(spark: SparkSession): Option[Long] =
-    currentGeneration().map { gen =>
-      recordCount(gen).getOrElse {
-        val n = SparkIo.footerRowCounts(
-          SparkIo.files(root.resolve(gen)).filter(_.getFileName.toString.endsWith(".parquet")),
-          spark.sessionState.newHadoopConf()).sum
-        seedRecordCount(gen, n)
-        n
-      }
-    }
-
-  /** The row count cached in generation `gen`'s count sidecar, if any. */
-  def recordCount(gen: String): Option[Long] =
-    generationPath(gen).flatMap(dir => SparkIo.readString(
-      dir.resolve(TableCommitter.CountSidecar)).flatMap(_.toLongOption))
-
-  /** Write generation `gen`'s count sidecar: by [[currentRecordCount]]
-    * after a footer walk, or by a writer that observed its rows while
-    * publishing (a full write's row count; a bucket merge's parent count
-    * minus the replaced rows plus the written ones), which spares every
-    * later reader the walk. Atomic and best-effort — a lost write only
-    * means the next caller recomputes. */
-  def seedRecordCount(gen: String, n: Long): Unit =
-    generationPath(gen).foreach { dir =>
-      scala.util.Try(
-        SparkIo.writeAtomically(dir.resolve(TableCommitter.CountSidecar), n.toString))
-    }
-
-  /** Whether the current generation was published with the bucketed layout
-    * (bucket= partition dirs; an EMPTY bucketed publish is recognised via
-    * its schema sidecar carrying the bucket column). `Some(false)` means a
-    * pre-bucketing writer built this table — bucketed writers must refuse
-    * it with a migration message instead of pinning a bucket_count that the
-    * physical layout cannot honour. Metadata-only (one dir listing + one
-    * small file read). */
-  def currentIsBucketed(alias: String = "current"): Option[Boolean] =
-    currentPath(alias).map { p =>
-      val dir = Paths.get(p)
-      bucketDirs(dir).nonEmpty || SparkIo.schemaSidecar(dir)
-        .exists(_.fieldNames.contains(TableCommitter.BucketCol))
-    }
-
-  private def bucketDirs(dir: Path): Seq[Path] =
-    SparkIo.list(dir)
-      .filter(_.getFileName.toString.startsWith(s"${TableCommitter.BucketCol}="))
-
-  /** Hard-link every file of `src` into `dst` (same inodes — zero copy;
-    * generations are immutable once published, so sharing is safe; this is
-    * the manifest-file-reuse of an Iceberg incremental snapshot made
-    * file-system-literal). */
-  private def linkDir(src: Path, dst: Path): Unit = {
-    Files.createDirectories(dst)
-    SparkIo.files(src).foreach { f =>
-      val out = dst.resolve(src.relativize(f))
-      Files.createDirectories(out.getParent)
-      Files.createLink(out, f)
+  /** The manifest of generation `gen`; None when `gen` is not a `gen-<n>`
+    * directory. A generation published before manifests is adopted once,
+    * like [[CheckpointStore]]'s older log: walked ([[walk]]), and its
+    * manifest written into it atomically and best-effort — generations are
+    * immutable, so it cannot go stale. */
+  def manifest(gen: String): Option[Manifest] = generationPath(gen).map { dir =>
+    SparkIo.readString(dir.resolve(ManifestFile)).map(parseManifest).getOrElse {
+      val m = walk(dir)
+      scala.util.Try(SparkIo.writeAtomically(dir.resolve(ManifestFile), m.json))
+      m
     }
   }
 
+  /** Row count of the current generation: its manifest's row sum. */
+  def currentRecordCount(): Option[Long] =
+    currentGeneration().flatMap(manifest).map(_.rows)
+
+  /** Whether the current generation has the bucketed layout: its schema
+    * has the `bucket` column (an EMPTY bucketed publish too). `Some(false)`
+    * means a pre-bucketing writer built this table — bucketed writers must
+    * refuse it with a migration message instead of pinning a bucket_count
+    * that the physical layout cannot honour. */
+  def currentIsBucketed(alias: String = "current"): Option[Boolean] =
+    currentGeneration(alias).flatMap(manifest)
+      .map(_.schema.fieldNames.contains(BucketCol))
+
   /** Incremental bucket publish: gen-(n+1) = staged `bucket=` dirs (the
     * rewritten buckets) + hard-linked carryover of every current-generation
-    * bucket NOT in `changedBuckets`. A sync touching k of B buckets therefore
-    * writes exactly k bucket directories of new bytes; the other B-k are
-    * shared by reference with the previous generation. `changedBuckets`
-    * (not staged-dir presence) decides carryover, so a bucket whose rows all
-    * vanished is correctly dropped rather than resurrected.
+    * file whose bucket is NOT in `changedBuckets`, named by the current
+    * manifest. A sync touching k of B buckets therefore writes exactly k
+    * bucket directories of new bytes; the other B-k are shared by reference
+    * with the previous generation. `changedBuckets` (not staged-dir
+    * presence) decides carryover, so a bucket whose rows all vanished is
+    * correctly dropped rather than resurrected. The new manifest (staged
+    * files walked, carried entries copied) moves into place with the rest.
     *
     * This is the reference's per-doc-id upsert granularity
     * (Harvester.java:1849-1856) at bucket granularity, with snapshot
@@ -293,46 +234,65 @@ final class TableCommitter(rootDir: String) {
     // generations() (dotted names don't match the gen- prefix)
     val tmpDir = root.resolve(s".$gen.tmp")
     Files.createDirectories(tmpDir)
-    val changedNames = changedBuckets.map(b => s"${TableCommitter.BucketCol}=$b")
-    // carry over untouched buckets from the live generation by hard link
-    currentPath(alias).foreach { cur =>
-      bucketDirs(Paths.get(cur))
-        .filterNot(d => changedNames.contains(d.getFileName.toString))
-        .foreach(d => linkDir(d, tmpDir.resolve(d.getFileName.toString)))
-    }
     // move the rewritten buckets in from staging (caller contract: staged
     // data may only touch declared-changed buckets, or the hard-linked
-    // carryover above would collide with it)
-    val staged = bucketDirs(stagedAt)
-    val undeclared = staged.map(_.getFileName.toString).filterNot(changedNames)
+    // carryover below would collide with it)
+    val staged = walk(stagedAt)
+    val stagedBuckets = staged.files.flatMap(_.bucket).distinct
+    val undeclared = stagedBuckets.filterNot(changedBuckets)
     require(undeclared.isEmpty,
       s"staged buckets not declared changed: ${undeclared.mkString(",")}")
-    staged.foreach { d =>
-      Files.move(d, tmpDir.resolve(d.getFileName.toString),
-        StandardCopyOption.ATOMIC_MOVE)
+    stagedBuckets.map(b => s"$BucketCol=$b").foreach { d =>
+      Files.move(stagedAt.resolve(d), tmpDir.resolve(d), StandardCopyOption.ATOMIC_MOVE)
     }
-    Seq("_SUCCESS", TableCommitter.SchemaSidecar).foreach { f =>
-      val src = stagedAt.resolve(f)
-      if (Files.exists(src))
-        Files.move(src, tmpDir.resolve(f), StandardCopyOption.REPLACE_EXISTING)
+    // carry over untouched buckets from the live generation by hard link
+    val parent = currentGeneration(alias).flatMap(g => manifest(g).map(root.resolve(g) -> _))
+    val carried = parent.toSeq.flatMap { case (dir, m) =>
+      m.files.filter(_.bucket.exists(b => !changedBuckets(b)))
+        .tapEach(f => link(dir, tmpDir, f.path))
     }
-    // a fresh staged write always carries a sidecar; keep a carried-over one
-    // readable even if the caller staged through an out-of-band writer
-    val sidecar = tmpDir.resolve(TableCommitter.SchemaSidecar)
-    if (!Files.exists(sidecar))
-      currentPath(alias).map(Paths.get(_).resolve(TableCommitter.SchemaSidecar))
-        .filter(Files.exists(_))
-        .foreach(Files.copy(_, sidecar))
+    Files.writeString(tmpDir.resolve(ManifestFile),
+      Manifest(staged.schema, staged.files ++ carried).json)
     // the run marker travels INSIDE the generation: a crash after the move
     // but before recordRun would otherwise leave a complete, unreferenced
     // gen-N that the retry re-publishes as gen-(N+1) — a phantom forever
     // occupying a retention slot (publishedGeneration heals from the marker)
-    Files.writeString(tmpDir.resolve(TableCommitter.RunMarker), s"$alias~$runId")
+    Files.writeString(tmpDir.resolve(RunMarker), s"$alias~$runId")
     Files.move(tmpDir, root.resolve(gen), StandardCopyOption.ATOMIC_MOVE)
     SparkIo.deleteRecursively(stagedAt)
     recordRun(runId, gen, alias)
     setPointer(alias, gen)
     gen
+  }
+
+  /** Hard-link data file `rel` of generation dir `from` into `to`, with its
+    * checksum file when the file system keeps one (same inodes — zero copy;
+    * generations are immutable once published, so sharing is safe). */
+  private def link(from: Path, to: Path, rel: String): Unit = {
+    val f = Paths.get(rel)
+    val crc = f.resolveSibling(s".${f.getFileName}.crc")
+    Files.createDirectories(to.resolve(f).getParent)
+    (f +: Seq(crc).filter(c => Files.exists(from.resolve(c))))
+      .foreach(g => Files.createLink(to.resolve(g), from.resolve(g)))
+  }
+
+  /** A manifest of the parquet files under `dir` (a staging or a pre-manifest
+    * generation dir), found by a driver-side walk, rows from their footers
+    * (no Spark job). The schema is the dir's schema sidecar, else the Spark
+    * schema in a footer plus `bucket` when the files sit in bucket dirs,
+    * else empty. */
+  private def walk(dir: Path): Manifest = {
+    val paths = SparkIo.files(dir).filter(_.getFileName.toString.endsWith(".parquet"))
+    val files = paths.zip(SparkIo.footerRowCounts(paths, hadoopConf)).map { case (p, rows) =>
+      DataFile(dir.relativize(p).toString, Some(p.getParent.getFileName.toString)
+        .collect { case BucketDir(b) => b.toInt }, Files.size(p), rows)
+    }
+    val schema = SparkIo.schemaSidecar(dir).getOrElse {
+      val data = paths.headOption.flatMap(SparkIo.footerSchema(_, hadoopConf))
+        .getOrElse(new StructType())
+      if (files.exists(_.bucket.isDefined)) data.add(BucketCol, IntegerType) else data
+    }
+    Manifest(schema, files)
   }
 
   /** Delete assembly dirs (`.gen-*.tmp`) orphaned by a crash mid-publish.
@@ -522,8 +482,8 @@ object TableCommitter {
   /** Physical partition column of bucketed tables. */
   val BucketCol = "bucket"
 
-  /** Per-generation schema sidecar file name (leading underscore: parquet
-    * readers ignore it as metadata, like _SUCCESS). */
+  /** Schema sidecar of a staging dir (the manifest's schema source) and of
+    * a stage checkpoint (leading underscore: parquet readers ignore it). */
   val SchemaSidecar = "_graft_schema.json"
 
   /** In-generation run marker (`alias~runId` of the publish that created the
@@ -531,9 +491,65 @@ object TableCommitter {
     * crash between the generation move and recordRun. */
   val RunMarker = "_graft_run"
 
-  /** Per-generation record-count cache (leading underscore: ignored by
-    * parquet readers). Written by the publishing writer when it observed
-    * its rows, else lazily by [[TableCommitter.currentRecordCount]] —
-    * generations are immutable, so the count can never go stale. */
-  val CountSidecar = "_graft_count"
+  /** In-generation manifest file (see [[Manifest]]). */
+  val ManifestFile = "_graft_manifest"
+
+  private val BucketDir = s"$BucketCol=(-?\\d+)".r
+
+  /** One data file of a generation: its path relative to the generation
+    * dir, its bucket (None in an unpartitioned generation), bytes and rows. */
+  final case class DataFile(path: String, bucket: Option[Int], bytes: Long, rows: Long)
+
+  /** A generation's schema and data files, stored as JSON lines: the schema
+    * line, then one line per file ([[parseManifest]] reads them). */
+  final case class Manifest(schema: StructType, files: Seq[DataFile]) {
+    def rows: Long = files.map(_.rows).sum
+    def bytes: Long = files.map(_.bytes).sum
+
+    def json: String =
+      (mapper.createObjectNode().put("schema", schema.json) +: files.map { f =>
+        val n = mapper.createObjectNode().put("path", f.path)
+          .put("bytes", f.bytes).put("rows", f.rows)
+        f.bucket.foreach(n.put("bucket", _))
+        n
+      }).mkString("\n")
+  }
+
+  private def parseManifest(json: String): Manifest = {
+    val lines = json.split("\n").map(mapper.readTree)
+    Manifest(DataType.fromJson(lines.head.get("schema").asText).asInstanceOf[StructType],
+      lines.toSeq.tail.map(n => DataFile(n.get("path").asText,
+        Option(n.get("bucket")).map(_.asInt), n.get("bytes").asLong, n.get("rows").asLong)))
+  }
+
+  private val mapper = new ObjectMapper()
+
+  private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+
+  /** The files of a manifest as a relation's file index: every file is
+    * served from the manifest, and a partition filter on `bucket` prunes
+    * whole buckets as a listed index would, so nothing is ever listed. */
+  private final case class ManifestIndex(dir: Path, files: Seq[DataFile],
+                                         partitionSchema: StructType) extends FileIndex {
+    private def status(f: DataFile) =
+      new FileStatus(f.bytes, false, 1, 0L, 0L, new HPath(dir.resolve(f.path).toUri))
+
+    override def rootPaths: Seq[HPath] = Seq(new HPath(dir.toUri))
+
+    override def listFiles(partitionFilters: Seq[Expression],
+                           dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val keep = partitionFilters.reduceOption(And).map(p =>
+        Predicate.createInterpreted(p.transform {
+          case a: AttributeReference => BoundReference(0, a.dataType, nullable = true)
+        }))
+      files.groupBy(_.bucket).toSeq.sortBy(_._1).map { case (b, fs) =>
+        PartitionDirectory(InternalRow.fromSeq(b.toSeq.map(v =>
+          Cast(Literal(v), partitionSchema.head.dataType).eval())), fs.map(status).toArray)
+      }.filter(d => keep.forall(_.eval(d.values)))
+    }
+
+    override def inputFiles: Array[String] = files.map(status(_).getPath.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = files.map(_.bytes).sum
+  }
 }

@@ -42,10 +42,7 @@ final class DerivedTables(cfg: PipelineConfig, val edgeTable: TableCommitter,
     * this returns). A node or doc table with no generation is built whole
     * from the published edges; otherwise edges move only when
     * `edgeBuckets` is non-empty, nodes only when the ref delta is, and
-    * docs only when an edge key was created or retired (see publishDocs).
-    * The new edge generation's count sidecar is derived from its parent's
-    * (minus the replaced rows, plus the written ones, both observed by the
-    * edge write), so no reader walks its footers. */
+    * docs only when an edge key was created or retired (see publishDocs). */
   def propagate(spark: SparkSession, delta: DataFrame, edgeBuckets: Set[Int],
                 runId: String): Unit = {
     // no delta and no edges yet: there is nothing to derive from
@@ -54,26 +51,17 @@ final class DerivedTables(cfg: PipelineConfig, val edgeTable: TableCommitter,
       // no key moved: the empty delta stands in for the empty ref delta
       if (edgeBuckets.isEmpty) (delta, Set.empty[Int], false)
       else {
-        val parent = edgeTable.generationBefore(runId)
         val pre = try edgeTable.readBefore(spark, runId, edgeBuckets) catch {
           case _: TableCommitter.ExpiredGeneration =>
             publishAllNodesAndDocs(spark, runId)
             return
         }
-        val (keys, rows) = (new Observation(), new Observation())
+        val keys = new Observation()
         val (edges, refs) = mergeEdges(
-          pre.map(_.drop(TableCommitter.BucketCol)), delta, keys, rows)
+          pre.map(_.drop(TableCommitter.BucketCol)), delta, keys)
         val (nodeDelta, nodeBuckets) =
           SparkIo.checkpointBuckets(refs, nodeBucket, "node-delta")
         publishEdges(edges, edgeBuckets, runId)
-        val written = rows.get
-        for {
-          n0 <- parent.fold(Option(0L))(edgeTable.recordCount)
-          replaced <- written.get("replaced")
-          kept <- written.get("kept")
-          gen <- edgeTable.publishedGeneration(runId)
-        } edgeTable.seedRecordCount(gen,
-          n0 - replaced.asInstanceOf[Long] + kept.asInstanceOf[Long])
         (nodeDelta, nodeBuckets,
           keys.get.get("n").exists(_.asInstanceOf[Long] > 0))
       }
@@ -88,15 +76,13 @@ final class DerivedTables(cfg: PipelineConfig, val edgeTable: TableCommitter,
     * had no generation). One full outer join on the edge key yields both
     * results:
     *  - the merged edges: `weight = prior + dw`, rows with weight > 0 kept;
-    *    `rows` observes, on their write, the prior rows they replace
-    *    (`replaced`) and the rows kept (`kept`);
     *  - the node ref delta `(entity_id, dn)`: +1 per endpoint of a created
     *    key (no prior weight, new weight > 0), -1 per endpoint of a retired
     *    key (prior weight, new weight <= 0), zero sums dropped.
     * `keys` observes the number of created plus retired keys, counted per
     * key before the per-entity sum can cancel them. */
   private def mergeEdges(pre: Option[DataFrame], delta: DataFrame,
-                         keys: Observation, rows: Observation)
+                         keys: Observation)
       : (DataFrame, DataFrame) = {
     val joined = pre match {
       case Some(p) =>
@@ -107,8 +93,6 @@ final class DerivedTables(cfg: PipelineConfig, val edgeTable: TableCommitter,
     val merged = joined.withColumn("weight",
       coalesce(col("w0"), lit(0L)) + coalesce(col("dw"), lit(0L)))
     val edges = merged
-      .observe(rows, count(col("w0")).as("replaced"),
-        count(when(col("weight") > 0, lit(1))).as("kept"))
       .filter(col("weight") > 0)
       .select(EdgeKey.map(col) :+ col("weight"): _*)
     val refDelta = merged

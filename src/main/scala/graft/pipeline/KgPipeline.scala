@@ -77,8 +77,8 @@ final class KgPipeline(cfg: PipelineConfig) {
       if (failAfterStage.contains(name))
         throw new RuntimeException(s"injected failure after stage $name")
     }
-    // pre-sidecar checkpoints fall back to inference inside the helper
-    SparkIo.readParquetWithSidecar(spark, dir.toString)
+    // a pre-sidecar checkpoint falls back to schema inference
+    SparkIo.schemaSidecar(dir).fold(spark.read)(spark.read.schema(_)).parquet(dir.toString)
   }
 
   /** Bucket-set sidecar name (leading underscore — not data). */
@@ -292,11 +292,11 @@ final class KgPipeline(cfg: PipelineConfig) {
     * conversations are rewritten; the rest carry into the new generation by
     * hard link) -> delta-propagated edge/node updates. Per-sync work is
     * proportional to the CHANGED data, never to the table size — the
-    * 100 TB nightly-sync requirement. File listing is too: every table
-    * read is bucket-addressed ([[TableCommitter.readBuckets]]), so a sync
-    * touching k buckets lists O(k) bucket dirs and a no-op sync lists none;
-    * only `syncOldData`'s vanished-set reconciliation reads a whole
-    * generation.
+    * 100 TB nightly-sync requirement. Table reads are too: every read is
+    * bucket-addressed ([[TableCommitter.readBuckets]]) and built from the
+    * generation's manifest, so a sync touching k buckets opens only their
+    * files, lists no directory, and a no-op sync reads no table; only
+    * `syncOldData`'s vanished-set reconciliation reads a whole generation.
     *
     * Once the edge delta is checkpointed, the support publish and
     * [[DerivedTables.propagate]] (edges, then nodes and docs together) run
@@ -376,7 +376,7 @@ final class KgPipeline(cfg: PipelineConfig) {
         nodeTable.currentGeneration().isDefined &&
         (!cfg.publishDocs || docTable.currentGeneration().isDefined)) {
       return finishRun(spark, runId, None,
-        edgeTable.currentRecordCount(spark).getOrElse(0L), Seq.empty)
+        edgeTable.currentRecordCount().getOrElse(0L), Seq.empty)
     }
 
     // J3: re-extract only changed conversations (semi-join restriction)
@@ -408,7 +408,7 @@ final class KgPipeline(cfg: PipelineConfig) {
         // ints, already known from the two stage sidecars (zero jobs); the
         // read lists only their dirs
         val changedBuckets = changedConvBuckets ++ vanishedBuckets
-        val curChanged = supportTable.readGeneration(spark, gen, changedBuckets).get
+        val curChanged = supportTable.readGeneration(spark, gen, Some(changedBuckets)).get
         val keep = curChanged
           .join(touched, Seq("conv_id"), "left_anti")
           .drop("bucket")
@@ -458,18 +458,16 @@ final class KgPipeline(cfg: PipelineConfig) {
           // replays to the same tables
           SparkIo.both(publishChangedSupports(),
             derived.propagate(spark, deltaCk, affectedEdgeBuckets, runId))
-          // snapshot-level triple count from the count sidecar propagate
-          // derived (else from parquet footers) — zero Spark jobs
+          // the triple count is the edge manifest's row sum: no Spark job
           finishRun(spark, runId, newWm,
-            edgeTable.currentRecordCount(spark).getOrElse(0L), lineage)
+            edgeTable.currentRecordCount().getOrElse(0L), lineage)
         }
     }
   }
 
   /** Derive + publish full edge/node/doc snapshots from `supports`
     * (full-harvest path: every bucket is written): the edges, then the
-    * nodes and docs at the same time. The edge generation's count sidecar
-    * is the observed edge count.
+    * nodes and docs at the same time.
     * @return (edge rows, total edge weight) */
   private def publishDerivedFull(spark: SparkSession, runId: String,
                                  supports: DataFrame): (Long, Long) = {
@@ -481,7 +479,6 @@ final class KgPipeline(cfg: PipelineConfig) {
       .observe(obs, count(lit(1)).as("n"), sum(col("weight")).as("total_weight"))
     derived.publishEdges(edges, allBucketIds, runId)
     val n = obs.get("n").asInstanceOf[Long]
-    edgeTable.publishedGeneration(runId).foreach(edgeTable.seedRecordCount(_, n))
 
     // nodes and docs derive from the just-published parquet snapshot —
     // re-using the logical `edges` plan would re-run the whole supports

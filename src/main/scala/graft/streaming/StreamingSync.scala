@@ -126,8 +126,8 @@ object StreamingSync {
 
     // upgrade guard BEFORE pinning: a table published by a pre-bucketing
     // writer has no bucket= partition layout, and pinning bucket_count on
-    // it would turn the bucket read below into an opaque unresolved-column
-    // AnalysisException — fail with an explicit migration message instead
+    // it would make the bucket read below silently see no rows — fail
+    // with an explicit migration message instead
     if (table.currentIsBucketed().contains(false))
       throw new IllegalStateException(
         "this table was published without the bucketed layout (no 'bucket' " +

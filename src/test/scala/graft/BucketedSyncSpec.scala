@@ -572,13 +572,13 @@ class BucketedSyncSpec extends AnyFunSuite {
 
     val p = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8,
       syncOldData = true, publishDocs = true))
-    // each run's triple count comes from the count sidecar its edge write
-    // derived (full: observed; sync: parent - replaced + written), never
-    // from a footer walk: it must equal the published rows
+    // each run's triple count is its edge generation's manifest row sum
+    // (staged files from their footers, carried files' entries copied): it
+    // must equal the published rows
     Seq(p.runFull(spark, turnsDs(e0), fx.catalog, fx.markers, "e0"),
       p.runSync(spark, turnsDs(e1), fx.catalog, fx.markers, "e1"),
       p.runSync(spark, turnsDs(e2), fx.catalog, fx.markers, "e2")).foreach { r =>
-      assert(p.edgeTable.recordCount(r.edgesGen).contains(r.triples))
+      assert(p.edgeTable.manifest(r.edgesGen).map(_.rows).contains(r.triples))
       assert(r.triples == p.edgeTable.readGeneration(spark, r.edgesGen).get.count())
     }
 
@@ -765,35 +765,60 @@ class BucketedSyncSpec extends AnyFunSuite {
        "one-conversation sync run no bookkeeping job, the sync no listing job") {
     val spark = SparkTestSession.get
     // 64 bucket dirs exceed Spark's 32-path parallel-discovery threshold:
-    // a read of a whole generation is one "Listing leaf files" job. 120
+    // a listed read of a whole generation would be one "Listing leaf files"
+    // job; a manifest read lists nothing. 120
     // conversations fill more than 32 support buckets
-    val big = TranscriptGen.generate(nConv = 120, nEnt = 30, hotFactor = 5)
+    val big = TranscriptGen.generate(nConv = 120, nEnt = 100, hotFactor = 5)
+    // ten conversations hold their later turns back for the wide sync below
+    val wide = (20 until 30).map(i => f"conv-$i%06d").toSet
+    val (heldBack, base) = big.turns.partition(t => wide(t.conv_id) && t.turn_idx > 3)
     def cfg() = PipelineConfig(workDir = TempDirs("graft-bucket-"),
       syncBuckets = 64, publishDocs = true)
     def bookkeeping(jobs: Seq[String]) = jobs.filter(_.startsWith("graft:ckpt:"))
-    val p = new KgPipeline(cfg())
+    val pCfg = cfg()
+    val p = new KgPipeline(pCfg)
     val (_, full) = SparkJobs.during(spark)(
-      p.runFull(spark, turnsDs(big.turns), big.catalog, big.markers, "t0"))
+      p.runFull(spark, turnsDs(base), big.catalog, big.markers, "t0"))
     assert(bookkeeping(full).isEmpty, full.mkString(" | "))
+    // the node and doc rebuild reads the whole edge generation
+    assert(full.count(SparkJobs.isListing) == 0, full.mkString(" | "))
     assert(Files.list(Paths.get(p.supportTable.currentPath().get)).iterator()
       .asScala.count(_.getFileName.toString.startsWith("bucket=")) > 32)
     // the first no-op after a full run and a later one cost the same
     for (runId <- Seq("t1", "t1b")) {
       val (_, noop) = SparkJobs.during(spark)(
-        p.runSync(spark, turnsDs(big.turns), big.catalog, big.markers, runId))
+        p.runSync(spark, turnsDs(base), big.catalog, big.markers, runId))
       assert(noop == Seq("graft:stage:changed_convs"), noop.mkString(" | "))
     }
 
     val maxTs = big.turns.map(_.ts.getTime).max
     val tpl = big.turns.filter(_.conv_id == "conv-000011").maxBy(_.turn_idx)
-    val t2 = big.turns :+ tpl.copy(turn_idx = tpl.turn_idx + 1,
+    val t2 = base :+ tpl.copy(turn_idx = tpl.turn_idx + 1,
       ts = new Timestamp(maxTs + 3600 * 1000L))
     val (_, sync) = SparkJobs.during(spark)(
       p.runSync(spark, turnsDs(t2), big.catalog, big.markers, "t2"))
     assert(sync.count(SparkJobs.isListing) == 0, sync.mkString(" | "))
     assert(bookkeeping(sync).isEmpty, sync.mkString(" | "))
+
+    // a wider sync that creates edge keys: the doc rebuild's label slice
+    // reads more than 32 edge buckets, the buckets of the objects of the
+    // changed subjects' edges
+    val t3 = t2 ++ heldBack.map(t =>
+      t.copy(ts = new Timestamp(maxTs + 7200 * 1000L + t.turn_idx)))
+    val (_, wideSync) = SparkJobs.during(spark)(
+      p.runSync(spark, turnsDs(t3), big.catalog, big.markers, "t3"))
+    assert(wideSync.count(SparkJobs.isListing) == 0, wideSync.mkString(" | "))
+    val changedSubjects = spark.read
+      .parquet(s"${pCfg.workDir}/stages/t3/edge_delta")
+      .select("subj").distinct()
+    val labelBuckets = p.edgeTable.read(spark).get
+      .join(changedSubjects, Seq("subj"), "left_semi")
+      .select(PipelineConfig.bucketCol(PipelineConfig.DefaultBucketKeyExpr, "obj", 64))
+      .distinct().count()
+    assert(labelBuckets > 32, labelBuckets)
+
     val scratch = new KgPipeline(cfg())
-    scratch.runFull(spark, turnsDs(t2), big.catalog, big.markers, "s")
+    scratch.runFull(spark, turnsDs(t3), big.catalog, big.markers, "s")
     assert(supportSet(p) == supportSet(scratch))
     assert(edgeSet(p) == edgeSet(scratch))
   }

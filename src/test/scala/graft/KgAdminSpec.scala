@@ -41,6 +41,11 @@ class KgAdminSpec extends AnyFunSuite {
     assert(gens.head.contains(""""gen":"gen-0""""))
     assert(gens.head.contains(""""aliases":[]"""))
     assert(gens(1).contains(""""aliases":["current"]"""))
+    // rows and bytes come from each generation's manifest
+    Seq("gen-0", "gen-1").zip(gens).foreach { case (g, line) =>
+      assert(line.contains(s""""rows":${c.readGeneration(spark, g).get.count()},"""), line)
+      assert(line.contains(s""""bytes":${c.manifest(g).get.bytes},"""), line)
+    }
 
     // blue/green flip back to gen-0; reads follow the pointer
     run("set-pointer", workDir, "edges", "gen-0")

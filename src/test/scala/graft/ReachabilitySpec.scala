@@ -208,6 +208,33 @@ class ReachabilitySpec extends AnyFunSuite {
       s"SparkIo.list / files / deleteRecursively in: ${offenders.mkString(", ")}")
   }
 
+  /** The count sidecar generations kept before manifests. */
+  private val CountSidecar = "_graft_count".r
+
+  /** A DataFrameReader: a read of a path, where the committer must read
+    * through its manifest relation. */
+  private val PathRead = """\bspark\s*\.\s*read\b""".r
+
+  test("every generation read goes through the manifest: no _graft_count in " +
+       "main code, no DataFrameReader in TableCommitter") {
+    assert(CountSidecar.findFirstIn("""val CountSidecar = "_graft_count"""").isDefined)
+    assert(CountSidecar.findFirstIn(stripComments("x // _graft_count")).isEmpty)
+    assert(PathRead.findFirstIn("spark.read.parquet(dir.toString)").isDefined)
+    assert(PathRead.findFirstIn("spark\n  .read.schema(s).parquet(p)").isDefined)
+    assert(PathRead.findFirstIn(
+      "def read(spark: SparkSession) = t.read(spark); spark.readStream").isEmpty)
+    val counts = mainSources()
+      .filter { case (_, src) => CountSidecar.findFirstIn(stripComments(src)).isDefined }
+      .map(_._1)
+    assert(counts.isEmpty, s"_graft_count is gone: ${counts.mkString(", ")}")
+    val committer = mainSources()
+      .filter(_._1.getFileName.toString == "TableCommitter.scala")
+    assert(committer.size == 1)
+    assert(committer.forall { case (_, src) =>
+      PathRead.findFirstIn(stripComments(src)).isEmpty },
+      "TableCommitter reads generations through the manifest relation")
+  }
+
   /** Instantiating the extraction scan loop: one per kernel. */
   private val ScanLoop = """\bnew\s+ScanState\s*\(""".r
 

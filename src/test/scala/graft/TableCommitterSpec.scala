@@ -160,17 +160,71 @@ class TableCommitterSpec extends AnyFunSuite {
     }
   }
 
-  test("readBuckets on a generation without a schema sidecar falls back to " +
-       "the filtered read and gives the same rows") {
+  test("a generation in the older layout is adopted into a manifest once") {
     val spark = SparkTestSession.get
+    import spark.implicits._
+    val rows = Seq((1, "a", 0), (2, "b", 1), (3, "c", 1), (4, "d", 2))
+      .toDF("k", "v", "bucket")
+    // the layout before manifests: a partitionBy("bucket") dir and a
+    // pointer, with and without the schema sidecar
+    Seq(true, false).foreach { withSchema =>
+      val root = TempDirs.path("committer-")
+      val t = new TableCommitter(root.toString)
+      val gen0 = root.resolve("gen-0")
+      rows.write.partitionBy("bucket").parquet(gen0.toString)
+      if (withSchema)
+        Files.writeString(gen0.resolve(TableCommitter.SchemaSidecar), rows.schema.json)
+      t.setPointer("current", "gen-0")
+      assert(!Files.exists(gen0.resolve(TableCommitter.ManifestFile)))
+      assert(t.currentIsBucketed().contains(true))
+      val all = t.read(spark).get
+      assert(all.columns.toSeq == Seq("k", "v", "bucket"), withSchema)
+      assert(kv(all) == Set((1, "a"), (2, "b"), (3, "c"), (4, "d")), withSchema)
+      assert(t.currentRecordCount().contains(all.count()), withSchema)
+      assert(kv(t.readBuckets(spark, Set(0, 2, 9)).get) == Set((1, "a"), (4, "d")))
+      assert(t.readBuckets(spark, Set.empty).get.count() == 0)
+      // adopted once: the manifest now stands in the generation
+      assert(t.manifest("gen-0").get.files.map(_.bucket).toSet ==
+        Set(Some(0), Some(1), Some(2)), withSchema)
+      assert(Files.exists(gen0.resolve(TableCommitter.ManifestFile)))
+      // a publish on top carries the untouched files as the same inodes
+      put(t, Seq((2, "B", 1)).toDF("k", "v", "bucket"), "r1", Set(1))
+      val gen1 = java.nio.file.Paths.get(t.currentPath().get)
+      t.manifest("gen-0").get.files.filterNot(_.bucket.contains(1)).foreach { f =>
+        assert(Files.getAttribute(gen0.resolve(f.path), "unix:ino") ==
+          Files.getAttribute(gen1.resolve(f.path), "unix:ino"), f.path)
+      }
+      assert(kv(t.read(spark).get) == Set((1, "a"), (2, "B"), (4, "d")), withSchema)
+      assert(t.currentRecordCount().contains(3L))
+    }
+    // an unpartitioned generation of the older layout is no bucketed table
+    val root = TempDirs.path("committer-")
+    val flat = new TableCommitter(root.toString)
+    rows.drop("bucket").write.parquet(root.resolve("gen-0").toString)
+    flat.setPointer("current", "gen-0")
+    assert(flat.currentIsBucketed().contains(false))
+    assert(flat.read(spark).get.count() == 4)
+    assert(flat.currentRecordCount().contains(4L))
+  }
+
+  test("a 64-bucket generation reads with no listing job; count() is the " +
+       "manifest's row sum") {
+    val spark = SparkTestSession.get
+    import spark.implicits._
     val t = fresh()
-    threeBuckets(t)
-    val withSidecar = kv(t.readBuckets(spark, Set(0, 2, 9)).get)
-    Files.delete(java.nio.file.Paths.get(t.currentPath().get)
-      .resolve(TableCommitter.SchemaSidecar))
-    assert(kv(t.readBuckets(spark, Set(0, 2, 9)).get) == withSidecar)
-    assert(withSidecar == Set((1, "a"), (4, "d")))
-    assert(t.readBuckets(spark, Set.empty).get.count() == 0)
+    put(t, (0 until 640).map(i => (i, s"v$i", i % 64)).toDF("k", "v", "bucket"),
+      "r0", (0 until 64).toSet)
+    val rows = t.manifest(t.currentGeneration().get).get.rows
+    val (n, jobs) = SparkJobs.during(spark)(t.read(spark).get.count())
+    assert(jobs.count(SparkJobs.isListing) == 0, jobs.mkString(" | "))
+    assert(n == rows && n == 640)
+    // a bucket slice above the 32-path discovery threshold lists nothing either
+    val (slice, sliceJobs) = SparkJobs.during(spark)(
+      t.readBuckets(spark, (0 until 40).toSet).get.count())
+    assert(sliceJobs.count(SparkJobs.isListing) == 0, sliceJobs.mkString(" | "))
+    assert(slice == 400)
+    // a filter on the bucket column prunes whole buckets, as a listed read does
+    assert(t.read(spark).get.filter($"bucket" < 3).count() == 30)
   }
 
   test("readBefore(runId, buckets): the current slice before the run, the " +
@@ -272,28 +326,29 @@ class TableCommitterSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](t.setPointer("pins", "gen-0"))
   }
 
-  test("currentRecordCount caches per immutable generation (one tiny file " +
-       "on the nightly no-op path, never a per-run footer walk)") {
+  test("currentRecordCount is the manifest's row sum; a carried file keeps " +
+       "its entry") {
     val spark = SparkTestSession.get
     import spark.implicits._
     val t = fresh()
+    // buckets 0, 1 and 2 hold 2, 3 and 2 rows
     put(t, (1 to 7).map(i => (i, s"v$i", i % 3)).toDF("k", "v", "bucket"), "r1",
       Set(0, 1, 2))
-    assert(t.currentRecordCount(spark).contains(7L))
-    // the count landed in the generation's sidecar...
-    val sidecar = java.nio.file.Paths.get(t.currentPath().get)
-      .resolve(TableCommitter.CountSidecar)
-    assert(Files.readString(sidecar).trim == "7")
-    // ...and later calls SERVE it (generations are immutable, so this can
-    // never go stale; proven here by planting a marker value)
-    Files.writeString(sidecar, "99")
-    assert(t.currentRecordCount(spark).contains(99L))
-    // a new generation has no sidecar: recompute from footers, re-cache
-    put(t, (1 to 4).map(i => (i, s"v$i", i % 3)).toDF("k", "v", "bucket"), "r2",
-      Set(0, 1, 2))
-    assert(t.currentRecordCount(spark).contains(4L))
-    assert(Files.readString(java.nio.file.Paths.get(t.currentPath().get)
-      .resolve(TableCommitter.CountSidecar)).trim == "4")
+    assert(t.currentRecordCount().contains(7L))
+    // the count SERVES the manifest, never the footers: plant a marker
+    // value in bucket 2's entry
+    val gen0 = java.nio.file.Paths.get(t.currentPath().get)
+    val m = t.manifest("gen-0").get
+    assert(m.files.map(_.rows).sum == 7 && m.bytes > 0)
+    Files.writeString(gen0.resolve(TableCommitter.ManifestFile), m.copy(files =
+      m.files.map(f => if (f.bucket.contains(2)) f.copy(rows = 20) else f)).json)
+    assert(t.currentRecordCount().contains(25L))
+    // the next generation copies the carried entries (the planted one too)
+    // and counts only its staged file from a footer
+    put(t, Seq((3, "w", 0)).toDF("k", "v", "bucket"), "r2", Set(0))
+    assert(t.currentRecordCount().contains(1L + 3 + 20))
+    assert(!Files.exists(java.nio.file.Paths.get(t.currentPath().get)
+      .resolve(TableCommitter.SchemaSidecar)))
   }
 
   test("pinBucketMapping: non-default key expr refused on a pre-pin table") {
