@@ -326,8 +326,7 @@ class TableCommitterSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](t.setPointer("pins", "gen-0"))
   }
 
-  test("currentRecordCount is the manifest's row sum; a carried file keeps " +
-       "its entry") {
+  test("currentRecordCount is the manifest's row sum; carried files keep entries") {
     val spark = SparkTestSession.get
     import spark.implicits._
     val t = fresh()
