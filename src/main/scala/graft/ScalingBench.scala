@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.config.PipelineConfig
 import graft.pipeline.KgPipeline
 import graft.schema.Turn
@@ -16,41 +14,12 @@ import graft.sources.TranscriptGen
   */
 object ScalingBench {
 
-  /** The frozen Bench's session shape at `local[cores]` — BenchExtra's
-    * isolation numbers use it too, so both stay comparable with Bench. */
-  def session(cores: Int, appName: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // the bench corpus is many small parquet files: with the default 128MB
-      // maxPartitionBytes the scan collapses to ~6 input partitions and no
-      // core count beyond ~6 helps; size splits so the map stage can fan out
-      // (on a real cluster with 128MB+ row groups the default is right)
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      // shuffle spill on tmpfs: /tmp is disk-backed here and random flush
-      // stalls add 3-5x noise to per-pass timings
-      .config("spark.local.dir", {
-        val d = java.nio.file.Paths.get("/dev/shm/spark-local")
-        java.nio.file.Files.createDirectories(d)
-        d.toString
-      })
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     val cores = args(0).toInt
     val turnsDir = args(1)
     val passes = if (args.length > 2) args(2).toInt else 2
 
-    val spark = session(cores, s"graft-scaling-$cores")
+    val spark = Sessions.create(s"graft-scaling-$cores", cores)
     import spark.implicits._
 
     val p = new KgPipeline(PipelineConfig())

@@ -1,7 +1,5 @@
 package graft.app
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.TranscriptGen
 
 /** Writes the deterministic synthetic transcript fixture (FIXTURES.md §2) to
@@ -17,13 +15,8 @@ object FixtureGen {
     val nEnt = if (args.length > 2) args(2).toInt else 50
     val hot = if (args.length > 3) args(3).toInt else 50
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-fixture")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.create("graft-fixture",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     import spark.implicits._
 
     val fx = TranscriptGen.generate(nConv = nConv, nEnt = nEnt, hotFactor = hot)

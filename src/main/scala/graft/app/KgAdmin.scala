@@ -2,6 +2,7 @@ package graft.app
 
 import java.nio.file.{Files, Path, Paths}
 
+import graft.app.KgMain.jsonStr
 import graft.io.{CheckpointStore, SparkIo, TableCommitter}
 
 /** Operations CLI over a pipeline workDir — the Spark-engine equivalent of
@@ -32,12 +33,12 @@ object KgAdmin {
         val c = committer(workDir, t)
         val gens = c.generations()
         val cur = c.currentGeneration().getOrElse("-")
-        println(s"""{"table":"$t","current":"$cur","generations":${gens.size},""" +
-          s""""latest":"${gens.lastOption.getOrElse("-")}","bytes":${tableBytes(workDir, t)}}""")
+        println(s"""{"table":${jsonStr(t)},"current":${jsonStr(cur)},"generations":${gens.size},""" +
+          s""""latest":${jsonStr(gens.lastOption.getOrElse("-"))},"bytes":${tableBytes(workDir, t)}}""")
       }
       new CheckpointStore(s"$workDir/checkpoints").statuses().foreach { case (id, s) =>
-        println(s"""{"pipeline":"$id","epoch":${s.runs},""" +
-          s""""watermark":"${s.watermark.toInstant}","run_id":"${s.runId}"}""")
+        println(s"""{"pipeline":${jsonStr(id)},"epoch":${s.runs},""" +
+          s""""watermark":"${s.watermark.toInstant}","run_id":${jsonStr(s.runId)}}""")
       }
     case "generations" :: workDir :: table :: Nil =>
       val c = committer(workDir, table)
@@ -45,8 +46,8 @@ object KgAdmin {
       c.generations().foreach { g =>
         val aliases = byAlias.collect { case (a, t) if t == g => a }
         val m = c.manifest(g)
-        println(s"""{"gen":"$g","rows":${m.fold(0L)(_.rows)},"bytes":${m.fold(0L)(_.bytes)},""" +
-          s""""aliases":[${aliases.map("\"" + _ + "\"").mkString(",")}]}""")
+        println(s"""{"gen":${jsonStr(g)},"rows":${m.fold(0L)(_.rows)},"bytes":${m.fold(0L)(_.bytes)},""" +
+          s""""aliases":[${aliases.map(jsonStr).mkString(",")}]}""")
       }
     case "set-pointer" :: workDir :: table :: gen :: rest if rest.size <= 1 =>
       val alias = rest.headOption.getOrElse("current")
@@ -56,21 +57,22 @@ object KgAdmin {
         s"generation $gen does not exist under $table — refusing to point " +
           "an alias at nothing")
       c.setPointer(alias, gen)
-      println(s"""{"table":"$table","alias":"$alias","gen":"$gen"}""")
+      println(s"""{"table":${jsonStr(table)},"alias":${jsonStr(alias)},"gen":${jsonStr(gen)}}""")
     case "expire" :: workDir :: table :: keepLast :: Nil =>
       val deleted = committer(workDir, table).expireGenerations(keepLast.toInt)
-      println(s"""{"table":"$table","expired":[${deleted.map("\"" + _ + "\"").mkString(",")}]}""")
+      println(s"""{"table":${jsonStr(table)},"expired":[${deleted.map(jsonStr).mkString(",")}]}""")
     case "drop-staging" :: workDir :: table :: runId :: Nil =>
       committer(workDir, table).rollback(runId)
-      println(s"""{"table":"$table","dropped_staging":"$runId"}""")
+      println(s"""{"table":${jsonStr(table)},"dropped_staging":${jsonStr(runId)}}""")
     case _ =>
       sys.error("usage: KgAdmin status <workDir> | generations <workDir> <table> | " +
         "set-pointer <workDir> <table> <gen> [alias] | " +
         "expire <workDir> <table> <keepLast> | drop-staging <workDir> <table> <runId>")
   }
 
+  /** `table` is one plain segment: `..` or `a/b` never escapes `tables/`. */
   private def tableDir(workDir: String, table: String): Path =
-    Paths.get(workDir, "tables", table)
+    SparkIo.child(Paths.get(workDir, "tables"), table)
 
   private def committer(workDir: String, table: String): TableCommitter =
     new TableCommitter(tableDir(workDir, table).toString)

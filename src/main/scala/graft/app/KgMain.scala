@@ -1,8 +1,13 @@
 package graft.app
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.storage.StorageLevel
 
 import graft.config.PipelineConfig
+import graft.io.TableCommitter
 import graft.pipeline.KgPipeline
 import graft.schema.{CatalogEntry, Turn}
 import graft.sources.TranscriptGen
@@ -167,296 +172,260 @@ object KgMain {
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3,
-      "usage: KgMain full|sync|ingest-nt|ingest-rdfxml|ingest-stream " +
-        "<inputDir> <workDir> [catalogParquetDir]")
-    val Array(mode, turnsDir, workDir) = args.take(3)
-    require(mode == "full" || mode == "sync" || mode == "ingest-nt" ||
-        mode == "ingest-rdfxml" || mode == "ingest-stream" || mode == "stats" ||
-        mode == "diff" || mode == "query" || mode == "dedup-update" ||
-        mode == "dedup-candidates" || mode == "multi",
-      s"unknown mode: $mode (stats ignores <inputDir>, pass '-'; " +
-        "diff takes <genA,genB> in the <inputDir> position; " +
-        "query takes a .rq file path — or '-' to use GRAFT_SPARQL / the " +
-        "river config's query[] list; dedup-update/dedup-candidates take a " +
-        "delta parquet of (doc_id, text) in the <inputDir> position; " +
-        "multi takes a rivers.json in the <inputDir> position and a BASE " +
-        "workDir — see MultiRiver)")
+    val spark = graft.Sessions.create("graft-kg",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, sys.env.get("SPARK_MASTER"))
+    val code =
+      try {
+        val (lines, exit) = run(spark, args.toSeq)
+        lines.foreach(println)
+        exit
+      } finally spark.stop()
+    // ops contract: a failed multi river fails the invocation AFTER all
+    // rivers ran (the reference logs per-thread and keeps going; a batch job
+    // needs the nonzero exit for its scheduler to alert on)
+    if (code != 0) sys.exit(code)
+  }
 
-    val builder = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions) // SQL access to graft_dot etc.
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"))
-      .appName("graft-kg")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-    // concurrent rivers share executors fairly (per-river scheduler pools,
-    // MultiRiver scaladoc) instead of FIFO-starving each other
-    val spark = (if (mode == "multi") builder.config("spark.scheduler.mode", "FAIR")
-                 else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  private def usage(): Nothing = throw new IllegalArgumentException(
+    "usage: KgMain <mode> <inputDir> <workDir> [catalogParquetDir]; modes: " +
+      "full|sync|ingest-stream take a turns parquet dir; " +
+      "ingest-nt|ingest-rdfxml a dump dir; stats ignores <inputDir>, pass '-'; " +
+      "diff takes <gen-N,gen-M>; query a .rq file path, or '-' to use " +
+      "GRAFT_SPARQL / the river config's query[] list; " +
+      "dedup-update|dedup-candidates a delta parquet of (doc_id, text); " +
+      "multi a rivers.json and a BASE workDir (see MultiRiver)")
+
+  /** One invocation's mode on `spark` (the process's session, or a spec's
+    * shared one): its JSON report lines and its exit code, 1 when a `multi`
+    * river failed. */
+  private[app] def run(spark: SparkSession,
+      args: Seq[String]): (Seq[String], Int) = {
     import spark.implicits._
-
+    val (mode, input, workDir) = args match {
+      case Seq(m, i, w, _*) => (m, i, w)
+      case _ => usage()
+    }
     // data-shaping keys come from the river-config JSON when given (the
     // reference's settings blob, S7); env flags and the bucket count layer on top
     val baseCfg = sys.env.get("GRAFT_CONFIG_JSON")
-      .map(p => graft.config.ConfigParsing.fromJson(
-        java.nio.file.Files.readString(java.nio.file.Paths.get(p))))
+      .map(p => graft.config.ConfigParsing.fromJson(Files.readString(Paths.get(p))))
       .getOrElse(PipelineConfig())
     val cfg = envOverlay(baseCfg, workDir)
     val pipeline = new KgPipeline(cfg)
     // ingest/dedup runs are self-contained and take a fresh id (full/sync
     // mint theirs in harvest)
     val runId = s"$mode-${System.currentTimeMillis()}"
+    def publishedEdges = pipeline.edgeTable.read(spark).getOrElse(
+      sys.error(s"no published edges table under $workDir — run full/sync first"))
 
-    if (mode == "ingest-nt" || mode == "ingest-rdfxml") {
-      import org.apache.spark.sql.functions.col
-      // every writer into the workDir's bucketed tables verifies the pin
-      pipeline.pinOrVerifyBucketCount()
-      // NT scans line-parallel; RDF/XML (the reference's own dump format,
-      // Harvester.java:1711) is document-level so it scans file-parallel —
-      // malformed files are skipped whole (the reference's RiotException
-      // behavior) but SURFACED: each rejected file lands in the quarantine
-      // area with its path + reason (the reference logs them,
-      // Harvester.java:1723-1725; silent drops hide real data loss)
-      var nRejects = 0L
-      val triples =
-        if (mode == "ingest-rdfxml") {
-          // parsed once (persisted): the reject write and the doc build are
-          // two actions over the same parse
-          val parsed = graft.sources.RdfXmlSource.readParsed(spark, turnsDir)
-            .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-          val rejects = parsed.filter(_.reason.isDefined)
-            .map(p => (p.path, p.reason.get)).toDF("path", "reason")
-          val obs = new org.apache.spark.sql.Observation()
-          // runId-scoped overwrite, like the pipeline's row quarantine: a
-          // crash-and-retry never double-appends; file-grain rejects get
-          // their own dir (different schema than the turn quarantine)
-          rejects.observe(obs, org.apache.spark.sql.functions.count(
-              org.apache.spark.sql.functions.lit(1)).as("n"))
-            .write.mode("overwrite")
-            .parquet(s"$workDir/quarantine_files/run_id=$runId")
-          nRejects = obs.get("n").asInstanceOf[Long]
-          parsed.flatMap(_.triples)
-        }
-        else graft.sources.NTriplesSource.read(spark, turnsDir)
-      val docs = graft.materialize.DocAssembler.assemble(
-        triples.toDF().select(col("subj"), col("pred"), col("obj"),
-          col("objLang").as("lang")), cfg)
-        .persist()
-      // an all-malformed (or empty) dump yields zero docs: refuse to
-      // publish nothing over a good table (a zero-row generation would stay
-      // readable through its manifest, but it would replace every
-      // doc) — fail before the pointer moves
-      val n = docs.count()
-      require(n > 0,
-        s"no valid triples parsed from $turnsDir — nothing published")
-      // the pipeline's own bucket expression (never a re-derived copy):
-      // a later full+sync over this workDir updates the table incrementally
-      // only if every writer agrees bit-for-bit on key-to-bucket mapping
-      pipeline.docTable.stagePartitioned(
-        docs.withColumn("bucket", pipeline.subjectBucket(col("subj"))), runId)
-      val gen = pipeline.docTable.publishBuckets(runId, pipeline.allBucketIds)
-      docs.unpersist()
-      println(s"""{"run_id":"$runId","mode":"$mode","docs_gen":"$gen","published_docs":$n,"rejected_files":$nRejects}""")
-      spark.stop()
-      return
+    mode match {
+      case "full" | "sync" =>
+        val result = harvest(spark, pipeline, mode, input, args.lift(3))
+        (Seq(s"""{"run_id":"${result.runId}","mode":"$mode","edges_gen":"${result.edgesGen}","nodes_gen":"${result.nodesGen}","published_triples":${result.triples}}"""), 0)
+
+      case "ingest-nt" | "ingest-rdfxml" =>
+        // every writer into the workDir's bucketed tables verifies the pin
+        pipeline.pinOrVerifyBucketCount()
+        // NT scans line-parallel; RDF/XML (the reference's own dump format,
+        // Harvester.java:1711) is document-level so it scans file-parallel —
+        // malformed files are skipped whole (the reference's RiotException
+        // behavior) but SURFACED: each rejected file lands in the quarantine
+        // area with its path + reason (the reference logs them,
+        // Harvester.java:1723-1725; silent drops hide real data loss).
+        // The RDF/XML parse is persisted: the reject write and the doc build
+        // are two actions over it
+        val parsed =
+          if (mode == "ingest-rdfxml")
+            Some(graft.sources.RdfXmlSource.readParsed(spark, input)
+              .persist(StorageLevel.DISK_ONLY))
+          else None
+        // the session may outlive this run (a spec's shared one), so both
+        // caches are released on every exit, a refused publish included
+        try {
+          val nRejects = parsed.fold(0L) { p =>
+            val rejects = p.filter(_.reason.isDefined)
+              .map(r => (r.path, r.reason.get)).toDF("path", "reason")
+            val obs = new Observation()
+            // runId-scoped overwrite, like the pipeline's row quarantine: a
+            // crash-and-retry never double-appends; file-grain rejects get
+            // their own dir (different schema than the turn quarantine)
+            rejects.observe(obs, count(lit(1)).as("n"))
+              .write.mode("overwrite")
+              .parquet(s"$workDir/quarantine_files/run_id=$runId")
+            obs.get("n").asInstanceOf[Long]
+          }
+          val triples = parsed.fold(graft.sources.NTriplesSource.read(spark, input))(
+            _.flatMap(_.triples))
+          val docs = graft.materialize.DocAssembler.assemble(
+            triples.toDF().select(col("subj"), col("pred"), col("obj"),
+              col("objLang").as("lang")), cfg)
+            .persist()
+          try {
+            // an all-malformed (or empty) dump yields zero docs: refuse to
+            // publish nothing over a good table (a zero-row generation would
+            // stay readable through its manifest, but it would replace every
+            // doc) — fail before the pointer moves
+            val n = docs.count()
+            require(n > 0, s"no valid triples parsed from $input — nothing published")
+            // the pipeline's own bucket expression (never a re-derived copy):
+            // a later full+sync over this workDir updates the table
+            // incrementally only if every writer agrees bit-for-bit on
+            // key-to-bucket mapping
+            pipeline.docTable.stagePartitioned(
+              docs.withColumn("bucket", pipeline.subjectBucket(col("subj"))), runId)
+            val gen = pipeline.docTable.publishBuckets(runId, pipeline.allBucketIds)
+            (Seq(s"""{"run_id":"$runId","mode":"$mode","docs_gen":"$gen","published_docs":$n,"rejected_files":$nRejects}"""), 0)
+          } finally docs.unpersist()
+        } finally parsed.foreach(_.unpersist())
+
+      case "diff" =>
+        // edge delta between two published generations — the ops answer to
+        // "what did this sync actually change" (<inputDir> carries
+        // "genA,genB"). Scale shape: ONE full-outer hash join on the edge key
+        // feeding one aggregate — a single pass over each generation
+        // computes all three counts; no row data ever reaches the driver.
+        val gens = input.split(",").map(_.trim)
+        require(gens.length == 2 && gens.forall(_.matches("gen-\\d+")),
+          s"usage: KgMain diff <gen-N,gen-M> <workDir> — got '$input'")
+        val Array(genA, genB) = gens
+        def gen(g: String) = pipeline.edgeTable.readGeneration(spark, g).getOrElse(
+          sys.error(s"generation $g does not exist under the edges table"))
+        val (added, removed, reweighted) =
+          graft.materialize.GraphStats.generationDelta(gen(genA), gen(genB))
+        (Seq(s"""{"table":"edges","from":"$genA","to":"$genB",""" +
+          s""""added":$added,"removed":$removed,"reweighted":$reweighted}"""), 0)
+
+      case "query" =>
+        // the reference's ACTUAL query surface: river configs carry SPARQL
+        // (query[] + queryType, Indexer.java:350-463) that Harvester ships to
+        // a remote triplestore (Harvester.java:1516-1659). Here the same text
+        // compiles to a Catalyst plan over the PUBLISHED graph — the edge
+        // table viewed as (s, p, o) — so a reference user's saved queries run
+        // against the KG this engine just built, no triplestore in the loop.
+        val queryTexts: Seq[String] =
+          if (input != "-") Seq(Files.readString(Paths.get(input)))
+          else sys.env.get("GRAFT_SPARQL").map(Seq(_)).getOrElse(cfg.queries)
+        require(queryTexts.nonEmpty,
+          "query mode needs a .rq file, GRAFT_SPARQL, or query[] in GRAFT_CONFIG_JSON")
+        // `ol` exposes the edge's language stamp so lang()/langMatches()
+        // filters work over the published graph. The stamp is the source
+        // turn's language (config `language`, or detected under
+        // detectLanguage) on EVERY edge — the reference's addLanguage
+        // semantics exactly (ESNormalizer attaches `language` to the whole
+        // document, not per-literal), so lang(?o) over a resource object
+        // answers the turn's language, not RDF's no-tag-on-IRIs rule.
+        val tr = publishedEdges.select(col("subj").as("s"), col("pred").as("p"),
+          col("obj").as("o"), col("lang").as("ol"))
+        // SERVICE federation against pre-materialized local graphs: each
+        // configured IRI loads its dump once (an .nt file through the
+        // line-parallel parser, else a parquet dir) and the compiler joins
+        // SERVICE blocks against it instead of refusing
+        val services: Map[String, DataFrame] =
+          cfg.serviceGraphs.map { case (iri, path) =>
+            val df =
+              if (path.endsWith(".nt"))
+                // kind-preserving read: SERVICE frames carry the full
+                // optional-column contract (ol + dt + tk), so lang()/
+                // datatype()/isIRI-family filters inside SERVICE bodies
+                // compile with exact spec semantics
+                graft.sources.NTriplesSource.readWithKind(spark, path)
+              else if (path.endsWith(".rdf") || path.endsWith(".xml"))
+                graft.sources.RdfXmlSource.readWithKind(spark, path)
+              else {
+                val raw = spark.read.parquet(path)
+                if (raw.columns.contains("subj"))
+                  raw.select(col("subj").as("s"), col("pred").as("p"),
+                    col("obj").as("o"))
+                else raw
+              }
+            iri -> df
+          }
+        (queryTexts.zipWithIndex.map { case (q, i) =>
+          val out = graft.sparql.SparqlCompiler.compile(q, tr, services)
+          val outDir = s"$workDir/query_out/q$i"
+          out.write.mode("overwrite").parquet(outDir)
+          val n = spark.read.parquet(outDir).count()
+          s"""{"mode":"query","query_idx":$i,"rows":$n,""" +
+            s""""columns":${out.columns.map(jsonStr).mkString("[", ",", "]")},""" +
+            s""""out":${jsonStr(outDir)}}"""
+        }, 0)
+
+      case "multi" =>
+        // concurrent multi-river harvests (the reference's pool-of-6 across
+        // rivers, Indexer.java:78) — <inputDir> is the rivers.json spec,
+        // <workDir> the BASE dir (each river publishes under <base>/<name>)
+        val rivers = MultiRiver.parseSpec(Files.readString(Paths.get(input)), workDir)
+        val maxConc = sys.env.get("GRAFT_MAX_CONCURRENT").map(_.toInt).getOrElse(6)
+        val reports = MultiRiver.run(spark, rivers, maxConc, envOverlay)
+        val failed = reports.count(!_.ok)
+        (reports.map { r =>
+          if (r.ok) r.detail
+          else s"""{"river":${jsonStr(r.name)},"mode":"${r.mode}",""" +
+            s""""ok":false,"error":${jsonStr(r.detail)}}"""
+        } :+ s"""{"mode":"multi","rivers":${reports.size},"failed":$failed,""" +
+          s""""max_concurrent":$maxConc}""", if (failed > 0) 1 else 0)
+
+      case "dedup-update" | "dedup-candidates" =>
+        (Seq(runDedup(spark, mode, input, workDir,
+          removed = sys.env.get("GRAFT_DEDUP_REMOVED").toSeq
+            .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).map(_.toLong),
+          // honor an explicit runId so a crashed update RETRIED FROM A NEW
+          // PROCESS heals idempotently (same contract as sync)
+          runId = sys.env.getOrElse("GRAFT_RUN_ID", runId),
+          buckets = sys.env.get("GRAFT_DEDUP_BUCKETS").map(_.toInt).getOrElse(64))), 0)
+
+      case "stats" =>
+        // per-predicate schema profile of the PUBLISHED edge table (the
+        // control-plane view that catches extraction drift between runs —
+        // GraphStats scaladoc). Unlike KgAdmin this reads data, so it lives
+        // in the Spark app, not the metadata-only CLI.
+        // pred is DATA (it can arrive from a user-supplied catalog), so it is
+        // JSON-escaped; every other field is an engine-generated number
+        (graft.materialize.GraphStats.profile(publishedEdges).collect().toSeq.map { r =>
+          s"""{"pred":${jsonStr(r.getString(0))},"n_edges":${r.getLong(1)},""" +
+            s""""n_subj":${r.getLong(2)},"n_obj":${r.getLong(3)},""" +
+            s""""max_out":${r.getLong(4)},"functional":${r.getInt(5)},""" +
+            s""""total_weight":${r.getLong(6)}}"""
+        }, 0)
+
+      case "ingest-stream" =>
+        // Structured-Streaming front-end over the same transcript shape:
+        // checkpointed source offsets replace the batch sync's watermark, each
+        // micro-batch additively merges extracted supports into a bucketed
+        // table, rewriting only the touched buckets (StreamingSync scaladoc).
+        // The stream table gets its OWN committer (additive-merge lifecycle,
+        // offset-driven) — never the batch pipeline's support table, whose
+        // rows are replaced per-conversation under a watermark lifecycle;
+        // mixing the two would double-count on the first overlapping run.
+        // corefResolution wires the per-conversation antecedent state table
+        // automatically; scoredLinking needs nothing extra; detectLanguage
+        // wires the cumulative language-counter state table.
+        def table(name: String) = new TableCommitter(s"$workDir/tables/$name")
+        val tbl = table("stream_supports")
+        // the app publishes the full product surface like batch full does:
+        // edges + nodes (+ docs) propagate per micro-batch
+        // (StreamingSync.propagate; a language flip retracts and re-emits)
+        val eTbl = table("stream_edges")
+        val merged = graft.streaming.StreamingSync.ingestAvailableNow(
+          spark, input, s"$workDir/stream_checkpoint",
+          loadCatalog(spark, args.lift(3)), TranscriptGen.markerPreds, cfg, tbl,
+          maxFilesPerBatch = sys.env.get("GRAFT_STREAM_MAX_FILES").map(_.toInt),
+          corefStateTable =
+            if (cfg.corefResolution) Some(table("stream_coref_state")) else None,
+          langStateTable =
+            if (cfg.detectLanguage) Some(table("stream_lang_state")) else None,
+          edgeTable = Some(eTbl),
+          docTable = if (cfg.publishDocs) Some(table("stream_docs")) else None,
+          nodeTable = Some(table("stream_nodes")))
+        val gen = tbl.currentGeneration().getOrElse("<none>")
+        // streaming publishes are keyed stream-<ckptId>-<batchId>, not by this
+        // app invocation — report the LINEAGE id (what _meta/runs records
+        // actually carry), not a minted run_id nothing on disk matches
+        val lineage = tbl.currentGeneration("lastBatchCkpt").getOrElse("<none>")
+        val edgesGen = eTbl.currentGeneration().getOrElse("<none>")
+        (Seq(s"""{"lineage":"$lineage","mode":"$mode","supports_gen":"$gen","edges_gen":"$edgesGen","merged_rows":$merged,"last_batch":${tbl.currentGeneration("lastBatch").getOrElse("-1")}}"""), 0)
+
+      case _ => usage()
     }
-
-    if (mode == "diff") {
-      // edge delta between two published generations — the ops answer to
-      // "what did this sync actually change". Usage:
-      //   KgMain diff <genA,genB> <workDir>
-      // (inputDir position carries "genA,genB"). Scale shape: ONE full-outer
-      // hash join on the edge key feeding one aggregate — a single pass over
-      // each generation computes all three counts (vs. three separate
-      // actions re-scanning both sides); no row data ever reaches the
-      // driver.
-      val gens = turnsDir.split(",").map(_.trim)
-      require(gens.length == 2 && gens.forall(_.matches("gen-\\d+")),
-        s"usage: KgMain diff <gen-N,gen-M> <workDir> — got '$turnsDir'")
-      val Array(genA, genB) = gens
-      def gen(g: String) = pipeline.edgeTable.readGeneration(spark, g).getOrElse(
-        sys.error(s"generation $g does not exist under the edges table"))
-      val (added, removed, reweighted) =
-        graft.materialize.GraphStats.generationDelta(gen(genA), gen(genB))
-      println(s"""{"table":"edges","from":"$genA","to":"$genB",""" +
-        s""""added":$added,"removed":$removed,"reweighted":$reweighted}""")
-      spark.stop()
-      return
-    }
-
-    if (mode == "query") {
-      // the reference's ACTUAL query surface: river configs carry SPARQL
-      // (query[] + queryType, Indexer.java:350-463) that Harvester ships to
-      // a remote triplestore (Harvester.java:1516-1659). Here the same text
-      // compiles to a Catalyst plan over the PUBLISHED graph — the edge
-      // table viewed as (s, p, o) — so a reference user's saved queries run
-      // against the KG this engine just built, no triplestore in the loop.
-      import org.apache.spark.sql.functions.col
-      val queryTexts: Seq[String] =
-        if (turnsDir != "-")
-          Seq(java.nio.file.Files.readString(java.nio.file.Paths.get(turnsDir)))
-        else sys.env.get("GRAFT_SPARQL").map(Seq(_)).getOrElse(cfg.queries)
-      require(queryTexts.nonEmpty,
-        "query mode needs a .rq file, GRAFT_SPARQL, or query[] in GRAFT_CONFIG_JSON")
-      val edges = pipeline.edgeTable.read(spark).getOrElse(
-        sys.error(s"no published edges table under $workDir — run full/sync first"))
-      // `ol` exposes the edge's language stamp so lang()/langMatches()
-      // filters work over the published graph. The stamp is the source
-      // turn's language (config `language`, or detected under
-      // detectLanguage) on EVERY edge — the reference's addLanguage
-      // semantics exactly (ESNormalizer attaches `language` to the whole
-      // document, not per-literal), so lang(?o) over a resource object
-      // answers the turn's language, not RDF's no-tag-on-IRIs rule.
-      val tr = edges.select(col("subj").as("s"), col("pred").as("p"),
-        col("obj").as("o"), col("lang").as("ol"))
-      // SERVICE federation against pre-materialized local graphs: each
-      // configured IRI loads its dump once (an .nt file through the
-      // line-parallel parser, else a parquet dir) and the compiler joins
-      // SERVICE blocks against it instead of refusing
-      val services: Map[String, org.apache.spark.sql.DataFrame] =
-        cfg.serviceGraphs.map { case (iri, path) =>
-          val df =
-            if (path.endsWith(".nt"))
-              // kind-preserving read: SERVICE frames carry the full
-              // optional-column contract (ol + dt + tk), so lang()/
-              // datatype()/isIRI-family filters inside SERVICE bodies
-              // compile with exact spec semantics
-              graft.sources.NTriplesSource.readWithKind(spark, path)
-            else if (path.endsWith(".rdf") || path.endsWith(".xml"))
-              graft.sources.RdfXmlSource.readWithKind(spark, path)
-            else {
-              val raw = spark.read.parquet(path)
-              if (raw.columns.contains("subj"))
-                raw.select(col("subj").as("s"), col("pred").as("p"),
-                  col("obj").as("o"))
-              else raw
-            }
-          iri -> df
-        }
-      queryTexts.zipWithIndex.foreach { case (q, i) =>
-        val out = graft.sparql.SparqlCompiler.compile(q, tr, services)
-        val outDir = s"$workDir/query_out/q$i"
-        out.write.mode("overwrite").parquet(outDir)
-        val n = spark.read.parquet(outDir).count()
-        println(s"""{"mode":"query","query_idx":$i,"rows":$n,""" +
-          s""""columns":${out.columns.map(jsonStr).mkString("[", ",", "]")},""" +
-          s""""out":${jsonStr(outDir)}}""")
-      }
-      spark.stop()
-      return
-    }
-
-    if (mode == "multi") {
-      // concurrent multi-river harvests (the reference's pool-of-6 across
-      // rivers, Indexer.java:78) — <inputDir> is the rivers.json spec,
-      // <workDir> the BASE dir (each river publishes under <base>/<name>)
-      val rivers = MultiRiver.parseSpec(
-        java.nio.file.Files.readString(java.nio.file.Paths.get(turnsDir)),
-        workDir)
-      val maxConc = sys.env.get("GRAFT_MAX_CONCURRENT").map(_.toInt).getOrElse(6)
-      val reports = MultiRiver.run(spark, rivers, maxConc, envOverlay)
-      reports.foreach { r =>
-        if (r.ok) println(r.detail)
-        else println(s"""{"river":${jsonStr(r.name)},"mode":"${r.mode}",""" +
-          s""""ok":false,"error":${jsonStr(r.detail)}}""")
-      }
-      val failed = reports.count(!_.ok)
-      println(s"""{"mode":"multi","rivers":${reports.size},"failed":$failed,""" +
-        s""""max_concurrent":$maxConc}""")
-      spark.stop()
-      // ops contract: any failed river fails the invocation AFTER all
-      // rivers ran (the reference logs per-thread and keeps going; a batch
-      // job needs the nonzero exit for its scheduler to alert on)
-      if (failed > 0) sys.exit(1)
-      return
-    }
-
-    if (mode == "dedup-update" || mode == "dedup-candidates") {
-      println(runDedup(spark, mode, turnsDir, workDir,
-        removed = sys.env.get("GRAFT_DEDUP_REMOVED").toSeq
-          .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).map(_.toLong),
-        // honor an explicit runId so a crashed update RETRIED FROM A NEW
-        // PROCESS heals idempotently (same contract as sync)
-        runId = sys.env.getOrElse("GRAFT_RUN_ID", runId),
-        buckets = sys.env.get("GRAFT_DEDUP_BUCKETS").map(_.toInt).getOrElse(64)))
-      spark.stop()
-      return
-    }
-
-    if (mode == "stats") {
-      // per-predicate schema profile of the PUBLISHED edge table (the
-      // control-plane view that catches extraction drift between runs —
-      // GraphStats scaladoc). Unlike KgAdmin this reads data, so it lives
-      // in the Spark app, not the metadata-only CLI.
-      val edges = pipeline.edgeTable.read(spark).getOrElse(
-        sys.error(s"no published edges table under $workDir — run full/sync first"))
-      // pred is DATA (it can arrive from a user-supplied catalog), so it is
-      // JSON-escaped; every other field is an engine-generated number
-      graft.materialize.GraphStats.profile(edges).collect().foreach { r =>
-        println(s"""{"pred":${jsonStr(r.getString(0))},"n_edges":${r.getLong(1)},""" +
-          s""""n_subj":${r.getLong(2)},"n_obj":${r.getLong(3)},""" +
-          s""""max_out":${r.getLong(4)},"functional":${r.getInt(5)},""" +
-          s""""total_weight":${r.getLong(6)}}""")
-      }
-      spark.stop()
-      return
-    }
-
-    if (mode == "ingest-stream") {
-      // Structured-Streaming front-end over the same transcript shape:
-      // checkpointed source offsets replace the batch sync's watermark, each
-      // micro-batch additively merges extracted supports into a bucketed
-      // table, rewriting only the touched buckets (StreamingSync scaladoc).
-      // The stream table gets its OWN committer (additive-merge lifecycle,
-      // offset-driven) — never the batch pipeline's support table, whose
-      // rows are replaced per-conversation under a watermark lifecycle;
-      // mixing the two would double-count on the first overlapping run.
-      // corefResolution wires the per-conversation antecedent state table
-      // automatically; scoredLinking needs nothing extra; detectLanguage
-      // wires the cumulative language-counter state table.
-      val tbl = new graft.io.TableCommitter(s"$workDir/tables/stream_supports")
-      val state =
-        if (cfg.corefResolution)
-          Some(new graft.io.TableCommitter(
-            s"$workDir/tables/stream_coref_state"))
-        else None
-      val langState =
-        if (cfg.detectLanguage)
-          Some(new graft.io.TableCommitter(
-            s"$workDir/tables/stream_lang_state"))
-        else None
-      // the app publishes the full product surface like batch full does:
-      // edges + nodes (+ docs) propagate per micro-batch
-      // (StreamingSync.propagate; a language flip retracts and re-emits)
-      val eTbl = new graft.io.TableCommitter(s"$workDir/tables/stream_edges")
-      val dTbl =
-        if (cfg.publishDocs)
-          Some(new graft.io.TableCommitter(s"$workDir/tables/stream_docs"))
-        else None
-      val merged = graft.streaming.StreamingSync.ingestAvailableNow(
-        spark, turnsDir, s"$workDir/stream_checkpoint",
-        loadCatalog(spark, args.lift(3)), TranscriptGen.markerPreds, cfg, tbl,
-        maxFilesPerBatch = sys.env.get("GRAFT_STREAM_MAX_FILES").map(_.toInt),
-        corefStateTable = state, langStateTable = langState,
-        edgeTable = Some(eTbl), docTable = dTbl,
-        nodeTable = Some(new graft.io.TableCommitter(s"$workDir/tables/stream_nodes")))
-      val gen = tbl.currentGeneration().getOrElse("<none>")
-      // streaming publishes are keyed stream-<ckptId>-<batchId>, not by this
-      // app invocation — report the LINEAGE id (what _meta/runs records
-      // actually carry), not a minted run_id nothing on disk matches
-      val lineage = tbl.currentGeneration("lastBatchCkpt").getOrElse("<none>")
-      val edgesGen = eTbl.currentGeneration().getOrElse("<none>")
-      println(s"""{"lineage":"$lineage","mode":"$mode","supports_gen":"$gen","edges_gen":"$edgesGen","merged_rows":$merged,"last_batch":${tbl.currentGeneration("lastBatch").getOrElse("-1")}}""")
-      spark.stop()
-      return
-    }
-
-    val result = harvest(spark, pipeline, mode, turnsDir, args.lift(3))
-    println(s"""{"run_id":"${result.runId}","mode":"$mode","edges_gen":"${result.edgesGen}","nodes_gen":"${result.nodesGen}","published_triples":${result.triples}}""")
-    spark.stop()
   }
 }

@@ -93,6 +93,16 @@ object SparkIo {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** `dir`'s child `name`, where `name` must be one plain path segment (no
+    * separator, not `.` or `..`): a name that arrives from argv never
+    * reaches outside `dir`. */
+  def child(dir: Path, name: String): Path = {
+    val p = dir.resolve(name)
+    require(p.getParent == dir && name != "." && name != "..",
+      s"'$name' is not one plain path segment")
+    p
+  }
+
   /** The trimmed content of `f`, or `None` when `f` does not exist. */
   def readString(f: Path): Option[String] =
     try Some(Files.readString(f).trim)

@@ -429,8 +429,10 @@ final class TableCommitter(rootDir: String) {
   }
 
   /** Remove staged (unpublished) data — K5: the pointer never moved, so the
-    * live table is untouched. */
-  def rollback(runId: String): Unit = SparkIo.deleteRecursively(staging.resolve(runId))
+    * live table is untouched. `runId` must be one plain segment, so a
+    * rollback never deletes outside `_staging`. */
+  def rollback(runId: String): Unit =
+    SparkIo.deleteRecursively(SparkIo.child(staging, runId))
 
   /** Snapshot retention (the Iceberg expire_snapshots analogue; reference:
     * stale `@temp-` cleanup, Harvester.deleteTempIndexIfExists,

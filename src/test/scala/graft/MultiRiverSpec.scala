@@ -43,6 +43,13 @@ class MultiRiverSpec extends AnyFunSuite {
       "r-1", "full", "/x", "/base/r-1", None, Some("/c"))))
   }
 
+  test("sessions schedule FAIR across pools and FIFO inside the default pool") {
+    val sc = SparkTestSession.get.sparkContext
+    assert(sc.getConf.get("spark.scheduler.mode") == "FAIR")
+    assert(sc.getPoolForName("default").map(_.schedulingMode.toString)
+      .contains("FIFO"))
+  }
+
   test("two rivers run concurrently == the same rivers run individually; " +
        "workDirs stay isolated") {
     val spark = SparkTestSession.get

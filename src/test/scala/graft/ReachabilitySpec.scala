@@ -93,10 +93,12 @@ class ReachabilitySpec extends AnyFunSuite {
     defs.keySet -- reached
   }
 
-  private def mainSources(): Seq[(Path, String)] = {
-    assert(Files.isDirectory(mainRoot),
-      s"run from the project root: no $mainRoot under ${Paths.get("").toAbsolutePath}")
-    val walk = Files.walk(mainRoot)
+  private def mainSources(): Seq[(Path, String)] = sources(mainRoot)
+
+  private def sources(root: Path): Seq[(Path, String)] = {
+    assert(Files.isDirectory(root),
+      s"run from the project root: no $root under ${Paths.get("").toAbsolutePath}")
+    val walk = Files.walk(root)
     try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       .map(p => p -> Files.readString(p))
     finally walk.close()
@@ -248,6 +250,27 @@ class ReachabilitySpec extends AnyFunSuite {
     }
     assert(sites.size == 1, "extraction runs one scan loop, " +
       s"Extractor.extractEncoded; found ${sites.size} in: ${sites.mkString(", ")}")
+  }
+
+  /** Building a SparkSession by hand instead of through the factory. */
+  private val Builder = """\bSparkSession\s*\.\s*builder\b""".r
+
+  test("one session factory: main code builds sessions only in Sessions and " +
+       "the frozen Bench and Verify, specs never") {
+    assert(Builder.findFirstIn("val s = SparkSession .builder()").isDefined)
+    assert(Builder.findFirstIn("org.apache.spark.sql.SparkSession\n  .builder()").isDefined)
+    assert(Builder.findFirstIn(stripComments("x // SparkSession .builder()")).isEmpty)
+    assert(Builder.findFirstIn("Sessions.create(name, 4)").isEmpty)
+    val frozen = Set("Sessions.scala", "Bench.scala", "Verify.scala")
+    // this spec's own examples above are the one exempt test source
+    val offenders =
+      (mainSources().filterNot(p => frozen(p._1.getFileName.toString)) ++
+        sources(Paths.get("src", "test", "scala"))
+          .filterNot(_._1.getFileName.toString == "ReachabilitySpec.scala"))
+        .filter { case (_, src) => Builder.findFirstIn(stripComments(src)).isDefined }
+        .map(_._1)
+    assert(offenders.isEmpty,
+      s"build sessions with graft.Sessions.create in: ${offenders.mkString(", ")}")
   }
 
   test("the frozen driver entry points exist") {
