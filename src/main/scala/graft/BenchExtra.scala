@@ -44,7 +44,7 @@ object BenchExtra {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val samples = sys.env.getOrElse("SPARK_GRAFT_SAMPLES", "3").toInt
     val mode = args.headOption.getOrElse("time")
-    val spark = Sessions.create(s"graft-benchextra-$cpus", cpus)
+    val spark = Sessions.bench(s"graft-benchextra-$cpus", cpus)
 
     mode match {
       case "plan" =>

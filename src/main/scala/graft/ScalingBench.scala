@@ -19,7 +19,7 @@ object ScalingBench {
     val turnsDir = args(1)
     val passes = if (args.length > 2) args(2).toInt else 2
 
-    val spark = Sessions.create(s"graft-scaling-$cores", cores)
+    val spark = Sessions.bench(s"graft-scaling-$cores", cores)
     import spark.implicits._
 
     val p = new KgPipeline(PipelineConfig())

@@ -17,42 +17,33 @@ import graft.sources.TranscriptGen
   * Harvester.java:571-575), reading the transcript table and the entity
   * catalog from parquet, publishing node/edge tables via the committer.
   *
-  * Usage:
-  *   KgMain full|sync <turnsParquetDir> <workDir> [catalogParquetDir]
-  *   KgMain ingest-nt <ntDumpDir> <workDir>
-  *   KgMain ingest-rdfxml <rdfXmlDumpDir> <workDir>
-  *   KgMain ingest-stream <turnsParquetDir> <workDir> [catalogParquetDir]
+  * Usage (the same modes as the usage error's list):
+  *   KgMain full|sync|ingest-stream <turnsParquetDir> <workDir> [catalogParquetDir]
+  *   KgMain ingest-nt|ingest-rdfxml <dumpDir> <workDir>
   *   KgMain stats - <workDir>              per-predicate edge-table profile
   *   KgMain diff <genA,genB> <workDir>     edge delta between two generations
-  *   KgMain query <file.rq|-> <workDir>    run SPARQL over the published
-  *                                         graph ('-': GRAFT_SPARQL env, or
-  *                                         the river config's query[] list)
-  *   KgMain dedup-update <deltaParquet> <workDir>
+  *   KgMain query <file.rq|-> <workDir>    SPARQL over the published graph
+  *                                         ('-': GRAFT_SPARQL env, or the
+  *                                         river config's query[] list)
+  *   KgMain dedup-update|dedup-candidates <deltaParquet> <workDir>
   *                                         fold a (doc_id, text) delta into
-  *                                         the incremental dedup index
-  *                                         (O(delta) bucket rewrites;
-  *                                         GRAFT_DEDUP_REMOVED=id,id,...
-  *                                         retires deleted docs;
-  *                                         GRAFT_RUN_ID pins idempotent
-  *                                         crash-retry)
-  *   KgMain dedup-candidates <deltaParquet> <workDir>
-  *                                         duplicate candidates for a delta
-  *                                         against the index (bucket-pruned
-  *                                         lookup, never a corpus scan)
+  *                                         the incremental dedup index in
+  *                                         O(delta) bucket rewrites, or list
+  *                                         its duplicate candidates
+  *                                         (GRAFT_DEDUP_REMOVED=id,id,...
+  *                                         retires docs; GRAFT_RUN_ID pins
+  *                                         an idempotent crash-retry)
   *   KgMain multi <rivers.json> <baseWorkDir>
-  *                                         concurrent multi-river harvests
-  *                                         (the reference's pool across
-  *                                         rivers, Indexer.java:78): each
-  *                                         river {name, mode: full|sync,
-  *                                         input, config?, catalog?} runs
-  *                                         under <baseWorkDir>/<name> in its
-  *                                         own FAIR scheduler pool;
-  *                                         GRAFT_MAX_CONCURRENT caps
-  *                                         parallelism (default 6, the
-  *                                         reference's
-  *                                         max_concurrent_harvests); one
-  *                                         failed river never blocks the
-  *                                         others (exit 1 after all ran)
+  *                                         concurrent harvests (the
+  *                                         reference's pool across rivers,
+  *                                         Indexer.java:78): each river
+  *                                         {name, mode: full|sync, input,
+  *                                         config?, catalog?} runs under
+  *                                         <baseWorkDir>/<name> in its own
+  *                                         FAIR pool; GRAFT_MAX_CONCURRENT
+  *                                         caps them (default 6); a failed
+  *                                         river blocks no other (exit 1
+  *                                         after all ran)
   *
   * Pipeline knobs (env, all optional):
   *   GRAFT_CONFIG_JSON=<path>   river-config JSON (the reference's settings
@@ -171,18 +162,27 @@ object KgMain {
       pipeline.runSync(spark, turns, catalog, TranscriptGen.markerPreds, runId)
   }
 
+  /** Writes each query's rows over `tr` to `<workDir>/query_out/q<i>` and
+    * emits its line at once: a failing query keeps the lines before it. */
+  private[app] def runQueries(spark: SparkSession, queryTexts: Seq[String],
+      tr: DataFrame, services: Map[String, DataFrame], workDir: String,
+      emit: String => Unit): Unit =
+    queryTexts.zipWithIndex.foreach { case (q, i) =>
+      val out = graft.sparql.SparqlCompiler.compile(q, tr, services)
+      val outDir = s"$workDir/query_out/q$i"
+      out.write.mode("overwrite").parquet(outDir)
+      val n = spark.read.parquet(outDir).count()
+      emit(s"""{"mode":"query","query_idx":$i,"rows":$n,""" +
+        s""""columns":${out.columns.map(jsonStr).mkString("[", ",", "]")},""" +
+        s""""out":${jsonStr(outDir)}}""")
+    }
+
   def main(args: Array[String]): Unit = {
     val spark = graft.Sessions.create("graft-kg",
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, sys.env.get("SPARK_MASTER"))
-    val code =
-      try {
-        val (lines, exit) = run(spark, args.toSeq)
-        lines.foreach(println)
-        exit
-      } finally spark.stop()
-    // ops contract: a failed multi river fails the invocation AFTER all
-    // rivers ran (the reference logs per-thread and keeps going; a batch job
-    // needs the nonzero exit for its scheduler to alert on)
+    val code = try run(spark, args.toSeq, println) finally spark.stop()
+    // a failed multi river fails the invocation after all rivers ran: a
+    // batch job needs the nonzero exit for its scheduler to alert on
     if (code != 0) sys.exit(code)
   }
 
@@ -196,10 +196,11 @@ object KgMain {
       "multi a rivers.json and a BASE workDir (see MultiRiver)")
 
   /** One invocation's mode on `spark` (the process's session, or a spec's
-    * shared one): its JSON report lines and its exit code, 1 when a `multi`
-    * river failed. */
-  private[app] def run(spark: SparkSession,
-      args: Seq[String]): (Seq[String], Int) = {
+    * shared one): hands each JSON report line to `emit` as soon as it is
+    * known (a query's line once its output is written) and returns the exit
+    * code, 1 when a `multi` river failed. */
+  private[app] def run(spark: SparkSession, args: Seq[String],
+      emit: String => Unit): Int = {
     import spark.implicits._
     val (mode, input, workDir) = args match {
       case Seq(m, i, w, _*) => (m, i, w)
@@ -221,19 +222,17 @@ object KgMain {
     mode match {
       case "full" | "sync" =>
         val result = harvest(spark, pipeline, mode, input, args.lift(3))
-        (Seq(s"""{"run_id":"${result.runId}","mode":"$mode","edges_gen":"${result.edgesGen}","nodes_gen":"${result.nodesGen}","published_triples":${result.triples}}"""), 0)
+        emit(s"""{"run_id":"${result.runId}","mode":"$mode","edges_gen":"${result.edgesGen}","nodes_gen":"${result.nodesGen}","published_triples":${result.triples}}""")
+        0
 
       case "ingest-nt" | "ingest-rdfxml" =>
         // every writer into the workDir's bucketed tables verifies the pin
         pipeline.pinOrVerifyBucketCount()
         // NT scans line-parallel; RDF/XML (the reference's own dump format,
-        // Harvester.java:1711) is document-level so it scans file-parallel —
-        // malformed files are skipped whole (the reference's RiotException
-        // behavior) but SURFACED: each rejected file lands in the quarantine
-        // area with its path + reason (the reference logs them,
-        // Harvester.java:1723-1725; silent drops hide real data loss).
-        // The RDF/XML parse is persisted: the reject write and the doc build
-        // are two actions over it
+        // Harvester.java:1711) scans file-parallel and skips a malformed file
+        // whole, but lands it in the quarantine area with its path and reason
+        // (Harvester.java:1723-1725). The RDF/XML parse is persisted: the
+        // reject write and the doc build are two actions over it
         val parsed =
           if (mode == "ingest-rdfxml")
             Some(graft.sources.RdfXmlSource.readParsed(spark, input)
@@ -274,16 +273,15 @@ object KgMain {
             pipeline.docTable.stagePartitioned(
               docs.withColumn("bucket", pipeline.subjectBucket(col("subj"))), runId)
             val gen = pipeline.docTable.publishBuckets(runId, pipeline.allBucketIds)
-            (Seq(s"""{"run_id":"$runId","mode":"$mode","docs_gen":"$gen","published_docs":$n,"rejected_files":$nRejects}"""), 0)
+            emit(s"""{"run_id":"$runId","mode":"$mode","docs_gen":"$gen","published_docs":$n,"rejected_files":$nRejects}""")
+            0
           } finally docs.unpersist()
         } finally parsed.foreach(_.unpersist())
 
       case "diff" =>
-        // edge delta between two published generations — the ops answer to
-        // "what did this sync actually change" (<inputDir> carries
-        // "genA,genB"). Scale shape: ONE full-outer hash join on the edge key
-        // feeding one aggregate — a single pass over each generation
-        // computes all three counts; no row data ever reaches the driver.
+        // edge delta between two published generations ("what did this sync
+        // change"): one full-outer join on the edge key feeding one
+        // aggregate; no row data reaches the driver
         val gens = input.split(",").map(_.trim)
         require(gens.length == 2 && gens.forall(_.matches("gen-\\d+")),
           s"usage: KgMain diff <gen-N,gen-M> <workDir> — got '$input'")
@@ -292,28 +290,23 @@ object KgMain {
           sys.error(s"generation $g does not exist under the edges table"))
         val (added, removed, reweighted) =
           graft.materialize.GraphStats.generationDelta(gen(genA), gen(genB))
-        (Seq(s"""{"table":"edges","from":"$genA","to":"$genB",""" +
-          s""""added":$added,"removed":$removed,"reweighted":$reweighted}"""), 0)
+        emit(s"""{"table":"edges","from":"$genA","to":"$genB",""" +
+          s""""added":$added,"removed":$removed,"reweighted":$reweighted}""")
+        0
 
       case "query" =>
-        // the reference's ACTUAL query surface: river configs carry SPARQL
-        // (query[] + queryType, Indexer.java:350-463) that Harvester ships to
-        // a remote triplestore (Harvester.java:1516-1659). Here the same text
-        // compiles to a Catalyst plan over the PUBLISHED graph — the edge
-        // table viewed as (s, p, o) — so a reference user's saved queries run
-        // against the KG this engine just built, no triplestore in the loop.
+        // river configs carry SPARQL (query[], Indexer.java:350-463) that the
+        // reference ships to a remote triplestore; here the same text compiles
+        // to a Catalyst plan over the published edge table viewed as (s, p, o)
         val queryTexts: Seq[String] =
           if (input != "-") Seq(Files.readString(Paths.get(input)))
           else sys.env.get("GRAFT_SPARQL").map(Seq(_)).getOrElse(cfg.queries)
         require(queryTexts.nonEmpty,
           "query mode needs a .rq file, GRAFT_SPARQL, or query[] in GRAFT_CONFIG_JSON")
-        // `ol` exposes the edge's language stamp so lang()/langMatches()
-        // filters work over the published graph. The stamp is the source
-        // turn's language (config `language`, or detected under
-        // detectLanguage) on EVERY edge — the reference's addLanguage
-        // semantics exactly (ESNormalizer attaches `language` to the whole
-        // document, not per-literal), so lang(?o) over a resource object
-        // answers the turn's language, not RDF's no-tag-on-IRIs rule.
+        // `ol` is the edge's language stamp, the source turn's language on
+        // every edge (the reference's addLanguage: the whole document's
+        // language, not per-literal), so lang(?o) answers it for a resource
+        // object too, not RDF's no-tag-on-IRIs rule
         val tr = publishedEdges.select(col("subj").as("s"), col("pred").as("p"),
           col("obj").as("o"), col("lang").as("ol"))
         // SERVICE federation against pre-materialized local graphs: each
@@ -340,15 +333,8 @@ object KgMain {
               }
             iri -> df
           }
-        (queryTexts.zipWithIndex.map { case (q, i) =>
-          val out = graft.sparql.SparqlCompiler.compile(q, tr, services)
-          val outDir = s"$workDir/query_out/q$i"
-          out.write.mode("overwrite").parquet(outDir)
-          val n = spark.read.parquet(outDir).count()
-          s"""{"mode":"query","query_idx":$i,"rows":$n,""" +
-            s""""columns":${out.columns.map(jsonStr).mkString("[", ",", "]")},""" +
-            s""""out":${jsonStr(outDir)}}"""
-        }, 0)
+        runQueries(spark, queryTexts, tr, services, workDir, emit)
+        0
 
       case "multi" =>
         // concurrent multi-river harvests (the reference's pool-of-6 across
@@ -358,21 +344,24 @@ object KgMain {
         val maxConc = sys.env.get("GRAFT_MAX_CONCURRENT").map(_.toInt).getOrElse(6)
         val reports = MultiRiver.run(spark, rivers, maxConc, envOverlay)
         val failed = reports.count(!_.ok)
-        (reports.map { r =>
-          if (r.ok) r.detail
-          else s"""{"river":${jsonStr(r.name)},"mode":"${r.mode}",""" +
-            s""""ok":false,"error":${jsonStr(r.detail)}}"""
-        } :+ s"""{"mode":"multi","rivers":${reports.size},"failed":$failed,""" +
-          s""""max_concurrent":$maxConc}""", if (failed > 0) 1 else 0)
+        reports.foreach { r =>
+          emit(if (r.ok) r.detail
+            else s"""{"river":${jsonStr(r.name)},"mode":"${r.mode}",""" +
+              s""""ok":false,"error":${jsonStr(r.detail)}}""")
+        }
+        emit(s"""{"mode":"multi","rivers":${reports.size},"failed":$failed,""" +
+          s""""max_concurrent":$maxConc}""")
+        if (failed > 0) 1 else 0
 
       case "dedup-update" | "dedup-candidates" =>
-        (Seq(runDedup(spark, mode, input, workDir,
+        emit(runDedup(spark, mode, input, workDir,
           removed = sys.env.get("GRAFT_DEDUP_REMOVED").toSeq
             .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).map(_.toLong),
           // honor an explicit runId so a crashed update RETRIED FROM A NEW
           // PROCESS heals idempotently (same contract as sync)
           runId = sys.env.getOrElse("GRAFT_RUN_ID", runId),
-          buckets = sys.env.get("GRAFT_DEDUP_BUCKETS").map(_.toInt).getOrElse(64))), 0)
+          buckets = sys.env.get("GRAFT_DEDUP_BUCKETS").map(_.toInt).getOrElse(64)))
+        0
 
       case "stats" =>
         // per-predicate schema profile of the PUBLISHED edge table (the
@@ -381,22 +370,21 @@ object KgMain {
         // in the Spark app, not the metadata-only CLI.
         // pred is DATA (it can arrive from a user-supplied catalog), so it is
         // JSON-escaped; every other field is an engine-generated number
-        (graft.materialize.GraphStats.profile(publishedEdges).collect().toSeq.map { r =>
-          s"""{"pred":${jsonStr(r.getString(0))},"n_edges":${r.getLong(1)},""" +
+        graft.materialize.GraphStats.profile(publishedEdges).collect().foreach { r =>
+          emit(s"""{"pred":${jsonStr(r.getString(0))},"n_edges":${r.getLong(1)},""" +
             s""""n_subj":${r.getLong(2)},"n_obj":${r.getLong(3)},""" +
             s""""max_out":${r.getLong(4)},"functional":${r.getInt(5)},""" +
-            s""""total_weight":${r.getLong(6)}}"""
-        }, 0)
+            s""""total_weight":${r.getLong(6)}}""")
+        }
+        0
 
       case "ingest-stream" =>
         // Structured-Streaming front-end over the same transcript shape:
-        // checkpointed source offsets replace the batch sync's watermark, each
-        // micro-batch additively merges extracted supports into a bucketed
-        // table, rewriting only the touched buckets (StreamingSync scaladoc).
-        // The stream table gets its OWN committer (additive-merge lifecycle,
-        // offset-driven) — never the batch pipeline's support table, whose
-        // rows are replaced per-conversation under a watermark lifecycle;
-        // mixing the two would double-count on the first overlapping run.
+        // checkpointed source offsets replace the batch sync's watermark, and
+        // each micro-batch merges its supports into the touched buckets of
+        // its OWN table (StreamingSync scaladoc) — never the batch support
+        // table, whose rows are replaced per conversation: mixing the two
+        // would double-count on the first overlapping run.
         // corefResolution wires the per-conversation antecedent state table
         // automatically; scoredLinking needs nothing extra; detectLanguage
         // wires the cumulative language-counter state table.
@@ -423,7 +411,8 @@ object KgMain {
         // actually carry), not a minted run_id nothing on disk matches
         val lineage = tbl.currentGeneration("lastBatchCkpt").getOrElse("<none>")
         val edgesGen = eTbl.currentGeneration().getOrElse("<none>")
-        (Seq(s"""{"lineage":"$lineage","mode":"$mode","supports_gen":"$gen","edges_gen":"$edgesGen","merged_rows":$merged,"last_batch":${tbl.currentGeneration("lastBatch").getOrElse("-1")}}"""), 0)
+        emit(s"""{"lineage":"$lineage","mode":"$mode","supports_gen":"$gen","edges_gen":"$edgesGen","merged_rows":$merged,"last_batch":${tbl.currentGeneration("lastBatch").getOrElse("-1")}}""")
+        0
 
       case _ => usage()
     }

@@ -43,8 +43,16 @@ class MultiRiverSpec extends AnyFunSuite {
       "r-1", "full", "/x", "/base/r-1", None, Some("/c"))))
   }
 
+  // Spark 4.1 creates the `default` pool in the session's mode unless an
+  // allocation file declares it, so FIFO here holds only while the one
+  // fairscheduler.xml on the classpath is graft's (an app's own copy, or
+  // spark.scheduler.allocation.file, would replace it); re-check this pin
+  // on every Spark upgrade
   test("sessions schedule FAIR across pools and FIFO inside the default pool") {
     val sc = SparkTestSession.get.sparkContext
+    val files = getClass.getClassLoader.getResources("fairscheduler.xml")
+    assert(java.util.Collections.list(files).size == 1)
+    assert(!sc.getConf.contains("spark.scheduler.allocation.file"))
     assert(sc.getConf.get("spark.scheduler.mode") == "FAIR")
     assert(sc.getPoolForName("default").map(_.schedulingMode.toString)
       .contains("FIFO"))

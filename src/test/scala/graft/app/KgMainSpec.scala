@@ -2,6 +2,8 @@ package graft.app
 
 import java.nio.file.Files
 
+import scala.collection.mutable.ArrayBuffer
+
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,9 +20,10 @@ class KgMainSpec extends AnyFunSuite {
 
   /** The mode's report lines, each parsed as one JSON object. */
   private def run(args: String*): Seq[JsonNode] = {
-    val (lines, code) = KgMain.run(SparkTestSession.get, args)
+    val lines = ArrayBuffer.empty[String]
+    val code = KgMain.run(SparkTestSession.get, args, lines += _)
     assert(code == 0, lines.mkString("\n"))
-    lines.map(json.readTree)
+    lines.toSeq.map(json.readTree)
   }
 
   test("full, sync, stats, diff and query report JSON lines that agree with " +
@@ -70,7 +73,7 @@ class KgMainSpec extends AnyFunSuite {
     val modes = Seq("full", "sync", "ingest-nt", "ingest-rdfxml", "ingest-stream",
       "stats", "diff", "query", "dedup-update", "dedup-candidates", "multi")
     for (args <- Seq(Seq("frobnicate", "-", wd), Seq("full", "-"))) {
-      val e = intercept[IllegalArgumentException](KgMain.run(spark, args))
+      val e = intercept[IllegalArgumentException](KgMain.run(spark, args, _ => ()))
       assert(modes.forall(e.getMessage.contains), e.getMessage)
     }
   }
@@ -100,5 +103,19 @@ class KgMainSpec extends AnyFunSuite {
       run("ingest-rdfxml", bad.toString, TempDirs("kgmain-")))
     assert(e.getMessage.contains("nothing published"))
     assert(cached.subsetOf(before), cached -- before)
+  }
+
+  test("a failing query keeps the report lines of the queries before it") {
+    val spark = SparkTestSession.get
+    import spark.implicits._
+    val tr = Seq(("urn:s", "urn:p", "urn:o", "en")).toDF("s", "p", "o", "ol")
+    val wd = TempDirs("kgmain-")
+    val lines = ArrayBuffer.empty[String]
+    intercept[Exception](KgMain.runQueries(spark,
+      Seq("SELECT ?s WHERE { ?s ?p ?o }", "SELECT WHERE {"), tr, Map.empty, wd,
+      lines += _))
+    val Seq(first) = lines.toSeq.map(json.readTree)
+    assert(first.get("query_idx").asInt() == 0 && first.get("rows").asLong() == 1)
+    assert(Files.isDirectory(java.nio.file.Paths.get(first.get("out").asText())))
   }
 }
