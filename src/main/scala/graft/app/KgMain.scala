@@ -152,7 +152,7 @@ object KgMain {
       idSuffix: String = ""): KgPipeline#RunResult = {
     import spark.implicits._
     val runId =
-      if (mode == "sync") pipeline.syncRunId(spark)
+      if (mode == "sync") pipeline.syncRunId()
       else s"full-${System.currentTimeMillis()}$idSuffix"
     val turns = spark.read.parquet(turnsDir).as[Turn]
     val catalog = loadCatalog(spark, catalogDir)

@@ -117,9 +117,9 @@ final case class PipelineConfig(
 }
 
 object PipelineConfig {
-  /** The bucket-key expression every pre-configurable-key table was built
-    * with — adopting any OTHER expression onto a table that predates the
-    * pin would replace rows in the wrong buckets (see pinOrVerify callers). */
+  /** The default bucket-key expression: a hash of the key. A table's
+    * expression is pinned by its first writer, and a writer with another
+    * one is refused (`TableCommitter.pinBucketMapping`). */
   val DefaultBucketKeyExpr = "hash({k})"
 
   /** THE key-to-bucket mapping. Bucket-merge correctness requires every

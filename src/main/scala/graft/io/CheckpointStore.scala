@@ -1,13 +1,11 @@
 package graft.io
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import java.sql.Timestamp
 import java.time.Instant
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
 
 /** Run bookkeeping as the reference keeps it (K7/A9): the `<index>_status`
   * doc every run overwrites (Harvester.java:587-651) is `status/<pipelineId>`
@@ -19,7 +17,10 @@ import org.apache.spark.sql.functions.col
   * Both are driver-side files ([[SparkIo.writeAtomically]]): no run spends a
   * Spark job on its own bookkeeping. Watermarks keep epoch seconds + nanos:
   * the sync filter is `ts > wm` over microsecond timestamps, so a millisecond
-  * watermark would re-select the max-ts conversation on every no-op sync. */
+  * watermark would re-select the max-ts conversation on every no-op sync.
+  * A missing status means no run committed. The older `watermarks/` parquet
+  * log is never read: it only sits beside tables without the format pin,
+  * which every writer refuses before its first write. */
 final class CheckpointStore(root: String) {
 
   private val mapper = new ObjectMapper()
@@ -27,14 +28,12 @@ final class CheckpointStore(root: String) {
 
   /** Sync EPOCH: (successful runs, highest watermark), one file read. The
     * count numbers syncs: an empty sync leaves the watermark unchanged. */
-  def syncEpoch(spark: SparkSession, pipelineId: String): (Long, Option[Timestamp]) =
-    status(pipelineId).orElse(adopt(spark, pipelineId))
-      .fold((0L, Option.empty[Timestamp]))(s => (s.runs, Some(s.watermark)))
+  def syncEpoch(pipelineId: String): (Long, Option[Timestamp]) =
+    status(pipelineId).fold((0L, Option.empty[Timestamp]))(s => (s.runs, Some(s.watermark)))
 
   /** Highest successful watermark — the reference reads `last_update` before
     * composing the sync FILTER (Harvester.java:628-651). */
-  def lastWatermark(spark: SparkSession, pipelineId: String): Option[Timestamp] =
-    syncEpoch(spark, pipelineId)._2
+  def lastWatermark(pipelineId: String): Option[Timestamp] = syncEpoch(pipelineId)._2
 
   /** Every pipeline's status, by pipeline id: file reads only. */
   def statuses(): Seq[(String, RunStatus)] = // a dotted name is a crashed write's tmp
@@ -47,24 +46,6 @@ final class CheckpointStore(root: String) {
       RunStatus(n.get("runs").asLong, Timestamp.from(Instant.ofEpochSecond(
         n.get("watermark_s").asLong, n.get("watermark_ns").asLong)), n.get("run_id").asText)
     }
-
-  /** Runs that predate the status file kept their epoch in a `watermarks/`
-    * parquet log, a row per run: fold it once (a one-job scan) into the status
-    * file; the log stays unread. Refusing the workDir would restart the run
-    * count, and an auto run id could then replay an old run's checkpoints. */
-  private def adopt(spark: SparkSession, pipelineId: String): Option[RunStatus] = {
-    if (!Files.isDirectory(Paths.get(root, "watermarks"))) return None
-    val runs = SparkIo.withJobDesc(spark, "ckpt:adopt")(spark.read
-      .schema("pipeline_id STRING, run_id STRING, watermark TIMESTAMP, status STRING")
-      .parquet(s"$root/watermarks")
-      .filter(col("pipeline_id") === pipelineId && col("status") === "success")
-      .select("watermark", "run_id").collect())
-    if (runs.isEmpty) return None
-    val last = runs.maxBy(_.getTimestamp(0).toInstant)
-    val s = RunStatus(runs.length, last.getTimestamp(0), last.getString(1))
-    writeStatus(pipelineId, s)
-    Some(s)
-  }
 
   private def withWatermark(n: ObjectNode, t: Timestamp): ObjectNode =
     n.put("watermark_s", t.toInstant.getEpochSecond).put("watermark_ns", t.toInstant.getNano)
@@ -88,9 +69,8 @@ final class CheckpointStore(root: String) {
   }
 
   /** Commit run `runId`: one more run, the watermark raised to `watermark`. */
-  def commit(spark: SparkSession, pipelineId: String, runId: String,
-             watermark: Timestamp): Unit = {
-    val (runs, last) = syncEpoch(spark, pipelineId)
+  def commit(pipelineId: String, runId: String, watermark: Timestamp): Unit = {
+    val (runs, last) = syncEpoch(pipelineId)
     writeStatus(pipelineId,
       RunStatus(runs + 1, last.filter(_.after(watermark)).getOrElse(watermark), runId))
   }

@@ -142,20 +142,16 @@ object SparkIo {
     files.asJava.parallelStream().map[java.lang.Long](f => footer(f, conf).getBlocks
       .asScala.map(_.getRowCount).sum).toList.asScala.map(_.longValue).toSeq
 
-  /** The Spark schema a Spark writer left in parquet file `f`'s footer. */
-  def footerSchema(f: Path, conf: Configuration): Option[StructType] =
-    Option(footer(f, conf).getFileMetaData.getKeyValueMetaData
-      .get("org.apache.spark.sql.parquet.row.metadata"))
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-
   /** The footer alone, read the way Spark's scan reads it: opening a whole
     * `ParquetFileReader` per file costs an order of magnitude more. */
   private def footer(f: Path, conf: Configuration): ParquetMetadata =
     ParquetFooterReader.readFooter(HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(f.toUri), conf), ParquetMetadataConverter.NO_FILTER)
 
-  /** The schema sidecar of a parquet directory, if it has one. */
-  def schemaSidecar(dir: Path): Option[StructType] =
-    readString(dir.resolve(TableCommitter.SchemaSidecar))
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
+  /** The schema sidecar of a staging dir or a stage checkpoint: the current
+    * format always writes one, so a dir without it is an older layout. */
+  def schemaSidecar(dir: Path): StructType =
+    DataType.fromJson(readString(dir.resolve(TableCommitter.SchemaSidecar)).getOrElse(
+      throw new TableCommitter.OlderFormat(s"$dir has no ${TableCommitter.SchemaSidecar}")))
+      .asInstanceOf[StructType]
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation,
   PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Snapshot table with atomic publish — the Iceberg-snapshot-commit pattern
   * emulated over parquet + a manifest pointer (no Iceberg runtime in
@@ -21,6 +21,8 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
   * made file-based:
   *
   *   root/_meta/current         <- one-line pointer file, atomically replaced
+  *   root/_meta/pins/format     <- the on-disk format ([[TableCommitter.Format]]),
+  *                                 pinned with the bucket mapping by every writer
   *   root/gen-<n>/              <- immutable published snapshots: the
   *                                 `bucket=<b>` data dirs, `_graft_manifest`
   *                                 and `_graft_run`
@@ -36,7 +38,11 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
   * lists a directory and no count opens a footer.
   *
   * At cluster scale the pointer flip maps to an Iceberg snapshot commit /
-  * metastore pointer swap; the rest of the layout is unchanged.
+  * metastore pointer swap; the rest of the layout is unchanged. Like
+  * Iceberg's `format-version`, the format pin is read before anything else:
+  * a table with generations and no pin, or another one, is an older layout,
+  * refused with [[TableCommitter.OlderFormat]] and never adopted; so is a
+  * generation without its manifest.
   */
 final class TableCommitter(rootDir: String) {
   import TableCommitter._
@@ -71,7 +77,7 @@ final class TableCommitter(rootDir: String) {
     manifest(gen).map { m =>
       // a partitioned relation puts the partition column last
       val (part, data) = m.schema.fields.partition(_.name == BucketCol)
-      val files = m.files.filter(f => buckets.forall(bs => f.bucket.exists(bs)))
+      val files = m.files.filter(f => buckets.forall(_(f.bucket)))
       if (files.isEmpty) spark.createDataFrame(
         java.util.Collections.emptyList[Row](), StructType(data ++ part))
       else spark.baseRelationToDataFrame(HadoopFsRelation(
@@ -171,30 +177,15 @@ final class TableCommitter(rootDir: String) {
   }
 
   /** The manifest of generation `gen`; None when `gen` is not a `gen-<n>`
-    * directory. A generation published before manifests is adopted once,
-    * like [[CheckpointStore]]'s older log: walked ([[walk]]), and its
-    * manifest written into it atomically and best-effort — generations are
-    * immutable, so it cannot go stale. */
+    * directory. A generation without one is an older layout: refused. */
   def manifest(gen: String): Option[Manifest] = generationPath(gen).map { dir =>
-    SparkIo.readString(dir.resolve(ManifestFile)).map(parseManifest).getOrElse {
-      val m = walk(dir)
-      scala.util.Try(SparkIo.writeAtomically(dir.resolve(ManifestFile), m.json))
-      m
-    }
+    parseManifest(dir, SparkIo.readString(dir.resolve(ManifestFile))
+      .getOrElse(throw new OlderFormat(s"generation $dir has no $ManifestFile")))
   }
 
   /** Row count of the current generation: its manifest's row sum. */
   def currentRecordCount(): Option[Long] =
     currentGeneration().flatMap(manifest).map(_.rows)
-
-  /** Whether the current generation has the bucketed layout: its schema
-    * has the `bucket` column (an EMPTY bucketed publish too). `Some(false)`
-    * means a pre-bucketing writer built this table — bucketed writers must
-    * refuse it with a migration message instead of pinning a bucket_count
-    * that the physical layout cannot honour. */
-  def currentIsBucketed(alias: String = "current"): Option[Boolean] =
-    currentGeneration(alias).flatMap(manifest)
-      .map(_.schema.fieldNames.contains(BucketCol))
 
   /** Incremental bucket publish: gen-(n+1) = staged `bucket=` dirs (the
     * rewritten buckets) + hard-linked carryover of every current-generation
@@ -219,6 +210,9 @@ final class TableCommitter(rootDir: String) {
     }
     val stagedAt = staging.resolve(runId)
     require(Files.exists(stagedAt), s"nothing staged for $runId")
+    // the untouched buckets carry over from the live generation's manifest,
+    // read before anything moves: an older parent is refused untouched
+    val parent = currentGeneration(alias).flatMap(g => manifest(g).map(root.resolve(g) -> _))
     // sweep orphan assembly dirs a crashed publish left behind (they were
     // never recorded or pointer-referenced, but they'd otherwise linger
     // forever, confuse time travel, and occupy retention slots)
@@ -238,7 +232,7 @@ final class TableCommitter(rootDir: String) {
     // data may only touch declared-changed buckets, or the hard-linked
     // carryover below would collide with it)
     val staged = walk(stagedAt)
-    val stagedBuckets = staged.files.flatMap(_.bucket).distinct
+    val stagedBuckets = staged.files.map(_.bucket).distinct
     val undeclared = stagedBuckets.filterNot(changedBuckets)
     require(undeclared.isEmpty,
       s"staged buckets not declared changed: ${undeclared.mkString(",")}")
@@ -246,9 +240,8 @@ final class TableCommitter(rootDir: String) {
       Files.move(stagedAt.resolve(d), tmpDir.resolve(d), StandardCopyOption.ATOMIC_MOVE)
     }
     // carry over untouched buckets from the live generation by hard link
-    val parent = currentGeneration(alias).flatMap(g => manifest(g).map(root.resolve(g) -> _))
     val carried = parent.toSeq.flatMap { case (dir, m) =>
-      m.files.filter(_.bucket.exists(b => !changedBuckets(b)))
+      m.files.filterNot(f => changedBuckets(f.bucket))
         .tapEach(f => link(dir, tmpDir, f.path))
     }
     Files.writeString(tmpDir.resolve(ManifestFile),
@@ -276,23 +269,18 @@ final class TableCommitter(rootDir: String) {
       .foreach(g => Files.createLink(to.resolve(g), from.resolve(g)))
   }
 
-  /** A manifest of the parquet files under `dir` (a staging or a pre-manifest
-    * generation dir), found by a driver-side walk, rows from their footers
-    * (no Spark job). The schema is the dir's schema sidecar, else the Spark
-    * schema in a footer plus `bucket` when the files sit in bucket dirs,
-    * else empty. */
+  /** A manifest of the parquet files under staging dir `dir`, found by a
+    * driver-side walk, rows from their footers (no Spark job), schema from
+    * the sidecar [[stagePartitioned]] writes. */
   private def walk(dir: Path): Manifest = {
     val paths = SparkIo.files(dir).filter(_.getFileName.toString.endsWith(".parquet"))
     val files = paths.zip(SparkIo.footerRowCounts(paths, hadoopConf)).map { case (p, rows) =>
-      DataFile(dir.relativize(p).toString, Some(p.getParent.getFileName.toString)
-        .collect { case BucketDir(b) => b.toInt }, Files.size(p), rows)
+      p.getParent.getFileName.toString match {
+        case BucketDir(b) => DataFile(dir.relativize(p).toString, b.toInt, Files.size(p), rows)
+        case _ => throw new OlderFormat(s"staged file $p is outside a bucket dir")
+      }
     }
-    val schema = SparkIo.schemaSidecar(dir).getOrElse {
-      val data = paths.headOption.flatMap(SparkIo.footerSchema(_, hadoopConf))
-        .getOrElse(new StructType())
-      if (files.exists(_.bucket.isDefined)) data.add(BucketCol, IntegerType) else data
-    }
-    Manifest(schema, files)
+    Manifest(SparkIo.schemaSidecar(dir), files)
   }
 
   /** Delete assembly dirs (`.gen-*.tmp`) orphaned by a crash mid-publish.
@@ -354,53 +342,39 @@ final class TableCommitter(rootDir: String) {
     * table was built with would replace rows in the wrong buckets and
     * silently carry stale copies forward. */
   def pinOrVerify(key: String, value: String): Unit = {
-    val pinned = TableCommitter.createOnce(meta.resolve("pins").resolve(key), value)
+    val pinned = TableCommitter.createOnce(pin(key), value)
     require(pinned == value,
       s"table pin '$key' is $pinned but this writer uses $value — " +
         "rebuild into a fresh table to change it")
   }
 
-  /** Value of a table pin if any writer has pinned it — lets callers
-    * distinguish "never pinned" (adoption about to happen) from "pinned to
-    * X" before calling [[pinOrVerify]]; see [[pinBucketMapping]]. */
-  def pinned(key: String): Option[String] =
-    SparkIo.readString(meta.resolve("pins").resolve(key))
+  /** Value of a table pin if any writer has pinned it. */
+  def pinned(key: String): Option[String] = SparkIo.readString(pin(key))
 
-  /** Pin the table's key-to-bucket mapping — the bucket count and the
-    * bucket-key expression — or verify it against the pins. The key
-    * expression pin carries an ADOPTION guard: a table built BEFORE the
-    * expression was pinnable has generations but no pin — its physical
-    * layout is the default hash mapping, so the only expression a first pin
-    * may adopt onto it is the default. Blessing any other mapping onto an
-    * existing layout would make the next incremental publish replace rows
-    * in the wrong buckets and hard-link stale duplicates forward, silently. */
+  private def pin(key: String): Path = meta.resolve("pins").resolve(key)
+
+  /** Pin the table's on-disk format and its key-to-bucket mapping — the
+    * bucket count and the bucket-key expression — or verify them against
+    * the pins. Every writer calls this before its first stage. The format
+    * comes first: only a table with no generation may take the pin, so a
+    * table whose generations predate it is refused before anything is
+    * written into it. */
   def pinBucketMapping(buckets: Int, keyExpr: String): Unit = {
+    val format =
+      if (generations().isEmpty) Some(TableCommitter.createOnce(pin("format"), Format))
+      else pinned("format")
+    if (!format.contains(Format))
+      throw new OlderFormat(s"table $root has format pin ${format.getOrElse("<none>")}")
     pinOrVerify("bucket_count", buckets.toString)
-    if (currentGeneration().isDefined && pinned("bucket_key_expr").isEmpty &&
-        keyExpr != graft.config.PipelineConfig.DefaultBucketKeyExpr)
-      throw new IllegalStateException(
-        s"bucketKeyExpr=$keyExpr on a table built before the key expression " +
-          "was pinned (its layout is the default hash mapping) — changing " +
-          "the mapping requires a fresh workDir (or a full rebuild into one)")
     pinOrVerify("bucket_key_expr", keyExpr)
   }
 
   /** Pin the row-semantics signature ([[graft.config.PipelineConfig.semanticsSig]])
     * or verify it — the one semantics pin of every writer that MERGES into
     * a table (batch sync, streaming ingest): rows extracted under different
-    * flags would silently mix two semantics within one table. Same
-    * ADOPTION guard as [[pinBucketMapping]]: a table that has generations
-    * but no semantics pin predates the pin, and what its rows MEAN is
-    * unknowable from here — blessing the current flags onto it would let
-    * later writes merge rows of a second semantics into it with no error,
-    * the exact failure the pin exists to prevent. Refuse loudly instead. */
+    * flags would silently mix two semantics within one table. */
   def pinSemanticsOrVerify(sig: String): Unit = {
-    if (currentGeneration().isDefined && pinned("semantics").isEmpty)
-      throw new IllegalStateException(
-        "table has published generations but no semantics pin (it was " +
-          "built before row semantics were pinned) — rebuild it from a " +
-          "fresh checkpoint / full run so the pin records what its rows mean")
-    val standing = TableCommitter.createOnce(semanticsPin, sig)
+    val standing = TableCommitter.createOnce(pin("semantics"), sig)
     require(standing == sig,
       s"writer flags ($sig) differ from the row semantics the table was " +
         s"built with ($standing) — a merge would mix row semantics within " +
@@ -413,9 +387,7 @@ final class TableCommitter(rootDir: String) {
     * the table's rows mean. Pinned before the rebuild publishes, so a
     * crashed full run leaves the pin ahead of the pointer — later merges
     * under the old flags then refuse until a full run completes. */
-  def repinSemantics(sig: String): Unit = SparkIo.writeAtomically(semanticsPin, sig)
-
-  private def semanticsPin: Path = meta.resolve("pins").resolve("semantics")
+  def repinSemantics(sig: String): Unit = SparkIo.writeAtomically(pin("semantics"), sig)
 
   /** Point an alias at an existing generation (blue/green switch, K6). */
   def setPointer(alias: String, gen: String): Unit = {
@@ -478,6 +450,17 @@ object TableCommitter {
     SparkIo.readString(f).get
   }
 
+  /** The on-disk format of every table and stage checkpoint this code
+    * writes; every writer pins it ([[TableCommitter.pinBucketMapping]]). */
+  val Format = "1"
+
+  /** The one refusal of a layout other than [[Format]]: graft commit
+    * f69f29c was the last to read (and adopt) the older layouts. */
+  final class OlderFormat(what: String) extends IllegalStateException(
+    s"$what: not in graft format $Format, the only on-disk format this graft " +
+      "reads (graft commit f69f29c was the last to read older layouts) — " +
+      "rebuild with `KgMain full` into a fresh workDir")
+
   /** A replay needs a generation that retention already expired. */
   final class ExpiredGeneration(msg: String) extends IllegalStateException(msg)
 
@@ -499,8 +482,8 @@ object TableCommitter {
   private val BucketDir = s"$BucketCol=(-?\\d+)".r
 
   /** One data file of a generation: its path relative to the generation
-    * dir, its bucket (None in an unpartitioned generation), bytes and rows. */
-  final case class DataFile(path: String, bucket: Option[Int], bytes: Long, rows: Long)
+    * dir, its bucket, bytes and rows. */
+  final case class DataFile(path: String, bucket: Int, bytes: Long, rows: Long)
 
   /** A generation's schema and data files, stored as JSON lines: the schema
     * line, then one line per file ([[parseManifest]] reads them). */
@@ -510,18 +493,20 @@ object TableCommitter {
 
     def json: String =
       (mapper.createObjectNode().put("schema", schema.json) +: files.map { f =>
-        val n = mapper.createObjectNode().put("path", f.path)
-          .put("bytes", f.bytes).put("rows", f.rows)
-        f.bucket.foreach(n.put("bucket", _))
-        n
+        mapper.createObjectNode().put("path", f.path)
+          .put("bytes", f.bytes).put("rows", f.rows).put("bucket", f.bucket)
       }).mkString("\n")
   }
 
-  private def parseManifest(json: String): Manifest = {
+  /** Generation `dir`'s manifest; a file entry without a bucket is an
+    * unpartitioned generation, an older layout. */
+  private def parseManifest(dir: Path, json: String): Manifest = {
     val lines = json.split("\n").map(mapper.readTree)
     Manifest(DataType.fromJson(lines.head.get("schema").asText).asInstanceOf[StructType],
       lines.toSeq.tail.map(n => DataFile(n.get("path").asText,
-        Option(n.get("bucket")).map(_.asInt), n.get("bytes").asLong, n.get("rows").asLong)))
+        Option(n.get("bucket")).getOrElse(throw new OlderFormat(
+          s"generation $dir is not bucketed")).asInt,
+        n.get("bytes").asLong, n.get("rows").asLong)))
   }
 
   private val mapper = new ObjectMapper()
@@ -545,8 +530,8 @@ object TableCommitter {
           case a: AttributeReference => BoundReference(0, a.dataType, nullable = true)
         }))
       files.groupBy(_.bucket).toSeq.sortBy(_._1).map { case (b, fs) =>
-        PartitionDirectory(InternalRow.fromSeq(b.toSeq.map(v =>
-          Cast(Literal(v), partitionSchema.head.dataType).eval())), fs.map(status).toArray)
+        PartitionDirectory(InternalRow(
+          Cast(Literal(b), partitionSchema.head.dataType).eval()), fs.map(status).toArray)
       }.filter(d => keep.forall(_.eval(d.values)))
     }
 

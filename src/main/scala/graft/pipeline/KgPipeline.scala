@@ -77,8 +77,7 @@ final class KgPipeline(cfg: PipelineConfig) {
       if (failAfterStage.contains(name))
         throw new RuntimeException(s"injected failure after stage $name")
     }
-    // a pre-sidecar checkpoint falls back to schema inference
-    SparkIo.schemaSidecar(dir).fold(spark.read)(spark.read.schema(_)).parquet(dir.toString)
+    spark.read.schema(SparkIo.schemaSidecar(dir)).parquet(dir.toString)
   }
 
   /** Bucket-set sidecar name (leading underscore — not data). */
@@ -88,10 +87,8 @@ final class KgPipeline(cfg: PipelineConfig) {
     * distinct `bucketExpr` values are observed during the parquet write
     * (one CollectMetrics aggregate — zero extra Spark jobs) and committed
     * as a sidecar atomically WITH the checkpoint. A resumed run reads the
-    * sidecar (still zero jobs). Only a pre-upgrade checkpoint without one
-    * pays the old per-set collect job — this fusion is what cut the no-op
-    * sync's fixed job floor (round-3 item: three driver-side bucket-set
-    * collects, each a full scheduled job over delta-sized data). */
+    * sidecar (still zero jobs); a checkpoint without one is an older
+    * layout, refused. */
   private def stageWithBuckets(spark: SparkSession, runKey: String, name: String,
                                bucketExpr: org.apache.spark.sql.Column,
                                afterWrite: java.nio.file.Path => Unit = _ => ())
@@ -107,16 +104,15 @@ final class KgPipeline(cfg: PipelineConfig) {
       obs = Some(o)
       compute.observe(o, collect_set(bucketExpr).as("buckets"))
     }
-    val sidecar = SparkIo.readString(
-      Paths.get(s"$stagesRoot/$runKey/$name").resolve(BucketSidecar))
-    val buckets: Set[Int] = sidecar match {
-      case Some(s) => if (s.isEmpty) Set.empty else s.split(",").map(_.toInt).toSet
-      case None => // checkpoint predates the sidecar: one fallback collect job
-        SparkIo.withJobDesc(spark, s"collect:$name-buckets")(
-          df.select(bucketExpr.as("b")).distinct().collect())
-          .map(_.getInt(0)).toSet
-    }
-    (df, buckets)
+    val sidecar = sidecarOf(runKey, name, BucketSidecar)
+    (df, if (sidecar.isEmpty) Set.empty else sidecar.split(",").map(_.toInt).toSet)
+  }
+
+  /** Stage `name`'s sidecar `file`, which the current format always writes. */
+  private def sidecarOf(runKey: String, name: String, file: String): String = {
+    val dir = Paths.get(s"$stagesRoot/$runKey/$name")
+    SparkIo.readString(dir.resolve(file))
+      .getOrElse(throw new TableCommitter.OlderFormat(s"stage checkpoint $dir has no $file"))
   }
 
   /** Watermark sidecar name: leading underscore keeps parquet readers from
@@ -133,17 +129,14 @@ final class KgPipeline(cfg: PipelineConfig) {
 
   /** The watermark the ORIGINAL attempt of this stage observed; a resumed
     * run must replay it — recomputing from the post-crash source would
-    * advance past data the stale checkpoint never extracted. Outer None =
-    * no sidecar (checkpoint predates it); a single field is the
-    * milliseconds an older checkpoint recorded. */
-  private def readWmSidecar(runKey: String, name: String): Option[Option[Timestamp]] =
-    SparkIo.readString(Paths.get(s"$stagesRoot/$runKey/$name").resolve(WmSidecar)).map {
-      case "none" => None
-      case s => Some(s.split(",") match {
-        case Array(sec, nanos) =>
-          Timestamp.from(java.time.Instant.ofEpochSecond(sec.toLong, nanos.toLong))
-        case Array(ms) => new Timestamp(ms.toLong)
-      })
+    * advance past data the stale checkpoint never extracted. */
+  private def readWmSidecar(runKey: String, name: String): Option[Timestamp] =
+    sidecarOf(runKey, name, WmSidecar).split(",") match {
+      case Array("none") => None
+      case Array(sec, nanos) =>
+        Some(Timestamp.from(java.time.Instant.ofEpochSecond(sec.toLong, nanos.toLong)))
+      case _ => throw new TableCommitter.OlderFormat(
+        s"stage checkpoint $stagesRoot/$runKey/$name has a millisecond $WmSidecar")
     }
 
   /** Per-conversation triple supports under this pipeline's config — see
@@ -158,8 +151,7 @@ final class KgPipeline(cfg: PipelineConfig) {
     * afterWrite, when the write — and thus the observation — has completed).
     * A resumed run replays the checkpoint's own watermark: recomputing it
     * from the current source would advance past turns that arrived between
-    * the crash and the retry without ever extracting them; the live-source
-    * fallback is only for checkpoints that predate the sidecar. The lineage
+    * the crash and the retry without ever extracting them. The lineage
     * rows, (stage, partition id, rows), come from the checkpoint's parquet
     * footers — no data read, no Spark job; the partition id is the writer
     * task's number in the file name (`part-00007-…` is 7), or -1 for another
@@ -177,7 +169,7 @@ final class KgPipeline(cfg: PipelineConfig) {
       fire = () => { writeBad(); watermark() }
       computeSupports(spark, good, catalog, markers)
     }
-    val wm = readWmSidecar(runId, name).getOrElse(KgPipeline.maxEventTime(turns))
+    val wm = readWmSidecar(runId, name)
     val parts = SparkIo.list(Paths.get(s"$stagesRoot/$runId/$name"))
       .filter(_.getFileName.toString.endsWith(".parquet"))
     val lineage = parts.map(f => scala.util.Try(f.getFileName.toString
@@ -208,8 +200,9 @@ final class KgPipeline(cfg: PipelineConfig) {
   // contract); edges, nodes and docs bucket in DerivedTables
   private def convBucket(c: org.apache.spark.sql.Column) = subjectBucket(c)
 
-  /** Pin or verify the bucket mapping (count and key expression) of every
-    * table of this workDir before any of them is written: the mapping is
+  /** Pin or verify the on-disk format and the bucket mapping (count and key
+    * expression) of every table of this workDir before any of them is
+    * written ([[TableCommitter.pinBucketMapping]]): the mapping is
     * baked into every published generation, so a writer with a different
     * syncBuckets would replace rows in the wrong buckets and silently carry
     * stale copies forward. The pins live in each TABLE's own metadata, so a
@@ -259,7 +252,7 @@ final class KgPipeline(cfg: PipelineConfig) {
     val (_, (n, totalWeight)) = SparkIo.both(
       publishSupports(supports, allBucketIds, runId),
       publishDerivedFull(spark, runId, supports))
-    finishRun(spark, runId, wm, n, lineage, Seq(("edges", "total_weight", totalWeight)))
+    finishRun(runId, wm, n, lineage, Seq(("edges", "total_weight", totalWeight)))
   }
 
   /** Stage `supports` bucketed by conversation and publish them as exactly
@@ -281,8 +274,8 @@ final class KgPipeline(cfg: PipelineConfig) {
     * make the next data-bearing sync reuse the empty sync's checkpoints and
     * swallow its data. Use this (as KgMain does) unless the caller manages
     * its own stable ids. */
-  def syncRunId(spark: SparkSession): String = {
-    val (n, wm) = checkpoints.syncEpoch(spark, cfg.pipelineId)
+  def syncRunId(): String = {
+    val (n, wm) = checkpoints.syncEpoch(cfg.pipelineId)
     s"sync-n$n-wm-${wm.map(_.getTime).getOrElse(0L)}"
   }
 
@@ -310,8 +303,7 @@ final class KgPipeline(cfg: PipelineConfig) {
     pinOrVerifyBucketCount()
     // syncs replace slices: they must match the rows they merge into
     supportTable.pinSemanticsOrVerify(cfg.semanticsSig)
-    val wm = checkpoints.lastWatermark(spark, cfg.pipelineId)
-      .getOrElse(new Timestamp(0L))
+    val wm = checkpoints.lastWatermark(cfg.pipelineId).getOrElse(new Timestamp(0L))
 
     // A8: distinct changed-conversation set since watermark. Stage-
     // CHECKPOINTED, not just materialized: the replayed sync_supports
@@ -375,7 +367,7 @@ final class KgPipeline(cfg: PipelineConfig) {
         edgeTable.currentGeneration().isDefined &&
         nodeTable.currentGeneration().isDefined &&
         (!cfg.publishDocs || docTable.currentGeneration().isDefined)) {
-      return finishRun(spark, runId, None,
+      return finishRun(runId, None,
         edgeTable.currentRecordCount().getOrElse(0L), Seq.empty)
     }
 
@@ -459,7 +451,7 @@ final class KgPipeline(cfg: PipelineConfig) {
           SparkIo.both(publishChangedSupports(),
             derived.propagate(spark, deltaCk, affectedEdgeBuckets, runId))
           // the triple count is the edge manifest's row sum: no Spark job
-          finishRun(spark, runId, newWm,
+          finishRun(runId, newWm,
             edgeTable.currentRecordCount().getOrElse(0L), lineage)
         }
     }
@@ -494,24 +486,23 @@ final class KgPipeline(cfg: PipelineConfig) {
                                 lineage: Seq[(String, Int, Long)]): RunResult = {
     val (n, totalWeight) = publishDerivedFull(spark, runId,
       supportTable.read(spark).get.drop("bucket"))
-    finishRun(spark, runId, newWatermark, n, lineage,
+    finishRun(runId, newWatermark, n, lineage,
       Seq(("edges", "total_weight", totalWeight)))
   }
 
   /** Record the run, then commit it ([[CheckpointStore]]): driver-side file
     * writes, no Spark job. A run without a new watermark keeps the last one. */
-  private def finishRun(spark: SparkSession, runId: String,
-                        newWatermark: Option[Timestamp], nTriples: Long,
+  private def finishRun(runId: String, newWatermark: Option[Timestamp], nTriples: Long,
                         lineage: Seq[(String, Int, Long)],
                         extraMetrics: Seq[(String, String, Long)] = Seq.empty)
       : RunResult = {
     val wm = newWatermark
-      .orElse(checkpoints.lastWatermark(spark, cfg.pipelineId))
+      .orElse(checkpoints.lastWatermark(cfg.pipelineId))
       .getOrElse(new Timestamp(0L))
     checkpoints.writeRunRecord(cfg.pipelineId, runId, wm,
       ("edges", "published_triples", nTriples) +: extraMetrics, lineage)
     publishHook("run-record")
-    checkpoints.commit(spark, cfg.pipelineId, runId, wm)
+    checkpoints.commit(cfg.pipelineId, runId, wm)
     RunResult(runId, edgeTable.currentGeneration().get,
       nodeTable.currentGeneration().get, nTriples)
   }

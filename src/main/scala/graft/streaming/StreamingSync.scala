@@ -95,6 +95,32 @@ object StreamingSync {
       "corefResolution=true on the streaming path needs a corefStateTable " +
         "(the per-conversation antecedent state lives in its own bucketed " +
         "table, committed in lockstep with each batch)")
+    // derived-table propagation (edges/nodes, like the batch sync's):
+    // node refcounts derive from edge-key creation, so the two tables are
+    // wired together or not at all
+    require(edgeTable.isDefined == nodeTable.isDefined,
+      "edgeTable and nodeTable must be wired together (node refcounts are " +
+        "derived from edge-key creation events)")
+    require(docTable.isEmpty || edgeTable.isDefined,
+      "docTable needs the edgeTable (docs rebuild from the post-merge edge " +
+        "slice)")
+    // obj-side widening scans the whole edge table per refresh — a
+    // per-NIGHT cost the batch sync documents and accepts, but a
+    // per-MICRO-BATCH full scan breaks the O(batch) ingest contract
+    require(docTable.isEmpty || !cfg.refreshReferencingDocs,
+      "refreshReferencingDocs is not supported by the streaming doc sink " +
+        "(it widens every micro-batch to an O(table) edge scan); run the " +
+        "batch sync for label-freshness refreshes")
+    // format and bucket mapping (count + key expression) pinned in each
+    // table's own metadata: the mapping is baked into every published
+    // generation, and every writer (including a later run with a different
+    // config) must agree on it. Pinned before the lineage check and the
+    // checkpoint's identity, so a table of an older layout is refused
+    // before anything is written
+    val B = cfg.syncBuckets
+    val derivedTables = Seq(edgeTable, nodeTable, docTable).flatten
+    (Seq(table) ++ corefStateTable ++ langStateTable ++ derivedTables)
+      .foreach(_.pinBucketMapping(B, cfg.bucketKeyExpr))
     val schema = implicitly[org.apache.spark.sql.Encoder[Turn]].schema
     val reader = spark.readStream.schema(schema)
     val turns = maxFilesPerBatch
@@ -124,47 +150,13 @@ object StreamingSync {
           "original checkpoint or start a new table — replaying from batch 0 " +
           "over an additively-merged table would double-count")
 
-    // upgrade guard BEFORE pinning: a table published by a pre-bucketing
-    // writer has no bucket= partition layout, and pinning bucket_count on
-    // it would make the bucket read below silently see no rows — fail
-    // with an explicit migration message instead
-    if (table.currentIsBucketed().contains(false))
-      throw new IllegalStateException(
-        "this table was published without the bucketed layout (no 'bucket' " +
-          "partition column): rebuild it from a fresh checkpoint with the " +
-          "bucketed streaming ingest before resuming")
-    // derived-table propagation (edges/nodes, like the batch sync's):
-    // node refcounts derive from edge-key creation, so the two tables are
-    // wired together or not at all
-    require(edgeTable.isDefined == nodeTable.isDefined,
-      "edgeTable and nodeTable must be wired together (node refcounts are " +
-        "derived from edge-key creation events)")
-    require(docTable.isEmpty || edgeTable.isDefined,
-      "docTable needs the edgeTable (docs rebuild from the post-merge edge " +
-        "slice)")
-    // obj-side widening scans the whole edge table per refresh — a
-    // per-NIGHT cost the batch sync documents and accepts, but a
-    // per-MICRO-BATCH full scan breaks the O(batch) ingest contract
-    require(docTable.isEmpty || !cfg.refreshReferencingDocs,
-      "refreshReferencingDocs is not supported by the streaming doc sink " +
-        "(it widens every micro-batch to an O(table) edge scan); run the " +
-        "batch sync for label-freshness refreshes")
-    // bucket mapping (count + key expression) pinned in each table's own
-    // metadata: it is baked into every published generation, and every
-    // writer (including a later run with a different config) must agree on
-    // it; adoption onto a pre-pin table is guarded
-    val B = cfg.syncBuckets
-    val derivedTables = Seq(edgeTable, nodeTable, docTable).flatten
-    (Seq(table) ++ corefStateTable ++ langStateTable ++ derivedTables)
-      .foreach(_.pinBucketMapping(B, cfg.bucketKeyExpr))
     // row SEMANTICS are a LINEAGE property, not a per-run choice: batches
     // merged under different extraction semantics (coref resolution, scored
     // vs rank-collapsed linking, the stamped language) disagree on row
     // content/keys for the same turns, so flipping any of these mid-table
-    // silently mixes two semantics in one additive merge. The batch
+    // silently mixes two semantics in one additive merge: the batch
     // pipeline's own pin (PipelineConfig.semanticsSig, in the table's
-    // metadata), adoption-guarded: a pre-pin table with published
-    // generations is refused, never blessed with the current flags
+    // metadata) guards it
     table.pinSemanticsOrVerify(cfg.semanticsSig)
     // counter columns are POSITIONAL over the sorted profile keys: a
     // profile edit mid-lineage would silently re-index every counter

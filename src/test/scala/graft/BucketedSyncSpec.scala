@@ -347,7 +347,7 @@ class BucketedSyncSpec extends AnyFunSuite {
     val t0 = fx.turns.filter(_.turn_idx <= 4)
     val t1 = fx.turns.filterNot(_.conv_id == "conv-000002")
     p.runFull(spark, turnsDs(t0), fx.catalog, fx.markers, "t0")
-    val epoch0 = p.checkpoints.syncEpoch(spark, "kg")
+    val epoch0 = p.checkpoints.syncEpoch("kg")
 
     val starts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -371,7 +371,7 @@ class BucketedSyncSpec extends AnyFunSuite {
     Thread.sleep(500)
     sc.removeSparkListener(listener)
     assert(!starts.asScala.exists(_ > thrownAt), "a job started after runSync threw")
-    assert(p.checkpoints.syncEpoch(spark, "kg") == epoch0)
+    assert(p.checkpoints.syncEpoch("kg") == epoch0)
 
     p.runSync(spark, turnsDs(t1), fx.catalog, fx.markers, "t1")
     val scratch = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"),
@@ -381,7 +381,7 @@ class BucketedSyncSpec extends AnyFunSuite {
     assert(edgeSet(p) == edgeSet(scratch))
     assert(nodeMap(p) == nodeMap(scratch))
     assert(docSet(p) == docSet(scratch))
-    assert(p.checkpoints.syncEpoch(spark, "kg")._1 == epoch0._1 + 1)
+    assert(p.checkpoints.syncEpoch("kg")._1 == epoch0._1 + 1)
   }
 
   test("a crash after the run record and before the status write leaves " +
@@ -395,8 +395,8 @@ class BucketedSyncSpec extends AnyFunSuite {
     val t0 = fx.turns.filter(_.turn_idx <= 4)
     val t1 = fx.turns.filterNot(_.conv_id == "conv-000002")
     p.runFull(spark, turnsDs(t0), fx.catalog, fx.markers, "t0")
-    val epoch0 = p.checkpoints.syncEpoch(spark, "kg")
-    val runId = p.syncRunId(spark)
+    val epoch0 = p.checkpoints.syncEpoch("kg")
+    val runId = p.syncRunId()
     try {
       p.failAfterPublish = Some("run-record")
       intercept[RuntimeException] {
@@ -404,11 +404,11 @@ class BucketedSyncSpec extends AnyFunSuite {
       }
     } finally p.failAfterPublish = None
     assert(Files.exists(Paths.get(s"$wd/checkpoints/runs/$runId.json")))
-    assert(p.checkpoints.syncEpoch(spark, "kg") == epoch0)
+    assert(p.checkpoints.syncEpoch("kg") == epoch0)
     // the retry derives the same auto run id, and replays under it
-    assert(p.syncRunId(spark) == runId)
+    assert(p.syncRunId() == runId)
     p.runSync(spark, turnsDs(t1), fx.catalog, fx.markers, runId)
-    assert(p.checkpoints.syncEpoch(spark, "kg")._1 == epoch0._1 + 1)
+    assert(p.checkpoints.syncEpoch("kg")._1 == epoch0._1 + 1)
     val mine = spark.read.json(s"$wd/checkpoints/runs")
       .filter(col("run_id") === runId)
     assert(mine.filter(col("kind") === "watermark").count() == 1)
@@ -606,12 +606,12 @@ class BucketedSyncSpec extends AnyFunSuite {
 
     // empty sync (no new data) under the auto id — publishes, records its
     // runId, leaves the watermark unchanged
-    val id1 = p.syncRunId(spark)
+    val id1 = p.syncRunId()
     p.runSync(spark, turnsDs(t0), fx.catalog, fx.markers, id1)
 
     // the next data-bearing sync MUST get a fresh id (a watermark-only id
     // would reuse the empty sync's checkpoints and drop this data)
-    val id2 = p.syncRunId(spark)
+    val id2 = p.syncRunId()
     assert(id2 != id1, "sync epoch id did not advance after an empty sync")
     p.runSync(spark, turnsDs(fx.turns), fx.catalog, fx.markers, id2)
 
@@ -647,7 +647,7 @@ class BucketedSyncSpec extends AnyFunSuite {
     val t2 = t1 :+ extend("conv-000011", 2) // arrives AFTER the crash below
 
     p.runFull(spark, turnsDs(t0), fx.catalog, fx.markers, "t0")
-    val id1 = p.syncRunId(spark)
+    val id1 = p.syncRunId()
     // crash right after the sync_supports checkpoint pinned t1's changed set
     p.failAfterStage = Some("sync_supports")
     intercept[RuntimeException] {
@@ -664,7 +664,7 @@ class BucketedSyncSpec extends AnyFunSuite {
       "retried sync must publish exactly the original sync's view")
 
     // the NEXT sync picks up the deferred conversation
-    p.runSync(spark, turnsDs(t2), fx.catalog, fx.markers, p.syncRunId(spark))
+    p.runSync(spark, turnsDs(t2), fx.catalog, fx.markers, p.syncRunId())
     val full2 = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8))
     full2.runFull(spark, turnsDs(t2), fx.catalog, fx.markers, "s2")
     assert(edgeSet(p) == edgeSet(full2))
@@ -680,7 +680,7 @@ class BucketedSyncSpec extends AnyFunSuite {
     val t2 = t1.filterNot(_.conv_id == "conv-000017") // vanishes AFTER the crash
 
     p.runFull(spark, turnsDs(t0), fx.catalog, fx.markers, "t0")
-    val id1 = p.syncRunId(spark)
+    val id1 = p.syncRunId()
     // crash after the edge delta (computed against vanished={conv-000013})
     // but before any publish
     p.failAfterStage = Some("edge_delta")
@@ -698,7 +698,7 @@ class BucketedSyncSpec extends AnyFunSuite {
     assert(supportSet(p) == supportSet(s1))
 
     // the next sync reaps the deferred deletion
-    p.runSync(spark, turnsDs(t2), fx.catalog, fx.markers, p.syncRunId(spark))
+    p.runSync(spark, turnsDs(t2), fx.catalog, fx.markers, p.syncRunId())
     val s2 = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8))
     s2.runFull(spark, turnsDs(t2), fx.catalog, fx.markers, "s2")
     assert(edgeSet(p) == edgeSet(s2))
@@ -721,7 +721,7 @@ class BucketedSyncSpec extends AnyFunSuite {
 
     // a later sync rebuilds node refcounts from the published edges instead
     // of dying on the missing table
-    p.runSync(spark, turnsDs(fx.turns), fx.catalog, fx.markers, p.syncRunId(spark))
+    p.runSync(spark, turnsDs(fx.turns), fx.catalog, fx.markers, p.syncRunId())
     val scratch = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8))
     scratch.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "s")
     def nodes(q: KgPipeline) = q.nodeTable.read(spark).get
@@ -746,7 +746,7 @@ class BucketedSyncSpec extends AnyFunSuite {
     assert(r.triples == p.edgeTable.read(spark).get.count())
     // the no-op run still advances the sync epoch (auto runIds must never
     // reuse a finished run's id) and keeps the watermark
-    assert(p.checkpoints.syncEpoch(spark, "kg")._1 == 2L)
+    assert(p.checkpoints.syncEpoch("kg")._1 == 2L)
 
     // a later data-bearing sync over the untouched pointers == scratch
     val maxTs = fx.turns.map(_.ts.getTime).max
@@ -836,7 +836,7 @@ class BucketedSyncSpec extends AnyFunSuite {
       syncBuckets = 8, publishDocs = true))
     p.runFull(spark, turnsDs(sub), fx.catalog, fx.markers, "t0")
     val maxTs = sub.map(_.ts).maxBy(_.toInstant)
-    assert(p.checkpoints.lastWatermark(spark, "kg").map(_.toInstant)
+    assert(p.checkpoints.lastWatermark("kg").map(_.toInstant)
       .contains(maxTs.toInstant))
     val before = (p.supportTable.currentGeneration(), gens(p))
     for (runId <- Seq("t1", "t2")) {
@@ -910,38 +910,5 @@ class BucketedSyncSpec extends AnyFunSuite {
     scratch.runFull(spark, turnsDs(t1), fx.catalog, fx.markers, "s")
     assert(supportSet(p) == supportSet(scratch))
     assert(edgeSet(p) == edgeSet(scratch))
-  }
-
-  test("bucket-key ADOPTION guard: a pre-pin table (generations, no pin) " +
-       "refuses a non-default key expression; the default may adopt") {
-    val spark = SparkTestSession.get
-    val cfg = PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8)
-    val p = new KgPipeline(cfg)
-    p.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "t0")
-    // simulate a workDir built BEFORE the key expression was pinnable:
-    // generations exist, bucket_key_expr pins do not
-    Files.walk(Paths.get(cfg.workDir)).iterator().asScala
-      .filter(_.getFileName.toString == "bucket_key_expr")
-      .toList.foreach(Files.delete)
-    // a changed conversation so the sync is NOT a metadata-only no-op
-    val maxTs = fx.turns.map(_.ts.getTime).max
-    val tpl = fx.turns.maxBy(_.turn_idx)
-    val t1 = fx.turns :+ tpl.copy(turn_idx = tpl.turn_idx + 1,
-      ts = new Timestamp(maxTs + 3600 * 1000L))
-    // the first pin may only adopt the DEFAULT mapping — the physical
-    // layout IS the default hash mapping, and blessing anything else would
-    // let the sync replace rows in the wrong buckets and hard-link stale
-    // duplicates forward with no error
-    val bad = new KgPipeline(cfg.copy(bucketKeyExpr =
-      "coalesce(try_cast(regexp_extract({k}, 'w(\\\\d\\\\d)-', 1) as int), hash({k}))"))
-    val e = intercept[IllegalStateException] {
-      bad.runSync(spark, turnsDs(t1), fx.catalog, fx.markers, "t-bad")
-    }
-    assert(e.getMessage.contains("built before"))
-    // adopting the default is legitimate: sync proceeds and re-pins
-    val p2 = new KgPipeline(cfg)
-    p2.runSync(spark, turnsDs(t1), fx.catalog, fx.markers, "t1")
-    assert(p2.supportTable.pinned("bucket_key_expr")
-      .contains(PipelineConfig.DefaultBucketKeyExpr))
   }
 }

@@ -84,6 +84,22 @@ class KgAdminSpec extends AnyFunSuite {
     assert(c.read(spark).get.count() == 1)
   }
 
+  test("generations refuses an older generation and writes nothing") {
+    val spark = SparkTestSession.get
+    import spark.implicits._
+    val workDir = TempDirs.path("admin-")
+    val c = new TableCommitter(s"$workDir/tables/edges")
+    c.stagePartitioned(Seq(("a", 1L, 0), ("b", 2L, 0)).toDF("k", "v", "bucket"), "r1")
+    c.publishBuckets("r1", Set(0))
+    // the generation as graft wrote it before manifests
+    val gen0 = c.generationPath("gen-0").get
+    Files.delete(gen0.resolve(TableCommitter.ManifestFile))
+    val files = SparkIo.files(gen0).map(f => f -> Files.size(f))
+    val e = OlderLayouts.refused(workDir)(run("generations", workDir.toString, "edges"))
+    assert(e.getMessage.contains(s"$gen0 has no ${TableCommitter.ManifestFile}"))
+    assert(SparkIo.files(gen0).map(f => f -> Files.size(f)) == files)
+  }
+
   test("status prints each pipeline's sync epoch, watermark to the nanosecond " +
        "and last run id from its status file, with no Spark job") {
     val spark = SparkTestSession.get
@@ -92,7 +108,7 @@ class KgAdminSpec extends AnyFunSuite {
     val wm = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(1735689600L, 500000))
     for (runId <- Seq("r1", "r2")) {
       cs.writeRunRecord("kg", runId, wm, Seq.empty, Seq.empty)
-      cs.commit(spark, "kg", runId, wm)
+      cs.commit("kg", runId, wm)
     }
     // a crashed status write's tmp file is not a pipeline
     Files.writeString(Paths.get(s"$workDir/checkpoints/status/.kg.tmp"), "{")
@@ -150,7 +166,7 @@ class KgAdminSpec extends AnyFunSuite {
     val cs = new CheckpointStore(s"$workDir/checkpoints")
     val wm = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(1735689600L))
     cs.writeRunRecord(odd, odd, wm, Seq.empty, Seq.empty)
-    cs.commit(spark, odd, odd, wm)
+    cs.commit(odd, odd, wm)
 
     val lines = Seq(
       run("status", workDir),

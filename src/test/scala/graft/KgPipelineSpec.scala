@@ -440,20 +440,54 @@ class KgPipelineSpec extends AnyFunSuite {
   test("sync on a pre-pin workDir WITH published tables refuses to adopt " +
        "the current flags (their rows' semantics are unknowable)") {
     val spark = SparkTestSession.get
-    val wd = TempDirs("graft-test-")
+    val wd = TempDirs.path("graft-test-")
     val small = TranscriptGen.generate(nConv = 3, nEnt = 5, hotFactor = 1)
+    def turns = turnsDs(small.turns)
+    new KgPipeline(PipelineConfig(workDir = wd.toString))
+      .runFull(spark, turns, small.catalog, small.markers, "r1")
+    // the workDir as a writer before the format pin left it: no table pins.
+    // Refused whatever mapping the writer brings, the default included, and
+    // a full run into it too: the remedy is a rebuild into a fresh workDir
+    OlderLayouts.unpin(wd)
+    Seq(PipelineConfig.DefaultBucketKeyExpr, "coalesce(hash({k}), 0)").foreach { k =>
+      val p = new KgPipeline(PipelineConfig(workDir = wd.toString, bucketKeyExpr = k))
+      OlderLayouts.refused(wd)(p.runSync(spark, turns, small.catalog, small.markers, "s1"))
+      OlderLayouts.refused(wd)(p.runFull(spark, turns, small.catalog, small.markers, "r2"))
+    }
+  }
+
+  test("a stage checkpoint without a sidecar is refused, running no job") {
+    val spark = SparkTestSession.get
+    val wd = TempDirs("graft-test-")
+    val small = TranscriptGen.generate(nConv = 6, nEnt = 8, hotFactor = 1)
+    val cut = small.turns.map(_.ts.getTime).sorted.apply(small.turns.size / 2)
     val p = new KgPipeline(PipelineConfig(workDir = wd))
-    p.runFull(spark, turnsDs(small.turns), small.catalog, small.markers, "r1")
-    // simulate a workDir published by pre-semantics-pin code
-    Files.delete(java.nio.file.Paths.get(s"$wd/tables/support/_meta/pins/semantics"))
-    val e = intercept[IllegalStateException](
-      p.runSync(spark, turnsDs(small.turns), small.catalog, small.markers,
-        "sync-prepin"))
-    assert(e.getMessage.contains("semantics pin"))
-    // a FULL run re-establishes the pin (it rebuilds every row), after
-    // which syncs under the same flags proceed
-    p.runFull(spark, turnsDs(small.turns), small.catalog, small.markers, "r2")
-    p.runSync(spark, turnsDs(small.turns), small.catalog, small.markers,
-      "sync-repinned")
+    p.runFull(spark, turnsDs(small.turns.filter(_.ts.getTime <= cut)),
+      small.catalog, small.markers, "r0")
+    def sync() = p.runSync(spark, turnsDs(small.turns), small.catalog, small.markers, "s1")
+    // a sync that crashes once its supports are checkpointed
+    p.failAfterStage = Some("sync_supports")
+    intercept[RuntimeException](sync())
+    p.failAfterStage = None
+    // the resume refuses each stage whose sidecar is gone before it reads
+    // that stage: no collect of its bucket set, no inference of its schema,
+    // no re-derived watermark
+    Seq("changed_convs" -> "_graft_buckets",
+      "changed_turns" -> graft.io.TableCommitter.SchemaSidecar,
+      "sync_supports" -> "_graft_watermark").foreach { case (stage, sidecar) =>
+      val f = java.nio.file.Paths.get(wd, "stages", "s1", stage, sidecar)
+      val kept = Files.readAllBytes(f)
+      Files.delete(f)
+      val (e, jobs) = SparkJobs.during(spark)(
+        OlderLayouts.refused(java.nio.file.Paths.get(wd))(sync()))
+      assert(e.getMessage.contains(s"$stage has no $sidecar"), e.getMessage)
+      assert(jobs.isEmpty, jobs.mkString(" | "))
+      Files.write(f, kept)
+    }
+    // with its sidecars back, the resume completes the sync
+    sync()
+    val scratch = new KgPipeline(PipelineConfig(workDir = TempDirs("graft-test-")))
+    scratch.runFull(spark, turnsDs(small.turns), small.catalog, small.markers, "r")
+    assert(edgesOf(p) == edgesOf(scratch))
   }
 }

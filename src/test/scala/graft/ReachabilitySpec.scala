@@ -273,6 +273,33 @@ class ReachabilitySpec extends AnyFunSuite {
       s"build sessions with graft.Sessions.create in: ${offenders.mkString(", ")}")
   }
 
+  /** The format version's one definition. */
+  private val FormatDef = """\bval\s+Format\s*=""".r
+
+  /** The forks that read layouts older than the format: a footer's schema,
+    * the unbucketed-generation check, the `watermarks/` parquet log. */
+  private val OlderLayoutFork =
+    """\b(?:footerSchema|currentIsBucketed)\b|"[^"\n]*\bwatermarks\b""".r
+
+  test("one on-disk format: one version, no reader of an older layout") {
+    assert(FormatDef.findAllIn("val Format = \"1\"\nval  Format= \"2\"").size == 2)
+    assert(FormatDef.findFirstIn(stripComments("val FormatX = 1 // val Format = 1")).isEmpty)
+    assert(OlderLayoutFork.findFirstIn("SparkIo.footerSchema(p, conf)").isDefined)
+    assert(OlderLayoutFork.findFirstIn("t.currentIsBucketed()").isDefined)
+    assert(OlderLayoutFork.findFirstIn("""spark.read.parquet(s"$root/watermarks")""").isDefined)
+    assert(OlderLayoutFork.findFirstIn(
+      stripComments("val wm = 1 // the older `watermarks/` log, footerSchema")).isEmpty)
+    val defs = mainSources().flatMap { case (p, src) =>
+      FormatDef.findAllIn(stripComments(src)).map(_ => p)
+    }
+    assert(defs.size == 1, s"one format version, TableCommitter.Format: ${defs.mkString(", ")}")
+    val forks = mainSources()
+      .filter { case (_, src) => OlderLayoutFork.findFirstIn(stripComments(src)).isDefined }
+      .map(_._1)
+    assert(forks.isEmpty, "older layouts are refused (TableCommitter.OlderFormat), " +
+      s"never read: ${forks.mkString(", ")}")
+  }
+
   test("the frozen driver entry points exist") {
     Seq("Bench.scala", "Verify.scala", "SparkEntry.scala").foreach { f =>
       assert(Files.isRegularFile(mainRoot.resolve(Paths.get("graft", f))), f)

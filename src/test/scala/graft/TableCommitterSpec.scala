@@ -5,7 +5,10 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.io.TableCommitter
+import com.fasterxml.jackson.databind.ObjectMapper
+
+import graft.config.PipelineConfig
+import graft.io.{SparkIo, TableCommitter}
 
 class TableCommitterSpec extends AnyFunSuite {
 
@@ -160,51 +163,43 @@ class TableCommitterSpec extends AnyFunSuite {
     }
   }
 
-  test("a generation in the older layout is adopted into a manifest once") {
+  test("older generation layouts are refused and left untouched") {
     val spark = SparkTestSession.get
     import spark.implicits._
     val rows = Seq((1, "a", 0), (2, "b", 1), (3, "c", 1), (4, "d", 2))
       .toDF("k", "v", "bucket")
-    // the layout before manifests: a partitionBy("bucket") dir and a
-    // pointer, with and without the schema sidecar
-    Seq(true, false).foreach { withSchema =>
+    // a partitionBy("bucket") generation without a manifest, with and
+    // without the schema sidecar; an unpartitioned one without a manifest,
+    // and with the bucket-less manifest graft f69f29c wrote into it
+    val layouts = Seq[(String, java.nio.file.Path => Unit)](
+      "manifest-less" -> (g => rows.write.partitionBy("bucket").parquet(g.toString)),
+      "manifest-less, schema" -> { g =>
+        rows.write.partitionBy("bucket").parquet(g.toString)
+        Files.writeString(g.resolve(TableCommitter.SchemaSidecar), rows.schema.json)
+      },
+      "unpartitioned" -> (g => rows.drop("bucket").write.parquet(g.toString)),
+      "unpartitioned, manifest" -> { g =>
+        rows.drop("bucket").write.parquet(g.toString)
+        val f = SparkIo.files(g).filter(_.toString.endsWith(".parquet"))
+        Files.writeString(g.resolve(TableCommitter.ManifestFile),
+          (s"""{"schema":${new ObjectMapper().writeValueAsString(rows.drop("bucket").schema.json)}}""" +:
+            f.map(p => s"""{"path":"${g.relativize(p)}","bytes":${Files.size(p)},"rows":1}"""))
+            .mkString("\n"))
+      })
+    layouts.foreach { case (layout, write) =>
       val root = TempDirs.path("committer-")
       val t = new TableCommitter(root.toString)
-      val gen0 = root.resolve("gen-0")
-      rows.write.partitionBy("bucket").parquet(gen0.toString)
-      if (withSchema)
-        Files.writeString(gen0.resolve(TableCommitter.SchemaSidecar), rows.schema.json)
+      write(root.resolve("gen-0"))
       t.setPointer("current", "gen-0")
-      assert(!Files.exists(gen0.resolve(TableCommitter.ManifestFile)))
-      assert(t.currentIsBucketed().contains(true))
-      val all = t.read(spark).get
-      assert(all.columns.toSeq == Seq("k", "v", "bucket"), withSchema)
-      assert(kv(all) == Set((1, "a"), (2, "b"), (3, "c"), (4, "d")), withSchema)
-      assert(t.currentRecordCount().contains(all.count()), withSchema)
-      assert(kv(t.readBuckets(spark, Set(0, 2, 9)).get) == Set((1, "a"), (4, "d")))
-      assert(t.readBuckets(spark, Set.empty).get.count() == 0)
-      // adopted once: the manifest now stands in the generation
-      assert(t.manifest("gen-0").get.files.map(_.bucket).toSet ==
-        Set(Some(0), Some(1), Some(2)), withSchema)
-      assert(Files.exists(gen0.resolve(TableCommitter.ManifestFile)))
-      // a publish on top carries the untouched files as the same inodes
-      put(t, Seq((2, "B", 1)).toDF("k", "v", "bucket"), "r1", Set(1))
-      val gen1 = java.nio.file.Paths.get(t.currentPath().get)
-      t.manifest("gen-0").get.files.filterNot(_.bucket.contains(1)).foreach { f =>
-        assert(Files.getAttribute(gen0.resolve(f.path), "unix:ino") ==
-          Files.getAttribute(gen1.resolve(f.path), "unix:ino"), f.path)
-      }
-      assert(kv(t.read(spark).get) == Set((1, "a"), (2, "B"), (4, "d")), withSchema)
-      assert(t.currentRecordCount().contains(3L))
+      // a publish on top reads the older generation as its parent
+      t.stagePartitioned(Seq((5, "e", 0)).toDF("k", "v", "bucket"), "r1")
+      Seq[() => Any](() => t.read(spark), () => t.readBuckets(spark, Set(1)),
+        () => t.currentRecordCount(), () => t.manifest("gen-0"),
+        () => t.pinBucketMapping(8, PipelineConfig.DefaultBucketKeyExpr),
+        () => t.publishBuckets("r1", Set(0))
+      ).foreach(call => OlderLayouts.refused(root)(call()))
+      assert(t.generations() == Seq("gen-0"), layout)
     }
-    // an unpartitioned generation of the older layout is no bucketed table
-    val root = TempDirs.path("committer-")
-    val flat = new TableCommitter(root.toString)
-    rows.drop("bucket").write.parquet(root.resolve("gen-0").toString)
-    flat.setPointer("current", "gen-0")
-    assert(flat.currentIsBucketed().contains(false))
-    assert(flat.read(spark).get.count() == 4)
-    assert(flat.currentRecordCount().contains(4L))
   }
 
   test("a 64-bucket generation reads with no listing job; count() is the " +
@@ -340,7 +335,7 @@ class TableCommitterSpec extends AnyFunSuite {
     val m = t.manifest("gen-0").get
     assert(m.files.map(_.rows).sum == 7 && m.bytes > 0)
     Files.writeString(gen0.resolve(TableCommitter.ManifestFile), m.copy(files =
-      m.files.map(f => if (f.bucket.contains(2)) f.copy(rows = 20) else f)).json)
+      m.files.map(f => if (f.bucket == 2) f.copy(rows = 20) else f)).json)
     assert(t.currentRecordCount().contains(25L))
     // the next generation copies the carried entries (the planted one too)
     // and counts only its staged file from a footer
@@ -353,45 +348,32 @@ class TableCommitterSpec extends AnyFunSuite {
   test("pinBucketMapping: non-default key expr refused on a pre-pin table") {
     val spark = SparkTestSession.get
     import spark.implicits._
+    // empty table: the first writer pins the format and any mapping (the
+    // layout is being built under it right now), later ones must agree
     val t = fresh()
-    assert(t.pinned("bucket_key_expr").isEmpty)
-    // empty table: first writer may pin anything (the layout is being built
-    // under the pinned mapping right now)
     t.pinBucketMapping(8, "epoch_week({k})")
-    assert(t.pinned("bucket_key_expr").contains("epoch_week({k})"))
-    assert(t.pinned("bucket_count").contains("8"))
-
-    // a table with GENERATIONS but no pin was physically laid out by a
-    // pre-pin writer (default mapping): only the default may be adopted
-    val old = fresh()
-    put(old, Seq(("x", 0)).toDF("v", "bucket"), "r1")
-    val e = intercept[IllegalStateException](
-      old.pinBucketMapping(8, "epoch_week({k})"))
-    assert(e.getMessage.contains("built before"))
-    old.pinBucketMapping(8, "hash({k})") // default: legitimate
-    // once pinned, a different expression is the ordinary pin mismatch
-    intercept[IllegalArgumentException](
-      old.pinBucketMapping(8, "epoch_week({k})"))
-  }
-
-  test("pinSemanticsOrVerify: adoption onto a pre-pin table with " +
-       "generations is refused — its rows' semantics are unknowable") {
-    val spark = SparkTestSession.get
-    import spark.implicits._
-    // empty table: first writer adopts (the rows are about to be built
-    // under exactly this signature)
-    val t = fresh()
+    Seq("format" -> TableCommitter.Format, "bucket_key_expr" -> "epoch_week({k})",
+      "bucket_count" -> "8").foreach { case (k, v) => assert(t.pinned(k).contains(v), k) }
+    put(t, Seq(("x", 0)).toDF("v", "bucket"), "r1")
+    t.pinBucketMapping(8, "epoch_week({k})")
+    intercept[IllegalArgumentException](t.pinBucketMapping(8, "hash({k})"))
+    intercept[IllegalArgumentException](t.pinBucketMapping(16, "epoch_week({k})"))
     t.pinSemanticsOrVerify("coref=false,scored=true")
     t.pinSemanticsOrVerify("coref=false,scored=true") // same sig verifies
     intercept[IllegalArgumentException](
       t.pinSemanticsOrVerify("coref=true,scored=true")) // flip: pin mismatch
 
-    // generations but no pin: ANY signature is refused — unlike the bucket
-    // key there is no knowable default the legacy rows must have had
+    // generations but no pins: written before the format pin, under a
+    // mapping and row semantics unknowable from here — refused whatever the
+    // writer's mapping, the default included
     val old = fresh()
     put(old, Seq(("x", 0)).toDF("v", "bucket"), "r1")
-    val e = intercept[IllegalStateException](
-      old.pinSemanticsOrVerify("coref=false,scored=false"))
-    assert(e.getMessage.contains("semantics pin"))
+    val root = java.nio.file.Paths.get(old.currentPath().get).getParent
+    Seq("epoch_week({k})", PipelineConfig.DefaultBucketKeyExpr).foreach { k =>
+      OlderLayouts.refused(root)(old.pinBucketMapping(8, k))
+    }
+    // another format pin is refused the same way
+    Files.writeString(Files.createDirectories(root.resolve("_meta/pins")).resolve("format"), "0")
+    OlderLayouts.refused(root)(old.pinBucketMapping(8, PipelineConfig.DefaultBucketKeyExpr))
   }
 }
