@@ -360,20 +360,27 @@ final class TableCommitter(rootDir: String) {
     * table whose generations predate it is refused before anything is
     * written into it. */
   def pinBucketMapping(buckets: Int, keyExpr: String): Unit = {
+    pinFormat()
+    pinOrVerify("bucket_count", buckets.toString)
+    pinOrVerify("bucket_key_expr", keyExpr)
+  }
+
+  private def pinFormat(): Unit = {
     val format =
       if (generations().isEmpty) Some(TableCommitter.createOnce(pin("format"), Format))
       else pinned("format")
     if (!format.contains(Format))
       throw new OlderFormat(s"table $root has format pin ${format.getOrElse("<none>")}")
-    pinOrVerify("bucket_count", buckets.toString)
-    pinOrVerify("bucket_key_expr", keyExpr)
   }
 
   /** Pin the row-semantics signature ([[graft.config.PipelineConfig.semanticsSig]])
     * or verify it — the one semantics pin of every writer that MERGES into
     * a table (batch sync, streaming ingest): rows extracted under different
-    * flags would silently mix two semantics within one table. */
+    * flags would silently mix two semantics within one table. The format
+    * pin comes first, as in [[pinBucketMapping]]: a table whose generations
+    * predate it holds rows of unknowable semantics. */
   def pinSemanticsOrVerify(sig: String): Unit = {
+    pinFormat()
     val standing = TableCommitter.createOnce(pin("semantics"), sig)
     require(standing == sig,
       s"writer flags ($sig) differ from the row semantics the table was " +

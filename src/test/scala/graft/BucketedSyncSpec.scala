@@ -911,4 +911,35 @@ class BucketedSyncSpec extends AnyFunSuite {
     assert(supportSet(p) == supportSet(scratch))
     assert(edgeSet(p) == edgeSet(scratch))
   }
+
+  test("bucket-key guard: a pre-pin table is refused under any key expression") {
+    val spark = SparkTestSession.get
+    val cfg = PipelineConfig(workDir = TempDirs("graft-bucket-"), syncBuckets = 8)
+    new KgPipeline(cfg).runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "t0")
+    // the workDir as a writer before the format pin left it: generations,
+    // no pins. Its physical layout is the default hash mapping, but that is
+    // not knowable from the table either: the default is refused like any
+    // other expression, before anything is written
+    OlderLayouts.unpin(Paths.get(cfg.workDir))
+    // a changed conversation so the sync is NOT a metadata-only no-op
+    val maxTs = fx.turns.map(_.ts.getTime).max
+    val tpl = fx.turns.maxBy(_.turn_idx)
+    val t1 = fx.turns :+ tpl.copy(turn_idx = tpl.turn_idx + 1,
+      ts = new Timestamp(maxTs + 3600 * 1000L))
+    val weekly =
+      "coalesce(try_cast(regexp_extract({k}, 'w(\\\\d\\\\d)-', 1) as int), hash({k}))"
+    Seq(weekly, PipelineConfig.DefaultBucketKeyExpr).foreach { k =>
+      val p = new KgPipeline(cfg.copy(bucketKeyExpr = k))
+      OlderLayouts.refused(Paths.get(cfg.workDir))(
+        p.runSync(spark, turnsDs(t1), fx.catalog, fx.markers, "t-bad"))
+    }
+    // the remedy: a full run into a fresh workDir pins the writer's mapping,
+    // and syncs under it proceed
+    val fresh = new KgPipeline(cfg.copy(workDir = TempDirs("graft-bucket-"),
+      bucketKeyExpr = weekly))
+    fresh.runFull(spark, turnsDs(fx.turns), fx.catalog, fx.markers, "t0")
+    fresh.runSync(spark, turnsDs(t1), fx.catalog, fx.markers, "t1")
+    assert(fresh.supportTable.pinned("bucket_key_expr").contains(weekly))
+    assert(fresh.supportTable.pinned("format").contains(graft.io.TableCommitter.Format))
+  }
 }

@@ -358,10 +358,6 @@ class TableCommitterSpec extends AnyFunSuite {
     t.pinBucketMapping(8, "epoch_week({k})")
     intercept[IllegalArgumentException](t.pinBucketMapping(8, "hash({k})"))
     intercept[IllegalArgumentException](t.pinBucketMapping(16, "epoch_week({k})"))
-    t.pinSemanticsOrVerify("coref=false,scored=true")
-    t.pinSemanticsOrVerify("coref=false,scored=true") // same sig verifies
-    intercept[IllegalArgumentException](
-      t.pinSemanticsOrVerify("coref=true,scored=true")) // flip: pin mismatch
 
     // generations but no pins: written before the format pin, under a
     // mapping and row semantics unknowable from here — refused whatever the
@@ -375,5 +371,30 @@ class TableCommitterSpec extends AnyFunSuite {
     // another format pin is refused the same way
     Files.writeString(Files.createDirectories(root.resolve("_meta/pins")).resolve("format"), "0")
     OlderLayouts.refused(root)(old.pinBucketMapping(8, PipelineConfig.DefaultBucketKeyExpr))
+  }
+
+  test("pinSemanticsOrVerify: adoption onto a pre-pin table with " +
+       "generations is refused — its rows' semantics are unknowable") {
+    val spark = SparkTestSession.get
+    import spark.implicits._
+    // empty table: the first writer pins the format and the signature (the
+    // rows are about to be built under exactly it), later ones must agree
+    val t = fresh()
+    t.pinSemanticsOrVerify("coref=false,scored=true")
+    assert(t.pinned("format").contains(TableCommitter.Format))
+    put(t, Seq(("x", 0)).toDF("v", "bucket"), "r1")
+    t.pinSemanticsOrVerify("coref=false,scored=true") // same sig verifies
+    intercept[IllegalArgumentException](
+      t.pinSemanticsOrVerify("coref=true,scored=true")) // flip: pin mismatch
+
+    // generations but no pins: ANY signature is refused, and nothing is
+    // pinned — there is no knowable signature the older rows must have had
+    val old = fresh()
+    put(old, Seq(("x", 0)).toDF("v", "bucket"), "r1")
+    val root = java.nio.file.Paths.get(old.currentPath().get).getParent
+    Seq("coref=false,scored=false", "coref=false,scored=true").foreach { sig =>
+      OlderLayouts.refused(root)(old.pinSemanticsOrVerify(sig))
+    }
+    assert(old.pinned("semantics").isEmpty && old.pinned("format").isEmpty)
   }
 }
